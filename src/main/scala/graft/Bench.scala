@@ -123,6 +123,15 @@ object Bench {
     s""""host_probe":{"tmp_mbps":${f1(tmpMbps)},"other_cpu_sec":${f1(otherCpuSec)},"wall_sec":${f1(wallSec)},"class":"${hostClass(otherCpuSec, wallSec)}"}"""
   }
 
+  /** Low-core scaling runs get their own full-map file: a round-15
+    * 8-core run OVERWROTE the committed 32-core BENCH_full.json and the
+    * main run's per-row map was lost. Read from the SAME defaulted core
+    * count the session runs at — an env-less local[4] run is a low-core
+    * run too.
+    */
+  private[graft] def cpusSuffix(cpus: String): String =
+    cpus.toIntOption.filter(_ < 16).map(c => s"_c$c").getOrElse("")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -181,28 +190,10 @@ object Bench {
           false
         }
       // queries are self-contained: drop any tables they persisted so
-      // later queries aren't measured under another query's cache pressure.
-      // clearCache() only covers CacheManager entries — localCheckpoint /
-      // bare-RDD persists (e.g. iterative loops) need the explicit sweep,
-      // or their blocks linger as GC pressure on every later query
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () } // context may be mid-shutdown
+      // later queries aren't measured under another query's cache pressure
+      try graft.core.Sessions.clearCaches(spark)
+      catch { case _: Throwable => () } // context may be mid-shutdown
       if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-    }
-    // Registry tier split, PRE-BUILT for the recorded trigger (round-12
-    // decision: split st*/io* into a slow tier when a quiet full bench
-    // exceeds ~600 s wall OR rerun_n exceeds ~10). Default "all" keeps
-    // the one-tier protocol unchanged; flipping is one driver env line:
-    //   SPARK_GRAFT_TIER=fast  -> every row except st*/io*
-    //   SPARK_GRAFT_TIER=slow  -> only st*/io*
-    val tier = sys.env.getOrElse("SPARK_GRAFT_TIER", "all")
-    def inTier(n: String): Boolean = tier match {
-      case "fast" => !(n.startsWith("st") || n.startsWith("io"))
-      case "slow" => n.startsWith("st") || n.startsWith("io")
-      case _ => true
     }
     val qmap = SparkEntry.queries
     // Results accumulate into a buffer a shutdown hook can read: round
@@ -218,10 +209,11 @@ object Bench {
       import scala.jdk.CollectionConverters._
       emitReport(done.iterator().asScala.toSeq,
         doneReruns.iterator().asScala.toSeq,
-        spark, stopSpark, partial, sfDir, only, tier,
+        spark, stopSpark, partial, sfDir, cpus, only,
         loadStart, tmpMbps, wallT0, busy0, self0)
     }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+    Runtime.getRuntime.addShutdownHook(new Thread(() => if (!emitted.get()) {
+      // a normal exit has already emitted: return at once. Otherwise
       // silence executor shutdown noise (dead-blockmgr task errors print
       // at ERROR and would land after the JSON), then give the main
       // thread's in-flight job-cancellation failure a moment to surface
@@ -232,7 +224,7 @@ object Bench {
       emit(stopSpark = false, partial = true)
     }))
     qmap.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) && inTier(name) }
+      .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) => runOne(name, fn).foreach(t => done.add(name -> t)) }
     import scala.jdk.CollectionConverters._
     val results = done.iterator().asScala.toSeq
@@ -279,8 +271,8 @@ object Bench {
                          reruns: Seq[(String, Double)],
                          spark: org.apache.spark.sql.SparkSession,
                          stopSpark: Boolean, partial: Boolean,
-                         sfDir: String, only: Option[Set[String]],
-                         tier: String, loadStart: Double, tmpMbps: Double,
+                         sfDir: String, cpus: String,
+                         only: Option[Set[String]], loadStart: Double, tmpMbps: Double,
                          wallT0: Long, busy0: Long, self0: Long): Unit = {
     // Stop Spark BEFORE emitting the JSON: a driver that merges stderr
     // into its tail capture would otherwise see the shutdown log lines
@@ -321,14 +313,8 @@ object Bench {
     // SPARK_GRAFT_ONLY runs write to BENCH_partial.json instead: a
     // single-row adjudication rerun must never clobber the committed
     // full-run record (ADVICE r10 — round 10's closing st11 rerun did).
-    // low-core scaling runs get their own file: the round-15 driver's
-    // 8-core run OVERWROTE the committed 32-core BENCH_full.json (the
-    // on-disk artifact that round self-described as cpus=8), so the
-    // judge lost the main-run per-row map
-    val cpusSuffix = sys.env.get("SPARK_GRAFT_CPUS")
-      .flatMap(_.toIntOption).filter(_ < 16).map(c => s"_c$c").getOrElse("")
     val fullPath =
-      if (only.isEmpty && tier == "all") s"BENCH_full$cpusSuffix.json"
+      if (only.isEmpty) s"BENCH_full${cpusSuffix(cpus)}.json"
       else "BENCH_partial.json"
     val fullQs = results.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")

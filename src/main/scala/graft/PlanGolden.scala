@@ -1,13 +1,15 @@
 package graft
 
-/** Regenerates the per-query exchange-count golden that PlanBudgetSpec
+import graft.core.Query
+
+/** Regenerates the per-query exchange-count golden that RegistrySweepSpec
   * asserts against (src/test/resources/plan_exchanges.golden). Run after
   * deliberately changing a query's plan shape:
   *
   *   sbt "runMain graft.PlanGolden" > src/test/resources/plan_exchanges.golden
   *
-  * Streaming queries (st*) are excluded: their fn launches a stream
-  * rather than returning a lazy plan.
+  * Streaming rows (StreamingQueries) are excluded: their fn launches a
+  * stream rather than returning a lazy plan.
   */
 object PlanGolden {
   val sfDir = "/root/testdata/sf0.001"
@@ -15,28 +17,33 @@ object PlanGolden {
   def exchangeCount(plan: String): Int =
     "Exchange".r.findAllIn(plan).size
 
-  def counts(spark: org.apache.spark.sql.SparkSession): Seq[(String, Int)] =
-    SparkEntry.packs
-      .filterNot(_.name.startsWith("st"))
-      .map { q =>
-        // queries persist() intermediates and the CacheManager is
-        // JVM-shared: a subtree already cached by an earlier query (or
-        // an earlier suite) substitutes InMemoryRelations whose stored
-        // build plans re-count their inner exchanges — clear per query
-        // so the count only reflects THIS query's plan
-        spark.sqlContext.clearCache()
-        q.name ->
-          exchangeCount(q.fn(spark, sfDir).queryExecution.executedPlan.toString)
-      }
+  private lazy val streaming: Set[String] =
+    graft.queries.StreamingQueries.queries.map(_.name).toSet
+
+  def isBatch(q: Query): Boolean = !streaming(q.name)
+
+  /** One row's physical plan at the session's current settings, built
+    * from clear caches so it reflects only THIS query's plan. Queries
+    * persist() intermediates and the CacheManager is JVM-shared: a
+    * subtree already cached by an earlier query (or an earlier suite)
+    * would substitute InMemoryRelations whose stored build plans
+    * re-count their inner exchanges.
+    */
+  def plan(spark: org.apache.spark.sql.SparkSession, q: Query): String = {
+    graft.core.Sessions.clearCaches(spark)
+    q.fn(spark, sfDir).queryExecution.executedPlan.toString
+  }
 
   def main(args: Array[String]): Unit = {
     // "4" to MATCH TestSession exactly: Par.fanOut's identity-vs-
     // repartition choice reads defaultParallelism, so a golden generated
     // at a different core count records different exchange counts than
-    // PlanBudgetSpec observes live (ADVICE r15 — the round-15 tests_ok
-    // failure). Regenerate only under local[4].
+    // RegistrySweepSpec observes live (the round-15 tests_ok failure).
+    // Regenerate only under local[4].
     val spark = graft.core.Sessions.local("4", "graft-plangolden")
-    counts(spark).sortBy(_._1).foreach { case (n, c) => println(s"$n $c") }
+    SparkEntry.packs.filter(isBatch)
+      .map(q => q.name -> exchangeCount(plan(spark, q)))
+      .sortBy(_._1).foreach { case (n, c) => println(s"$n $c") }
     spark.stop()
   }
 }

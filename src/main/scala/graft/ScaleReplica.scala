@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
   * replicas of the sf tables into a temp dir with the driver's layout,
   * then times the REAL registry rows (via SparkEntry) against it — so
   * 10x/100x posture entries measure the exact shipped plan instead of a
-  * hand-copied shape (ScaleSmoke keeps the hand-built shapes for
-  * operators whose fixtures live outside the tables).
+  * hand-copied shape.
   *
   *   SPARK_GRAFT_COPIES=100 SPARK_GRAFT_ONLY=k05_...,w45_... \
   *     sbt "runMain graft.ScaleReplica"

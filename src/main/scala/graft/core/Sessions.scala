@@ -66,4 +66,14 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Drops every cached table AND every persisted RDD. clearCache() only
+    * covers CacheManager entries — localCheckpoint / bare-RDD persists
+    * (e.g. iterative loops) need the explicit sweep, or their blocks
+    * linger as GC pressure on every later query.
+    */
+  def clearCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
 }

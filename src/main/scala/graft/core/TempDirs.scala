@@ -71,15 +71,20 @@ object TempDirs {
     * an early sweep would delete a live state store) — delete every
     * checkpoint scratch dir THIS thread created. Queries are
     * self-contained, so a terminated row's checkpoints are never read
-    * again.
+    * again. A stream that fails fails its row, so its exception sweeps
+    * this thread's checkpoints unconditionally before propagating —
+    * otherwise a failed row's state stores would pin tmpfs until JVM exit.
     */
   def awaitThenSweepCkpt(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.awaitTermination()
-    if (q.sparkSession.streams.active.isEmpty) {
-      val dirs = ckptDirs.get()
-      dirs.foreach(deleteRecursively)
-      dirs.clear()
-    }
+    try q.awaitTermination()
+    catch { case e: Throwable => sweepCkpt(); throw e }
+    if (q.sparkSession.streams.active.isEmpty) sweepCkpt()
+  }
+
+  private def sweepCkpt(): Unit = {
+    val dirs = ckptDirs.get()
+    dirs.foreach(deleteRecursively)
+    dirs.clear()
   }
 
   /** Recursive delete with the walk stream properly closed. Quiet on

@@ -1,10 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.functions.Similarity
 
 /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998):
   * greedily pick k results that balance relevance against redundancy,
@@ -33,7 +30,10 @@ object Mmr {
   /** Spark SQL double ordering for the argmax/max folds: NaN sorts
     * ABOVE every non-NaN (nanSafeCompareDoubles) and -0.0 equals 0.0
     * (NormalizeFloatingNumbers applies to sort keys), so the fold
-    * replays row_number()/max() decisions bitwise.
+    * replays row_number()/max() decisions bitwise. max() keeps the FIRST
+    * of two equal values, so a strict-> update that keeps a stored -0.0
+    * against a later 0.0 (and vice versa) matches the aggregate's bits;
+    * MmrSpec pins both orders.
     */
   @inline private def cmp(a: Double, b: Double): Int = {
     val x = if (a == 0.0) 0.0 else a
@@ -43,7 +43,8 @@ object Mmr {
 
   /** Exactly VectorKernel.dot's accumulation: ascending index, one
     * running double — bitwise-identical to the DotProduct expression
-    * the unrolled form evaluates (floats widen exactly to double).
+    * MmrSpec's unrolled reference evaluates (floats widen exactly to
+    * double).
     */
   @inline private def dotD(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0
@@ -56,8 +57,10 @@ object Mmr {
   /** `cand` columns: qid, cid (integral ids), c_emb (the candidate
     * vector, array of float or double), c_norm (its L2 norm), rel
     * (relevance to the query, typically cosine; non-null by contract).
-    * Returns (qid, rank, cid, score) with rank 1..k per query; round 1
-    * is pure relevance (no selected set yet, score = rel).
+    * Each (qid, cid) pair must appear at most once: the fold treats every
+    * input row as its own candidate, so a duplicated pair could be picked
+    * in two rounds. Returns (qid, rank, cid, score) with rank 1..k per
+    * query; round 1 is pure relevance (no selected set yet, score = rel).
     */
   def rerank(cand: DataFrame, k: Int, lam: Double, mu: Double): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -113,40 +116,5 @@ object Mmr {
         out.iterator
       }
       .toDF("qid", "rank", "cid", "score")
-  }
-
-  /** The round-15 unrolled-iteration form, kept as the equivalence
-    * witness for MmrSpec: all query groups advance through the k greedy
-    * rounds together — each round one anti-join (drop picked), one join
-    * onto the selected set keyed by query id, one max-aggregate, one
-    * per-query argmax, localCheckpoint-ed per round.
-    */
-  private[graft] def rerankUnrolled(cand: DataFrame, k: Int, lam: Double,
-                                    mu: Double): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val pick1 = Window.partitionBy("qid").orderBy(col("rel").desc, col("cid"))
-    var sel = cand
-      .withColumn("rn", row_number().over(pick1)).filter(col("rn") === 1)
-      .select(col("qid"), col("cid"), col("c_emb"), col("c_norm"),
-        col("rel").as("score"), lit(1).as("rank"))
-      .localCheckpoint()
-    for (r <- 2 to k) {
-      val remaining = cand.join(sel.select("qid", "cid"), Seq("qid", "cid"), "left_anti")
-      val ms = remaining
-        .join(sel.select(col("qid"), col("c_emb").as("s_emb"),
-          col("c_norm").as("s_norm")), Seq("qid"))
-        .withColumn("s",
-          Similarity.dot(col("c_emb"), col("s_emb")) / (col("c_norm") * col("s_norm")))
-        .groupBy("qid", "cid").agg(max("s").as("ms"))
-      val scored = remaining.join(ms, Seq("qid", "cid"))
-        .withColumn("score", lit(lam) * col("rel") - lit(mu) * col("ms"))
-      val pick = Window.partitionBy("qid").orderBy(col("score").desc, col("cid"))
-      sel = sel.unionByName(
-          scored.withColumn("rn", row_number().over(pick)).filter(col("rn") === 1)
-            .select(col("qid"), col("cid"), col("c_emb"), col("c_norm"),
-              col("score"), lit(r).as("rank")))
-        .localCheckpoint()
-    }
-    sel.select(col("qid"), col("rank"), col("cid"), col("score"))
   }
 }

@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   * Cost crossover: the direct RANGE frame is O(rows * frame_rows); this
   * is O(rows) plus two bucket-table exchanges. At low frame density the
   * direct form's constant wins; as density grows the bucketed form's
-  * independence from frame row count wins (ScaleSmoke measures the
-  * crossover at 10x events).
+  * independence from frame row count wins (the crossover was measured
+  * at 10x events).
   */
 object RollingMoments {
 

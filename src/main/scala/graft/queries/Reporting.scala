@@ -1748,8 +1748,8 @@ object Reporting {
     * per-record week-index intervals (entry / +21d / +31d regrades,
     * first-verification exit), island-unioned per (extid, group) so the
     * prefix sum yields exact DISTINCT counts. ordersDf/lineitemDf keep
-    * their source column names so ScaleSmoke can feed replicated 10x
-    * tables through the same code. */
+    * their source column names, so any orders/lineitem pair (a scale
+    * replica included) feeds through the same code. */
   def icfAging(ordersDf: org.apache.spark.sql.DataFrame,
                lineitemDf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window

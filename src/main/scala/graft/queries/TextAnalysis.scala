@@ -1690,8 +1690,8 @@ object TextAnalysis {
     // aggregate within the row — see gopherBatteryLocal); t46 below is
     // the string-gram groupBy twin under the SAME oracle (fractions are
     // computed from gram COUNTS, so all three forms emit identical
-    // output). The hashed-exchange form stays measured in ScaleSmoke
-    // and equivalence-pinned in HashedGramTwinSpec.
+    // output). The hashed-exchange form stays equivalence-pinned in
+    // HashedGramTwinSpec.
     Query("t41_gopher_repetition", GopherOracleSql) {
       (s, d) => gopherBatteryLocal(s, d)
     },

@@ -66,4 +66,13 @@ class BenchLedgerSpec extends AnyFunSuite {
         s"baseline in the same commit that registers a row): " +
         missing.toSeq.sorted.mkString(", "))
   }
+
+  test("full-map file suffix follows the session's defaulted core count") {
+    // an env-less run defaults to local[4]: it must write BENCH_full_c4.json,
+    // never the committed 32-core BENCH_full.json
+    assert(Bench.cpusSuffix("4") == "_c4")
+    assert(Bench.cpusSuffix("8") == "_c8")
+    assert(Bench.cpusSuffix("32") == "")
+    assert(Bench.cpusSuffix("*") == "")
+  }
 }

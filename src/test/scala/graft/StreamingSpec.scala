@@ -133,6 +133,20 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a failed stream still sweeps its checkpoint dir") {
+    val sp = spark; import sp.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Long]
+    in.addData(1L, 2L)
+    val ckpt = graft.core.TempDirs.scratch("st_ckpt_")
+    val q = in.toDS().map(x => if (x > 0) throw new IllegalStateException("planted") else x)
+      .writeStream.format("memory").queryName("sfailed")
+      .option("checkpointLocation", ckpt.toString).start()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      graft.core.TempDirs.awaitThenSweepCkpt(q))
+    assert(!java.nio.file.Files.exists(ckpt), s"failed stream left $ckpt")
+  }
+
   test("streamingDedup drops duplicate ids within the watermark") {
     val sp = spark; import sp.implicits._
     implicit val sqlCtx = spark.sqlContext
