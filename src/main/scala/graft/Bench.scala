@@ -19,27 +19,28 @@ object Bench {
     try readFile("/proc/loadavg").split(" ")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** (host busy jiffies, own-process jiffies): the difference's growth
-    * over the run is CPU burned by OTHER processes — the direct
-    * neighbor-contention measure. Load averages cannot give this: the
-    * bench's own 32 threads dominate the 1-min load in every healthy
-    * run, and a mid-run neighbor burst hides between the start/end
-    * stamps (it did: seven a-rows at 7-48x in an otherwise quiet
-    * round-8 run). */
-  private def cpuJiffies(): (Long, Long) =
+  /** (host busy jiffies, own-process jiffies, host steal jiffies): the
+    * growth of busy minus own over the run is CPU burned by OTHER
+    * processes — the direct neighbor-contention measure. Load averages
+    * cannot give this: the bench's own 32 threads dominate the 1-min
+    * load in every healthy run, and a mid-run neighbor burst hides
+    * between the start/end stamps (it did: seven a-rows at 7-48x in an
+    * otherwise quiet round-8 run). Steal is reported on its own too: it
+    * is the hypervisor's share, which no in-guest process accounts for. */
+  private def cpuJiffies(): (Long, Long, Long) =
     try {
       val host = readFile("/proc/stat").linesIterator.next()
         .trim.split("\\s+").drop(1).map(_.toLong)
+      val steal = if (host.length > 7) host(7) else 0L
       // user+nice+system+irq+softirq+steal — everything but idle/iowait
-      val busy = host(0) + host(1) + host(2) + host(5) + host(6) +
-        (if (host.length > 7) host(7) else 0L)
+      val busy = host(0) + host(1) + host(2) + host(5) + host(6) + steal
       // parse AFTER the comm field's closing ')': comm may contain spaces,
       // which would shift whitespace-split indices (utime is field 14/15
       // counted from AFTER comm: state is 0, so utime=11, stime=12)
       val stat = readFile("/proc/self/stat")
       val rest = stat.substring(stat.lastIndexOf(')') + 2).split("\\s+")
-      (busy, rest(11).toLong + rest(12).toLong)
-    } catch { case _: Throwable => (-1L, -1L) }
+      (busy, rest(11).toLong + rest(12).toLong, steal)
+    } catch { case _: Throwable => (-1L, -1L, -1L) }
 
   /** Per-row quiet ledger parsed out of BASELINE.md's `| name | sec |`
     * tables (minimum across all mentions = the governing quiet value, the
@@ -113,15 +114,19 @@ object Bench {
     else if (otherCpuSec > math.max(60.0, 0.2 * wallSec)) "contended"
     else "quiet"
 
+  /** One decimal, Locale.ROOT (a comma-decimal locale breaks the JSON). */
+  private def f1(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.1f", java.lang.Double.valueOf(v))
+
   /** The host-probe JSON fragment shared by the tail line and the full
-    * artifact — BenchLedgerSpec pins the fields' presence.
+    * artifact — BenchLedgerSpec pins the fields' presence. CPU figures
+    * are never negative: a raw other-CPU below zero (a failed probe, or
+    * a microVM whose busy jiffies grew less than this process's own —
+    * BENCH_r16 read −1618.2) prints 0.0 with class "unknown".
     */
   private[graft] def hostProbeJson(tmpMbps: Double, otherCpuSec: Double,
-                                   wallSec: Double): String = {
-    def f1(v: Double) = String.format(java.util.Locale.ROOT, "%.1f",
-      java.lang.Double.valueOf(v))
-    s""""host_probe":{"tmp_mbps":${f1(tmpMbps)},"other_cpu_sec":${f1(otherCpuSec)},"wall_sec":${f1(wallSec)},"class":"${hostClass(otherCpuSec, wallSec)}"}"""
-  }
+                                   stealSec: Double, wallSec: Double): String =
+    s""""host_probe":{"tmp_mbps":${f1(tmpMbps)},"other_cpu_sec":${f1(otherCpuSec max 0.0)},"steal_sec":${f1(stealSec max 0.0)},"wall_sec":${f1(wallSec)},"class":"${hostClass(otherCpuSec, wallSec)}"}"""
 
   /** Low-core scaling runs get their own full-map file: a round-15
     * 8-core run OVERWROTE the committed 32-core BENCH_full.json and the
@@ -138,7 +143,7 @@ object Bench {
     val loadStart = loadAvg()
     val tmpMbps = tmpWriteMbps()
     val wallT0 = System.nanoTime()
-    val (busy0, self0) = cpuJiffies()
+    val (busy0, self0, steal0) = cpuJiffies()
     val spark = graft.core.Sessions.local(cpus, "graft-bench")
     // keep stderr quiet so a driver that merges streams still sees the
     // JSON line last (Sessions defaults to WARN; ERROR for the bench)
@@ -149,12 +154,12 @@ object Bench {
     // several seconds charged to whichever row sorts first. Exercise
     // those engine paths once on a small table; no registered query
     // runs untimed (results are never precomputed).
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    graft.core.Tables.lineitem(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     locally {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val o = spark.read.parquet(s"$sfDir/orders.parquet")
+      val o = graft.core.Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"))
       val agg = o.groupBy("o_custkey").agg(count(lit(1)).as("__n"),
         countDistinct("o_orderkey").as("__d"))
@@ -210,7 +215,7 @@ object Bench {
       emitReport(done.iterator().asScala.toSeq,
         doneReruns.iterator().asScala.toSeq,
         spark, stopSpark, partial, sfDir, cpus, only,
-        loadStart, tmpMbps, wallT0, busy0, self0)
+        loadStart, tmpMbps, wallT0, busy0, self0, steal0)
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => if (!emitted.get()) {
       // a normal exit has already emitted: return at once. Otherwise
@@ -273,7 +278,8 @@ object Bench {
                          stopSpark: Boolean, partial: Boolean,
                          sfDir: String, cpus: String,
                          only: Option[Set[String]], loadStart: Double, tmpMbps: Double,
-                         wallT0: Long, busy0: Long, self0: Long): Unit = {
+                         wallT0: Long, busy0: Long, self0: Long,
+                         steal0: Long): Unit = {
     // Stop Spark BEFORE emitting the JSON: a driver that merges stderr
     // into its tail capture would otherwise see the shutdown log lines
     // AFTER the JSON and could push it out of the 2000-char window.
@@ -319,17 +325,17 @@ object Bench {
     val fullQs = results.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val loadEnd = loadAvg()
-    val (busy1, self1) = cpuJiffies()
-    // CPU-seconds other processes burned while the bench ran (USER_HZ=100)
-    val otherCpu =
-      if (busy0 < 0 || busy1 < 0) -1.0
-      else ((busy1 - busy0) - (self1 - self0)) / 100.0
+    val (busy1, self1, steal1) = cpuJiffies()
+    // CPU-seconds other processes burned, and steal, while the bench ran
+    // (USER_HZ=100); -1 when /proc could not be read
+    val probed = busy0 >= 0 && busy1 >= 0
+    val otherCpu = if (probed) ((busy1 - busy0) - (self1 - self0)) / 100.0 else -1.0
+    val stealSec = if (probed) (steal1 - steal0) / 100.0 else -1.0
     val partialJson = if (partial) """"partial":true,""" else ""
     val loads = partialJson +
       s""""load_start":$loadStart,"load_end":$loadEnd,""" +
-      s""""other_cpu_sec":${String.format(java.util.Locale.ROOT, "%.1f",
-        java.lang.Double.valueOf(otherCpu))},""" +
-      hostProbeJson(tmpMbps, otherCpu, (System.nanoTime() - wallT0) / 1e9)
+      s""""other_cpu_sec":${f1(otherCpu max 0.0)},""" +
+      hostProbeJson(tmpMbps, otherCpu, stealSec, (System.nanoTime() - wallT0) / 1e9)
     val rerunJson = reruns.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     try {

@@ -74,7 +74,7 @@ object RowProfile {
       org.apache.spark.GraftListenerShim.waitUntilListenerBusEmpty(spark.sparkContext, 10000)
 
     // untimed warmup (JIT, codegen cache, parquet footers), as Bench does
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    graft.core.Tables.lineitem(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     drain()
 

@@ -49,7 +49,7 @@ object ScaleReplica {
       // data's maxes coincide; real TPC-H's don't). All of a table's
       // maxes come from ONE agg pass.
       def domainMax(table: String, pks: String*): Map[String, Long] = {
-        val row = spark.read.parquet(s"$sfDir/$table.parquet")
+        val row = graft.core.Tables.load(spark, sfDir, table)
           .agg(max(col(pks.head)), pks.tail.map(p => max(col(p))): _*).head()
         pks.zipWithIndex.map { case (p, i) => p -> (row.getLong(i) + 1L) }.toMap
       }
@@ -59,7 +59,7 @@ object ScaleReplica {
       val suppOff = domainMax("supplier", "s_suppkey")("s_suppkey")
       val eventOff = domainMax("events", "event_id", "user_id")
       def rep(table: String, keyCols: Seq[(String, Long)]): Unit = {
-        val t0 = spark.read.parquet(s"$sfDir/$table.parquet")
+        val t0 = graft.core.Tables.load(spark, sfDir, table)
         val shifted = keyCols.foldLeft(t0.crossJoin(copies)) { case (df, (k, o)) =>
           df.withColumn(k, col(k) + col("rep") * o) }.drop("rep")
         shifted.write.mode("overwrite").parquet(s"$out/$table.parquet")
@@ -75,7 +75,7 @@ object ScaleReplica {
       rep("documents", Seq("doc_id" -> domainMax("documents", "doc_id")("doc_id")))
       rep("embeddings", Seq("vec_id" -> domainMax("embeddings", "vec_id")("vec_id")))
       for (t <- Seq("nation", "region"))
-        spark.read.parquet(s"$sfDir/$t.parquet")
+        graft.core.Tables.load(spark, sfDir, t)
           .write.mode("overwrite").parquet(s"$out/$t.parquet")
       new java.io.File(s"$out/_READY").createNewFile()
     }

@@ -14,6 +14,9 @@ object Verify {
       else _ => true
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.Sessions.local(cpus, "graft-verify")
+    // ERROR, as the other mains: four concurrent rows' WARN lines would
+    // otherwise bury the failure lines in the captured tail
+    spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     // queries are independent: run 4 concurrently (Spark schedules
     // concurrent jobs from separate threads safely) to cut gate latency

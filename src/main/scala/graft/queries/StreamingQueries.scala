@@ -44,7 +44,7 @@ object StreamingQueries {
         // per-partition overhead — isolate the knob from the shared session
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val src = Streams.fileSource(ss, dir.toString, raw.schema)
           .withColumn("ts", Tables.canonTs(raw.schema))
         val agg = Streams.windowedCounts(src, "ts", "event_type",
@@ -85,7 +85,7 @@ object StreamingQueries {
           java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val src = Streams.fileSource(ss, dir.toString, raw.schema)
           .withColumn("ts", Tables.canonTs(raw.schema))
         val agg = Streams.slidingCounts(src, "ts", "event_type",
@@ -121,7 +121,7 @@ object StreamingQueries {
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
         import ss.implicits._
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val src = Streams.fileSource(ss, dir.toString, raw.schema)
           .select(col("user_id").cast("long").as("userId"),
             col("event_id").cast("long").as("eventId"),
@@ -155,7 +155,7 @@ object StreamingQueries {
             java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val src = Streams.fileSource(ss, dir.toString, raw.schema)
           .withColumn("ts", Tables.canonTs(raw.schema))
         val out = Streams.streamingDedup(src, "event_id", "ts",
@@ -187,7 +187,7 @@ object StreamingQueries {
           java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         def src() = Streams.fileSource(ss, dir.toString, raw.schema)
           .withColumn("ts", Tables.canonTs(raw.schema))
         val imps = src().filter(col("event_type") === "click")
@@ -223,7 +223,7 @@ object StreamingQueries {
           java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val dim = graft.core.Tables.customer(ss, d)
           .select(col("c_custkey").as("user_id"),
             col("c_mktsegment").as("segment"))
@@ -378,7 +378,7 @@ object StreamingQueries {
           java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         def src = Streams.fileSource(ss, dir.toString, raw.schema)
           .withColumn("ts", Tables.canonTs(raw.schema))
         // stateless rule: pure per-row projection, append mode
@@ -511,7 +511,7 @@ object StreamingQueries {
         import java.nio.file.{Files, Paths}
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val landing = graft.core.TempDirs.scratch("st11_landing_")
         def stage(df: org.apache.spark.sql.DataFrame, name: String,
                   mtime: Long): Unit = {
@@ -574,7 +574,7 @@ object StreamingQueries {
         import java.nio.file.{Files, Paths}
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val tsCol = Tables.canonTs(raw.schema)
         val lastDay = raw.select(date_trunc("DAY", max(tsCol))).head().getTimestamp(0)
         val landing = graft.core.TempDirs.scratch("st10_landing_")
@@ -648,7 +648,7 @@ object StreamingQueries {
           java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         def src() = Streams.fileSource(ss, dir.toString, raw.schema)
           .withColumn("ts", Tables.canonTs(raw.schema))
         val imps = src().filter(col("event_type") === "click")
@@ -709,7 +709,7 @@ object StreamingQueries {
           java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val src = Streams.fileSource(ss, dir.toString, raw.schema)
           .withColumn("ts", Tables.canonTs(raw.schema))
         val counts = src.select(col("event_type"),
@@ -749,7 +749,7 @@ object StreamingQueries {
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
         import ss.implicits._
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val src = Streams.fileSource(ss, dir.toString, raw.schema)
           .select(col("user_id").cast("long").as("userId"),
             col("event_id").cast("long").as("eventId"),
@@ -824,7 +824,7 @@ object StreamingQueries {
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
         import ss.implicits._
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val src = Streams.fileSource(ss, dir.toString, raw.schema)
           .select(col("user_id").cast("long").as("userId"),
             col("event_id").cast("long").as("eventId"),
@@ -1026,7 +1026,7 @@ object StreamingQueries {
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
         import ss.implicits._
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val src = Streams.fileSource(ss, dir.toString, raw.schema)
           .select(col("user_id").cast("long").as("userId"),
             col("event_id").cast("long").as("eventId"),
@@ -1082,7 +1082,7 @@ object StreamingQueries {
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
         import ss.implicits._
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val src = Streams.fileSource(ss, dir.toString, raw.schema)
           .select(col("user_id").cast("long").as("userId"),
             col("event_id").cast("long").as("eventId"),
@@ -1133,7 +1133,7 @@ object StreamingQueries {
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
         import ss.implicits._
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val src = Streams.fileSource(ss, dir.toString, raw.schema)
           .select(col("user_id").cast("long").as("userId"),
             col("event_id").cast("long").as("eventId"),
@@ -1184,7 +1184,7 @@ object StreamingQueries {
         import java.nio.file.{Files, Paths}
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val landing = graft.core.TempDirs.scratch("st23_landing_")
         def stage(df: org.apache.spark.sql.DataFrame, name: String,
                   mtime: Long): Unit = {
@@ -1216,7 +1216,7 @@ object StreamingQueries {
           max(when(col("event_type") === "purchase",
             expr("hll_sketch_estimate(sk)"))).as("est_b"),
           expr("hll_sketch_estimate(hll_union_agg(sk))").as("est_u"))
-        val ev = ss.read.parquet(s"$d/events.parquet")
+        val ev = Tables.load(ss, d, "events")
         Keys.sketchIntersectionVerdict(ev, ests)
       }
     },
@@ -1230,7 +1230,7 @@ object StreamingQueries {
         import java.nio.file.{Files, Paths}
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val landing = graft.core.TempDirs.scratch("st22_landing_")
         def stage(df: org.apache.spark.sql.DataFrame, name: String,
                   mtime: Long): Unit = {
@@ -1260,7 +1260,7 @@ object StreamingQueries {
         val est = ss.table(sink)
           .select(col("event_type"),
             expr("hll_sketch_estimate(sk)").as("est"))
-        val exact = ss.read.parquet(s"$d/events.parquet")
+        val exact = Tables.load(ss, d, "events")
           .groupBy("event_type")
           .agg(countDistinct("user_id").as("exact_distinct"))
         exact.join(est, "event_type")
@@ -1309,7 +1309,7 @@ object StreamingQueries {
         import java.nio.file.{Files, Paths}
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = ss.read.parquet(s"$d/events.parquet")
+        val raw = Tables.load(ss, d, "events")
         val landing = graft.core.TempDirs.scratch("st19_landing_")
         def stage(df: org.apache.spark.sql.DataFrame, name: String,
                   mtime: Long): Unit = {
@@ -1394,7 +1394,7 @@ object StreamingQueries {
         import java.nio.file.{Files, Paths}
         val ss = s.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val ids = ss.read.parquet(s"$d/documents.parquet").select("doc_id")
+        val ids = Tables.load(ss, d, "documents").select("doc_id")
         val landing = graft.core.TempDirs.scratch("st24_landing_")
         def stage(df: org.apache.spark.sql.DataFrame, name: String,
                   mtime: Long): Unit = {

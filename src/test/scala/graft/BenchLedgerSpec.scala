@@ -37,10 +37,11 @@ class BenchLedgerSpec extends AnyFunSuite {
     // the probe fields ride BOTH emitted JSON lines via the shared
     // fragment; pin the fragment's shape and the class boundaries so a
     // refactor cannot silently drop the artifact's self-adjudication
-    val j = Bench.hostProbeJson(287.3, 85.9, 400.0)
+    val j = Bench.hostProbeJson(287.3, 85.9, 12.5, 400.0)
     assert(j.contains("\"host_probe\":{"), j)
     assert(j.contains("\"tmp_mbps\":287.3"), j)
     assert(j.contains("\"other_cpu_sec\":85.9"), j)
+    assert(j.contains("\"steal_sec\":12.5"), j)
     assert(j.contains("\"wall_sec\":400.0"), j)
     assert(j.contains("\"class\":\"contended\""), j)
     // the sbt-parent floor (~7-10% of wall) reads quiet at ANY length:
@@ -53,6 +54,19 @@ class BenchLedgerSpec extends AnyFunSuite {
     // the probe itself runs and returns a positive throughput here
     val mbps = Bench.tmpWriteMbps()
     assert(mbps > 0, s"tmp probe returned $mbps")
+  }
+
+  test("host probe never prints negative CPU: a negative raw reads 0.0, unknown") {
+    // BENCH_r16's microVM: busy jiffies grew less than the bench's own
+    val j = Bench.hostProbeJson(287.3, -1618.2, 3.0, 706.0)
+    assert(j.contains("\"other_cpu_sec\":0.0"), j)
+    assert(j.contains("\"class\":\"unknown\""), j)
+    assert(!j.contains("-"), j)
+    // a failed /proc read (-1 for both) prints zeros too, never -1.0
+    val failed = Bench.hostProbeJson(287.3, -1.0, -1.0, 10.0)
+    assert(failed.contains("\"other_cpu_sec\":0.0"), failed)
+    assert(failed.contains("\"steal_sec\":0.0"), failed)
+    assert(failed.contains("\"class\":\"unknown\""), failed)
   }
 
   test("live BASELINE.md ledger covers every registered query") {
