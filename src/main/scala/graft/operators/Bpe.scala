@@ -108,19 +108,11 @@ object Bpe {
       merges += ((l, r))
       cur = cur.withColumn(toksCol, mergeAnyExpr(col(toksCol), l, r))
         .localCheckpoint(true)
-      prevCheckpoint.foreach(freeCheckpoint)
+      // localCheckpoint blocks are NOT CacheManager entries, so
+      // catalog.clearCache() never releases them
+      prevCheckpoint.foreach(Dedup.freeCheckpoint)
       prevCheckpoint = Some(cur)
     }
     (merges.toSeq, cur)
   }
-
-  // same leaf-walk free Dedup.connectedComponents uses: localCheckpoint
-  // blocks are NOT CacheManager entries, so catalog.clearCache() never
-  // releases them
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

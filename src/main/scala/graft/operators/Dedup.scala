@@ -354,7 +354,6 @@ object Dedup {
                           maxIter: Int,
                           smallGraphEdges: Long,
                           starFallbackLabelFreq: Long): DataFrame = {
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     require(smallGraphEdges < Int.MaxValue, "smallGraphEdges must fit in Int")
     // small-graph fast path: near-dup pair graphs are tiny relative to
     // the corpus they came from (LSH pairs ≪ docs); below the bound a
@@ -400,8 +399,6 @@ object Dedup {
       .localCheckpoint(true)
     var iter = 0
     var changed = 1L
-    if (debug)
-      System.err.println(s"[cc] setup done @${System.nanoTime() / 1000000}ms")
     while (changed > 0 && iter < maxIter) {
       // joins are hinted SHUFFLE_HASH: the label table sits under
       // typical broadcast thresholds mid-size, and auto-broadcast would
@@ -454,8 +451,6 @@ object Dedup {
       // a converged labeling is final — return it even if a component
       // is giant, there is no further compression join to protect.
       if (changed > 0 && maxFreq > starFallbackLabelFreq) {
-        if (debug)
-          System.err.println(s"[cc] round ${iter + 1} maxLabelFreq=$maxFreq > $starFallbackLabelFreq: star fallback")
         // seeded is eagerly checkpointed BEFORE the round state is freed:
         // it reads `next`'s checkpoint blocks (not recomputable once
         // unpersisted), and the flat LogicalRDD also sidesteps Catalyst
@@ -482,8 +477,6 @@ object Dedup {
       freeCheckpoint(labels)
       labels = next
       iter += 1
-      if (debug)
-        System.err.println(s"[cc] round $iter changed=$changed @${System.nanoTime() / 1000000}ms")
     }
     freeCheckpoint(edges)
     labels.select(col("id"), col("label").as("component"))
@@ -493,8 +486,9 @@ object Dedup {
     * A checkpointed plan is a LogicalRDD leaf over eagerly-persisted
     * blocks; dropping the Dataset reference alone leaves those blocks
     * resident until ContextCleaner + GC catch up. (The final `labels`
-    * result stays persisted for the caller to consume.) */
-  private def freeCheckpoint(df: DataFrame): Unit =
+    * result stays persisted for the caller to consume.) Bpe.applyMerges
+    * frees its per-merge checkpoints the same way. */
+  private[operators] def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
@@ -560,7 +554,6 @@ object Dedup {
   private def connectedComponentsStarsImpl(pairs: DataFrame, aCol: String,
                                            bCol: String, maxIter: Int,
                                            smallGraphEdges: Long): DataFrame = {
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     // nodes kept aside so the star loop can drop self-loops freely:
     // a node whose component collapses to itself leaves the edge set,
     // and the final left-join restores it as its own component root
@@ -607,15 +600,11 @@ object Dedup {
         edges = uf.iterator.filter { case (v, r) => v != r }.toSeq
           .toDF("a", "b").localCheckpoint(true)
         done = true
-        if (debug)
-          System.err.println(s"[cc-stars] local finish at n=$cnt after round ${iter + 1}")
       } else {
         done = cnt == prevCount && isStarForest(edges)
       }
       prevCount = cnt
       iter += 1
-      if (debug)
-        System.err.println(s"[cc-stars] round $iter n=$cnt done=$done @${System.nanoTime() / 1000000}ms")
     }
     // on normal convergence the edge set is a star forest (single parent
     // per child) and the join is 1:1; if maxIter exhausted first, a

@@ -48,6 +48,27 @@ object Analytics {
       .agg(sum(col("term")).cast("double").as("psi"))
   }
 
+  /** The sparsified supplier co-purchase graph the g rows share: supplier
+    * pairs (x < y) that appear in one order, kept when the first hex
+    * digit of md5("x_y" || salt) is "0" (~1/16, the sample each row's
+    * oracle restates with its own salt). Lineitem is fanned out (§2.5)
+    * because the pair build is a broadcast-join probe over the whole
+    * fact scan exploding to ~3x its rows, heavy map work a
+    * one-row-group input would run in one task.
+    */
+  private def coSupplierEdges(s: org.apache.spark.sql.SparkSession, d: String,
+                              salt: String): org.apache.spark.sql.DataFrame = {
+    val li = graft.core.Par.fanOut(
+      Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
+      col("l_orderkey"))
+    li.toDF("ok", "x")
+      .join(li.toDF("ok2", "y"), col("ok") === col("ok2") && col("x") < col("y"))
+      .select("x", "y").distinct()
+      .filter(substring(
+        md5(concat(col("x").cast("string"), lit("_"), col("y").cast("string"), lit(salt))),
+        1, 1) === "0")
+  }
+
   val queries: Seq[Query] = Seq(
 
     // ---- A52: ROC AUC via the Mann-Whitney rank identity -------------------
@@ -1993,18 +2014,7 @@ object Analytics {
         |               * (CAST(d_sum AS DOUBLE) / (2.0 * m)), 9) AS term
         |FROM deg LEFT JOIN ein ON deg.c = ein.c CROSS JOIN m""".stripMargin) {
       (s, d) => {
-        // fanned (§2.5): the co-supplier pair build is a broadcast-join
-        // probe over the whole fact scan exploding to ~3x its rows —
-        // heavy map work a one-row-group input runs in one task
-        val li = graft.core.Par.fanOut(
-          Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey"))
-        val pair = li.toDF("ok", "x")
-          .join(li.toDF("ok2", "y"), col("ok") === col("ok2") && col("x") < col("y"))
-          .select("x", "y").distinct()
-        val e = pair.filter(substring(
-            md5(concat(col("x").cast("string"), lit("_"),
-              col("y").cast("string"), lit("g13"))), 1, 1) === "0")
+        val e = coSupplierEdges(s, d, "g13")
           .localCheckpoint() // m + within-edges + both degree legs share it
         val m = e.agg(count(lit(1)).as("m"))
         val ein = e.filter(col("x") % 8 === col("y") % 8)
@@ -2044,22 +2054,11 @@ object Analytics {
         |FROM wedge JOIN de ON (wedge.v = de.src AND wedge.w = de.dst)
         |                   OR (wedge.w = de.src AND wedge.v = de.dst)""".stripMargin) {
       (s, d) => {
-        // fanned (§2.5): the co-supplier pair build is a broadcast-join
-        // probe over the whole fact scan exploding to ~3x its rows —
-        // heavy map work a one-row-group input runs in one task
-        val li = graft.core.Par.fanOut(
-          Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey"))
-        val pair = li.toDF("ok", "x")
-          .join(li.toDF("ok2", "y"), col("ok") === col("ok2") && col("x") < col("y"))
-          .select("x", "y").distinct()
         // e is referenced 3x (edges, both degree legs) and de 2x (wedge
         // legs + closing): localCheckpoint both (the g10 pattern) or
         // every reference re-executes the whole distinct-pair join —
         // the plan balloons to 47 exchanges without these two cuts
-        val e = pair.filter(substring(
-          md5(concat(col("x").cast("string"), lit("_"), col("y").cast("string"), lit("g13"))),
-          1, 1) === "0").localCheckpoint()
+        val e = coSupplierEdges(s, d, "g13").localCheckpoint()
         val deg = e.select(col("x").as("node")).unionAll(e.select(col("y")))
           .groupBy("node").agg(count(lit(1)).as("dg"))
         val withDeg = e
@@ -2253,18 +2252,7 @@ object Analytics {
         |         SELECT x AS node FROM e5 UNION ALL SELECT y FROM e5) t GROUP BY 1)
         |SELECT node, CAST(dg AS BIGINT) AS core_deg FROM d6""".stripMargin) {
       (s, d) => {
-        // fanned (§2.5): the co-supplier pair build is a broadcast-join
-        // probe over the whole fact scan exploding to ~3x its rows —
-        // heavy map work a one-row-group input runs in one task
-        val li = graft.core.Par.fanOut(
-          Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey"))
-        val pair = li.toDF("ok", "x")
-          .join(li.toDF("ok2", "y"), col("ok") === col("ok2") && col("x") < col("y"))
-          .select("x", "y").distinct()
-        val e = pair.filter(substring(
-          md5(concat(col("x").cast("string"), lit("_"),
-            col("y").cast("string"), lit("g19"))), 1, 1) === "0")
+        val e = coSupplierEdges(s, d, "g19")
         graft.operators.Graphs.kCorePeel(e, k = 4L, rounds = 5)
       }
     },
@@ -2316,18 +2304,7 @@ object Analytics {
         |    FROM v3) t WHERE rn = 1)
         |SELECT node, CAST(label AS BIGINT) AS label FROM l3""".stripMargin) {
       (s, d) => {
-        // fanned (§2.5): the co-supplier pair build is a broadcast-join
-        // probe over the whole fact scan exploding to ~3x its rows —
-        // heavy map work a one-row-group input runs in one task
-        val li = graft.core.Par.fanOut(
-          Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey"))
-        val pair = li.toDF("ok", "x")
-          .join(li.toDF("ok2", "y"), col("ok") === col("ok2") && col("x") < col("y"))
-          .select("x", "y").distinct()
-        val e = pair.filter(substring(
-          md5(concat(col("x").cast("string"), lit("_"),
-            col("y").cast("string"), lit("g21"))), 1, 1) === "0")
+        val e = coSupplierEdges(s, d, "g21")
         graft.operators.Graphs.labelPropagation(e, rounds = 3)
       }
     },
@@ -2369,18 +2346,7 @@ object Analytics {
         |         / (da.dg + db.dg - ne.common) AS jaccard
         |FROM ne JOIN deg da ON ne.x = da.s JOIN deg db ON ne.y = db.s""".stripMargin) {
       (s, d) => {
-        // fanned (§2.5): the co-supplier pair build is a broadcast-join
-        // probe over the whole fact scan exploding to ~3x its rows —
-        // heavy map work a one-row-group input runs in one task
-        val li = graft.core.Par.fanOut(
-          Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey"))
-        val pair = li.toDF("ok", "x")
-          .join(li.toDF("ok2", "y"), col("ok") === col("ok2") && col("x") < col("y"))
-          .select("x", "y").distinct()
-        val e0 = pair.filter(substring(
-            md5(concat(col("x").cast("string"), lit("_"),
-              col("y").cast("string"), lit("g23"))), 1, 1) === "0")
+        val e0 = coSupplierEdges(s, d, "g23")
           .localCheckpoint() // bi legs + the non-edge anti-join share it
         val bi = e0.select(col("x").as("s"), col("y").as("t"))
           .unionAll(e0.select(col("y").as("s"), col("x").as("t")))
@@ -2448,18 +2414,7 @@ object Analytics {
         |  GROUP BY 1)
         |SELECT node, CAST(dist AS BIGINT) AS dist FROM d4""".stripMargin) {
       (s, d) => {
-        // fanned (§2.5): the co-supplier pair build is a broadcast-join
-        // probe over the whole fact scan exploding to ~3x its rows —
-        // heavy map work a one-row-group input runs in one task
-        val li = graft.core.Par.fanOut(
-          Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey"))
-        val pair = li.toDF("ok", "x")
-          .join(li.toDF("ok2", "y"), col("ok") === col("ok2") && col("x") < col("y"))
-          .select("x", "y").distinct()
-        val e = pair.filter(substring(
-          md5(concat(col("x").cast("string"), lit("_"),
-            col("y").cast("string"), lit("g20"))), 1, 1) === "0")
+        val e = coSupplierEdges(s, d, "g20")
           .localCheckpoint() // nodes + bidirectional legs share the pair join
         val sources = e.select(col("x").as("node"))
           .unionAll(e.select(col("y").as("node")))
@@ -2949,18 +2904,7 @@ object Analytics {
         |FROM deg LEFT JOIN pt ON deg.node = pt.node
         |WHERE dg >= 2""".stripMargin) {
       (s, d) => {
-        // fanned (§2.5): the co-supplier pair build is a broadcast-join
-        // probe over the whole fact scan exploding to ~3x its rows —
-        // heavy map work a one-row-group input runs in one task
-        val li = graft.core.Par.fanOut(
-          Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey"))
-        val pair = li.toDF("ok", "x")
-          .join(li.toDF("ok2", "y"), col("ok") === col("ok2") && col("x") < col("y"))
-          .select("x", "y").distinct()
-        val e = pair.filter(substring(
-          md5(concat(col("x").cast("string"), lit("_"), col("y").cast("string"), lit("g24"))),
-          1, 1) === "0").localCheckpoint() // 3 references (edges + both degree legs)
+        val e = coSupplierEdges(s, d, "g24").localCheckpoint() // 3 references (edges + both degree legs)
         val deg = e.select(col("x").as("node")).unionAll(e.select(col("y")))
           .groupBy("node").agg(count(lit(1)).as("dg"))
           .localCheckpoint() // orientation + final report both read it
@@ -3029,18 +2973,7 @@ object Analytics {
         |FROM sums
         |WHERE m * sj2 - sj * sj <> 0""".stripMargin) {
       (s, d) => {
-        // fanned (§2.5): the co-supplier pair build is a broadcast-join
-        // probe over the whole fact scan exploding to ~3x its rows —
-        // heavy map work a one-row-group input runs in one task
-        val li = graft.core.Par.fanOut(
-          Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey"))
-        val pair = li.toDF("ok", "x")
-          .join(li.toDF("ok2", "y"), col("ok") === col("ok2") && col("x") < col("y"))
-          .select("x", "y").distinct()
-        val e = pair.filter(substring(
-          md5(concat(col("x").cast("string"), lit("_"), col("y").cast("string"), lit("g25"))),
-          1, 1) === "0").localCheckpoint()
+        val e = coSupplierEdges(s, d, "g25").localCheckpoint()
         val deg = e.select(col("x").as("node")).unionAll(e.select(col("y")))
           .groupBy("node").agg(count(lit(1)).as("dg"))
         val withDeg = e
@@ -3795,18 +3728,7 @@ object Analytics {
         |FROM deg LEFT JOIN (SELECT u, count(*) AS n2 FROM pure GROUP BY 1) p
         |  ON deg.u = p.u""".stripMargin) {
       (s, d) => {
-        // fanned (§2.5): the co-supplier pair build is a broadcast-join
-        // probe over the whole fact scan exploding to ~3x its rows —
-        // heavy map work a one-row-group input runs in one task
-        val li = graft.core.Par.fanOut(
-          Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey"))
-        val pair = li.toDF("ok", "x")
-          .join(li.toDF("ok2", "y"), col("ok") === col("ok2") && col("x") < col("y"))
-          .select("x", "y").distinct()
-        val e = pair.filter(substring(
-          md5(concat(col("x").cast("string"), lit("_"), col("y").cast("string"), lit("g28"))),
-          1, 1) === "0").localCheckpoint() // adjacency x2 + the anti join share it
+        val e = coSupplierEdges(s, d, "g28").localCheckpoint() // adjacency x2 + the anti join share it
         val adj = e.select(col("x").as("u"), col("y").as("v"))
           .unionAll(e.select(col("y").as("u"), col("x").as("v")))
           .localCheckpoint() // degree, middle filter, and second hop share it

@@ -602,18 +602,18 @@ object Goals {
           (col("lang") === "en").as("f_lang"),
           (col("n_chars") >= 150).as("f_len"),
           (row_number().over(w) === 1).as("f_dedup"))
-        def stage(name: String, cond: org.apache.spark.sql.Column) = Seq(
+        def passing(name: String, cond: org.apache.spark.sql.Column) = Seq(
           count(when(cond, 1)).cast("long"),
           sum(when(cond, col("toks")).otherwise(0L)).cast("long"))
         val agg = f.agg(
           count(lit(1)).cast("long").as("d0"),
           sum(col("toks")).cast("long").as("t0"),
-          stage("lang", col("f_lang"))(0).as("d1"),
-          stage("lang", col("f_lang"))(1).as("t1"),
-          stage("ll", col("f_lang") && col("f_len"))(0).as("d2"),
-          stage("ll", col("f_lang") && col("f_len"))(1).as("t2"),
-          stage("lld", col("f_lang") && col("f_len") && col("f_dedup"))(0).as("d3"),
-          stage("lld", col("f_lang") && col("f_len") && col("f_dedup"))(1).as("t3"))
+          passing("lang", col("f_lang"))(0).as("d1"),
+          passing("lang", col("f_lang"))(1).as("t1"),
+          passing("ll", col("f_lang") && col("f_len"))(0).as("d2"),
+          passing("ll", col("f_lang") && col("f_len"))(1).as("t2"),
+          passing("lld", col("f_lang") && col("f_len") && col("f_dedup"))(0).as("d3"),
+          passing("lld", col("f_lang") && col("f_len") && col("f_dedup"))(1).as("t3"))
         agg.select(explode(array(
             struct(lit("all").as("stage"), col("d0").as("n_docs"), col("t0").as("n_tokens")),
             struct(lit("lang").as("stage"), col("d1").as("n_docs"), col("t1").as("n_tokens")),

@@ -3073,7 +3073,7 @@ object SimilaritySearch {
          |                list_transform(range(1, len($r.embedding) + 1),
          |                  i -> CAST($r.embedding[i] AS DOUBLE) * CAST($r.embedding[i] AS DOUBLE))),
          |                (a, x) -> a + x)))""".stripMargin
-    def stage(i: Int): String = {
+    def greedyStep(i: Int): String = {
       val prev = (1 until i).map(j => s"SELECT qid, cid FROM s$j").mkString("\n  UNION ALL ")
       s"""sel$i AS ($prev),
          |m$i AS MATERIALIZED (
@@ -3106,7 +3106,7 @@ object SimilaritySearch {
        |    SELECT qid, cid, rel,
        |           row_number() OVER (PARTITION BY qid ORDER BY rel DESC, cid) AS rn
        |    FROM rel) t WHERE rn = 1),
-       |${(2 to 5).map(stage).mkString(",\n")}
+       |${(2 to 5).map(greedyStep).mkString(",\n")}
        |${(1 to 5).map(i => s"SELECT qid, $i AS rank, cid, score FROM s$i")
           .mkString("\nUNION ALL ")}""".stripMargin
   }

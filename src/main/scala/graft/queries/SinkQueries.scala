@@ -1037,19 +1037,12 @@ object SinkQueries {
         |SELECT 2, 1, count(*),
         |       CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
         |FROM events WHERE event_id % 3 = 2""".stripMargin) { (s, d) =>
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       val landing = graft.core.TempDirs.scratch("io16_landing_")
       val manifestDir = graft.core.TempDirs.scratch("io16_manifest_").toString
       val ev = Tables.events(s, d).select("event_id", "value")
-      def stage(slice: Int, name: String): Unit = {
-        val tmp = graft.core.TempDirs.scratch("io16_b_").toString
-        ev.filter(col("event_id") % 3 === slice)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val f = graft.core.Fs.listDir(Paths.get(tmp)).map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        Files.copy(Paths.get(f), landing.resolve(name))
-      }
+      // Ingest goes by file name; the mtimes only mirror arrival order
+      def landSlice(slice: Int): Unit = graft.streaming.Streams.land(landing,
+        ev.filter(col("event_id") % 3 === slice), s"f$slice.parquet", (slice + 1) * 1000000L)
       val ingest = new graft.operators.Ingest(s, landing.toString, manifestDir)
       def runOnce(runId: Int): org.apache.spark.sql.DataFrame = {
         val newFiles = ingest.nextBatch() // bounded: |files| per run
@@ -1064,9 +1057,9 @@ object SinkQueries {
         out.select(lit(runId).as("run"),
           lit(newFiles.size).as("files_processed"), col("n"), col("total"))
       }
-      stage(0, "f0.parquet"); stage(1, "f1.parquet")
+      landSlice(0); landSlice(1)
       val r1 = runOnce(1).localCheckpoint() // materialize BEFORE f2 lands
-      stage(2, "f2.parquet")
+      landSlice(2)
       val r2 = runOnce(2).localCheckpoint()
       r1.unionAll(r2)
     },

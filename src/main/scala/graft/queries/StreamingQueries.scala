@@ -1,14 +1,13 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.core.{Query, Tables}
 import graft.streaming.Streams
 
 /** Structured Streaming surface exercised under the batch oracle gate:
   * the stream runs the events parquet through the incremental path
-  * (file source → watermarked windowed aggregation → memory sink) with
-  * Trigger.AvailableNow — the reference's "process everything landed,
+  * (file source → watermarked windowed aggregation → memory sink) under
+  * Streams.runAvailableNow — the reference's "process everything landed,
   * then stop" cadence — and the finished result must hash-match the
   * plain batch SQL over the same data. This pins exactly the equivalence
   * a landing-zone pipeline relies on when it switches from scheduled
@@ -20,11 +19,6 @@ import graft.streaming.Streams
   */
 object StreamingQueries {
 
-  // close-safe listing lives in core.Fs (shared repo-wide)
-  private def listDir(dir: String): Array[String] =
-    graft.core.Fs.listDir(java.nio.file.Paths.get(dir))
-      .map(_.toString).toArray
-
   val queries: Seq[Query] = Seq(
 
     Query("st01_stream_windowed_counts",
@@ -32,33 +26,14 @@ object StreamingQueries {
         |       event_type, count(*) AS n
         |FROM events GROUP BY 1, 2""".stripMargin) {
       (s, d) => {
-        // the streaming file source takes a DIRECTORY (it lists for new
-        // files); the testdata tables are single files, so stage a
-        // landing-zone dir with a symlink — no data copy
-        val dir = graft.core.TempDirs.scratch("st01_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        // child session: state-store count follows shuffle partitions, and
-        // 32 HDFS-backed stores for a few-hundred-key aggregation is pure
-        // per-partition overhead — isolate the knob from the shared session
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = Tables.load(ss, d, "events")
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
-          .withColumn("ts", Tables.canonTs(raw.schema))
+        val raw = Streams.symlinkSource(Streams.rowSession(s), d, "events")
+        val src = raw.withColumn("ts", Tables.canonTs(raw.schema))
         val agg = Streams.windowedCounts(src, "ts", "event_type",
           windowLen = "1 hour", watermark = "2 hours")
         // complete mode: every window is emitted at end-of-stream, so the
         // finished table equals the batch aggregation (append mode would
         // hold back windows newer than the final watermark)
-        val sink = "st01_counts_" + System.nanoTime()
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
+        Streams.memorySink(agg, "complete")
       }
     },
 
@@ -79,24 +54,11 @@ object StreamingQueries {
         |SELECT CAST(ws AS TIMESTAMP) AS window_start, event_type, count(*) AS n
         |FROM w GROUP BY 1, 2""".stripMargin) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st18_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = Tables.load(ss, d, "events")
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
-          .withColumn("ts", Tables.canonTs(raw.schema))
+        val raw = Streams.symlinkSource(Streams.rowSession(s), d, "events")
+        val src = raw.withColumn("ts", Tables.canonTs(raw.schema))
         val agg = Streams.slidingCounts(src, "ts", "event_type",
           windowLen = "1 hour", slide = "30 minutes", watermark = "2 hours")
-        val sink = "st18_sliding_" + System.nanoTime()
-        val q = agg.writeStream.format("memory").queryName(sink)
-          .outputMode("complete").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
+        Streams.memorySink(agg, "complete")
       }
     },
 
@@ -114,27 +76,16 @@ object StreamingQueries {
         |FROM (SELECT *, lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
         |      FROM events)""".stripMargin) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st02_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         import ss.implicits._
-        val raw = Tables.load(ss, d, "events")
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
+        val raw = Streams.symlinkSource(ss, d, "events")
+        val src = raw
           .select(col("user_id").cast("long").as("userId"),
             col("event_id").cast("long").as("eventId"),
             Tables.tsMicros(raw.schema).as("tsMicros"))
           .as[Streams.SessionEvent]
         val out = Streams.sessionizeStream(src, gapMicros = 1800L * 1000000)
-        val sink = "st02_sessions_" + System.nanoTime()
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
+        Streams.memorySink(out, "append")
           .select(col("eventId").as("event_id"), col("sessionId").as("session_id"))
       }
     },
@@ -149,24 +100,12 @@ object StreamingQueries {
     Query("st03_stream_dedup",
       "SELECT event_id, event_type FROM events") {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st03_landing")
-        for (f <- Seq("events.parquet", "events_again.parquet"))
-          java.nio.file.Files.createSymbolicLink(dir.resolve(f),
-            java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = Tables.load(ss, d, "events")
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
-          .withColumn("ts", Tables.canonTs(raw.schema))
+        val raw = Streams.symlinkSource(Streams.rowSession(s), d, "events",
+          "events.parquet", "events_again.parquet")
+        val src = raw.withColumn("ts", Tables.canonTs(raw.schema))
         val out = Streams.streamingDedup(src, "event_id", "ts",
           watermark = "10 days")
-        val sink = "st03_dedup_" + System.nanoTime()
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink).select("event_id", "event_type")
+        Streams.memorySink(out, "append").select("event_id", "event_type")
       }
     },
 
@@ -181,15 +120,11 @@ object StreamingQueries {
         |  AND a.event_type = 'click' AND b.event_type = 'purchase'
         |  AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 30 MINUTE""".stripMargin) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st04_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = Tables.load(ss, d, "events")
-        def src() = Streams.fileSource(ss, dir.toString, raw.schema)
-          .withColumn("ts", Tables.canonTs(raw.schema))
+        val ss = Streams.rowSession(s)
+        def src() = {
+          val raw = Streams.symlinkSource(ss, d, "events")
+          raw.withColumn("ts", Tables.canonTs(raw.schema))
+        }
         val imps = src().filter(col("event_type") === "click")
           .select(col("user_id"), col("event_id").as("imp_id"),
             col("ts").as("imp_ts"))
@@ -198,13 +133,7 @@ object StreamingQueries {
             col("ts").as("conv_ts"))
         val joined = Streams.intervalJoin(imps, convs, "user_id",
           "imp_ts", "conv_ts", maxDelay = "30 minutes", watermark = "10 days")
-        val sink = "st04_attr_" + System.nanoTime()
-        val q = joined.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink).select("imp_id", "conv_id")
+        Streams.memorySink(joined, "append").select("imp_id", "conv_id")
       }
     },
 
@@ -217,26 +146,14 @@ object StreamingQueries {
       """SELECT e.event_id, c.c_mktsegment AS segment
         |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st05_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = Tables.load(ss, d, "events")
+        val ss = Streams.rowSession(s)
         val dim = graft.core.Tables.customer(ss, d)
           .select(col("c_custkey").as("user_id"),
             col("c_mktsegment").as("segment"))
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
+        val src = Streams.symlinkSource(ss, d, "events")
         val joined = src.join(broadcast(dim), "user_id")
           .select(col("event_id"), col("segment"))
-        val sink = "st05_enrich_" + System.nanoTime()
-        val q = joined.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
+        Streams.memorySink(joined, "append")
       }
     },
 
@@ -282,9 +199,7 @@ object StreamingQueries {
         |SELECT k AS c_custkey, seg, CAST(vf AS VARCHAR) AS valid_from,
         |       CAST(vt AS VARCHAR) AS valid_to FROM m2""".stripMargin) {
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         val cust = graft.core.Tables.customer(ss, d)
           .select(col("c_custkey"), col("c_mktsegment").as("seg"))
         // dimension store seeded with the open snapshot
@@ -295,28 +210,15 @@ object StreamingQueries {
           .write.mode("overwrite").parquet(dim)
         // two landed change batches, arrival order pinned via mtime
         val landing = graft.core.TempDirs.scratch("st06_landing_")
-        val b1 = graft.core.TempDirs.scratch("st06_b1_").toString
-        val b2 = graft.core.TempDirs.scratch("st06_b2_").toString
-        cust.filter(col("c_custkey") % 7 === 0)
+        val b1 = cust.filter(col("c_custkey") % 7 === 0)
           .select(col("c_custkey"), concat(col("seg"), lit("_X")).as("seg"))
-          .coalesce(1).write.mode("overwrite").parquet(b1)
-        cust.filter(col("c_custkey") % 13 === 5)
-          .select(col("c_custkey"), concat(col("seg"), lit("_Y")).as("seg"))
-          .coalesce(1).write.mode("overwrite").parquet(b2)
-        def stage(src: String, name: String, mtime: Long): Unit = {
-          val f = listDir(src)
-            .filter(_.endsWith(".parquet")).head
-          val dst = landing.resolve(name)
-          Files.copy(Paths.get(f), dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-        stage(b1, "batch1.parquet", 1000000L)
-        stage(b2, "batch2.parquet", 2000000L)
-        val schema = ss.read.parquet(b1).schema
-        val src = Streams.fileSource(ss, landing.toString, schema,
+        Streams.land(landing, b1, "batch1.parquet", 1000000L)
+        Streams.land(landing, cust.filter(col("c_custkey") % 13 === 5)
+          .select(col("c_custkey"), concat(col("seg"), lit("_Y")).as("seg")),
+          "batch2.parquet", 2000000L)
+        val src = Streams.fileSource(ss, landing.toString, b1.schema,
           maxFilesPerTrigger = Some(1))
-        val q = src.writeStream
+        Streams.runAvailableNow(src.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             val state = ss.read.parquet(dim)
             val merged = graft.operators.Scd2.merge(
@@ -327,11 +229,7 @@ object StreamingQueries {
               .localCheckpoint(true) // break the read-own-input cycle
             merged.write.mode("overwrite").parquet(dim)
             ()
-          }
-          .option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
+          })
         ss.read.parquet(dim).select(col("c_custkey"), col("seg"),
           col("valid_from").cast("string").as("valid_from"),
           col("valid_to").cast("string").as("valid_to"))
@@ -372,39 +270,22 @@ object StreamingQueries {
         |  GROUP BY k HAVING count(*) >= 2)
         |SELECT * FROM thr UNION ALL SELECT * FROM dup""".stripMargin) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st07_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = Tables.load(ss, d, "events")
-        def src = Streams.fileSource(ss, dir.toString, raw.schema)
-          .withColumn("ts", Tables.canonTs(raw.schema))
-        // stateless rule: pure per-row projection, append mode
-        val thrSink = "st07_thr_" + System.nanoTime()
-        val qThr = graft.operators.Anomalies.detectThreshold(
+        val ss = Streams.rowSession(s)
+        def src = {
+          val raw = Streams.symlinkSource(ss, d, "events")
+          raw.withColumn("ts", Tables.canonTs(raw.schema))
+        }
+        graft.operators.Anomalies.consolidate(Streams.memorySinks(
+          // stateless rule: pure per-row projection, append mode
+          graft.operators.Anomalies.detectThreshold(
             src.withColumn("__k", col("event_id")),
-            "events", "value_too_high", "__k", col("value"), 300.0)
-          .writeStream.format("memory").queryName(thrSink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        // stateful rule: complete-mode aggregation (collect_list member
-        // ids survive across micro-batches in the aggregation state)
-        val dupSink = "st07_dup_" + System.nanoTime()
-        val qDup = graft.operators.Anomalies.detectDuplication(
+            "events", "value_too_high", "__k", col("value"), 300.0) -> "append",
+          // stateful rule: complete-mode aggregation (collect_list member
+          // ids survive across micro-batches in the aggregation state)
+          graft.operators.Anomalies.detectDuplication(
             src.withColumn("__hr", date_trunc("hour", col("ts")).cast("long")),
             "events", "user_hour_burst", Seq("user_id", "__hr"), "event_id",
-            threshold = 2L)
-          .writeStream.format("memory").queryName(dupSink)
-          .outputMode("complete").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(qThr)
-        graft.core.TempDirs.awaitThenSweepCkpt(qDup)
-        graft.operators.Anomalies.consolidate(
-          Seq(ss.table(thrSink), ss.table(dupSink)))
+            threshold = 2L) -> "complete"))
       }
     },
 
@@ -422,11 +303,9 @@ object StreamingQueries {
     Query("st08_stream_incremental_neardup",
       SimilaritySearch.IncrementalNearDupOracleSql) {
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         import graft.operators.Dedup
         import graft.functions.TextFunctions
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         val docs = Tables.documents(ss, d)
         val corpus = docs.filter(col("doc_id") % 5 =!= 0)
         // stored-corpus artifacts: computed once, reused by every batch
@@ -446,22 +325,13 @@ object StreamingQueries {
         val newDocs = docs.filter(col("doc_id") % 5 === 0)
         val landing = graft.core.TempDirs.scratch("st08_landing_")
         val out = graft.core.TempDirs.scratch("st08_pairs_").toString
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-                  mtime: Long): Unit = {
-          val tmp = graft.core.TempDirs.scratch("st08_b_").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = listDir(tmp)
-            .filter(_.endsWith(".parquet")).head
-          val dst = landing.resolve(name)
-          Files.copy(Paths.get(f), dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-        stage(newDocs.filter(col("doc_id") % 10 === 0), "b1.parquet", 1000000L)
-        stage(newDocs.filter(col("doc_id") % 10 =!= 0), "b2.parquet", 2000000L)
+        Streams.land(landing, newDocs.filter(col("doc_id") % 10 === 0),
+          "b1.parquet", 1000000L)
+        Streams.land(landing, newDocs.filter(col("doc_id") % 10 =!= 0),
+          "b2.parquet", 2000000L)
         val src = Streams.fileSource(ss, landing.toString, docs.schema,
           maxFilesPerTrigger = Some(1))
-        val q = src.writeStream
+        Streams.runAvailableNow(src.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             val bSig = Dedup.md5Signatures(batch, "doc_id", "text",
               n = 2, k = 16).localCheckpoint(true)
@@ -485,11 +355,7 @@ object StreamingQueries {
               .filter(col("jaccard") >= 0.3)
               .write.mode("append").parquet(out)
             ()
-          }
-          .option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
+          })
         Seq(corpusSh, corpusSig, corpusBands).foreach(_.unpersist(false))
         ss.read.parquet(out)
       }
@@ -508,38 +374,19 @@ object StreamingQueries {
         |       CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total
         |FROM events GROUP BY 1""".stripMargin) {
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         val raw = Tables.load(ss, d, "events")
         val landing = graft.core.TempDirs.scratch("st11_landing_")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-                  mtime: Long): Unit = {
-          val tmp = graft.core.TempDirs.scratch("st11_b_").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = listDir(tmp)
-            .filter(_.endsWith(".parquet")).head
-          val dst = landing.resolve(name)
-          Files.copy(Paths.get(f), dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-        stage(raw.filter(col("event_id") % 2 === 0), "b1.parquet", 1000000L)
-        stage(raw.filter(col("event_id") % 2 =!= 0), "b2.parquet", 2000000L)
+        Streams.land(landing, raw.filter(col("event_id") % 2 === 0), "b1.parquet", 1000000L)
+        Streams.land(landing, raw.filter(col("event_id") % 2 =!= 0), "b2.parquet", 2000000L)
         val src = Streams.fileSource(ss, landing.toString, raw.schema,
           maxFilesPerTrigger = Some(1))
-        val sink = "st11_tot_" + System.nanoTime()
         // note: count(DISTINCT) is unsupported in streaming aggregations —
         // the decimal-routed sum is the second metric instead
-        val q = src.groupBy("event_type")
+        Streams.memorySink(src.groupBy("event_type")
           .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(18,4)")).cast("double").as("total"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
+            sum(col("value").cast("decimal(18,4)")).cast("double").as("total")),
+          "complete")
       }
     },
 
@@ -571,28 +418,15 @@ object StreamingQueries {
         |SELECT epoch_us(ws) AS window_start, event_type, n
         |FROM agg, wmf WHERE ws + INTERVAL 1 HOUR <= wmf.w""".stripMargin) {
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         val raw = Tables.load(ss, d, "events")
         val tsCol = Tables.canonTs(raw.schema)
         val lastDay = raw.select(date_trunc("DAY", max(tsCol))).head().getTimestamp(0)
         val landing = graft.core.TempDirs.scratch("st10_landing_")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-                  mtime: Long): Unit = {
-          val tmp = graft.core.TempDirs.scratch("st10_b_").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = listDir(tmp)
-            .filter(_.endsWith(".parquet")).head
-          val dst = landing.resolve(name)
-          Files.copy(Paths.get(f), dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-        stage(raw.filter(col("event_id") % 2 === 0), "b1.parquet", 1000000L)
-        stage(raw.filter(col("event_id") % 2 =!= 0 && tsCol >= lit(lastDay)),
+        Streams.land(landing, raw.filter(col("event_id") % 2 === 0), "b1.parquet", 1000000L)
+        Streams.land(landing, raw.filter(col("event_id") % 2 =!= 0 && tsCol >= lit(lastDay)),
           "b2.parquet", 2000000L)
-        stage(raw.filter(col("event_id") % 2 =!= 0 && tsCol < lit(lastDay)),
+        Streams.land(landing, raw.filter(col("event_id") % 2 =!= 0 && tsCol < lit(lastDay)),
           "b3.parquet", 3000000L)
         val src = Streams.fileSource(ss, landing.toString, raw.schema,
             maxFilesPerTrigger = Some(1))
@@ -602,13 +436,7 @@ object StreamingQueries {
           .agg(count(lit(1)).as("n"))
           .select(unix_micros(col("window.start")).as("window_start"),
             col("event_type"), col("n"))
-        val sink = "st10_late_" + System.nanoTime()
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
+        Streams.memorySink(out, "append")
       }
     },
 
@@ -619,8 +447,8 @@ object StreamingQueries {
     // emission is pure state-eviction semantics: a left row is released
     // when its match window's upper bound (imp_ts + 30 min) falls behind
     // the global watermark = min(max click ts, max purchase ts) - 1 h,
-    // truncated to ms (Spark tracks event-time stats in ms). Under
-    // Trigger.AvailableNow the final no-data batch (scheduled because the
+    // truncated to ms (Spark tracks event-time stats in ms). Under the
+    // AvailableNow trigger the final no-data batch (scheduled because the
     // watermark advanced) flushes the evictable state, so the finished
     // result is deterministic: all matches, plus null rows for every
     // unmatched click strictly older than the final watermark - 30 min.
@@ -642,15 +470,11 @@ object StreamingQueries {
         |  AND a.ts + INTERVAL 30 MINUTE < wm.w
         |  AND NOT EXISTS (SELECT 1 FROM m WHERE m.imp_id = a.event_id)""".stripMargin) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st09_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = Tables.load(ss, d, "events")
-        def src() = Streams.fileSource(ss, dir.toString, raw.schema)
-          .withColumn("ts", Tables.canonTs(raw.schema))
+        val ss = Streams.rowSession(s)
+        def src() = {
+          val raw = Streams.symlinkSource(ss, d, "events")
+          raw.withColumn("ts", Tables.canonTs(raw.schema))
+        }
         val imps = src().filter(col("event_type") === "click")
           .select(col("user_id"), col("event_id").as("imp_id"),
             col("ts").as("imp_ts"))
@@ -660,13 +484,7 @@ object StreamingQueries {
         val joined = Streams.intervalJoin(imps, convs, "user_id",
           "imp_ts", "conv_ts", maxDelay = "30 minutes",
           watermark = "1 hour", joinType = "leftOuter")
-        val sink = "st09_attr_" + System.nanoTime()
-        val q = joined.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink).select("imp_id", "conv_id")
+        Streams.memorySink(joined, "append").select("imp_id", "conv_id")
       }
     },
 
@@ -703,33 +521,20 @@ object StreamingQueries {
         |       CAST(sum(CAST(round((p - q) * ln(p / q), 6) AS DECIMAL(18,6))) AS DOUBLE) AS psi
         |FROM pq GROUP BY event_type""".stripMargin) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st12_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        val raw = Tables.load(ss, d, "events")
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
-          .withColumn("ts", Tables.canonTs(raw.schema))
+        val raw = Streams.symlinkSource(Streams.rowSession(s), d, "events")
+        val src = raw.withColumn("ts", Tables.canonTs(raw.schema))
         val counts = src.select(col("event_type"),
             (datediff(to_date(col("ts")), lit("1970-01-01")) % 2).as("slice"),
             least(lit(9L), greatest(lit(0L), floor(col("value") / 50.0).cast("long")))
               .as("bucket"))
           .groupBy("event_type", "slice", "bucket")
           .agg(count(lit(1)).as("n"))
-        val sink = "st12_psi_" + System.nanoTime()
-        val q = counts.writeStream.format("memory").queryName(sink)
-          .outputMode("complete").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
         // the memory-sink view cannot self-join (MemoryPlan re-references
         // keep the SAME attribute ids -> "conflicting references"); cut
         // to a LogicalRDD first — it's the finished counter table,
         // |types| x 2 x 10 rows
         graft.queries.Analytics.psiOfSlices(
-          ss.table(sink).localCheckpoint(), preCounted = true)
+          Streams.memorySink(counts, "complete").localCheckpoint(), preCounted = true)
       }
     },
 
@@ -742,28 +547,9 @@ object StreamingQueries {
     // two-state float recurrence).
     Query("st13_stream_holt", Temporal.HoltOracleSql) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st13_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        import ss.implicits._
-        val raw = Tables.load(ss, d, "events")
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
-          .select(col("user_id").cast("long").as("userId"),
-            col("event_id").cast("long").as("eventId"),
-            Tables.tsMicros(raw.schema).as("tsMicros"),
-            col("value").cast("double").as("value"))
-          .as[Streams.ValueEvent]
-        val out = Streams.holtStream(src, alpha = 0.5, beta = 0.25)
-        val sink = "st13_holt_" + System.nanoTime()
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
+        val src = Streams.valueEvents(
+          Streams.symlinkSource(Streams.rowSession(s), d, "events"))
+        Streams.memorySink(Streams.holtStream(src, alpha = 0.5, beta = 0.25), "append")
           .select(col("userId").as("user_id"), col("eventId").as("event_id"),
             col("level"), col("trend"),
             (col("level") + col("trend")).as("forecast"))
@@ -817,29 +603,12 @@ object StreamingQueries {
         |SELECT user_id, event_id, sp AS s_pos, sn AS s_neg, alarm
         |FROM scan""".stripMargin) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st14_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        import ss.implicits._
-        val raw = Tables.load(ss, d, "events")
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
-          .select(col("user_id").cast("long").as("userId"),
-            col("event_id").cast("long").as("eventId"),
-            Tables.tsMicros(raw.schema).as("tsMicros"),
-            col("value").cast("double").as("value"))
-          .as[Streams.ValueEvent]
-        val out = Streams.cusumStream(src, slackFrac = 0.25, threshFrac = 1.0)
-        val sink = "st14_cusum_" + System.nanoTime()
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
-          .select(col("userId").as("user_id"), col("eventId").as("event_id"),
+        val src = Streams.valueEvents(
+          Streams.symlinkSource(Streams.rowSession(s), d, "events"))
+        Streams.memorySink(
+            Streams.cusumStream(src, slackFrac = 0.25, threshFrac = 1.0), "append")
+          .select(
+col("userId").as("user_id"), col("eventId").as("event_id"),
             col("sPos").as("s_pos"), col("sNeg").as("s_neg"), col("alarm"))
       }
     },
@@ -866,25 +635,12 @@ object StreamingQueries {
         |GROUP BY w.lang, word, n
         |HAVING count(*) * 30 > n""".stripMargin) {
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         import graft.functions.TextFunctions
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         val docs = Tables.documents(ss, d)
         val landing = graft.core.TempDirs.scratch("st15_landing_")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-                  mtime: Long): Unit = {
-          val tmp = graft.core.TempDirs.scratch("st15_b_").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = listDir(tmp)
-            .filter(_.endsWith(".parquet")).head
-          val dst = landing.resolve(name)
-          Files.copy(Paths.get(f), dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-        stage(docs.filter(col("doc_id") % 2 === 0), "b1.parquet", 1000000L)
-        stage(docs.filter(col("doc_id") % 2 =!= 0), "b2.parquet", 2000000L)
+        Streams.land(landing, docs.filter(col("doc_id") % 2 === 0), "b1.parquet", 1000000L)
+        Streams.land(landing, docs.filter(col("doc_id") % 2 =!= 0), "b2.parquet", 2000000L)
         val toks = TextFunctions.tokens(col("text"))
         // driver-held candidate accumulator: <= n_batches x 64 strings
         // per language — the bounded-state contract
@@ -892,7 +648,7 @@ object StreamingQueries {
           .empty[String, Set[String]].withDefaultValue(Set.empty)
         val src = Streams.fileSource(ss, landing.toString, docs.schema,
           maxFilesPerTrigger = Some(1))
-        val q = src.writeStream
+        Streams.runAvailableNow(src.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             batch.groupBy("lang")
               .agg(graft.plans.MisraGriesTopK(toks, 64).as("cand"))
@@ -900,11 +656,7 @@ object StreamingQueries {
               .foreach(r => cands(r.getString(0)) =
                 cands(r.getString(0)) ++ r.getSeq[String](1))
             ()
-          }
-          .option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
+          })
         // exact verify over the landed corpus: only candidate tokens are
         // ever grouped (a27's phase 2), per language
         val candDf = ss.createDataFrame(
@@ -953,9 +705,7 @@ object StreamingQueries {
         |       CASE WHEN op = 'U' THEN nb ELSE bb END AS bal
         |FROM j WHERE op IS NULL OR op <> 'D'""".stripMargin) {
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         val day = datediff(to_date(col("o_orderdate")), lit("1970-01-01")).cast("long")
         val changes = Tables.orders(ss, d).select(
           when(col("o_orderkey") % 17 === 3, col("o_custkey") + 1000000L)
@@ -966,21 +716,10 @@ object StreamingQueries {
           (day * 100000000L + col("o_orderkey")).as("ordk"),
           to_date(col("o_orderdate")).as("od"))
         val landing = graft.core.TempDirs.scratch("st16_landing_")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-                  mtime: Long): Unit = {
-          val tmp = graft.core.TempDirs.scratch("st16_b_").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = listDir(tmp)
-            .filter(_.endsWith(".parquet")).head
-          val dst = landing.resolve(name)
-          Files.copy(Paths.get(f), dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
         val feed = changes.drop("od")
-        stage(changes.filter(col("od") < "1998-01-01").drop("od"),
+        Streams.land(landing, changes.filter(col("od") < "1998-01-01").drop("od"),
           "b1.parquet", 1000000L)
-        stage(changes.filter(col("od") >= "1998-01-01").drop("od"),
+        Streams.land(landing, changes.filter(col("od") >= "1998-01-01").drop("od"),
           "b2.parquet", 2000000L)
         // versioned snapshot store: each batch reads version v, writes v+1
         // (a parquet dir is never overwritten while being read)
@@ -991,7 +730,7 @@ object StreamingQueries {
         var version = 0
         val src = Streams.fileSource(ss, landing.toString, feed.schema,
           maxFilesPerTrigger = Some(1))
-        val q = src.writeStream
+        Streams.runAvailableNow(src.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             val cur = ss.read.parquet(s"$store/v$version")
             graft.operators.Cdc.applyChanges(cur, batch,
@@ -1000,11 +739,7 @@ object StreamingQueries {
               .write.parquet(s"$store/v${version + 1}")
             version += 1
             ()
-          }
-          .option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
+          })
         ss.read.parquet(s"$store/v$version")
       }
     },
@@ -1019,28 +754,9 @@ object StreamingQueries {
     // (Holt), this tracks LEVEL under noise with a learned gain.
     Query("st17_stream_kalman", Temporal.KalmanOracleSql) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st17_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        import ss.implicits._
-        val raw = Tables.load(ss, d, "events")
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
-          .select(col("user_id").cast("long").as("userId"),
-            col("event_id").cast("long").as("eventId"),
-            Tables.tsMicros(raw.schema).as("tsMicros"),
-            col("value").cast("double").as("value"))
-          .as[Streams.ValueEvent]
-        val out = Streams.kalmanStream(src, q = 0.25, r = 1.0)
-        val sink = "st17_kalman_" + System.nanoTime()
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
+        val src = Streams.valueEvents(
+          Streams.symlinkSource(Streams.rowSession(s), d, "events"))
+        Streams.memorySink(Streams.kalmanStream(src, q = 0.25, r = 1.0), "append")
           .select(col("userId").as("user_id"), col("eventId").as("event_id"),
             col("kalmanLevel").as("kalman_level"),
             col("kalmanVar").as("kalman_var"))
@@ -1075,28 +791,10 @@ object StreamingQueries {
         |SELECT user_id, event_id, macd, sig
         |FROM scan""".stripMargin) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st20_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        import ss.implicits._
-        val raw = Tables.load(ss, d, "events")
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
-          .select(col("user_id").cast("long").as("userId"),
-            col("event_id").cast("long").as("eventId"),
-            Tables.tsMicros(raw.schema).as("tsMicros"),
-            col("value").cast("double").as("value"))
-          .as[Streams.ValueEvent]
-        val out = Streams.macdStream(src, aFast = 0.5, aSlow = 0.125, aSig = 0.25)
-        val sink = "st20_macd_" + System.nanoTime()
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
+        val src = Streams.valueEvents(
+          Streams.symlinkSource(Streams.rowSession(s), d, "events"))
+        Streams.memorySink(
+            Streams.macdStream(src, aFast = 0.5, aSlow = 0.125, aSig = 0.25), "append")
           .select(col("userId").as("user_id"), col("eventId").as("event_id"),
             col("macd"), col("sig"))
       }
@@ -1126,28 +824,9 @@ object StreamingQueries {
         |FROM scan s JOIN (SELECT user_id, max(rn) AS mr FROM scan GROUP BY 1) t
         |  ON s.user_id = t.user_id AND s.rn = t.mr""".stripMargin) {
       (s, d) => {
-        val dir = graft.core.TempDirs.scratch("st21_landing")
-        java.nio.file.Files.createSymbolicLink(
-          dir.resolve("events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet").toAbsolutePath)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
-        import ss.implicits._
-        val raw = Tables.load(ss, d, "events")
-        val src = Streams.fileSource(ss, dir.toString, raw.schema)
-          .select(col("user_id").cast("long").as("userId"),
-            col("event_id").cast("long").as("eventId"),
-            Tables.tsMicros(raw.schema).as("tsMicros"),
-            col("value").cast("double").as("value"))
-          .as[Streams.ValueEvent]
-        val out = Streams.hashChainStream(src)
-        val sink = "st21_chain_" + System.nanoTime()
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        ss.table(sink)
+        val src = Streams.valueEvents(
+          Streams.symlinkSource(Streams.rowSession(s), d, "events"))
+        Streams.memorySink(Streams.hashChainStream(src), "append")
           .groupBy(col("userId").as("user_id"))
           .agg(count(lit(1)).cast("long").as("n_events"),
             max_by(col("chain"), struct(col("tsMicros"), col("eventId")))
@@ -1181,36 +860,19 @@ object StreamingQueries {
         |       (SELECT count(*) FROM a JOIN b USING (user_id)) AS exact_both,
         |       CAST(1 AS BOOLEAN) AS within_10pct""".stripMargin) {
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         val raw = Tables.load(ss, d, "events")
         val landing = graft.core.TempDirs.scratch("st23_landing_")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-                  mtime: Long): Unit = {
-          val tmp = graft.core.TempDirs.scratch("st23_b_").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = listDir(tmp)
-            .filter(_.endsWith(".parquet")).head
-          val dst = landing.resolve(name)
-          Files.copy(Paths.get(f), dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-        stage(raw.filter(col("event_id") % 2 === 0), "b1.parquet", 1000000L)
-        stage(raw.filter(col("event_id") % 2 =!= 0), "b2.parquet", 2000000L)
+        Streams.land(landing, raw.filter(col("event_id") % 2 === 0), "b1.parquet", 1000000L)
+        Streams.land(landing, raw.filter(col("event_id") % 2 =!= 0), "b2.parquet", 2000000L)
         val src = Streams.fileSource(ss, landing.toString, raw.schema,
           maxFilesPerTrigger = Some(1))
-        val sink = "st23_sk_" + System.nanoTime()
-        val q = src.filter(col("event_type").isin("view", "purchase"))
-          .groupBy("event_type")
-          .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        val ests = ss.table(sink).agg(
+        val sketches = Streams.memorySink(
+          src.filter(col("event_type").isin("view", "purchase"))
+            .groupBy("event_type")
+            .agg(expr("hll_sketch_agg(user_id, 14)").as("sk")),
+          "complete")
+        val ests = sketches.agg(
           max(when(col("event_type") === "view",
             expr("hll_sketch_estimate(sk)"))).as("est_a"),
           max(when(col("event_type") === "purchase",
@@ -1227,37 +889,17 @@ object StreamingQueries {
         |       CAST(1 AS BOOLEAN) AS within_5pct
         |FROM events GROUP BY 1""".stripMargin) {
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         val raw = Tables.load(ss, d, "events")
         val landing = graft.core.TempDirs.scratch("st22_landing_")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-                  mtime: Long): Unit = {
-          val tmp = graft.core.TempDirs.scratch("st22_b_").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = listDir(tmp)
-            .filter(_.endsWith(".parquet")).head
-          val dst = landing.resolve(name)
-          Files.copy(Paths.get(f), dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
         // split by event id parity: most users appear in BOTH batches,
         // so a broken cross-batch merge overcounts visibly
-        stage(raw.filter(col("event_id") % 2 === 0), "b1.parquet", 1000000L)
-        stage(raw.filter(col("event_id") % 2 =!= 0), "b2.parquet", 2000000L)
+        Streams.land(landing, raw.filter(col("event_id") % 2 === 0), "b1.parquet", 1000000L)
+        Streams.land(landing, raw.filter(col("event_id") % 2 =!= 0), "b2.parquet", 2000000L)
         val src = Streams.fileSource(ss, landing.toString, raw.schema,
           maxFilesPerTrigger = Some(1))
-        val sink = "st22_hll_" + System.nanoTime()
-        val q = src.groupBy("event_type")
-          .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
-        val est = ss.table(sink)
+        val est = Streams.memorySink(src.groupBy("event_type")
+            .agg(expr("hll_sketch_agg(user_id, 14)").as("sk")), "complete")
           .select(col("event_type"),
             expr("hll_sketch_estimate(sk)").as("est"))
         val exact = Tables.load(ss, d, "events")
@@ -1306,43 +948,24 @@ object StreamingQueries {
         |FROM q50 JOIN q90 ON q50.event_type = q90.event_type
         |WHERE q50.rn = 1 AND q90.rn = 1""".stripMargin) {
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         val raw = Tables.load(ss, d, "events")
         val landing = graft.core.TempDirs.scratch("st19_landing_")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-                  mtime: Long): Unit = {
-          val tmp = graft.core.TempDirs.scratch("st19_b_").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = listDir(tmp)
-            .filter(_.endsWith(".parquet")).head
-          val dst = landing.resolve(name)
-          Files.copy(Paths.get(f), dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-        stage(raw.filter(col("event_id") % 2 === 0), "b1.parquet", 1000000L)
-        stage(raw.filter(col("event_id") % 2 =!= 0), "b2.parquet", 2000000L)
+        Streams.land(landing, raw.filter(col("event_id") % 2 === 0), "b1.parquet", 1000000L)
+        Streams.land(landing, raw.filter(col("event_id") % 2 =!= 0), "b2.parquet", 2000000L)
         val src = Streams.fileSource(ss, landing.toString, raw.schema,
           maxFilesPerTrigger = Some(1))
-        val sink = "st19_hist_" + System.nanoTime()
         val bucket = least(greatest(floor(col("value") / 2.0), lit(0.0)), lit(9.0))
           .cast("long")
-        val q = src.groupBy(col("event_type"), bucket.as("bucket"))
-          .agg(count(lit(1)).as("c"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("complete").option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
+        val hist = Streams.memorySink(src.groupBy(col("event_type"), bucket.as("bucket"))
+          .agg(count(lit(1)).as("c")), "complete")
         import org.apache.spark.sql.expressions.Window
         val cumW = Window.partitionBy("event_type").orderBy("bucket")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         // localCheckpoint: the p50/p90 legs self-join this table, and
         // Spark cannot deduplicate conflicting references through a
         // MemorySink plan (INTERNAL_ERROR) — an RDD-backed child can be
-        val cum = ss.table(sink).localCheckpoint()
+        val cum = hist.localCheckpoint()
           .withColumn("cum", sum("c").over(cumW))
           .withColumn("n", sum("c").over(Window.partitionBy("event_type")))
           .withColumn("before", col("cum") - col("c"))
@@ -1391,30 +1014,18 @@ object StreamingQueries {
         |       CAST(sum(sr) AS BIGINT) AS sum_r
         |FROM s""".stripMargin) {
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "4")
+        val ss = Streams.rowSession(s)
         val ids = Tables.load(ss, d, "documents").select("doc_id")
         val landing = graft.core.TempDirs.scratch("st24_landing_")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-                  mtime: Long): Unit = {
-          val tmp = graft.core.TempDirs.scratch("st24_b_").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = listDir(tmp).filter(_.endsWith(".parquet")).head
-          val dst = landing.resolve(name)
-          Files.copy(Paths.get(f), dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
         // batch 2 re-delivers the doc_id % 3 == 1 slice of batch 1: the
         // manifest must fold the overlap to zero re-decodes
-        stage(ids.filter(col("doc_id") % 3 < 2), "b1.parquet", 1000000L)
-        stage(ids.filter(col("doc_id") % 3 >= 1), "b2.parquet", 2000000L)
+        Streams.land(landing, ids.filter(col("doc_id") % 3 < 2), "b1.parquet", 1000000L)
+        Streams.land(landing, ids.filter(col("doc_id") % 3 >= 1), "b2.parquet", 2000000L)
         val store = graft.core.TempDirs.scratch("st24_store_").toString
         val src = Streams.fileSource(ss, landing.toString, ids.schema,
           maxFilesPerTrigger = Some(1))
         var finalPath = ""
-        val q = src.writeStream
+        Streams.runAvailableNow(src.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             // fetch-by-ids: every presented id re-synthesizes for the
             // hash-only manifest pass, but re-delivered ids hash-match
@@ -1426,11 +1037,7 @@ object StreamingQueries {
               "payload", store, dropMissing = false)
             finalPath = r.path
             ()
-          }
-          .option("checkpointLocation",
-            graft.core.TempDirs.scratch("st_ckpt_").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.core.TempDirs.awaitThenSweepCkpt(q)
+          })
         ss.read.parquet(finalPath)
           .agg(count(lit(1)).as("n_images"),
             sum("n_px").cast("long").as("n_px"),

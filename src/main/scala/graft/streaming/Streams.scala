@@ -1,15 +1,28 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.core.{Fs, Tables, TempDirs}
 
 /** Structured Streaming surface. The reference is batch-only (SURVEY.md
   * §2.9 — "history" is simulated by scheduled re-runs); this module adds
   * the incremental path a landing-zone pipeline needs: file-source
   * pickup, watermarked windowed aggregation, and stateful gap
   * sessionization equivalent to the batch Sessionize operator.
+  *
+  * Every streaming registry row runs through [[runAvailableNow]]. The
+  * runner owns its streams' checkpoint dirs: it creates one per stream,
+  * waits until all of its streams have stopped, then stops any still
+  * running and deletes exactly those dirs, on success and on failure
+  * alike. No other row's stream or checkpoint is touched, so rows may
+  * run concurrently on one session. The helpers next to it ([[rowSession]],
+  * [[symlinkSource]], [[land]], [[memorySinks]], [[valueEvents]]) are the
+  * scaffold the rows share.
   *
   * Scale notes: the file source tracks processed files in the checkpoint
   * (exactly-once per file); windowed aggregation state is bounded by the
@@ -23,11 +36,110 @@ object Streams {
     * reference's "process everything landed, then stop" batch cadence.
     */
   def fileSource(spark: SparkSession, path: String, schema: StructType,
-                 format: String = "parquet",
                  maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    spark.readStream.format(format).schema(schema)
+    spark.readStream.format("parquet").schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.getOrElse(1000))
       .load(path)
+
+  /** Run a row's streams to completion with Trigger.AvailableNow, the
+    * reference's "process everything landed, then stop" cadence.
+    *
+    * Each writer gets a checkpoint dir the runner creates itself. All
+    * streams start before any is awaited (a row may need two sinks
+    * filling at once), and the first stream failure is rethrown. Once
+    * every stream has stopped, or one has failed, a `finally` stops any
+    * stream still running and deletes exactly these checkpoint dirs.
+    * Checkpoints sit on tmpfs (TempDirs), so leaving a finished row's
+    * state stores to the JVM-exit hook would pin RAM for the rest of a
+    * long Verify/Bench run; and a row never touches another row's
+    * streams or checkpoints, which Verify's concurrent rows rely on.
+    */
+  def runAvailableNow(writers: DataStreamWriter[_]*): Unit = {
+    val ckpts = writers.map(_ => TempDirs.scratch("st_ckpt_"))
+    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    try {
+      for ((w, ckpt) <- writers.zip(ckpts))
+        started += w.option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow()).start()
+      // awaitTermination(ms) returns as soon as a stream stops and
+      // throws if it failed; the slice only bounds how long one stream's
+      // failure waits behind a sibling that is still running
+      var running = started.toList
+      while (running.nonEmpty) running = running.filterNot(_.awaitTermination(100))
+    } finally {
+      try started.filter(_.isActive).foreach(_.stop())
+      finally ckpts.foreach(TempDirs.deleteRecursively)
+    }
+  }
+
+  /** A child session for one streaming row, at 4 shuffle partitions.
+    * The state-store count follows shuffle partitions, and 32
+    * HDFS-backed stores for a few-hundred-key aggregation is pure
+    * per-partition overhead — isolate the knob from the shared session.
+    */
+  def rowSession(s: SparkSession): SparkSession = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    ss
+  }
+
+  /** Stream sf table `table` through a scratch landing dir. The file
+    * source takes a DIRECTORY (it lists for new files) and the sf tables
+    * are single files, so the table is symlinked in, once per entry of
+    * `names` (default: `<table>.parquet`) — no data copy. The schema is
+    * Tables.load's, so its schema cache serves it.
+    */
+  def symlinkSource(ss: SparkSession, d: String, table: String,
+                    names: String*): DataFrame = {
+    val dir = TempDirs.scratch(s"${table}_landing_")
+    val target = Paths.get(s"$d/$table.parquet").toAbsolutePath
+    for (n <- if (names.isEmpty) Seq(s"$table.parquet") else names)
+      Files.createSymbolicLink(dir.resolve(n), target)
+    fileSource(ss, dir.toString, Tables.load(ss, d, table).schema)
+  }
+
+  /** Land `df` in the (possibly non-empty) landing dir `dir` as ONE
+    * parquet file named `name`, stamped with modification time `mtime`
+    * (epoch ms). The file source picks files up in mtime order, so the
+    * stamps pin the arrival order of a row's batches.
+    */
+  def land(dir: Path, df: DataFrame, name: String, mtime: Long): Unit = {
+    val tmp = TempDirs.scratch("landing_batch_")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val dst = dir.resolve(name)
+    Files.copy(Fs.listDir(tmp).find(_.toString.endsWith(".parquet")).get, dst)
+    Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime.fromMillis(mtime))
+    TempDirs.deleteRecursively(tmp)
+  }
+
+  private val sinkIds = new AtomicLong()
+
+  /** Run each (stream, output mode) into its own memory sink, all under
+    * one [[runAvailableNow]], and return the finished tables in order.
+    */
+  def memorySinks(sinks: (Dataset[_], String)*): Seq[DataFrame] = {
+    val named = sinks.map { case (ds, mode) =>
+      (ds, mode, s"graft_sink_${sinkIds.incrementAndGet()}") }
+    runAvailableNow(named.map { case (ds, mode, n) =>
+      ds.writeStream.format("memory").queryName(n).outputMode(mode) }: _*)
+    named.map { case (ds, _, n) => ds.sparkSession.table(n) }
+  }
+
+  /** [[memorySinks]] for a row with one stream. */
+  def memorySink(ds: Dataset[_], mode: String): DataFrame = memorySinks(ds -> mode).head
+
+  /** The events stream as [[ValueEvent]]s, the input of the stateful
+    * recurrences (Holt, CUSUM, Kalman, MACD, hash chain); `ts` decodes by
+    * its scanned type (Tables.tsMicros).
+    */
+  def valueEvents(events: DataFrame): Dataset[ValueEvent] = {
+    import events.sparkSession.implicits._
+    events.select(col("user_id").cast("long").as("userId"),
+        col("event_id").cast("long").as("eventId"),
+        Tables.tsMicros(events.schema).as("tsMicros"),
+        col("value").cast("double").as("value"))
+      .as[ValueEvent]
+  }
 
   /** Watermarked tumbling-window count by key: late data beyond the
     * watermark is dropped; state is purged as the watermark advances.

@@ -26,7 +26,9 @@ import scala.util.{Failure, Success, Try}
   *    silent nondeterminism would surface as flaky oracle mismatches at
   *    another scale or cluster layout. Streaming rows are included: each
   *    call spins up a fresh child session and landing dir, so two runs
-  *    also exercise checkpoint and sink isolation.
+  *    also exercise checkpoint and sink isolation;
+  *  - checkpoint hygiene: no streaming checkpoint dir made during the
+  *    sweep outlives it (Streams.runAvailableNow deletes its own).
   */
 class RegistrySweepSpec extends SparkSpec {
 
@@ -62,7 +64,17 @@ class RegistrySweepSpec extends SparkSpec {
     finally src.close()
   }
 
-  private lazy val swept: Seq[Swept] = {
+  /** The sweep's records, and the streaming checkpoint dirs that
+    * appeared during it and still exist after it (each streaming row
+    * ran three times: one build, two collects).
+    */
+  private lazy val (swept, ckptLeft) = {
+    val before = ckptDirs()
+    val recorded = sweep()
+    (recorded, ckptDirs() -- before)
+  }
+
+  private def sweep(): Seq[Swept] = {
     val d = PlanGolden.sfDir
     val partitions = "spark.sql.shuffle.partitions"
     val original = spark.conf.get(partitions)
@@ -125,6 +137,10 @@ class RegistrySweepSpec extends SparkSpec {
   test("registry queries are invariant to shuffle partitioning") {
     val problems = swept.flatMap(_.determinism)
     assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("no streaming row leaves a checkpoint dir behind") {
+    assert(ckptLeft.isEmpty, ckptLeft.mkString("\n"))
   }
 
   test("j06 resolution prep plans no SortAggregate (hash-agg argmax form)") {

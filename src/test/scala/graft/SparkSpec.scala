@@ -21,4 +21,12 @@ trait SparkSpec extends AnyFunSuite {
 
   def sortedRows(d: DataFrame): Seq[Seq[Any]] =
     d.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+
+  /** The streaming checkpoint dirs (Streams.runAvailableNow's `st_ckpt_*`)
+    * under TempDirs' root right now. Other JVMs may share the root, so
+    * callers compare against a set taken before.
+    */
+  def ckptDirs(): Set[java.nio.file.Path] =
+    graft.core.Fs.listDir(graft.core.TempDirs.root)
+      .filter(_.getFileName.toString.startsWith("st_ckpt_")).toSet
 }

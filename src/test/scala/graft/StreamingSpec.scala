@@ -1,9 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.sql.Timestamp
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicReference
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.streaming.Streams
 import graft.streaming.Streams.{SessionAssignment, SessionEvent}
 
@@ -133,18 +140,75 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("a failed stream still sweeps its checkpoint dir") {
-    val sp = spark; import sp.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Long]
-    in.addData(1L, 2L)
-    val ckpt = graft.core.TempDirs.scratch("st_ckpt_")
-    val q = in.toDS().map(x => if (x > 0) throw new IllegalStateException("planted") else x)
-      .writeStream.format("memory").queryName("sfailed")
-      .option("checkpointLocation", ckpt.toString).start()
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-      graft.core.TempDirs.awaitThenSweepCkpt(q))
-    assert(!java.nio.file.Files.exists(ckpt), s"failed stream left $ckpt")
+  /** A two-row stream over a fresh landed parquet dir. */
+  private def tinySource(): DataFrame = {
+    val dir = graft.core.TempDirs.scratch("graft_tiny_").toString
+    spark.range(2).write.mode("overwrite").parquet(dir)
+    Streams.fileSource(spark, dir, new StructType().add("id", LongType))
+  }
+
+  test("the runner deletes a failed stream's checkpoint dir") {
+    val before = ckptDirs()
+    val seen = new AtomicReference(Set.empty[Path])
+    val failing: (DataFrame, Long) => Unit = (_, _) => {
+      seen.set(ckptDirs() -- before)
+      throw new IllegalStateException("planted")
+    }
+    intercept[StreamingQueryException](
+      Streams.runAvailableNow(tinySource().writeStream.foreachBatch(failing)))
+    assert(seen.get.size == 1, s"checkpoint dirs while running: ${seen.get}")
+    assert(seen.get.forall(!Files.exists(_)), s"failed stream left ${seen.get}")
+  }
+
+  test("a failed stream stops its running sibling and both checkpoint dirs are deleted") {
+    val before = ckptDirs()
+    val siblingRunning = new CountDownLatch(1)
+    val seen = new AtomicReference(Set.empty[Path])
+    val sibling: (DataFrame, Long) => Unit = (_, _) => {
+      seen.set(ckptDirs() -- before)
+      siblingRunning.countDown()
+      Thread.sleep(120000) // until the runner stops this stream
+    }
+    val failing: (DataFrame, Long) => Unit = (_, _) => {
+      siblingRunning.await(120, TimeUnit.SECONDS)
+      throw new IllegalStateException("planted")
+    }
+    intercept[StreamingQueryException](Streams.runAvailableNow(
+      tinySource().writeStream.queryName("sibling").foreachBatch(sibling),
+      tinySource().writeStream.queryName("failing").foreachBatch(failing)))
+    val leftRunning = spark.streams.active.filter(_.name == "sibling")
+    leftRunning.foreach(_.stop())
+    assert(leftRunning.isEmpty, "the sibling stream was left running")
+    assert(seen.get.size == 2, s"checkpoint dirs while running: ${seen.get}")
+    assert(seen.get.forall(!Files.exists(_)), s"left behind: ${seen.get}")
+  }
+
+  test("concurrent rows on one session: each row's checkpoint goes when that row returns") {
+    val before = ckptDirs()
+    val bRunning = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val bDirs = new AtomicReference(Set.empty[Path])
+    val aDirs = new AtomicReference(Set.empty[Path])
+    val rowB: (DataFrame, Long) => Unit = (_, _) => {
+      bDirs.set(ckptDirs() -- before)
+      bRunning.countDown()
+      release.await(120, TimeUnit.SECONDS)
+    }
+    val rowA: (DataFrame, Long) => Unit = (_, _) =>
+      aDirs.set(ckptDirs() -- before -- bDirs.get)
+    val b = Future(Streams.runAvailableNow(
+      tinySource().writeStream.queryName("rowB").foreachBatch(rowB)))(ExecutionContext.global)
+    try {
+      assert(bRunning.await(120, TimeUnit.SECONDS), "row B never ran a batch")
+      Streams.runAvailableNow(tinySource().writeStream.queryName("rowA").foreachBatch(rowA))
+      assert(spark.streams.active.exists(_.name == "rowB"), "row B should still be running")
+      assert(aDirs.get.size == 1, s"row A's checkpoint dirs while running: ${aDirs.get}")
+      assert(aDirs.get.forall(!Files.exists(_)), s"row A returned but left ${aDirs.get}")
+      assert(bDirs.get.size == 1 && bDirs.get.forall(Files.exists(_)),
+        s"row B's live checkpoint ${bDirs.get} is gone")
+    } finally release.countDown()
+    Await.result(b, Duration(120, TimeUnit.SECONDS))
+    assert(bDirs.get.forall(!Files.exists(_)), s"row B returned but left ${bDirs.get}")
   }
 
   test("streamingDedup drops duplicate ids within the watermark") {
