@@ -11,31 +11,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  /** Settings a 1000-executor / 100 TB deployment applies on top of the
-    * shared baseline. Not used by local runs — documented and unit-read
-    * so the production posture lives next to the dev one:
-    *  - shuffle partitions sized for AQE to COALESCE DOWN from (AQE can
-    *    split skew but only merges small partitions; start high);
-    *  - 128m scan partitions keep a task's working set in executor
-    *    memory with room for join build sides;
-    *  - broadcast threshold bounded so geometry/dim broadcasts stay in
-    *    the tens of MB (SURVEY §7.4.4);
-    *  - shuffle compression + reuse on for wide exchanges.
-    */
-  val clusterDefaults: Map[String, String] = Map(
-    "spark.sql.shuffle.partitions" -> "4096",
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-    "spark.sql.adaptive.skewJoin.enabled" -> "true",
-    "spark.sql.files.maxPartitionBytes" -> (128L << 20).toString,
-    "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString,
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.shuffle.compress" -> "true",
-    "spark.sql.exchange.reuse" -> "true",
-    // runtime bloom-filter pushdown prunes big-side shuffle rows on
-    // selective joins — significant at fact-table scale
-    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true")
-
   // spark.local.dir stays on DISK, deliberately (measured, round 14):
   // pointing it at /dev/shm sped small-shuffle rows ~2x on this host's
   // ~290 MB/s virtual disk (w47 @100x 40.7 -> 23.5 s) but shuffle files

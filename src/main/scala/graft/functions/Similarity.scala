@@ -130,16 +130,6 @@ object Similarity {
       min(xxhash64(shingleHash.bitwiseXOR(lit(mix)))).as(s"mh$i")
     }
 
-  /** LSH band keys from minhash signature columns: b bands of r rows,
-    * each hashed to one long. Explode the resulting array to get one
-    * (band, bucket) row per band.
-    */
-  def bandKeys(sigPrefix: String, b: Int, r: Int): Column =
-    array((0 until b).map { band =>
-      struct(lit(band).as("band"),
-        xxhash64((band * r until (band + 1) * r).map(i => col(s"$sigPrefix$i")): _*).as("bucket"))
-    }: _*)
-
   /** Deterministic pseudo-random hyperplanes in [-1, 1] via splitmix64 —
     * computed once on the driver and shipped as one literal, NOT as an
     * expression tree (a per-component hash expression would be

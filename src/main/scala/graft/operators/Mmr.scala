@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998):
   * greedily pick k results that balance relevance against redundancy,
@@ -60,13 +61,14 @@ object Mmr {
     * Each (qid, cid) pair must appear at most once: the fold treats every
     * input row as its own candidate, so a duplicated pair could be picked
     * in two rounds. Returns (qid, rank, cid, score) with rank 1..k per
-    * query; round 1 is pure relevance (no selected set yet, score = rel).
+    * query, qid and cid in their input types; round 1 is pure relevance
+    * (no selected set yet, score = rel).
     */
   def rerank(cand: DataFrame, k: Int, lam: Double, mu: Double): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val sess = cand.sparkSession
     import sess.implicits._
-    cand.select(
+    val picks = cand.select(
         col("qid").cast("long"), col("cid").cast("long"),
         col("c_emb").cast("array<double>"), col("c_norm").cast("double"),
         col("rel").cast("double"))
@@ -116,5 +118,9 @@ object Mmr {
         out.iterator
       }
       .toDF("qid", "rank", "cid", "score")
+    // the fold runs on long ids; hand qid/cid back in the caller's types
+    Seq("qid", "cid").map(c => c -> cand.schema(c).dataType)
+      .filter(_._2 != LongType)
+      .foldLeft(picks) { case (df, (c, t)) => df.withColumn(c, col(c).cast(t)) }
   }
 }

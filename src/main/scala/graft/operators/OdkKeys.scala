@@ -24,10 +24,6 @@ object OdkKeys {
   def repeatKey(key: Column): Column =
     nullif(regexp_extract(keyBasename(key), "\\[([0-9]+)\\]", 1), lit("")).cast("int")
 
-  /** Uniform anomaly/resolution row id. */
-  def resolutionId(formId: Column, key: Column, anomaliesId: Column): Column =
-    concat_ws("__", formId, key, anomaliesId)
-
   /** Deterministic stable instance key: md5 of (namespace, natural key)
     * formatted as ODK's `uuid:xxxxxxxx-xxxx-xxxx-xxxx-xxxxxxxxxxxx` —
     * the UUIDv3-by-construction way to mint the keys [[repeatName]]/

@@ -18,6 +18,33 @@ import graft.core.{Query, Tables}
   */
 object Analytics {
 
+  /** a30's oracle, shared verbatim by st12 (the streaming counters'
+    * PSI epilogue must hash-match the batch SQL). */
+  private[queries] val PsiDriftOracleSql: String =
+    """WITH b AS (
+      |  SELECT event_type,
+      |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 2 AS slice,
+      |         least(9, greatest(0, CAST(floor(value / 50.0) AS BIGINT))) AS bucket
+      |  FROM events),
+      |c AS (SELECT event_type, slice, bucket, count(*) AS n FROM b GROUP BY 1, 2, 3),
+      |spine AS (
+      |  SELECT DISTINCT event_type, r.range AS bucket FROM events, range(0, 10) r),
+      |tot AS (SELECT event_type,
+      |               sum(CASE WHEN slice = 0 THEN n ELSE 0 END) AS ta,
+      |               sum(CASE WHEN slice = 1 THEN n ELSE 0 END) AS tb
+      |        FROM c GROUP BY 1),
+      |pq AS (
+      |  SELECT s.event_type, s.bucket,
+      |         (coalesce(a.n, 0) + 0.5) / (t.ta + 5.0) AS p,
+      |         (coalesce(o.n, 0) + 0.5) / (t.tb + 5.0) AS q
+      |  FROM spine s
+      |  JOIN tot t ON s.event_type = t.event_type
+      |  LEFT JOIN c a ON a.event_type = s.event_type AND a.bucket = s.bucket AND a.slice = 0
+      |  LEFT JOIN c o ON o.event_type = s.event_type AND o.bucket = s.bucket AND o.slice = 1)
+      |SELECT event_type,
+      |       CAST(sum(CAST(round((p - q) * ln(p / q), 6) AS DECIMAL(18,6))) AS DOUBLE) AS psi
+      |FROM pq GROUP BY event_type""".stripMargin
+
   /** PSI tail shared by a30 (batch) and st12 (streaming): from a
     * pre-bucketed (event_type, slice, bucket) frame — or its already-
     * counted (…, n) form via `preCounted` — to one PSI row per type.
@@ -1061,30 +1088,7 @@ object Analytics {
     // integer arithmetic underneath, immune to partition-order drift.
     // Two exchanges total: the (type,slice,bucket) count and the
     // per-type rollup; the spine join broadcasts.
-    Query("a30_psi_drift",
-      """WITH b AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 2 AS slice,
-        |         least(9, greatest(0, CAST(floor(value / 50.0) AS BIGINT))) AS bucket
-        |  FROM events),
-        |c AS (SELECT event_type, slice, bucket, count(*) AS n FROM b GROUP BY 1, 2, 3),
-        |spine AS (
-        |  SELECT DISTINCT event_type, r.range AS bucket FROM events, range(0, 10) r),
-        |tot AS (SELECT event_type,
-        |               sum(CASE WHEN slice = 0 THEN n ELSE 0 END) AS ta,
-        |               sum(CASE WHEN slice = 1 THEN n ELSE 0 END) AS tb
-        |        FROM c GROUP BY 1),
-        |pq AS (
-        |  SELECT s.event_type, s.bucket,
-        |         (coalesce(a.n, 0) + 0.5) / (t.ta + 5.0) AS p,
-        |         (coalesce(o.n, 0) + 0.5) / (t.tb + 5.0) AS q
-        |  FROM spine s
-        |  JOIN tot t ON s.event_type = t.event_type
-        |  LEFT JOIN c a ON a.event_type = s.event_type AND a.bucket = s.bucket AND a.slice = 0
-        |  LEFT JOIN c o ON o.event_type = s.event_type AND o.bucket = s.bucket AND o.slice = 1)
-        |SELECT event_type,
-        |       CAST(sum(CAST(round((p - q) * ln(p / q), 6) AS DECIMAL(18,6))) AS DOUBLE) AS psi
-        |FROM pq GROUP BY event_type""".stripMargin) {
+    Query("a30_psi_drift", PsiDriftOracleSql) {
       (s, d) => {
         val b = Tables.events(s, d).select(col("event_type"),
           (datediff(to_date(col("ts")), lit("1970-01-01")) % 2).as("slice"),
@@ -1993,13 +1997,7 @@ object Analytics {
     // only data-sized work is the one distinct pair join all g-rows
     // share; everything after is community-cardinality.
     Query("g30_modularity",
-      """WITH pair AS (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-        |e AS (
-        |  SELECT x, y FROM pair
-        |  WHERE substring(md5(CAST(x AS VARCHAR) || '_' || CAST(y AS VARCHAR) || 'g13'), 1, 1) = '0'),
+      s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g13")},
         |m AS (SELECT count(*) AS m FROM e),
         |ein AS (SELECT x % 8 AS c, count(*) AS e_in
         |        FROM e WHERE x % 8 = y % 8 GROUP BY 1),
@@ -2032,13 +2030,7 @@ object Analytics {
     },
 
     Query("g13_triangle_count",
-      """WITH pair AS (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-        |e AS (
-        |  SELECT x, y FROM pair
-        |  WHERE substring(md5(CAST(x AS VARCHAR) || '_' || CAST(y AS VARCHAR) || 'g13'), 1, 1) = '0'),
+      s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g13")},
         |deg AS (
         |  SELECT node, count(*) AS dg FROM (
         |    SELECT x AS node FROM e UNION ALL SELECT y FROM e)
@@ -2215,14 +2207,8 @@ object Analytics {
     // the last). GraphsSpec pins that 5 rounds reach the fixed point
     // here, so the row IS the true 4-core.
     Query("g19_kcore",
-      """WITH pair AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-        |e0 AS MATERIALIZED (
-        |  SELECT x, y FROM pair
-        |  WHERE substring(md5(CAST(x AS VARCHAR) || '_' || CAST(y AS VARCHAR)
-        |                       || 'g19'), 1, 1) = '0'),
+      s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g19", edges = "e0",
+          as = "AS MATERIALIZED")},
         |d1 AS MATERIALIZED (SELECT node, count(*) AS dg FROM (
         |         SELECT x AS node FROM e0 UNION ALL SELECT y FROM e0) t GROUP BY 1),
         |k1 AS MATERIALIZED (SELECT node FROM d1 WHERE dg >= 4),
@@ -2267,14 +2253,8 @@ object Analytics {
     // stages; each engine round is one (node,label) count aggregate
     // plus a per-node argmax, both keyed on node id.
     Query("g21_label_prop",
-      """WITH pair AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-        |e0 AS MATERIALIZED (
-        |  SELECT x, y FROM pair
-        |  WHERE substring(md5(CAST(x AS VARCHAR) || '_' || CAST(y AS VARCHAR)
-        |                       || 'g21'), 1, 1) = '0'),
+      s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g21", edges = "e0",
+          as = "AS MATERIALIZED")},
         |bi AS MATERIALIZED (
         |  SELECT x AS s, y AS t FROM e0 UNION ALL SELECT y, x FROM e0),
         |l0 AS MATERIALIZED (SELECT DISTINCT s AS node, s AS label FROM bi),
@@ -2320,14 +2300,8 @@ object Analytics {
     // degrees for the denominator come from the FULL graph. candidates
     // = common >= 2, raw double division (identical op order).
     Query("g23_link_predict",
-      """WITH pair AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-        |e0 AS MATERIALIZED (
-        |  SELECT x, y FROM pair
-        |  WHERE substring(md5(CAST(x AS VARCHAR) || '_' || CAST(y AS VARCHAR)
-        |                       || 'g23'), 1, 1) = '0'),
+      s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g23", edges = "e0",
+          as = "AS MATERIALIZED")},
         |bi AS MATERIALIZED (
         |  SELECT x AS s, y AS t FROM e0 UNION ALL SELECT y, x FROM e0),
         |deg AS (SELECT s, count(*) AS dg FROM bi GROUP BY 1),
@@ -2378,14 +2352,8 @@ object Analytics {
     // MATERIALIZED expansion stages; the engine runs the same 4
     // join+min-agg rounds. Nodes beyond 4 hops are absent by contract.
     Query("g20_bfs_distance",
-      """WITH pair AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-        |e0 AS MATERIALIZED (
-        |  SELECT x, y FROM pair
-        |  WHERE substring(md5(CAST(x AS VARCHAR) || '_' || CAST(y AS VARCHAR)
-        |                       || 'g20'), 1, 1) = '0'),
+      s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g20", edges = "e0",
+          as = "AS MATERIALIZED")},
         |bi AS MATERIALIZED (
         |  SELECT x AS s, y AS t FROM e0 UNION ALL SELECT y, x FROM e0),
         |d0 AS MATERIALIZED (
@@ -2746,7 +2714,7 @@ object Analytics {
     // dependent). Group moments are the only thing the data volume
     // touches; everything after is 5-row arithmetic.
     Query("a40_anova",
-      """WITH x AS (
+      s"""WITH x AS (
         |  SELECT c_mktsegment AS seg,
         |         CAST(round(o_totalprice * 100) AS BIGINT) AS xc
         |  FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -2766,10 +2734,8 @@ object Analytics {
         |           - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / ng AS ssw_t
         |  FROM g, t),
         |a AS (SELECT
-        |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list(ssb_t ORDER BY seg)), (a, x) -> a + x) AS ssb,
-        |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list(ssw_t ORDER BY seg)), (a, x) -> a + x) AS ssw
+        |        ${OracleSnippets.sumFold("list(ssb_t ORDER BY seg)")} AS ssb,
+        |        ${OracleSnippets.sumFold("list(ssw_t ORDER BY seg)")} AS ssw
         |      FROM terms)
         |SELECT CAST(k AS BIGINT) AS k, n, ssb, ssw,
         |       (ssb / (k - 1)) / (ssw / (n - k)) AS f_stat
@@ -2869,13 +2835,7 @@ object Analytics {
     // 100 TB. Nodes with deg >= 2 and zero triangles still report (left
     // join + coalesce); deg < 2 nodes have no defined coefficient.
     Query("g24_clustering_coeff",
-      """WITH pair AS (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-        |e AS (
-        |  SELECT x, y FROM pair
-        |  WHERE substring(md5(CAST(x AS VARCHAR) || '_' || CAST(y AS VARCHAR) || 'g24'), 1, 1) = '0'),
+      s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g24")},
         |deg AS (
         |  SELECT node, count(*) AS dg FROM (
         |    SELECT x AS node FROM e UNION ALL SELECT y FROM e)
@@ -2946,13 +2906,7 @@ object Analytics {
     // materialization, one degree agg, two broadcast-sized joins, one
     // global agg: no shuffle grows with degree skew.
     Query("g25_assortativity",
-      """WITH pair AS (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-        |e AS (
-        |  SELECT x, y FROM pair
-        |  WHERE substring(md5(CAST(x AS VARCHAR) || '_' || CAST(y AS VARCHAR) || 'g25'), 1, 1) = '0'),
+      s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g25")},
         |deg AS (
         |  SELECT node, count(*) AS dg FROM (
         |    SELECT x AS node FROM e UNION ALL SELECT y FROM e)
@@ -3063,7 +3017,7 @@ object Analytics {
     // order (the a40 recipe). Tie correction divides by
     // 1 - sum(t^3-t)/(N^3-N), all-integer numerators.
     Query("a45_kruskal_wallis",
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT c_mktsegment AS seg,
         |         CAST(round(o_totalprice * 100) AS BIGINT) AS xc
         |  FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -3079,8 +3033,7 @@ object Analytics {
         |terms AS (SELECT seg,
         |                 CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE) / ng AS term
         |          FROM g),
-        |f AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |               list(term ORDER BY seg)), (a, x) -> a + x) AS ssum
+        |f AS (SELECT ${OracleSnippets.sumFold("list(term ORDER BY seg)")} AS ssum
         |      FROM terms),
         |hh AS (SELECT k, n, ts,
         |              3.0 * ssum / (CAST(n AS DOUBLE) * (n + 1)) - 3.0 * (n + 1)
@@ -3141,7 +3094,7 @@ object Analytics {
     // the same exact decimal sums as a40 and the per-group terms fold in
     // seg order. One rank window + one broadcast join + one moment agg.
     Query("a46_brown_forsythe",
-      """WITH x AS (
+      s"""WITH x AS (
         |  SELECT c_mktsegment AS seg, o_orderkey AS okey,
         |         CAST(round(o_totalprice * 100) AS BIGINT) AS xc
         |  FROM orders JOIN customer ON o_custkey = c_custkey),
@@ -3169,10 +3122,8 @@ object Analytics {
         |           - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / ng AS ssw_t
         |  FROM g, t),
         |a AS (SELECT
-        |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list(ssb_t ORDER BY seg)), (a, x) -> a + x) AS ssb,
-        |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list(ssw_t ORDER BY seg)), (a, x) -> a + x) AS ssw
+        |        ${OracleSnippets.sumFold("list(ssb_t ORDER BY seg)")} AS ssb,
+        |        ${OracleSnippets.sumFold("list(ssw_t ORDER BY seg)")} AS ssw
         |      FROM terms)
         |SELECT CAST(k AS BIGINT) AS k, n,
         |       (ssb / (k - 1)) / (ssw / (n - k)) AS f_bf
@@ -3704,13 +3655,7 @@ object Analytics {
     // rows, and the cap bounds the join at any scale. Direct neighbors
     // drop via one anti join on the canonical edge key.
     Query("g28_two_hop_reach",
-      """WITH pair AS (
-        |  SELECT DISTINCT a.l_suppkey AS x, b.l_suppkey AS y
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey),
-        |e AS (
-        |  SELECT x, y FROM pair
-        |  WHERE substring(md5(CAST(x AS VARCHAR) || '_' || CAST(y AS VARCHAR) || 'g28'), 1, 1) = '0'),
+      s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g28")},
         |adj AS (SELECT x AS u, y AS v FROM e UNION ALL SELECT y, x FROM e),
         |deg AS (SELECT u, count(*) AS dg FROM adj GROUP BY 1),
         |mid AS (SELECT adj.u, adj.v FROM adj JOIN deg ON adj.v = deg.u

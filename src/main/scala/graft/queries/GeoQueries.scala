@@ -711,6 +711,11 @@ object GeoQueries {
       val polyValues = polys
         .map(p => s"(${p.id}, [${p.xs.mkString(", ")}], [${p.ys.mkString(", ")}])")
         .mkString(",\n        ")
+      // the oracle's per-ring folds: vertex i, its wrapping successor
+      // (x1, y1) and the shoelace cross term
+      def ringSum(term: String) = OracleSnippets.sumOver("len(xs) + 1", term)
+      val (x1, y1) = ("xs[1 + i % len(xs)]", "ys[1 + i % len(xs)]")
+      val crossSql = s"xs[i] * $y1 - $x1 * ys[i]"
       Query("j31_polygon_metrics",
         s"""WITH polys0(id, xs0, ys0) AS (VALUES
           |        $polyValues),
@@ -719,25 +724,10 @@ object GeoQueries {
           |          FROM polys0),
           |m AS (
           |  SELECT id, len(xs) AS n,
-          |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |      list_transform(range(1, len(xs) + 1),
-          |        i -> xs[i] * ys[1 + i % len(xs)] - xs[1 + i % len(xs)] * ys[i])),
-          |      (a, v) -> a + v) AS s,
-          |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |      list_transform(range(1, len(xs) + 1),
-          |        i -> (xs[i] + xs[1 + i % len(xs)])
-          |             * (xs[i] * ys[1 + i % len(xs)] - xs[1 + i % len(xs)] * ys[i]))),
-          |      (a, v) -> a + v) AS sx,
-          |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |      list_transform(range(1, len(xs) + 1),
-          |        i -> (ys[i] + ys[1 + i % len(xs)])
-          |             * (xs[i] * ys[1 + i % len(xs)] - xs[1 + i % len(xs)] * ys[i]))),
-          |      (a, v) -> a + v) AS sy,
-          |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |      list_transform(range(1, len(xs) + 1),
-          |        i -> sqrt((xs[1 + i % len(xs)] - xs[i]) * (xs[1 + i % len(xs)] - xs[i])
-          |                  + (ys[1 + i % len(xs)] - ys[i]) * (ys[1 + i % len(xs)] - ys[i])))),
-          |      (a, v) -> a + v) AS per
+          |    ${ringSum(crossSql)} AS s,
+          |    ${ringSum(s"(xs[i] + $x1) * ($crossSql)")} AS sx,
+          |    ${ringSum(s"(ys[i] + $y1) * ($crossSql)")} AS sy,
+          |    ${ringSum(s"sqrt(($x1 - xs[i]) * ($x1 - xs[i]) + ($y1 - ys[i]) * ($y1 - ys[i]))")} AS per
           |  FROM polys)
           |SELECT CAST(id AS BIGINT) AS id, CAST(n AS BIGINT) AS n_vertices,
           |       round(abs(s) / 2.0, 9) AS area,

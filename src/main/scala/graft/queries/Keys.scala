@@ -7,6 +7,16 @@ import graft.operators.OdkKeys
 /** Instance-key parsing and semi-structured extraction queries. */
 object Keys {
 
+  /** a53's oracle, shared verbatim by st23 (per-segment sketches kept
+    * as streaming state answer under the batch contract). */
+  private[queries] val SketchIntersectionOracleSql: String =
+    """WITH a AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'view'),
+      |b AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
+      |SELECT (SELECT count(*) FROM a) AS exact_a,
+      |       (SELECT count(*) FROM b) AS exact_b,
+      |       (SELECT count(*) FROM a JOIN b USING (user_id)) AS exact_both,
+      |       CAST(1 AS BOOLEAN) AS within_10pct""".stripMargin
+
   /** Shared by a53 (batch) and st23 (stream): exact view/purchase
     * marginals + overlap computed from `ev`, cross-joined with the
     * sketch-estimate row `ests` (est_a, est_b, est_u) into the single
@@ -177,13 +187,7 @@ object Keys {
     // broken sketch path). At 100 TB the sketches are the stored state:
     // per-shard segment sketches union in without rescanning history
     // (the a22/a26 incremental contract extended to set algebra).
-    Query("a53_sketch_intersection",
-      """WITH a AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'view'),
-        |b AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-        |SELECT (SELECT count(*) FROM a) AS exact_a,
-        |       (SELECT count(*) FROM b) AS exact_b,
-        |       (SELECT count(*) FROM a JOIN b USING (user_id)) AS exact_both,
-        |       CAST(1 AS BOOLEAN) AS within_10pct""".stripMargin) { (s, d) =>
+    Query("a53_sketch_intersection", SketchIntersectionOracleSql) { (s, d) =>
       val ev = Tables.events(s, d)
       val sk = ev.filter(col("event_type").isin("view", "purchase"))
         .groupBy("event_type")

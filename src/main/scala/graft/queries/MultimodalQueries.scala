@@ -325,38 +325,7 @@ object MultimodalQueries {
     // codec regression, channel swap, or resample off-by-one flips a
     // gradient bit somewhere in the corpus and hash-mismatches.
     Query("m05_perceptual_dhash",
-      """WITH px AS (
-        |  SELECT doc_id, x.x AS x, y.y AS y,
-        |         (doc_id*7 + 3*x.x + 5*y.y) % 256 AS r,
-        |         (doc_id*11 + x.x + 2*y.y) % 256 AS g,
-        |         (doc_id*13 + 4*x.x + y.y) % 256 AS b
-        |  FROM documents,
-        |       LATERAL (SELECT unnest(range(32)) AS x) x,
-        |       LATERAL (SELECT unnest(range(32)) AS y) y),
-        |cells AS (
-        |  SELECT doc_id, i.i AS i, j.j AS j,
-        |         CAST(sum(r) // count(*) AS BIGINT) AS rm,
-        |         CAST(sum(g) // count(*) AS BIGINT) AS gm,
-        |         CAST(sum(b) // count(*) AS BIGINT) AS bm
-        |  FROM px,
-        |       LATERAL (SELECT unnest(range(9)) AS i) i,
-        |       LATERAL (SELECT unnest(range(8)) AS j) j
-        |  WHERE x >= (i*32)//9 AND x < ((i+1)*32)//9
-        |    AND y >= j*4 AND y < (j+1)*4
-        |  GROUP BY 1, 2, 3),
-        |gr AS (SELECT doc_id, i, j,
-        |              (rm*299 + gm*587 + bm*114) // 1000 AS lum FROM cells),
-        |rb AS (SELECT a.doc_id, a.j,
-        |         CAST(sum(CASE WHEN a.lum > b.lum
-        |                       THEN (CAST(1 AS BIGINT) << a.i) ELSE 0 END)
-        |              AS BIGINT) AS rowbyte
-        |       FROM gr a JOIN gr b
-        |         ON a.doc_id = b.doc_id AND a.j = b.j AND b.i = a.i + 1
-        |       WHERE a.i < 8
-        |       GROUP BY 1, 2),
-        |h AS (SELECT doc_id, string_agg(printf('%02x', rowbyte), '' ORDER BY j)
-        |             AS dhash
-        |      FROM rb GROUP BY 1)
+      s"""WITH ${OracleSnippets.DhashCtes}
         |SELECT dhash, count(*) AS n_docs, min(doc_id) AS first_doc
         |FROM h GROUP BY 1""".stripMargin) { (s, d) =>
       val withP = Multimodal.withImagePayload(
@@ -451,38 +420,7 @@ object MultimodalQueries {
     // full pair space from the closed-form pixel formula — banding
     // completeness itself is under the hash compare.
     Query("m06_image_neardup",
-      """WITH px AS (
-        |  SELECT doc_id, x.x AS x, y.y AS y,
-        |         (doc_id*7 + 3*x.x + 5*y.y) % 256 AS r,
-        |         (doc_id*11 + x.x + 2*y.y) % 256 AS g,
-        |         (doc_id*13 + 4*x.x + y.y) % 256 AS b
-        |  FROM documents,
-        |       LATERAL (SELECT unnest(range(32)) AS x) x,
-        |       LATERAL (SELECT unnest(range(32)) AS y) y),
-        |cells AS (
-        |  SELECT doc_id, i.i AS i, j.j AS j,
-        |         CAST(sum(r) // count(*) AS BIGINT) AS rm,
-        |         CAST(sum(g) // count(*) AS BIGINT) AS gm,
-        |         CAST(sum(b) // count(*) AS BIGINT) AS bm
-        |  FROM px,
-        |       LATERAL (SELECT unnest(range(9)) AS i) i,
-        |       LATERAL (SELECT unnest(range(8)) AS j) j
-        |  WHERE x >= (i*32)//9 AND x < ((i+1)*32)//9
-        |    AND y >= j*4 AND y < (j+1)*4
-        |  GROUP BY 1, 2, 3),
-        |gr AS (SELECT doc_id, i, j,
-        |              (rm*299 + gm*587 + bm*114) // 1000 AS lum FROM cells),
-        |rb AS (SELECT a.doc_id, a.j,
-        |         CAST(sum(CASE WHEN a.lum > b.lum
-        |                       THEN (CAST(1 AS BIGINT) << a.i) ELSE 0 END)
-        |              AS BIGINT) AS rowbyte
-        |       FROM gr a JOIN gr b
-        |         ON a.doc_id = b.doc_id AND a.j = b.j AND b.i = a.i + 1
-        |       WHERE a.i < 8
-        |       GROUP BY 1, 2),
-        |h AS (SELECT doc_id, string_agg(printf('%02x', rowbyte), '' ORDER BY j)
-        |             AS dhash
-        |      FROM rb GROUP BY 1),
+      s"""WITH ${OracleSnippets.DhashCtes},
         |ham AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |         bit_count(xor(CAST('0x' || substr(a.dhash, 1, 4) AS BIGINT),

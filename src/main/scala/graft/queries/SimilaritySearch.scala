@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Query, Tables}
 import graft.functions.{Similarity, TextFunctions}
+import OracleSnippets.{cosineFold, dist2Fold, dotFold, foldLeft, ivfCentsDist,
+  matrixValues, ownLen, planeDots, sumFold, sumOver, width}
 
 /** Deduplication and similarity-search operators over documents and
   * embeddings: brute-force cosine top-k (exact baseline, SQL oracle),
@@ -20,62 +22,33 @@ import graft.functions.{Similarity, TextFunctions}
   */
 object SimilaritySearch {
 
-  /** The s54/s55 maintenance family's shared oracle CTEs: IVF cell
-    * assignment against the first-8-vector centroids (relational — no
-    * literal matrix), the per-cell tombstone counts, the live-member
-    * quantized centroid sums (the s45 exact-sum device), the L2 drift
-    * fold, and the rebuild/compact/keep DECISION. One definition feeds
-    * both the decision row (s54) and the actuation row (s55), so the
-    * two oracles cannot drift.
-    */
-  private val AnnMaintCtes: String =
-    """cents AS (
-      |  SELECT vec_id AS cell_id, embedding AS c FROM embeddings
-      |  WHERE vec_id < 8),
-      |dist AS (
-      |  SELECT vec_id, cell_id,
-      |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(range(1, 65),
-      |             i -> (CAST(embedding[i] AS DOUBLE) - CAST(c[i] AS DOUBLE))
-      |                  * (CAST(embedding[i] AS DOUBLE) - CAST(c[i] AS DOUBLE)))),
-      |           (a, x) -> a + x) AS d
-      |  FROM embeddings CROSS JOIN cents),
+  /** s17's oracle, shared verbatim by s28 (the persisted index must
+    * answer exactly as the in-memory probe): assignment argmin against
+    * the 8 literal centroids, top-3 probe cells per query, candidate
+    * dedup and the exact-cosine top-3. */
+  private[queries] val IvfProbeOracleSql: String =
+    s"""WITH ${ivfCentsDist(Similarity.hyperplanes(1, 8, 64))},
       |assigned AS (SELECT vec_id, cell_id FROM (
       |  SELECT vec_id, cell_id,
       |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
       |  FROM dist) WHERE rn = 1),
-      |cnt AS (
-      |  SELECT cell_id, count(*) AS n_total,
-      |         sum(CASE WHEN vec_id % 7 = 3 THEN 1 ELSE 0 END) AS n_tomb
-      |  FROM assigned GROUP BY 1),
-      |live AS (
-      |  SELECT a.cell_id, e.embedding
-      |  FROM assigned a JOIN embeddings e USING (vec_id)
-      |  WHERE a.vec_id % 7 <> 3),
-      |base AS (
-      |  SELECT cell_id, r.range - 1 AS dim,
-      |         CAST(floor(CAST(embedding[r.range] AS DOUBLE) * 1000000.0
-      |                    + 0.5) AS BIGINT) AS q
-      |  FROM live CROSS JOIN range(1, 65) r),
-      |sums AS (SELECT cell_id, dim, sum(q) AS sq, count(*) AS nl
-      |         FROM base GROUP BY 1, 2),
-      |m AS (SELECT cell_id, dim, CAST(sq AS DOUBLE) / 1000000.0 / nl AS m
-      |      FROM sums),
-      |f AS (SELECT m.cell_id,
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list((m - CAST(c[dim+1] AS DOUBLE))
-      |               * (m - CAST(c[dim+1] AS DOUBLE)) ORDER BY dim)),
-      |          (a, x) -> a + x) AS l2q
-      |      FROM m JOIN cents ON m.cell_id = cents.cell_id GROUP BY 1),
-      |dec AS (
-      |  SELECT c.cell_id, CAST(n_total AS BIGINT) AS n_total,
-      |         CAST(n_tomb AS BIGINT) AS n_tomb,
-      |         CAST(n_tomb AS DOUBLE) / n_total AS tomb_frac,
-      |         sqrt(l2q) AS l2_shift,
-      |         CASE WHEN sqrt(l2q) > 0.825 THEN 'rebuild'
-      |              WHEN CAST(n_tomb AS DOUBLE) / n_total > 0.15 THEN 'compact'
-      |              ELSE 'keep' END AS decision
-      |  FROM cnt c JOIN f USING (cell_id))""".stripMargin
+      |probes AS (SELECT vec_id AS query_id, cell_id FROM (
+      |  SELECT vec_id, cell_id,
+      |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
+      |  FROM dist WHERE vec_id < 10) WHERE rn <= 3),
+      |cand AS (
+      |  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
+      |  FROM probes p JOIN assigned a USING (cell_id)
+      |  WHERE a.vec_id <> p.query_id),
+      |cosd AS (
+      |  SELECT query_id, neighbor_id,
+      |         ${cosineFold("q.embedding", "c.embedding", width(64))} AS cos
+      |  FROM cand JOIN embeddings q ON q.vec_id = query_id
+      |            JOIN embeddings c ON c.vec_id = neighbor_id)
+      |SELECT query_id, neighbor_id, cos FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY query_id
+      |                               ORDER BY cos DESC, neighbor_id) AS rn
+      |  FROM cosd) WHERE rn <= 3""".stripMargin
 
   /** s22's oracle, shared verbatim by st08 (the streaming run of the
     * same incremental shape must hash-match the batch SQL). */
@@ -108,20 +81,9 @@ object SimilaritySearch {
 
     // ---- S1: brute-force cosine top-k (exact ANN baseline) ----------------
     Query("s01_cosine_knn",
-      """WITH dotp AS (
+      s"""WITH dotp AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(range(1, len(q.embedding) + 1),
-        |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-        |           (a, x) -> a + x)
-        |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |              list_transform(range(1, len(q.embedding) + 1),
-        |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-        |              (a, x) -> a + x))
-        |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |                list_transform(range(1, len(c.embedding) + 1),
-        |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-        |                (a, x) -> a + x))) AS cos
+        |         ${cosineFold("q.embedding", "c.embedding", ownLen)} AS cos
         |  FROM embeddings q JOIN embeddings c ON q.vec_id < 10 AND c.vec_id <> q.vec_id)
         |SELECT query_id, neighbor_id, cos FROM (
         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
@@ -148,20 +110,9 @@ object SimilaritySearch {
 
     // ---- S2: embedding near-dup pairs (exact, bounded baseline) ------------
     Query("s02_embedding_neardup",
-      """SELECT * FROM (
+      s"""SELECT * FROM (
         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |       list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |         list_transform(range(1, len(a.embedding) + 1),
-        |           i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))),
-        |         (x, y) -> x + y)
-        |       / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |            list_transform(range(1, len(a.embedding) + 1),
-        |              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))),
-        |            (x, y) -> x + y))
-        |          * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |              list_transform(range(1, len(b.embedding) + 1),
-        |                i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))),
-        |              (x, y) -> x + y))) AS cos
+        |       ${cosineFold("a.embedding", "b.embedding", ownLen)} AS cos
         |FROM embeddings a JOIN embeddings b
         |  ON a.vec_id < b.vec_id AND a.vec_id < 200 AND b.vec_id < 200
         |) WHERE cos >= 0.35""".stripMargin) {
@@ -206,23 +157,7 @@ object SimilaritySearch {
     // xxhash64 production default keeps its locality/equivalence
     // contracts in SimilaritySpec.
     Query("s04_simhash",
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-        |             FROM documents),
-        |h AS (SELECT doc_id, md5(t) AS h FROM tok),
-        |v AS (SELECT doc_id, bit,
-        |        sum(CASE WHEN (strpos('0123456789abcdef',
-        |                              substring(h, 16 - bit // 4, 1)) - 1)
-        |                 // (CASE bit % 4 WHEN 0 THEN 1 WHEN 1 THEN 2
-        |                     WHEN 2 THEN 4 ELSE 8 END) % 2 = 1
-        |            THEN 1 ELSE -1 END) AS vote
-        |      FROM h CROSS JOIN generate_series(0, 63) g(bit)
-        |      GROUP BY 1, 2),
-        |d AS (SELECT doc_id, bit // 4 AS dpos,
-        |        sum(CASE WHEN vote > 0 THEN
-        |              CASE bit % 4 WHEN 0 THEN 1 WHEN 1 THEN 2
-        |                   WHEN 2 THEN 4 ELSE 8 END
-        |            ELSE 0 END) AS dv
-        |      FROM v GROUP BY 1, 2)
+      s"""WITH ${OracleSnippets.SimhashDigitCtes}
         |SELECT doc_id,
         |       string_agg(substring('0123456789abcdef', CAST(dv AS INT) + 1, 1),
         |                  '' ORDER BY dpos DESC) AS simhash_hex
@@ -253,22 +188,13 @@ object SimilaritySearch {
     {
       val (tables, bits, dims) = (6, 10, 64)
       val planes = Similarity.hyperplanes(tables, bits, dims)
-      val planeValues = OracleSnippets.matrixValues(planes)
       val bitCase = OracleSnippets.bitCase(bits)
       val maskValues = (0 +: ((0 until bits).map(1 << _) ++
         (for { i <- 0 until bits; j <- (i + 1) until bits }
           yield (1 << i) | (1 << j))))
         .map(m => s"($m)").mkString(", ")
       Query("s05_ann_lsh",
-        s"""WITH planes(r, p) AS (VALUES
-          |        $planeValues),
-          |dots AS (
-          |  SELECT vec_id, r // $bits AS t, r % $bits AS j,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, $dims + 1),
-          |             i -> CAST(embedding[i] AS DOUBLE) * p[i])),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN planes),
+        s"""WITH ${planeDots(planes, bits)},
           |buck AS (
           |  SELECT vec_id, t,
           |         CAST(sum(CASE WHEN d > 0
@@ -285,7 +211,7 @@ object SimilaritySearch {
           |  WHERE c.vec_id <> q.query_id),
           |cosd AS (
           |  SELECT query_id, neighbor_id,
-          |         ${OracleSnippets.cosineFold("q.embedding", "c.embedding", dims)} AS cos
+          |         ${cosineFold("q.embedding", "c.embedding", width(dims))} AS cos
           |  FROM cand JOIN embeddings q ON q.vec_id = query_id
           |            JOIN embeddings c ON c.vec_id = neighbor_id)
           |SELECT query_id, neighbor_id, cos FROM (
@@ -351,18 +277,9 @@ object SimilaritySearch {
     {
       val (tables, bits, dims) = (12, 10, 64)
       val planes = Similarity.hyperplanes(tables, bits, dims)
-      val planeValues = OracleSnippets.matrixValues(planes)
       val bitCase = OracleSnippets.bitCase(bits)
       Query("s07_embedding_neardup_lsh",
-        s"""WITH planes(r, p) AS (VALUES
-          |        $planeValues),
-          |dots AS (
-          |  SELECT vec_id, r // $bits AS t, r % $bits AS j,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, $dims + 1),
-          |             i -> CAST(embedding[i] AS DOUBLE) * p[i])),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN planes),
+        s"""WITH ${planeDots(planes, bits)},
           |buck AS (
           |  SELECT vec_id, t,
           |         CAST(sum(CASE WHEN d > 0
@@ -377,7 +294,7 @@ object SimilaritySearch {
           |    ON x.t = y.t AND x.b = y.b AND x.vec_id < y.vec_id),
           |cosd AS (
           |  SELECT vec_a, vec_b,
-          |         ${OracleSnippets.cosineFold("a.embedding", "b.embedding", dims)} AS cos
+          |         ${cosineFold("a.embedding", "b.embedding", width(dims))} AS cos
           |  FROM cand JOIN embeddings a ON a.vec_id = vec_a
           |            JOIN embeddings b ON b.vec_id = vec_b)
           |SELECT vec_a, vec_b, cos FROM cosd WHERE cos >= 0.35""".stripMargin) {
@@ -396,29 +313,7 @@ object SimilaritySearch {
     // engine path is hash-min label propagation — one equi-join + one
     // min-agg per round, O(cluster diameter) rounds, never touches text.
     Query("s08_dedup_clusters",
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE doc_id < 300
-        |), sh AS (
-        |  SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS s
-        |  FROM toks WHERE len(t) >= 2
-        |), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON doc_a = sa.doc_id
-        |  JOIN sizes sb ON doc_b = sb.doc_id
-        |  WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.3),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id)
+      s"""WITH RECURSIVE ${OracleSnippets.NearDupReachCtes}
         |SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id""".stripMargin) {
       (s, d) =>
         val pairs = graft.operators.Dedup.exactJaccardPairs(
@@ -436,29 +331,7 @@ object SimilaritySearch {
     // cluster map. The oracle walks the same graph with the recursive
     // CTE and applies the same keep rule.
     Query("s10_canonical_corpus",
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE doc_id < 300
-        |), sh AS (
-        |  SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS s
-        |  FROM toks WHERE len(t) >= 2
-        |), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON doc_a = sa.doc_id
-        |  JOIN sizes sb ON doc_b = sb.doc_id
-        |  WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.3),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
+      s"""WITH RECURSIVE ${OracleSnippets.NearDupReachCtes},
         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
         |SELECT d.doc_id, d.lang
         |FROM documents d LEFT JOIN comp ON d.doc_id = comp.id
@@ -593,23 +466,7 @@ object SimilaritySearch {
     // recomputes every stage. The xxhash64 production instance of the
     // same operator is pinned by DedupSimhashSpec's pigeonhole contract.
     Query("s12_simhash_neardup",
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-        |             FROM documents),
-        |h AS (SELECT doc_id, md5(t) AS h FROM tok),
-        |v AS (SELECT doc_id, bit,
-        |        sum(CASE WHEN (strpos('0123456789abcdef',
-        |                              substring(h, 16 - bit // 4, 1)) - 1)
-        |                 // (CASE bit % 4 WHEN 0 THEN 1 WHEN 1 THEN 2
-        |                     WHEN 2 THEN 4 ELSE 8 END) % 2 = 1
-        |            THEN 1 ELSE -1 END) AS vote
-        |      FROM h CROSS JOIN generate_series(0, 63) g(bit)
-        |      GROUP BY 1, 2),
-        |d AS (SELECT doc_id, bit // 4 AS dpos,
-        |        sum(CASE WHEN vote > 0 THEN
-        |              CASE bit % 4 WHEN 0 THEN 1 WHEN 1 THEN 2
-        |                   WHEN 2 THEN 4 ELSE 8 END
-        |            ELSE 0 END) AS dv
-        |      FROM v GROUP BY 1, 2),
+      s"""WITH ${OracleSnippets.SimhashDigitCtes},
         |sh AS (SELECT doc_id,
         |         string_agg(substring('0123456789abcdef', CAST(dv AS INT) + 1, 1),
         |                    '' ORDER BY dpos DESC) AS sh
@@ -698,19 +555,8 @@ object SimilaritySearch {
     {
       val (tables, bits, dims) = (2, 6, 64)
       val planes = Similarity.hyperplanes(tables, bits, dims)
-      val planeValues = planes.zipWithIndex
-        .map { case (p, r) => s"($r, [${p.mkString(", ")}])" }
-        .mkString(",\n        ")
       Query("s16_ann_lsh_oracle",
-        s"""WITH planes(r, p) AS (VALUES
-          |        $planeValues),
-          |dots AS (
-          |  SELECT vec_id, r // $bits AS t, r % $bits AS j,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, $dims + 1),
-          |             i -> CAST(embedding[i] AS DOUBLE) * p[i])),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN planes),
+        s"""WITH ${planeDots(planes, bits)},
           |buck AS (
           |  SELECT vec_id, t,
           |         sum(CASE WHEN d > 0 THEN CASE j WHEN 0 THEN 1 WHEN 1 THEN 2
@@ -723,7 +569,7 @@ object SimilaritySearch {
           |  WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id),
           |cosd AS (
           |  SELECT query_id, neighbor_id,
-          |         ${OracleSnippets.cosineFold("q.embedding", "c.embedding", dims)} AS cos
+          |         ${cosineFold("q.embedding", "c.embedding", width(dims))} AS cos
           |  FROM cand JOIN embeddings q ON q.vec_id = query_id
           |            JOIN embeddings c ON c.vec_id = neighbor_id)
           |SELECT query_id, neighbor_id, cos FROM (
@@ -763,52 +609,7 @@ object SimilaritySearch {
     {
       val nCells = 8
       val cvecs = Similarity.hyperplanes(1, nCells, 64)
-      val centValues = cvecs.zipWithIndex
-        .map { case (c, r) => s"($r, [${c.mkString(", ")}])" }
-        .mkString(",\n        ")
-      Query("s17_ann_ivf_oracle",
-        s"""WITH cents(cell_id, c) AS (VALUES
-          |        $centValues),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> (CAST(embedding[i] AS DOUBLE) - c[i])
-          |                  * (CAST(embedding[i] AS DOUBLE) - c[i]))),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN cents),
-          |assigned AS (SELECT vec_id, cell_id FROM (
-          |  SELECT vec_id, cell_id,
-          |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
-          |  FROM dist) WHERE rn = 1),
-          |probes AS (SELECT vec_id AS query_id, cell_id FROM (
-          |  SELECT vec_id, cell_id,
-          |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
-          |  FROM dist WHERE vec_id < 10) WHERE rn <= 3),
-          |cand AS (
-          |  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-          |  FROM probes p JOIN assigned a USING (cell_id)
-          |  WHERE a.vec_id <> p.query_id),
-          |cosd AS (
-          |  SELECT query_id, neighbor_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |           (a, x) -> a + x)
-          |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |              list_transform(range(1, 65),
-          |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-          |              (a, x) -> a + x))
-          |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |                list_transform(range(1, 65),
-          |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |                (a, x) -> a + x))) AS cos
-          |  FROM cand JOIN embeddings q ON q.vec_id = query_id
-          |            JOIN embeddings c ON c.vec_id = neighbor_id)
-          |SELECT query_id, neighbor_id, cos FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY query_id
-          |                               ORDER BY cos DESC, neighbor_id) AS rn
-          |  FROM cosd) WHERE rn <= 3""".stripMargin) { (s, d) =>
+      Query("s17_ann_ivf_oracle", IvfProbeOracleSql) { (s, d) =>
         import s.implicits._
         val e = Tables.embeddings(s, d)
         val cents = cvecs.zipWithIndex.map { case (c, r) => (r.toLong, c) }
@@ -835,52 +636,7 @@ object SimilaritySearch {
     {
       val nCells = 8
       val cvecs = Similarity.hyperplanes(1, nCells, 64)
-      val centValues = cvecs.zipWithIndex
-        .map { case (c, r) => s"($r, [${c.mkString(", ")}])" }
-        .mkString(",\n        ")
-      Query("s28_ann_index_persist",
-        s"""WITH cents(cell_id, c) AS (VALUES
-          |        $centValues),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> (CAST(embedding[i] AS DOUBLE) - c[i])
-          |                  * (CAST(embedding[i] AS DOUBLE) - c[i]))),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN cents),
-          |assigned AS (SELECT vec_id, cell_id FROM (
-          |  SELECT vec_id, cell_id,
-          |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
-          |  FROM dist) WHERE rn = 1),
-          |probes AS (SELECT vec_id AS query_id, cell_id FROM (
-          |  SELECT vec_id, cell_id,
-          |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
-          |  FROM dist WHERE vec_id < 10) WHERE rn <= 3),
-          |cand AS (
-          |  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-          |  FROM probes p JOIN assigned a USING (cell_id)
-          |  WHERE a.vec_id <> p.query_id),
-          |cosd AS (
-          |  SELECT query_id, neighbor_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |           (a, x) -> a + x)
-          |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |              list_transform(range(1, 65),
-          |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-          |              (a, x) -> a + x))
-          |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |                list_transform(range(1, 65),
-          |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |                (a, x) -> a + x))) AS cos
-          |  FROM cand JOIN embeddings q ON q.vec_id = query_id
-          |            JOIN embeddings c ON c.vec_id = neighbor_id)
-          |SELECT query_id, neighbor_id, cos FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY query_id
-          |                               ORDER BY cos DESC, neighbor_id) AS rn
-          |  FROM cosd) WHERE rn <= 3""".stripMargin) { (s, d) =>
+      Query("s28_ann_index_persist", IvfProbeOracleSql) { (s, d) =>
         import s.implicits._
         val e = Tables.embeddings(s, d)
         val cents = cvecs.zipWithIndex.map { case (c, r) => (r.toLong, c) }
@@ -914,14 +670,8 @@ object SimilaritySearch {
     {
       val nCells = 8
       val cvecs = Similarity.hyperplanes(1, nCells, 64)
-      val centValues = OracleSnippets.matrixValues(cvecs)
       Query("s52_ann_tombstones",
-        s"""WITH cents(cell_id, c) AS (VALUES
-          |        $centValues),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         ${OracleSnippets.dist2Fold("embedding", "c", 64)} AS d
-          |  FROM embeddings CROSS JOIN cents),
+        s"""WITH ${ivfCentsDist(cvecs)},
           |del AS (SELECT vec_id FROM embeddings WHERE vec_id % 7 = 3),
           |assigned AS (SELECT vec_id, cell_id FROM (
           |  SELECT vec_id, cell_id,
@@ -938,7 +688,7 @@ object SimilaritySearch {
           |  WHERE a.vec_id <> p.query_id),
           |cosd AS (
           |  SELECT query_id, neighbor_id,
-          |         ${OracleSnippets.cosineFold("q.embedding", "c.embedding", 64)} AS cos
+          |         ${cosineFold("q.embedding", "c.embedding", width(64))} AS cos
           |  FROM cand JOIN embeddings q ON q.vec_id = query_id
           |            JOIN embeddings c ON c.vec_id = neighbor_id)
           |SELECT query_id, neighbor_id, cos FROM (
@@ -981,11 +731,8 @@ object SimilaritySearch {
     {
       val nCells = 8
       val cvecs = Similarity.hyperplanes(1, nCells, 64)
-      val centValues = OracleSnippets.matrixValues(cvecs)
       Query("s53_ann_upserts",
-        s"""WITH cents(cell_id, c) AS (VALUES
-          |        $centValues),
-          |gen AS (
+        s"""WITH gen AS (
           |  -- generation 0: ids with vec_id % 5 <> 2, original embedding;
           |  -- generation 1 (the upsert batch): ids % 5 = 2 (inserts that
           |  -- missed the build) plus ids % 11 = 4 (updates: the vector is
@@ -1006,10 +753,7 @@ object SimilaritySearch {
           |    SELECT *, row_number() OVER (PARTITION BY vec_id
           |                                 ORDER BY ver DESC) AS rn
           |    FROM gen) WHERE rn = 1),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         ${OracleSnippets.dist2Fold("embedding", "c", 64)} AS d
-          |  FROM latest CROSS JOIN cents),
+          |${ivfCentsDist(cvecs, from = "latest")},
           |assigned AS (SELECT vec_id, cell_id FROM (
           |  SELECT vec_id, cell_id,
           |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
@@ -1077,7 +821,7 @@ object SimilaritySearch {
     // 64-way posexplode, one 8-row fold — the whole decision costs one
     // corpus pass at any scale.
     Query("s54_ann_retrain_decision",
-      s"""WITH $AnnMaintCtes
+      s"""WITH ${OracleSnippets.AnnMaintCtes}
         |SELECT cell_id, n_total, n_tomb, tomb_frac, l2_shift, decision
         |FROM dec""".stripMargin) { (s, d) =>
       val e = Tables.embeddings(s, d)
@@ -1139,7 +883,7 @@ object SimilaritySearch {
     // rebuilt slice — the actuation costs one pass over the AFFECTED
     // cells, never the corpus.
     Query("s55_ann_maintenance_apply",
-      s"""WITH $AnnMaintCtes,
+      s"""WITH ${OracleSnippets.AnnMaintCtes},
         |aft AS (
         |  SELECT a.vec_id, a.cell_id
         |  FROM assigned a JOIN dec USING (cell_id)
@@ -1240,20 +984,8 @@ object SimilaritySearch {
     {
       val nCells = 8
       val cvecs = Similarity.hyperplanes(1, nCells, 64)
-      val centValues = cvecs.zipWithIndex
-        .map { case (c, r) => s"($r, [${c.mkString(", ")}])" }
-        .mkString(",\n        ")
       Query("s32_filtered_ann",
-        s"""WITH cents(cell_id, c) AS (VALUES
-          |        $centValues),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> (CAST(embedding[i] AS DOUBLE) - c[i])
-          |                  * (CAST(embedding[i] AS DOUBLE) - c[i]))),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN cents),
+        s"""WITH ${ivfCentsDist(cvecs)},
           |assigned AS (SELECT d.vec_id, d.cell_id, e.label FROM (
           |  SELECT vec_id, cell_id,
           |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
@@ -1269,18 +1001,7 @@ object SimilaritySearch {
           |  WHERE a.vec_id <> p.query_id AND a.label = 1),
           |cosd AS (
           |  SELECT query_id, neighbor_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |           (a, x) -> a + x)
-          |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |              list_transform(range(1, 65),
-          |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-          |              (a, x) -> a + x))
-          |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |                list_transform(range(1, 65),
-          |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |                (a, x) -> a + x))) AS cos
+          |         ${cosineFold("q.embedding", "c.embedding", width(64))} AS cos
           |  FROM cand JOIN embeddings q ON q.vec_id = query_id
           |            JOIN embeddings c ON c.vec_id = neighbor_id)
           |SELECT query_id, neighbor_id, cos FROM (
@@ -1321,12 +1042,9 @@ object SimilaritySearch {
       val bookLit = "[" + books.map(b =>
         "[" + b.map(cw => "[" + cw.mkString(", ") + "]").mkString(", ") + "]")
         .mkString(", ") + "]"
-      val foldDist = (vec: String, s: String) =>
-        s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           |             list_transform(range(1, ${subDim + 1}),
-           |               j -> (CAST($vec[$s*$subDim + j] AS DOUBLE) - b[$s+1][c][j])
-           |                    * (CAST($vec[$s*$subDim + j] AS DOUBLE) - b[$s+1][c][j]))),
-           |             (a, x) -> a + x)""".stripMargin
+      val foldDist = (vec: String, s: String) => sumOver(s"${subDim + 1}",
+        s"(CAST($vec[$s*$subDim + i] AS DOUBLE) - b[$s+1][c][i])"
+          + s" * (CAST($vec[$s*$subDim + i] AS DOUBLE) - b[$s+1][c][i])")
       Query("s18_ann_pq_oracle",
         s"""WITH books(b) AS (VALUES ($bookLit)),
           |d0 AS (
@@ -1344,10 +1062,7 @@ object SimilaritySearch {
           |  FROM embeddings, books WHERE vec_id < 10),
           |adc AS (
           |  SELECT q.query_id, e.vec_id AS neighbor_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, ${m + 1}),
-          |             s -> q.dt[s][e.codes[s] + 1])),
-          |           (a, x) -> a + x) AS adc
+          |         ${sumOver(s"${m + 1}", "q.dt[i][e.codes[i] + 1]")} AS adc
           |  FROM enc e CROSS JOIN qd q WHERE e.vec_id <> q.query_id),
           |short AS (SELECT query_id, neighbor_id FROM (
           |  SELECT *, row_number() OVER (PARTITION BY query_id
@@ -1355,18 +1070,7 @@ object SimilaritySearch {
           |  FROM adc) WHERE rn <= 20),
           |cosd AS (
           |  SELECT query_id, neighbor_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |           (a, x) -> a + x)
-          |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |              list_transform(range(1, 65),
-          |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-          |              (a, x) -> a + x))
-          |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |                list_transform(range(1, 65),
-          |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |                (a, x) -> a + x))) AS cos
+          |         ${cosineFold("q.embedding", "c.embedding", width(64))} AS cos
           |  FROM short JOIN embeddings q ON q.vec_id = query_id
           |             JOIN embeddings c ON c.vec_id = neighbor_id)
           |SELECT query_id, neighbor_id, cos FROM (
@@ -1395,18 +1099,11 @@ object SimilaritySearch {
     // SAME probe/re-rank pipeline s17 pinned. Training runs through the
     // production path (trainFromCentroids → NearestCell kernel).
     {
-      // strict in-order fold of (v[i]-c[i])^2 over dims — NearestCell's
-      // documented accumulation order (VectorMathSpec pins the kernel
-      // against this exact HOF formulation)
-      def sqFold(vec: String, cent: String) =
-        s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           |           list_transform(range(1, 65),
-           |             i -> (CAST($vec[i] AS DOUBLE) - $cent[i])
-           |                  * (CAST($vec[i] AS DOUBLE) - $cent[i]))),
-           |           (a, x) -> a + x)""".stripMargin
+      // dist2Fold is NearestCell's documented accumulation order
+      // (VectorMathSpec pins the kernel against this exact HOF formulation)
       def round(n: Int) =
         s"""d$n AS (
-           |  SELECT e.vec_id, c.cell_id, ${sqFold("e.embedding", "c.c")} AS d
+           |  SELECT e.vec_id, c.cell_id, ${dist2Fold("e.embedding", "c.c", width(64))} AS d
            |  FROM embeddings e CROSS JOIN c${n - 1} c),
            |a$n AS (SELECT vec_id, cell_id FROM (
            |  SELECT vec_id, cell_id,
@@ -1437,7 +1134,7 @@ object SimilaritySearch {
           |         list_transform(c, x -> CAST(CAST(x AS FLOAT) AS DOUBLE)) AS c
           |  FROM c2),
           |ds AS (
-          |  SELECT e.vec_id, c.cell_id, ${sqFold("e.embedding", "c.c")} AS d
+          |  SELECT e.vec_id, c.cell_id, ${dist2Fold("e.embedding", "c.c", width(64))} AS d
           |  FROM embeddings e CROSS JOIN cf c),
           |assigned AS (SELECT vec_id, cell_id FROM (
           |  SELECT vec_id, cell_id,
@@ -1453,18 +1150,7 @@ object SimilaritySearch {
           |  WHERE a.vec_id <> p.query_id),
           |cosd AS (
           |  SELECT query_id, neighbor_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |           (a, x) -> a + x)
-          |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |              list_transform(range(1, 65),
-          |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-          |              (a, x) -> a + x))
-          |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |                list_transform(range(1, 65),
-          |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |                (a, x) -> a + x))) AS cos
+          |         ${cosineFold("q.embedding", "c.embedding", width(64))} AS cos
           |  FROM cand JOIN embeddings q ON q.vec_id = query_id
           |            JOIN embeddings c ON c.vec_id = neighbor_id)
           |SELECT query_id, neighbor_id, cos FROM (
@@ -1494,19 +1180,8 @@ object SimilaritySearch {
       val (tables, bits, dims) = (2, 6, 64)
       val cap = 40
       val planes = Similarity.hyperplanes(tables, bits, dims)
-      val planeValues = planes.zipWithIndex
-        .map { case (p, r) => s"($r, [${p.mkString(", ")}])" }
-        .mkString(",\n        ")
       Query("s20_embedding_neardup_oracle",
-        s"""WITH planes(r, p) AS (VALUES
-          |        $planeValues),
-          |dots AS (
-          |  SELECT vec_id, r // $bits AS t, r % $bits AS j,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, $dims + 1),
-          |             i -> CAST(embedding[i] AS DOUBLE) * p[i])),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN planes),
+        s"""WITH ${planeDots(planes, bits)},
           |buck AS (
           |  SELECT vec_id, t,
           |         sum(CASE WHEN d > 0 THEN CASE j WHEN 0 THEN 1 WHEN 1 THEN 2
@@ -1522,18 +1197,7 @@ object SimilaritySearch {
           |    ON x.t = y.t AND x.b = y.b AND x.vec_id < y.vec_id),
           |cosd AS (
           |  SELECT vec_a, vec_b,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, $dims + 1),
-          |             i -> CAST(va.embedding[i] AS DOUBLE) * CAST(vb.embedding[i] AS DOUBLE))),
-          |           (a, x) -> a + x)
-          |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |              list_transform(range(1, $dims + 1),
-          |                i -> CAST(va.embedding[i] AS DOUBLE) * CAST(va.embedding[i] AS DOUBLE))),
-          |              (a, x) -> a + x))
-          |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |                list_transform(range(1, $dims + 1),
-          |                  i -> CAST(vb.embedding[i] AS DOUBLE) * CAST(vb.embedding[i] AS DOUBLE))),
-          |                (a, x) -> a + x))) AS cos
+          |         ${cosineFold("va.embedding", "vb.embedding", width(dims))} AS cos
           |  FROM cand JOIN embeddings va ON va.vec_id = vec_a
           |            JOIN embeddings vb ON vb.vec_id = vec_b)
           |SELECT vec_a, vec_b, cos FROM cosd WHERE cos >= 0.35""".stripMargin) {
@@ -1557,9 +1221,6 @@ object SimilaritySearch {
       val (m, k, subDim) = (4, 4, 16)
       val (shortlist, topK) = (20, 3)
       val cvecs = Similarity.hyperplanes(1, nCells, 64)
-      val centValues = cvecs.zipWithIndex
-        .map { case (c, r) => s"($r, [${c.mkString(", ")}])" }
-        .mkString(",\n        ")
       val books = Similarity.hyperplanes(1, m * k, subDim)
         .grouped(k).toSeq // (m)(k)(subDim)
       val bookLit = "[" + books.map(b =>
@@ -1568,24 +1229,11 @@ object SimilaritySearch {
       // strict in-order fold of (res[s*subDim+j] - codeword[j])^2 —
       // PqEncode's documented accumulation order (residuals are already
       // DOUBLE, so no inner cast)
-      def foldRes(vec: String, s: String) =
-        s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           |             list_transform(range(1, ${subDim + 1}),
-           |               j -> ($vec[$s*$subDim + j] - b[$s+1][c][j])
-           |                    * ($vec[$s*$subDim + j] - b[$s+1][c][j]))),
-           |             (a, x) -> a + x)""".stripMargin
+      def foldRes(vec: String, s: String) = sumOver(s"${subDim + 1}",
+        s"($vec[$s*$subDim + i] - b[$s+1][c][i]) * ($vec[$s*$subDim + i] - b[$s+1][c][i])")
       Query("s21_ann_ivfpq_oracle",
-        s"""WITH cents(cell_id, cv) AS (VALUES
-          |        $centValues),
+        s"""WITH ${ivfCentsDist(cvecs)},
           |books(b) AS (VALUES ($bookLit)),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> (CAST(embedding[i] AS DOUBLE) - cv[i])
-          |                  * (CAST(embedding[i] AS DOUBLE) - cv[i]))),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN cents),
           |assigned AS (SELECT vec_id, cell_id FROM (
           |  SELECT vec_id, cell_id,
           |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
@@ -1593,7 +1241,7 @@ object SimilaritySearch {
           |res AS (
           |  SELECT e.vec_id, a.cell_id,
           |         list_transform(range(1, 65),
-          |           i -> CAST(e.embedding[i] AS DOUBLE) - ct.cv[i]) AS rv
+          |           i -> CAST(e.embedding[i] AS DOUBLE) - ct.c[i]) AS rv
           |  FROM embeddings e JOIN assigned a ON e.vec_id = a.vec_id
           |                    JOIN cents ct ON ct.cell_id = a.cell_id),
           |d0 AS (
@@ -1611,7 +1259,7 @@ object SimilaritySearch {
           |qres AS (
           |  SELECT p.query_id, p.cell_id,
           |         list_transform(range(1, 65),
-          |           i -> CAST(e.embedding[i] AS DOUBLE) - ct.cv[i]) AS rv
+          |           i -> CAST(e.embedding[i] AS DOUBLE) - ct.c[i]) AS rv
           |  FROM probes p JOIN embeddings e ON e.vec_id = p.query_id
           |                JOIN cents ct ON ct.cell_id = p.cell_id),
           |qd AS (
@@ -1621,10 +1269,7 @@ object SimilaritySearch {
           |  FROM qres, books),
           |adc AS (
           |  SELECT q.query_id, e.vec_id AS neighbor_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, ${m + 1}),
-          |             s -> q.dt[s][e.codes[s] + 1])),
-          |           (a, x) -> a + x) AS adc
+          |         ${sumOver(s"${m + 1}", "q.dt[i][e.codes[i] + 1]")} AS adc
           |  FROM enc e JOIN qd q
           |    ON e.cell_id = q.cell_id AND e.vec_id <> q.query_id),
           |short AS (SELECT query_id, neighbor_id FROM (
@@ -1633,18 +1278,7 @@ object SimilaritySearch {
           |  FROM adc) WHERE rn <= $shortlist),
           |cosd AS (
           |  SELECT query_id, neighbor_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |           (a, x) -> a + x)
-          |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |              list_transform(range(1, 65),
-          |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-          |              (a, x) -> a + x))
-          |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |                list_transform(range(1, 65),
-          |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |                (a, x) -> a + x))) AS cos
+          |         ${cosineFold("q.embedding", "c.embedding", width(64))} AS cos
           |  FROM short JOIN embeddings q ON q.vec_id = query_id
           |             JOIN embeddings c ON c.vec_id = neighbor_id)
           |SELECT query_id, neighbor_id, cos FROM (
@@ -1754,29 +1388,14 @@ object SimilaritySearch {
     {
       val nCells = 8
       val cvecs = Similarity.hyperplanes(1, nCells, 64)
-      val centValues = cvecs.zipWithIndex
-        .map { case (c, r) => s"($r, [${c.mkString(", ")}])" }
-        .mkString(",\n        ")
       Query("s23_semantic_dedup",
-        s"""WITH cents(cell_id, c) AS (VALUES
-          |        $centValues),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> (CAST(embedding[i] AS DOUBLE) - c[i])
-          |                  * (CAST(embedding[i] AS DOUBLE) - c[i]))),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN cents),
+        s"""WITH ${ivfCentsDist(cvecs)},
           |assigned AS (SELECT vec_id, cell_id FROM (
           |  SELECT vec_id, cell_id,
           |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
           |  FROM dist) WHERE rn = 1),
           |nrm AS (SELECT vec_id,
-          |          sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |            list_transform(range(1, 65),
-          |              i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))),
-          |            (a, x) -> a + x)) AS nrm
+          |          sqrt(${dotFold("embedding", "embedding", width(64))}) AS nrm
           |        FROM embeddings),
           |dropped AS (
           |  SELECT DISTINCT b.vec_id
@@ -1786,11 +1405,7 @@ object SimilaritySearch {
           |       JOIN embeddings eb ON eb.vec_id = b.vec_id
           |       JOIN nrm na ON na.vec_id = a.vec_id
           |       JOIN nrm nb ON nb.vec_id = b.vec_id
-          |  WHERE list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |          list_transform(range(1, 65),
-          |            i -> CAST(ea.embedding[i] AS DOUBLE)
-          |                 * CAST(eb.embedding[i] AS DOUBLE))),
-          |          (a, x) -> a + x) / (na.nrm * nb.nrm) >= 0.4)
+          |  WHERE ${dotFold("ea.embedding", "eb.embedding", width(64))} / (na.nrm * nb.nrm) >= 0.4)
           |SELECT a.vec_id, a.cell_id, d.vec_id IS NULL AS kept
           |FROM assigned a LEFT JOIN dropped d ON a.vec_id = d.vec_id""".stripMargin) {
         (s, d) =>
@@ -1814,20 +1429,8 @@ object SimilaritySearch {
     {
       val nCells = 8
       val cvecs = Similarity.hyperplanes(1, nCells, 64)
-      val centValues = cvecs.zipWithIndex
-        .map { case (c, r) => s"($r, [${c.mkString(", ")}])" }
-        .mkString(",\n        ")
       Query("s24_ann_recall",
-        s"""WITH cents(cell_id, c) AS (VALUES
-          |        $centValues),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> (CAST(embedding[i] AS DOUBLE) - c[i])
-          |                  * (CAST(embedding[i] AS DOUBLE) - c[i]))),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN cents),
+        s"""WITH ${ivfCentsDist(cvecs)},
           |assigned AS (SELECT vec_id, cell_id FROM (
           |  SELECT vec_id, cell_id,
           |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
@@ -1838,18 +1441,7 @@ object SimilaritySearch {
           |  FROM dist WHERE vec_id < 10) WHERE rn <= 2),
           |cos_all AS (
           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |           (a, x) -> a + x)
-          |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |              list_transform(range(1, 65),
-          |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-          |              (a, x) -> a + x))
-          |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |                list_transform(range(1, 65),
-          |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-          |                (a, x) -> a + x))) AS cos
+          |         ${cosineFold("q.embedding", "c.embedding", width(64))} AS cos
           |  FROM embeddings q JOIN embeddings c
           |    ON q.vec_id < 10 AND c.vec_id <> q.vec_id),
           |exact AS (SELECT query_id, neighbor_id FROM (
@@ -1913,29 +1505,7 @@ object SimilaritySearch {
     // id) is one row_number window keyed by component — the same single
     // shuffle the cluster assignment already pays.
     Query("s25_quality_aware_dedup",
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE doc_id < 300
-        |), sh AS (
-        |  SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS s
-        |  FROM toks WHERE len(t) >= 2
-        |), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON doc_a = sa.doc_id
-        |  JOIN sizes sb ON doc_b = sb.doc_id
-        |  WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.3),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
+      s"""WITH RECURSIVE ${OracleSnippets.NearDupReachCtes},
         |comp AS (SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id),
         |q AS (SELECT doc_id,
         |        len(string_split(text, ' '))
@@ -2009,47 +1579,12 @@ object SimilaritySearch {
     // final sort are driver-trivial; everything upstream is the s26/s01
     // scan shapes.
     Query("s29_rrf_fusion",
-      """WITH d AS (
-        |  SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl,
-        |         CAST(len(list_filter(t, x -> x = 'spark')) AS DOUBLE) AS tf1,
-        |         CAST(len(list_filter(t, x -> x = 'vector')) AS DOUBLE) AS tf2,
-        |         CAST(len(list_filter(t, x -> x = 'window')) AS DOUBLE) AS tf3,
-        |         CAST(len(list_filter(t, x -> x = 'customer')) AS DOUBLE) AS tf4
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-        |st AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl,
-        |         CAST(count(CASE WHEN tf1 > 0 THEN 1 END) AS DOUBLE) AS df1,
-        |         CAST(count(CASE WHEN tf2 > 0 THEN 1 END) AS DOUBLE) AS df2,
-        |         CAST(count(CASE WHEN tf3 > 0 THEN 1 END) AS DOUBLE) AS df3,
-        |         CAST(count(CASE WHEN tf4 > 0 THEN 1 END) AS DOUBLE) AS df4
-        |  FROM d),
-        |bm AS (
-        |  SELECT doc_id, round(
-        |      ln((n - df1 + 0.5) / (df1 + 0.5) + 1.0) * (tf1 * 2.2)
-        |        / (tf1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    + ln((n - df2 + 0.5) / (df2 + 0.5) + 1.0) * (tf2 * 2.2)
-        |        / (tf2 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    + ln((n - df3 + 0.5) / (df3 + 0.5) + 1.0) * (tf3 * 2.2)
-        |        / (tf3 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    + ln((n - df4 + 0.5) / (df4 + 0.5) + 1.0) * (tf4 * 2.2)
-        |        / (tf4 + 1.2 * (0.25 + 0.75 * dl / avgdl)), 6) AS score
-        |  FROM d, st),
+      s"""WITH ${OracleSnippets.bm25Ctes("bm")},
         |bmr AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r
         |        FROM bm QUALIFY r <= 20),
         |cs AS (
         |  SELECT c.vec_id AS doc_id,
-        |         round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(range(1, len(q.embedding) + 1),
-        |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-        |           (a, x) -> a + x)
-        |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |              list_transform(range(1, len(q.embedding) + 1),
-        |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-        |              (a, x) -> a + x))
-        |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |                list_transform(range(1, len(c.embedding) + 1),
-        |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-        |                (a, x) -> a + x))), 6) AS cos
+        |         round(${cosineFold("q.embedding", "c.embedding", ownLen)}, 6) AS cos
         |  FROM embeddings q JOIN embeddings c
         |    ON q.vec_id = 0 AND c.vec_id <> 0),
         |csr AS (SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id) AS r
@@ -2125,31 +1660,7 @@ object SimilaritySearch {
     // IEEE double expression; the libm `ln` ulp is absorbed by
     // round(score, 6) (the r11 precedent).
     Query("s26_bm25_topk",
-      """WITH d AS (
-        |  SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl,
-        |         CAST(len(list_filter(t, x -> x = 'spark')) AS DOUBLE) AS tf1,
-        |         CAST(len(list_filter(t, x -> x = 'vector')) AS DOUBLE) AS tf2,
-        |         CAST(len(list_filter(t, x -> x = 'window')) AS DOUBLE) AS tf3,
-        |         CAST(len(list_filter(t, x -> x = 'customer')) AS DOUBLE) AS tf4
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-        |st AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl,
-        |         CAST(count(CASE WHEN tf1 > 0 THEN 1 END) AS DOUBLE) AS df1,
-        |         CAST(count(CASE WHEN tf2 > 0 THEN 1 END) AS DOUBLE) AS df2,
-        |         CAST(count(CASE WHEN tf3 > 0 THEN 1 END) AS DOUBLE) AS df3,
-        |         CAST(count(CASE WHEN tf4 > 0 THEN 1 END) AS DOUBLE) AS df4
-        |  FROM d),
-        |sc AS (
-        |  SELECT doc_id, round(
-        |      ln((n - df1 + 0.5) / (df1 + 0.5) + 1.0) * (tf1 * 2.2)
-        |        / (tf1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    + ln((n - df2 + 0.5) / (df2 + 0.5) + 1.0) * (tf2 * 2.2)
-        |        / (tf2 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    + ln((n - df3 + 0.5) / (df3 + 0.5) + 1.0) * (tf3 * 2.2)
-        |        / (tf3 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    + ln((n - df4 + 0.5) / (df4 + 0.5) + 1.0) * (tf4 * 2.2)
-        |        / (tf4 + 1.2 * (0.25 + 0.75 * dl / avgdl)), 6) AS score
-        |  FROM d, st)
+      s"""WITH ${OracleSnippets.bm25Ctes("sc")}
         |SELECT doc_id, score FROM (
         |  SELECT doc_id, score,
         |         row_number() OVER (ORDER BY score DESC, doc_id) AS rn
@@ -2196,12 +1707,9 @@ object SimilaritySearch {
     // The reported score is the raw inner product (left-fold order shared
     // with the oracle, bit-identical like s01).
     Query("s30_mips_topk",
-      """WITH ip AS (
+      s"""WITH ip AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(range(1, len(q.embedding) + 1),
-        |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-        |           (a, x) -> a + x) AS score
+        |         ${dotFold("q.embedding", "c.embedding", ownLen)} AS score
         |  FROM embeddings q JOIN embeddings c
         |    ON q.vec_id < 10 AND c.vec_id <> q.vec_id)
         |SELECT query_id, neighbor_id, CAST(rn AS BIGINT) AS rn, score FROM (
@@ -2248,20 +1756,9 @@ object SimilaritySearch {
     // the top-k comes from whichever sublinear index is provisioned and
     // the vote is a per-query 5-row aggregate on top.
     Query("s31_knn_classify",
-      """WITH dotp AS (
+      s"""WITH dotp AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label,
-        |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(range(1, len(q.embedding) + 1),
-        |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-        |           (a, x) -> a + x)
-        |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |              list_transform(range(1, len(q.embedding) + 1),
-        |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-        |              (a, x) -> a + x))
-        |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |                list_transform(range(1, len(c.embedding) + 1),
-        |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-        |                (a, x) -> a + x))) AS cos
+        |         ${cosineFold("q.embedding", "c.embedding", ownLen)} AS cos
         |  FROM embeddings q JOIN embeddings c
         |    ON q.vec_id < 10 AND c.vec_id <> q.vec_id),
         |top5 AS (SELECT query_id, label FROM (
@@ -2312,17 +1809,11 @@ object SimilaritySearch {
     {
       val jlK = 16
       val jlDims = 64
-      val signValues = JlSigns.zipWithIndex
-        .map { case (row, j) => s"($j, [${row.mkString(", ")}])" }
-        .mkString(",\n        ")
       Query("s33_jl_projection",
         s"""WITH signs(j, sv) AS (VALUES
-          |        $signValues)
+          |        ${matrixValues(JlSigns)})
           |SELECT vec_id, j,
-          |       0.25 * list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |         list_transform(range(1, $jlDims + 1),
-          |           i -> CAST(embedding[i] AS DOUBLE) * sv[i])),
-          |         (a, x) -> a + x) AS value
+          |       0.25 * ${dotFold("embedding", "sv", width(jlDims))} AS value
           |FROM embeddings CROSS JOIN signs""".stripMargin) {
         (s, d) => {
           val folds = JlSigns.map { row =>
@@ -2417,17 +1908,12 @@ object SimilaritySearch {
     // (recall 0), not a quality claim; the band size itself is the
     // cross-engine content.
     Query("s40_recall_gate_emblsh",
-      """WITH nrm AS (SELECT vec_id, embedding,
-        |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(embedding, x -> CAST(x AS DOUBLE) * x)),
-        |           (a, b) -> a + b)) AS nm
+      s"""WITH nrm AS (SELECT vec_id, embedding,
+        |         sqrt(${dotFold("embedding", "embedding", ownLen)}) AS nm
         |       FROM embeddings),
         |band AS (SELECT a.vec_id, b.vec_id FROM nrm a JOIN nrm b
         |         ON a.vec_id < b.vec_id AND a.vec_id % 5 = 0
-        |         WHERE list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |                 list_transform(range(1, 65),
-        |                   i -> CAST(a.embedding[i] AS DOUBLE) * b.embedding[i])),
-        |                 (x, y) -> x + y) / (a.nm * b.nm) >= 0.35)
+        |         WHERE ${dotFold("a.embedding", "b.embedding", width(64))} / (a.nm * b.nm) >= 0.35)
         |SELECT CAST(count(*) AS BIGINT) AS n_true_pairs, true AS recall_ok
         |FROM band""".stripMargin) { (s, d) =>
       // truth = the exact cosine band restricted to the deterministic
@@ -2463,20 +1949,9 @@ object SimilaritySearch {
     // (s32 filtered-ANN pattern) — the label filter composes the same
     // way.
     Query("s41_hard_negatives",
-      """WITH dotp AS (
+      s"""WITH dotp AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(range(1, len(q.embedding) + 1),
-        |             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-        |           (a, x) -> a + x)
-        |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |              list_transform(range(1, len(q.embedding) + 1),
-        |                i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))),
-        |              (a, x) -> a + x))
-        |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |                list_transform(range(1, len(c.embedding) + 1),
-        |                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))),
-        |                (a, x) -> a + x))) AS cos
+        |         ${cosineFold("q.embedding", "c.embedding", ownLen)} AS cos
         |  FROM embeddings q JOIN embeddings c
         |    ON q.vec_id < 10 AND c.label <> q.label)
         |SELECT query_id, neighbor_id, cos FROM (
@@ -2512,7 +1987,7 @@ object SimilaritySearch {
     // half-case differs across engines. Plan: quantization is a narrow
     // projection, queries broadcast (the s01 shape).
     Query("s43_sq8_search",
-      """WITH e AS MATERIALIZED (
+      s"""WITH e AS MATERIALIZED (
         |  SELECT vec_id, embedding,
         |         list_reduce(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))),
         |                     (a, b) -> greatest(a, b)) / 127.0 AS sc
@@ -2524,9 +1999,9 @@ object SimilaritySearch {
         |  FROM e),
         |dotp AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |         (q.sc * c.sc) * CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |            list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * c.qv[i])),
-        |            (a, x) -> a + x) AS DOUBLE) AS score
+        |         (q.sc * c.sc) * CAST(${foldLeft("CAST(0 AS BIGINT)",
+                "list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * c.qv[i])",
+                "(a, x) -> a + x")} AS DOUBLE) AS score
         |  FROM q8 q JOIN q8 c ON q.vec_id < 10 AND c.vec_id <> q.vec_id)
         |SELECT query_id, neighbor_id, score FROM (
         |  SELECT *, row_number() OVER (PARTITION BY query_id
@@ -2563,7 +2038,7 @@ object SimilaritySearch {
     // flip the compare. Run it before swapping an index to SQ8: the
     // rel_l2 distribution IS the recall-risk signal.
     Query("s46_sq8_distortion",
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT vec_id, embedding,
         |         list_reduce(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))),
         |                     (a, b) -> greatest(a, b)) / 127.0 AS sc
@@ -2575,23 +2050,11 @@ object SimilaritySearch {
         |  FROM e),
         |m AS (
         |  SELECT vec_id,
-        |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(range(1, len(embedding) + 1),
-        |             i -> CAST(embedding[i] AS DOUBLE) * qv[i])),
-        |           (a, v) -> a + v) AS d_oq,
-        |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(range(1, len(embedding) + 1),
-        |             i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))),
-        |           (a, v) -> a + v) AS n_o2,
-        |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(range(1, len(qv) + 1),
-        |             i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE))),
-        |           (a, v) -> a + v) AS n_q2,
-        |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(range(1, len(embedding) + 1),
-        |             i -> (CAST(embedding[i] AS DOUBLE) - sc * qv[i])
-        |                  * (CAST(embedding[i] AS DOUBLE) - sc * qv[i]))),
-        |           (a, v) -> a + v) AS err2
+        |         ${dotFold("embedding", "qv", ownLen)} AS d_oq,
+        |         ${dotFold("embedding", "embedding", ownLen)} AS n_o2,
+        |         ${dotFold("qv", "qv", ownLen)} AS n_q2,
+        |         ${sumOver("len(embedding) + 1", "(CAST(embedding[i] AS DOUBLE) - sc * qv[i])"
+                    + " * (CAST(embedding[i] AS DOUBLE) - sc * qv[i])")} AS err2
         |  FROM q8)
         |SELECT vec_id,
         |       round(d_oq / (sqrt(n_o2) * sqrt(n_q2)), 9) AS cos_recon,
@@ -2664,19 +2127,8 @@ object SimilaritySearch {
       val (tables, bits, dims) = (2, 6, 64)
       val cap = 40
       val planes = Similarity.hyperplanes(tables, bits, dims)
-      val planeValues = planes.zipWithIndex
-        .map { case (p, r) => s"($r, [${p.mkString(", ")}])" }
-        .mkString(",\n        ")
       Query("s44_radius_search",
-        s"""WITH planes(r, p) AS (VALUES
-          |        $planeValues),
-          |dots AS (
-          |  SELECT vec_id, r // $bits AS t, r % $bits AS j,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, $dims + 1),
-          |             i -> CAST(embedding[i] AS DOUBLE) * p[i])),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN planes),
+        s"""WITH ${planeDots(planes, bits)},
           |buck AS (
           |  SELECT vec_id, t,
           |         sum(CASE WHEN d > 0 THEN CASE j WHEN 0 THEN 1 WHEN 1 THEN 2
@@ -2693,18 +2145,7 @@ object SimilaritySearch {
           |  WHERE q.vec_id % 50 = 0),
           |cosd AS (
           |  SELECT query_id, match_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, $dims + 1),
-          |             i -> CAST(va.embedding[i] AS DOUBLE) * CAST(vb.embedding[i] AS DOUBLE))),
-          |           (a, x) -> a + x)
-          |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |              list_transform(range(1, $dims + 1),
-          |                i -> CAST(va.embedding[i] AS DOUBLE) * CAST(va.embedding[i] AS DOUBLE))),
-          |              (a, x) -> a + x))
-          |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |                list_transform(range(1, $dims + 1),
-          |                  i -> CAST(vb.embedding[i] AS DOUBLE) * CAST(vb.embedding[i] AS DOUBLE))),
-          |                (a, x) -> a + x))) AS cos
+          |         ${cosineFold("va.embedding", "vb.embedding", width(dims))} AS cos
           |  FROM cand JOIN embeddings va ON va.vec_id = query_id
           |            JOIN embeddings vb ON vb.vec_id = match_id)
           |SELECT query_id, match_id, cos FROM cosd WHERE cos >= 0.35""".stripMargin) {
@@ -2726,7 +2167,7 @@ object SimilaritySearch {
     // per-dimension sums are exact BIGINT; per-label reductions fold in
     // dim order. One dimension explode + one (label, dim) hash agg.
     Query("s45_centroid_drift",
-      """WITH counts AS (
+      s"""WITH counts AS (
         |  SELECT label,
         |         sum(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END) AS n0,
         |         sum(CASE WHEN vec_id % 2 = 1 THEN 1 ELSE 0 END) AS n1
@@ -2748,14 +2189,10 @@ object SimilaritySearch {
         |             CAST(s1 AS DOUBLE) / 1000000.0 / n1 AS m1
         |      FROM sums JOIN counts ON sums.label = counts.label),
         |f AS (SELECT label,
-        |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list(m0 * m1 ORDER BY dim)), (a, x) -> a + x) AS dt,
-        |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list(m0 * m0 ORDER BY dim)), (a, x) -> a + x) AS s0q,
-        |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list(m1 * m1 ORDER BY dim)), (a, x) -> a + x) AS s1q,
-        |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list((m0 - m1) * (m0 - m1) ORDER BY dim)), (a, x) -> a + x) AS l2q
+        |        ${sumFold("list(m0 * m1 ORDER BY dim)")} AS dt,
+        |        ${sumFold("list(m0 * m0 ORDER BY dim)")} AS s0q,
+        |        ${sumFold("list(m1 * m1 ORDER BY dim)")} AS s1q,
+        |        ${sumFold("list((m0 - m1) * (m0 - m1) ORDER BY dim)")} AS l2q
         |      FROM m GROUP BY 1)
         |SELECT CAST(f.label AS BIGINT) AS label,
         |       CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
@@ -2783,18 +2220,13 @@ object SimilaritySearch {
     // a broken-pipeline trip-wire, the band size is the cross-engine
     // content.
     Query("s47_recall_gate_radius",
-      """WITH nrm AS (SELECT vec_id, embedding,
-        |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |           list_transform(embedding, x -> CAST(x AS DOUBLE) * x)),
-        |           (a, b) -> a + b)) AS nm
+      s"""WITH nrm AS (SELECT vec_id, embedding,
+        |         sqrt(${dotFold("embedding", "embedding", ownLen)}) AS nm
         |       FROM embeddings),
         |band AS (SELECT q.vec_id AS a, c.vec_id AS b FROM nrm q JOIN nrm c
         |         ON q.vec_id % 50 = 0 AND q.vec_id < 25000
         |            AND q.vec_id <> c.vec_id
-        |         WHERE list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |                 list_transform(range(1, 65),
-        |                   i -> CAST(q.embedding[i] AS DOUBLE) * c.embedding[i])),
-        |                 (x, y) -> x + y) / (q.nm * c.nm) >= 0.35)
+        |         WHERE ${dotFold("q.embedding", "c.embedding", width(64))} / (q.nm * c.nm) >= 0.35)
         |SELECT CAST(count(*) AS BIGINT) AS n_true_pairs, true AS recall_ok
         |FROM band""".stripMargin) { (s, d) =>
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
@@ -2870,20 +2302,8 @@ object SimilaritySearch {
     {
       val nCells = 16
       val cvecs = graft.functions.Similarity.hyperplanes(1, nCells, 64)
-      val centValues = cvecs.zipWithIndex
-        .map { case (c, r) => s"($r, [${c.mkString(", ")}])" }
-        .mkString(",\n        ")
       Query("s49_prototype_prune",
-        s"""WITH cents(cell_id, c) AS (VALUES
-          |        $centValues),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> (CAST(embedding[i] AS DOUBLE) - c[i])
-          |                  * (CAST(embedding[i] AS DOUBLE) - c[i]))),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN cents),
+        s"""WITH ${ivfCentsDist(cvecs)},
           |assigned AS (SELECT vec_id, cell_id, d FROM (
           |  SELECT vec_id, cell_id, d,
           |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
@@ -2937,33 +2357,8 @@ object SimilaritySearch {
     {
       val nCells = 8
       val cvecs = graft.functions.Similarity.hyperplanes(1, nCells, 64)
-      val centValues = cvecs.zipWithIndex
-        .map { case (c, r) => s"($r, [${c.mkString(", ")}])" }
-        .mkString(",\n        ")
-      def cosSql(l: String, r: String): String =
-        s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           |           list_transform(range(1, 65),
-           |             i -> CAST($l.embedding[i] AS DOUBLE) * CAST($r.embedding[i] AS DOUBLE))),
-           |           (a, x) -> a + x)
-           |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           |              list_transform(range(1, 65),
-           |                i -> CAST($l.embedding[i] AS DOUBLE) * CAST($l.embedding[i] AS DOUBLE))),
-           |              (a, x) -> a + x))
-           |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           |                list_transform(range(1, 65),
-           |                  i -> CAST($r.embedding[i] AS DOUBLE) * CAST($r.embedding[i] AS DOUBLE))),
-           |                (a, x) -> a + x)))""".stripMargin
       Query("s51_ranking_metrics",
-        s"""WITH cents(cell_id, c) AS (VALUES
-          |        $centValues),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          |           list_transform(range(1, 65),
-          |             i -> (CAST(embedding[i] AS DOUBLE) - c[i])
-          |                  * (CAST(embedding[i] AS DOUBLE) - c[i]))),
-          |           (a, x) -> a + x) AS d
-          |  FROM embeddings CROSS JOIN cents),
+        s"""WITH ${ivfCentsDist(cvecs)},
           |assigned AS (SELECT vec_id, cell_id FROM (
           |  SELECT vec_id, cell_id,
           |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn
@@ -2977,7 +2372,7 @@ object SimilaritySearch {
           |  FROM probes p JOIN assigned a USING (cell_id)
           |  WHERE a.vec_id <> p.query_id),
           |cosd AS (
-          |  SELECT query_id, neighbor_id, ${cosSql("q", "c")} AS cos
+          |  SELECT query_id, neighbor_id, ${cosineFold("q.embedding", "c.embedding", width(64))} AS cos
           |  FROM cand JOIN embeddings q ON q.vec_id = query_id
           |            JOIN embeddings c ON c.vec_id = neighbor_id),
           |sys AS (
@@ -2987,7 +2382,7 @@ object SimilaritySearch {
           |    FROM cosd) WHERE rn <= 3),
           |tcos AS (
           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |         ${cosSql("q", "c")} AS cos
+          |         ${cosineFold("q.embedding", "c.embedding", width(64))} AS cos
           |  FROM embeddings q JOIN embeddings c
           |    ON q.vec_id < 10 AND c.vec_id <> q.vec_id),
           |truth AS (
@@ -3061,18 +2456,7 @@ object SimilaritySearch {
     * the engine's dot(q,c)/(|q|*|c|) replays bitwise). */
   private[queries] lazy val MmrOracleSql: String = {
     def cos(l: String, r: String): String =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |           list_transform(range(1, len($l.embedding) + 1),
-         |             i -> CAST($l.embedding[i] AS DOUBLE) * CAST($r.embedding[i] AS DOUBLE))),
-         |           (a, x) -> a + x)
-         |         / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |              list_transform(range(1, len($l.embedding) + 1),
-         |                i -> CAST($l.embedding[i] AS DOUBLE) * CAST($l.embedding[i] AS DOUBLE))),
-         |              (a, x) -> a + x))
-         |            * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |                list_transform(range(1, len($r.embedding) + 1),
-         |                  i -> CAST($r.embedding[i] AS DOUBLE) * CAST($r.embedding[i] AS DOUBLE))),
-         |                (a, x) -> a + x)))""".stripMargin
+      cosineFold(s"$l.embedding", s"$r.embedding", ownLen)
     def greedyStep(i: Int): String = {
       val prev = (1 until i).map(j => s"SELECT qid, cid FROM s$j").mkString("\n  UNION ALL ")
       s"""sel$i AS ($prev),

@@ -17,6 +17,23 @@ import graft.operators.Anomalies
   */
 object SinkQueries {
 
+  /** io20's oracle, shared verbatim by st21 (the live ledger's chain
+    * heads must equal the batch recurrence's). */
+  private[queries] val HashChainOracleSql: String =
+    """WITH RECURSIVE ev AS (
+      |  SELECT user_id, event_id,
+      |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+      |  FROM events),
+      |scan AS (
+      |  SELECT user_id, rn, md5('g:' || CAST(event_id AS VARCHAR)) AS h
+      |  FROM ev WHERE rn = 1
+      |  UNION ALL
+      |  SELECT e.user_id, e.rn, md5(s.h || ':' || CAST(e.event_id AS VARCHAR))
+      |  FROM ev e JOIN scan s ON e.user_id = s.user_id AND e.rn = s.rn + 1)
+      |SELECT s.user_id, CAST(s.rn AS BIGINT) AS n_events, s.h AS chain_md5
+      |FROM scan s JOIN (SELECT user_id, max(rn) AS mr FROM scan GROUP BY 1) t
+      |  ON s.user_id = t.user_id AND s.rn = t.mr""".stripMargin
+
   val queries: Seq[Query] = Seq(
 
     // ---- S4: CSV export/import roundtrip ------------------------------------
@@ -148,20 +165,7 @@ object SinkQueries {
     // history changes the head; io19 hashes a SET per partition, this
     // hashes a SEQUENCE per key. Oracle replays the chain as a
     // recursive CTE (md5 is the cross-engine hash).
-    Query("io20_hash_chain",
-      """WITH RECURSIVE ev AS (
-        |  SELECT user_id, event_id,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |scan AS (
-        |  SELECT user_id, rn, md5('g:' || CAST(event_id AS VARCHAR)) AS h
-        |  FROM ev WHERE rn = 1
-        |  UNION ALL
-        |  SELECT e.user_id, e.rn, md5(s.h || ':' || CAST(e.event_id AS VARCHAR))
-        |  FROM ev e JOIN scan s ON e.user_id = s.user_id AND e.rn = s.rn + 1)
-        |SELECT s.user_id, CAST(s.rn AS BIGINT) AS n_events, s.h AS chain_md5
-        |FROM scan s JOIN (SELECT user_id, max(rn) AS mr FROM scan GROUP BY 1) t
-        |  ON s.user_id = t.user_id AND s.rn = t.mr""".stripMargin) { (s, d) =>
+    Query("io20_hash_chain", HashChainOracleSql) { (s, d) =>
       graft.operators.Cdc.hashChain(
           Tables.events(s, d).select(col("user_id"), col("event_id"), col("ts"),
             col("event_id").cast("string").as("payload")),
@@ -492,14 +496,8 @@ object SinkQueries {
     {
       val nCells = 8
       val cvecs = graft.functions.Similarity.hyperplanes(1, nCells, 64)
-      val centValues = OracleSnippets.matrixValues(cvecs)
       Query("io25_tombstone_compaction",
-        s"""WITH cents(cell_id, c) AS (VALUES
-          |        $centValues),
-          |dist AS (
-          |  SELECT vec_id, cell_id,
-          |         ${OracleSnippets.dist2Fold("embedding", "c", 64)} AS d
-          |  FROM embeddings CROSS JOIN cents),
+        s"""WITH ${OracleSnippets.ivfCentsDist(cvecs)},
           |assigned AS (SELECT vec_id, cell_id FROM (
           |  SELECT vec_id, cell_id,
           |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell_id) AS rn

@@ -69,12 +69,7 @@ object StreamingQueries {
     // same (ts, event_id) tiebreak. This is the batch↔incremental
     // equivalence for STATEFUL logic, where divergence is easiest
     // (ordering inside a batch, state carry across batches).
-    Query("st02_stream_sessionize",
-      """SELECT event_id,
-        |       CAST(1 + sum(CASE WHEN epoch_us(ts) - prev > 1800000000 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS session_id
-        |FROM (SELECT *, lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |      FROM events)""".stripMargin) {
+    Query("st02_stream_sessionize", Temporal.SessionizeOracleSql) {
       (s, d) => {
         val ss = Streams.rowSession(s)
         import ss.implicits._
@@ -496,30 +491,7 @@ object StreamingQueries {
     // monitor pattern where the heavy streaming state is a fixed-size
     // histogram, not raw events. Complete mode: the final table equals
     // the batch aggregation, so the row hash-matches a30's oracle.
-    Query("st12_stream_drift",
-      """WITH b AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 2 AS slice,
-        |         least(9, greatest(0, CAST(floor(value / 50.0) AS BIGINT))) AS bucket
-        |  FROM events),
-        |c AS (SELECT event_type, slice, bucket, count(*) AS n FROM b GROUP BY 1, 2, 3),
-        |spine AS (
-        |  SELECT DISTINCT event_type, r.range AS bucket FROM events, range(0, 10) r),
-        |tot AS (SELECT event_type,
-        |               sum(CASE WHEN slice = 0 THEN n ELSE 0 END) AS ta,
-        |               sum(CASE WHEN slice = 1 THEN n ELSE 0 END) AS tb
-        |        FROM c GROUP BY 1),
-        |pq AS (
-        |  SELECT s.event_type, s.bucket,
-        |         (coalesce(a.n, 0) + 0.5) / (t.ta + 5.0) AS p,
-        |         (coalesce(o.n, 0) + 0.5) / (t.tb + 5.0) AS q
-        |  FROM spine s
-        |  JOIN tot t ON s.event_type = t.event_type
-        |  LEFT JOIN c a ON a.event_type = s.event_type AND a.bucket = s.bucket AND a.slice = 0
-        |  LEFT JOIN c o ON o.event_type = s.event_type AND o.bucket = s.bucket AND o.slice = 1)
-        |SELECT event_type,
-        |       CAST(sum(CAST(round((p - q) * ln(p / q), 6) AS DECIMAL(18,6))) AS DOUBLE) AS psi
-        |FROM pq GROUP BY event_type""".stripMargin) {
+    Query("st12_stream_drift", Analytics.PsiDriftOracleSql) {
       (s, d) => {
         val raw = Streams.symlinkSource(Streams.rowSession(s), d, "events")
         val src = raw.withColumn("ts", Tables.canonTs(raw.schema))
@@ -809,20 +781,7 @@ col("userId").as("user_id"), col("eventId").as("event_id"),
     // recurrence under the batch<->stream bit-equivalence discipline,
     // and the one where equivalence is the PRODUCT (a live chain a
     // later offline audit must reproduce hash-for-hash).
-    Query("st21_stream_hash_chain",
-      """WITH RECURSIVE ev AS (
-        |  SELECT user_id, event_id,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |scan AS (
-        |  SELECT user_id, rn, md5('g:' || CAST(event_id AS VARCHAR)) AS h
-        |  FROM ev WHERE rn = 1
-        |  UNION ALL
-        |  SELECT e.user_id, e.rn, md5(s.h || ':' || CAST(e.event_id AS VARCHAR))
-        |  FROM ev e JOIN scan s ON e.user_id = s.user_id AND e.rn = s.rn + 1)
-        |SELECT s.user_id, CAST(s.rn AS BIGINT) AS n_events, s.h AS chain_md5
-        |FROM scan s JOIN (SELECT user_id, max(rn) AS mr FROM scan GROUP BY 1) t
-        |  ON s.user_id = t.user_id AND s.rn = t.mr""".stripMargin) {
+    Query("st21_stream_hash_chain", SinkQueries.HashChainOracleSql) {
       (s, d) => {
         val src = Streams.valueEvents(
           Streams.symlinkSource(Streams.rowSession(s), d, "events"))
@@ -852,13 +811,7 @@ col("userId").as("user_id"), col("eventId").as("event_id"),
     // and the same oracle as a53, so batch and stream answers sit under
     // one contract; the parity-split staging makes a broken cross-batch
     // sketch merge overcount visibly.
-    Query("st23_stream_sketch_intersection",
-      """WITH a AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'view'),
-        |b AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-        |SELECT (SELECT count(*) FROM a) AS exact_a,
-        |       (SELECT count(*) FROM b) AS exact_b,
-        |       (SELECT count(*) FROM a JOIN b USING (user_id)) AS exact_both,
-        |       CAST(1 AS BOOLEAN) AS within_10pct""".stripMargin) {
+    Query("st23_stream_sketch_intersection", Keys.SketchIntersectionOracleSql) {
       (s, d) => {
         val ss = Streams.rowSession(s)
         val raw = Tables.load(ss, d, "events")

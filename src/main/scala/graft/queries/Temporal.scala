@@ -22,6 +22,15 @@ import graft.operators.{Sessionize, Windows}
   */
 object Temporal {
 
+  /** w11's oracle, shared verbatim by st02 (the stateful streaming
+    * sessionizer must assign the batch session ids). */
+  private[queries] val SessionizeOracleSql: String =
+    """SELECT event_id,
+      |       CAST(1 + sum(CASE WHEN epoch_us(ts) - prev > 1800000000 THEN 1 ELSE 0 END)
+      |           OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS session_id
+      |FROM (SELECT *, lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
+      |      FROM events)""".stripMargin
+
   /** w29's oracle, shared verbatim by st13 (the streaming run of the
     * same two-state recurrence must hash-match the batch SQL). */
   private[queries] val HoltOracleSql: String =
@@ -100,12 +109,7 @@ object Temporal {
     // ---- W11: per-key ordered recurrence (gap sessionization) -------------
     // The scanPerKey secondary-sort operator; oracle is the closed-form
     // gap-flag running sum, which equals the recurrence for this instance.
-    Query("w11_sessionize",
-      """SELECT event_id,
-        |       CAST(1 + sum(CASE WHEN epoch_us(ts) - prev > 1800000000 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS session_id
-        |FROM (SELECT *, lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |      FROM events)""".stripMargin) {
+    Query("w11_sessionize", SessionizeOracleSql) {
       (s, d) => Sessionize.sessionize(Tables.events(s, d), "user_id", "ts",
           "event_id", gapMicros = 1800L * 1000000)
         .select("event_id", "session_id")

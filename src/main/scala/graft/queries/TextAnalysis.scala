@@ -225,11 +225,11 @@ object TextAnalysis {
 
     // ---- T4: document fingerprint (rolling hash) ----------------------------
     Query("t04_fingerprint",
-      """SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(7 AS BIGINT),
-        |    list_transform(string_split(text, ' '),
-        |                   t -> CAST(length(t) * 131 + ascii(substring(t, 1, 1)) AS BIGINT))),
-        |    (a, h) -> (a * 31 + h) % 1000003) AS fp
+      s"""SELECT doc_id,
+        |  ${OracleSnippets.foldLeft("CAST(7 AS BIGINT)",
+                "list_transform(string_split(text, ' '), t -> CAST(length(t) * 131"
+                  + " + ascii(substring(t, 1, 1)) AS BIGINT))",
+                "(a, h) -> (a * 31 + h) % 1000003")} AS fp
         |FROM documents""".stripMargin) {
       (s, d) => Tables.documents(s, d).select(col("doc_id"),
         fingerprint(col("text")).as("fp"))
@@ -247,17 +247,7 @@ object TextAnalysis {
     // Bounded to doc_id < 300 to keep the exact baseline tractable; the
     // LSH path (Similarity pack) removes the bound.
     Query("t06_near_dup_pairs",
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE doc_id < 300
-        |), sh AS (
-        |  SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS s
-        |  FROM toks WHERE len(t) >= 2
-        |), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
+      s"""WITH ${OracleSnippets.BigramOverlapCtes}
         |SELECT doc_a, doc_b, i * 1.0 / (sa.n + sb.n - i) AS jaccard
         |FROM inter
         |JOIN sizes sa ON doc_a = sa.doc_id

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.OdkKeys
 
@@ -75,7 +74,7 @@ class ApproxBucketSpec extends SparkSpec {
       s"bucketed join must not shuffle:\n$plan")
     assert(j.count() == 10000)
     // contrast: the same join over unbucketed parquet shuffles both sides
-    val pa = Files.createTempDirectory("graft_pq").toString
+    val pa = graft.core.TempDirs.scratch("graft_pq").toString
     a.write.mode("overwrite").parquet(pa)
     val plain = sp.read.parquet(pa).join(b, "k")
     assert(plain.queryExecution.executedPlan.toString.contains("Exchange"))

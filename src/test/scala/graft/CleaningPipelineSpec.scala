@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.core.Conditional
 import graft.operators._
@@ -67,7 +66,7 @@ class CleaningPipelineSpec extends SparkSpec {
       .head().getAs[String]("anomalies_description").contains("uuid:1"))
 
     // partitioned history + summary snapshot
-    val root = Files.createTempDirectory("graft_pipe_hist").toString
+    val root = graft.core.TempDirs.scratch("graft_pipe_hist").toString
     Anomalies.writeHistory(anomalies, root, java.time.LocalDate.of(2026, 8, 12))
     val hist = spark.read.parquet(root)
     assert(hist.count() == 2 && hist.columns.contains("partition_date"))

@@ -54,7 +54,7 @@ class ConnectorsSpec extends SparkSpec {
   }
 
   test("S1 end-to-end: ODK submission export over HTTP lands, unzips, reads, joins") {
-    val landing = Files.createTempDirectory("graft_odk_http").toString
+    val landing = graft.core.TempDirs.scratch("graft_odk_http").toString
     val zip = zipOf(
       "safety.csv" -> "KEY,hhid\nuuid:1,00007\n",
       "safety-repeat_individual.csv" ->
@@ -98,7 +98,7 @@ class ConnectorsSpec extends SparkSpec {
   }
 
   test("S9: tracker sheet fetched over HTTP reads as the resolution table") {
-    val landing = Files.createTempDirectory("graft_sheet").toString + "/tracker.csv"
+    val landing = graft.core.TempDirs.scratch("graft_sheet").toString + "/tracker.csv"
     val csv = "key,column,setTo,operation\nuuid:9,visit,V2,SET\n".getBytes(UTF_8)
     val (base, _, stop) = fixtureServer(Map("/export" -> csv))
     try {
@@ -111,7 +111,7 @@ class ConnectorsSpec extends SparkSpec {
   }
 
   test("S9/S11: publishTable stages a CSV that uploadStaged POSTs verbatim") {
-    val staging = Files.createTempDirectory("graft_pub").toString + "/out"
+    val staging = graft.core.TempDirs.scratch("graft_pub").toString + "/out"
     val res = df("SELECT 'uuid:9' AS key, 'visit' AS column, 'V2' AS setTo, 'SET' AS operation")
     Connectors.publishTable(res, staging)
     val (base, seen, stop) = fixtureServer(Map("/ingest" -> Array[Byte]()))
@@ -126,7 +126,7 @@ class ConnectorsSpec extends SparkSpec {
 
   test("S10: zipFormDir packages a staged folder by basename, byte-stable, re-run safe") {
     import java.util.zip.ZipInputStream
-    val dir = Files.createTempDirectory("graft_zip")
+    val dir = graft.core.TempDirs.scratch("graft_zip")
     Files.write(dir.resolve("b_form.csv"), "KEY,v\nuuid:1,2\n".getBytes(UTF_8))
     Files.write(dir.resolve("a_form.csv"), "KEY\nuuid:2\n".getBytes(UTF_8))
     Files.createDirectory(dir.resolve("sub")) // non-recursive, like R dir()
@@ -160,7 +160,7 @@ class ConnectorsSpec extends SparkSpec {
       def post(url: String, body: Array[Byte], headers: Map[String, String]): Array[Byte] =
         Array[Byte]()
     }
-    val landing = Files.createTempDirectory("graft_fake").toString
+    val landing = graft.core.TempDirs.scratch("graft_fake").toString
     val manifest = Connectors.fetchOdkExport(canned, "http://unused", "t", 1, "f", landing)
     assert(manifest == Seq("f.csv"))
     val t = Connectors.odkFormTable(spark, landing, "f",

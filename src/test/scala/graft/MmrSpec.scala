@@ -145,4 +145,20 @@ class MmrSpec extends SparkSpec {
     val bitNeg0 = java.lang.Double.doubleToRawLongBits(-0.0)
     assert(fast(2)._4 == bit0 && fast(5)._4 == bitNeg0)
   }
+
+  test("int-keyed candidates keep IntegerType qid/cid and the long-keyed picks") {
+    val sess = spark; import sess.implicits._
+    val long = cand().unionByName(Seq(
+      (7L, 9L, Array(0f, 1f), 1.0, 0.5),
+      (7L, 8L, Array(1f, 0f), 1.0, 0.4)).toDF("qid", "cid", "c_emb", "c_norm", "rel"))
+    val int = long.withColumn("qid", col("qid").cast("int"))
+      .withColumn("cid", col("cid").cast("int"))
+    val out = Mmr.rerank(int, k = 3, lam = 0.3, mu = 0.7)
+    import org.apache.spark.sql.types.IntegerType
+    assert(out.schema("qid").dataType == IntegerType)
+    assert(out.schema("cid").dataType == IntegerType)
+    val widened = out.withColumn("qid", col("qid").cast("long"))
+      .withColumn("cid", col("cid").cast("long"))
+    assert(bits(widened) == bits(Mmr.rerank(long, k = 3, lam = 0.3, mu = 0.7)))
+  }
 }

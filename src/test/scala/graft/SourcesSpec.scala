@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Anomalies
@@ -8,7 +7,7 @@ import graft.operators.Anomalies
 class SourcesSpec extends SparkSpec {
 
   test("CSV round-trip with explicit schema (no inferSchema)") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = graft.core.TempDirs.scratch("graft_csv").toString
     val d = df("SELECT * FROM VALUES (1, 'a', DATE'2024-01-05'), (2, 'b', DATE'2024-02-06') t(id, s, d)")
     d.write.mode("overwrite").option("header", "true").csv(dir)
     val schema = StructType(Seq(
@@ -20,7 +19,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned history write: append days, dynamic overwrite is idempotent") {
-    val root = Files.createTempDirectory("graft_hist").toString
+    val root = graft.core.TempDirs.scratch("graft_hist").toString
     val day1 = java.time.LocalDate.of(2026, 1, 1)
     val day2 = java.time.LocalDate.of(2026, 1, 2)
     val snap1 = df("SELECT 'k1' AS key, 'f' AS form_id")
@@ -36,7 +35,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partition pruning reaches the scan for partition_date filters") {
-    val root = Files.createTempDirectory("graft_hist2").toString
+    val root = graft.core.TempDirs.scratch("graft_hist2").toString
     Anomalies.writeHistory(df("SELECT 'a' AS key"), root, java.time.LocalDate.of(2026, 1, 1))
     Anomalies.writeHistory(df("SELECT 'b' AS key"), root, java.time.LocalDate.of(2026, 1, 2))
     val q = spark.read.parquet(root).filter(col("partition_date") === "2026-01-01")

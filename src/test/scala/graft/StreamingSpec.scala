@@ -249,9 +249,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("fileSource picks up landed parquet incrementally (AvailableNow)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = graft.core.TempDirs.scratch("graft_stream").toString
+    val out = graft.core.TempDirs.scratch("graft_out").toString
+    val ckpt = graft.core.TempDirs.scratch("graft_ckpt").toString
     spark.range(10).select(col("id"), (col("id") * 2).as("v"))
       .write.mode("append").parquet(dir)
     val schema = spark.read.parquet(dir).schema
@@ -278,9 +278,9 @@ class StreamingSpec extends SparkSpec {
     // later data pushes the watermark past the old window — the emitted
     // counts must include run 1's rows exactly once, which is only
     // possible if the state store recovered from the checkpoint.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ste").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_steo").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stec").toString
+    val dir = graft.core.TempDirs.scratch("graft_ste").toString
+    val out = graft.core.TempDirs.scratch("graft_steo").toString
+    val ckpt = graft.core.TempDirs.scratch("graft_stec").toString
     def land(minutes: Seq[Int]): Unit =
       spark.createDataFrame(minutes.map(m =>
           (new java.sql.Timestamp(1700000000000L + m * 60000L), "k")))
