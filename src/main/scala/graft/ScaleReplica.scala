@@ -146,9 +146,7 @@ object ScaleReplica {
                 .write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
           System.err.println(s"[scale] $n FAILED: ${e.getMessage}"); false }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.core.Sessions.clearCaches(spark)
       // shuffle files release via ContextCleaner only when their
       // ShuffleDependency is GC'd — with a 100g posture heap that can
       // be never, and the 100x ento chain measured 16G+ of dead

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Query, Tables}
+import OracleSnippets.{AnovaSumCtes, DailyTypeMicros, SegCentsCte, dailyTypeSumCte, segMomentCte}
 
 /** Trend / drift / ordered-run analytics — the monitoring layer that sits
   * on top of the reference's anomaly battery (SURVEY §2.4/§2.5): per-group
@@ -17,6 +18,50 @@ import graft.core.{Query, Tables}
   * rounded to 6 dp — partition order can never move a bit.
   */
 object Analytics {
+
+  /** A daily sum in integer micro-units, the Spark twin of
+    * `OracleSnippets.DailyTypeMicros`' `q`. */
+  private[queries] def micros(xs: Column): Column =
+    floor(xs.cast("double") * lit(1000000.0) + lit(0.5)).cast("long")
+
+  /** Each order's value in integer cents `xc` by customer market `seg`,
+    * with `cols` between the two (oracle twin
+    * `OracleSnippets.SegCentsCte`). */
+  private[queries] def segCents(s: SparkSession, d: String, cols: Column*): DataFrame =
+    Tables.orders(s, d)
+      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
+      .select((col("c_mktsegment").as("seg") +: cols :+
+        round(col("o_totalprice") * 100).cast("long").as("xc")): _*)
+
+  /** Exact per-segment count `n`, Σv `s1` and Σv² `s2` of the integer
+    * column `v` (oracle twin `OracleSnippets.segMomentCte`). */
+  private[queries] def segMoments(df: DataFrame, v: String, n: String): DataFrame =
+    df.groupBy("seg")
+      .agg(count(lit(1)).as(n),
+        sum(v).cast("decimal(38,0)").as("s1"),
+        sum((col(v) * col(v)).cast("decimal(38,0)")).as("s2"))
+
+  /** One-way ANOVA sums over [[segMoments]] (count `ng`): the seg-ordered
+    * folds `a(ssb, ssw)` and the totals `t(k, n, gs1)` (oracle twin
+    * `OracleSnippets.AnovaSumCtes`). */
+  private[queries] def anovaSums(g: DataFrame): (DataFrame, DataFrame) = {
+    val t = g.agg(count(lit(1)).as("k"), sum("ng").cast("long").as("n"),
+      sum("s1").as("gs1"))
+    val diff = col("s1").cast("double") / col("ng") -
+      col("gs1").cast("double") / col("n")
+    val terms = g.crossJoin(broadcast(t)).select(col("seg"),
+      (col("ng").cast("double") * diff * diff).as("ssb_t"),
+      (col("s2").cast("double")
+        - col("s1").cast("double") * col("s1").cast("double") / col("ng"))
+        .as("ssw_t"))
+    // the 5 per-group terms fold in seg order (exact-order float fold:
+    // an unordered SUM over doubles would be partition-order-dependent)
+    def orderedFold(term: String) = aggregate(
+      transform(sort_array(collect_list(struct(col("seg"), col(term)))),
+        e => e.getField(term)),
+      lit(0.0), (acc, v) => acc + v)
+    (terms.agg(orderedFold("ssb_t").as("ssb"), orderedFold("ssw_t").as("ssw")), t)
+  }
 
   /** a30's oracle, shared verbatim by st12 (the streaming counters'
     * PSI epilogue must hash-match the batch SQL). */
@@ -94,6 +139,41 @@ object Analytics {
       .filter(substring(
         md5(concat(col("x").cast("string"), lit("_"), col("y").cast("string"), lit(salt))),
         1, 1) === "0")
+  }
+
+  /** Per event type and value, the counts `da`/`db` on even/odd epoch
+    * days (w24, a34; oracle twin `OracleSnippets.SliceValueCountCtes`). */
+  private[queries] def sliceValueCounts(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d).select(col("event_type"), col("value"),
+        (datediff(to_date(col("ts")), lit("1970-01-01")) % 2).as("slice"))
+      .groupBy("event_type", "value").agg(
+        count(when(col("slice") === 0, 1)).as("da"),
+        count(when(col("slice") === 1, 1)).as("db"))
+
+  /** The running frame over [[sliceValueCounts]] per type in value order.
+    * Spark's default asc = NULLS FIRST but DuckDB's ORDER BY defaults
+    * NULLS LAST; NULLS LAST is pinned on BOTH sides so a null value can
+    * never silently shift the cumulative counts (ADVICE r7). */
+  private[queries] def valueRunning =
+    Window.partitionBy("event_type").orderBy(col("value").asc_nulls_last)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** Node degrees `(node, dg)` of the undirected edge set `e(x, y)`. */
+  private[queries] def edgeDegrees(e: DataFrame): DataFrame =
+    e.select(col("x").as("node")).unionAll(e.select(col("y")))
+      .groupBy("node").agg(count(lit(1)).as("dg"))
+
+  /** Every edge of `e(x, y)` pointed from its lower (degree, id) end as
+    * `(src, dst)` by the degrees `deg`, which bounds out-degree for the
+    * wedge join (g13, g24; oracle twin `OracleSnippets.OrientedEdgeCtes`). */
+  private[queries] def degreeOriented(e: DataFrame, deg: DataFrame): DataFrame = {
+    val withDeg = e
+      .join(deg.toDF("nx", "dx"), col("x") === col("nx"))
+      .join(deg.toDF("ny", "dy"), col("y") === col("ny"))
+    val xFirst = struct(col("dx"), col("x")) < struct(col("dy"), col("y"))
+    withDeg.select(
+      when(xFirst, col("x")).otherwise(col("y")).as("src"),
+      when(xFirst, col("y")).otherwise(col("x")).as("dst")).localCheckpoint()
   }
 
   val queries: Seq[Query] = Seq(
@@ -512,11 +592,7 @@ object Analytics {
     // off exact DECIMAL daily sums, and the continuity-corrected z is
     // one fixed-order double epilogue.
     Query("a57_mann_kendall",
-      """WITH d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         sum(CAST(value AS DECIMAL(18,4))) AS x
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyTypeSumCte(xs => s"$xs AS x")},
         |s AS (
         |  SELECT a.event_type,
         |         sum(CASE WHEN b.x > a.x THEN 1
@@ -543,10 +619,7 @@ object Analytics {
         |                    / 18.0), 6) AS z
         |FROM s JOIN n USING (event_type)
         |       LEFT JOIN ties USING (event_type)""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-        .agg(sum(col("value").cast("decimal(18,4)")).as("x"))
+      val daily = Temporal.dailyTypeSums(s, d)(_.as("x"))
         .localCheckpoint() // pair join (both legs), n, and ties share it
       val pairs = daily.select(col("event_type"), col("day").as("d1"),
           col("x").as("x1"))
@@ -920,24 +993,7 @@ object Analytics {
     // (n·Σx² − (Σx)²)/n² runs on doubles cast from exact sums — one
     // fixed-order expression per measure.
     Query("a59_seasonality_strength",
-      """WITH d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         sum(CAST(value AS DECIMAL(18,4))) AS xd
-        |  FROM events GROUP BY 1, 2),
-        |t AS (
-        |  SELECT event_type, day, CAST(xd AS DOUBLE) AS x,
-        |         CAST(sum(xd) OVER w AS DOUBLE) / (count(*) OVER w) AS trend,
-        |         day % 7 AS dow
-        |  FROM d
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |               RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |t2 AS (SELECT *, x - trend AS det FROM t),
-        |s AS (
-        |  SELECT event_type, dow,
-        |         CAST(sum(CAST(round(det, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |           / count(*) AS seasonal
-        |  FROM t2 GROUP BY 1, 2),
+      s"""WITH ${OracleSnippets.SeasonalCtes},
         |c AS (
         |  -- integer micro-units: exact squares/sums; the 1e12 scale and
         |  -- the n^2 variance denominators both cancel in the F ratios
@@ -965,21 +1021,7 @@ object Analytics {
         |              1.0 - (n * sre2 - sre * sre) / (n * str2 - str * str)), 6)
         |       END AS f_trend
         |FROM v""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-        .agg(sum(col("value").cast("decimal(18,4)")).as("xd"))
-      val w = Window.partitionBy("event_type").orderBy("day").rangeBetween(-3, 3)
-      val t2 = daily
-        .withColumn("x", col("xd").cast("double"))
-        .withColumn("trend",
-          sum("xd").over(w).cast("double") / count(lit(1)).over(w))
-        .withColumn("det", col("x") - col("trend"))
-        .withColumn("dow", col("day") % 7)
-        .localCheckpoint() // seasonal agg + join-back share one window pass
-      val seas = t2.groupBy("event_type", "dow")
-        .agg((sum(round(col("det"), 6).cast("decimal(18,6)")).cast("double")
-          / count(lit(1))).as("seasonal"))
+      val (t2, seas) = Temporal.seasonalParts(s, d)
       def d6(c: org.apache.spark.sql.Column) = {
         val m = (round(c, 6).cast("decimal(18,6)") * 1000000).cast("long")
         // non-ANSI Spark nulls a decimal(38,0) overflow silently where
@@ -1187,14 +1229,7 @@ object Analytics {
     // (type, value) hash aggregate, one type-keyed window (same
     // exchange), broadcast totals join, final agg — per-type state only.
     Query("w24_ks_drift",
-      """WITH b AS (
-        |  SELECT event_type, value,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 2 AS slice
-        |  FROM events),
-        |g AS (SELECT event_type, value,
-        |             count(CASE WHEN slice = 0 THEN 1 END) AS da,
-        |             count(CASE WHEN slice = 1 THEN 1 END) AS db
-        |      FROM b GROUP BY 1, 2),
+      s"""WITH ${OracleSnippets.SliceValueCountCtes},
         |c AS (SELECT event_type, value,
         |             sum(da) OVER (PARTITION BY event_type ORDER BY value NULLS LAST
         |                           ROWS UNBOUNDED PRECEDING) AS ca,
@@ -1209,16 +1244,8 @@ object Analytics {
         |FROM c JOIN t ON c.event_type = t.event_type
         |GROUP BY c.event_type, t.na, t.nb""".stripMargin) {
       (s, d) => {
-        val b = Tables.events(s, d).select(col("event_type"), col("value"),
-          (datediff(to_date(col("ts")), lit("1970-01-01")) % 2).as("slice"))
-        val g = b.groupBy("event_type", "value").agg(
-          count(when(col("slice") === 0, 1)).as("da"),
-          count(when(col("slice") === 1, 1)).as("db"))
-        // Spark's default asc = NULLS FIRST but DuckDB's ORDER BY defaults
-        // NULLS LAST; pin NULLS LAST explicitly on BOTH sides so a null
-        // value can never silently shift the cumulative counts (ADVICE r7)
-        val w = Window.partitionBy("event_type").orderBy(col("value").asc_nulls_last)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val g = sliceValueCounts(s, d)
+        val w = valueRunning
         val c = g.select(col("event_type"), col("value"),
           sum(col("da")).over(w).as("ca"), sum(col("db")).over(w).as("cb"))
         val t = g.groupBy("event_type")
@@ -1802,14 +1829,7 @@ object Analytics {
     // + type-window shape as w24 — the whole drift kit shares one
     // physical pattern.
     Query("a34_mann_whitney",
-      """WITH b AS (
-        |  SELECT event_type, value,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 2 AS slice
-        |  FROM events),
-        |g AS (SELECT event_type, value,
-        |             count(CASE WHEN slice = 0 THEN 1 END) AS da,
-        |             count(CASE WHEN slice = 1 THEN 1 END) AS db
-        |      FROM b GROUP BY 1, 2),
+      s"""WITH ${OracleSnippets.SliceValueCountCtes},
         |c AS (SELECT event_type, da, db, da + db AS t,
         |             sum(da + db) OVER (PARTITION BY event_type ORDER BY value NULLS LAST
         |                                ROWS UNBOUNDED PRECEDING) AS cum
@@ -1828,16 +1848,8 @@ object Analytics {
         |                         / ((na + nb) * (na + nb - 1.0)))), 6) AS z
         |FROM s""".stripMargin) {
       (s, d) => {
-        val b = Tables.events(s, d).select(col("event_type"), col("value"),
-          (datediff(to_date(col("ts")), lit("1970-01-01")) % 2).as("slice"))
-        val g = b.groupBy("event_type", "value").agg(
-          count(when(col("slice") === 0, 1)).as("da"),
-          count(when(col("slice") === 1, 1)).as("db"))
-        // Spark's default asc = NULLS FIRST but DuckDB's ORDER BY defaults
-        // NULLS LAST; pin NULLS LAST explicitly on BOTH sides so a null
-        // value can never silently shift the cumulative counts (ADVICE r7)
-        val w = Window.partitionBy("event_type").orderBy(col("value").asc_nulls_last)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val g = sliceValueCounts(s, d)
+        val w = valueRunning
         val c = g.select(col("event_type"), col("da"), col("db"),
           (col("da") + col("db")).as("t"),
           sum(col("da") + col("db")).over(w).as("cum"))
@@ -2031,14 +2043,7 @@ object Analytics {
 
     Query("g13_triangle_count",
       s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g13")},
-        |deg AS (
-        |  SELECT node, count(*) AS dg FROM (
-        |    SELECT x AS node FROM e UNION ALL SELECT y FROM e)
-        |  GROUP BY 1),
-        |de AS (
-        |  SELECT CASE WHEN (dx.dg, e.x) < (dy.dg, e.y) THEN e.x ELSE e.y END AS src,
-        |         CASE WHEN (dx.dg, e.x) < (dy.dg, e.y) THEN e.y ELSE e.x END AS dst
-        |  FROM e JOIN deg dx ON e.x = dx.node JOIN deg dy ON e.y = dy.node),
+        |${OracleSnippets.OrientedEdgeCtes},
         |wedge AS (
         |  SELECT a.dst AS v, b.dst AS w
         |  FROM de a JOIN de b ON a.src = b.src AND a.dst < b.dst)
@@ -2051,15 +2056,8 @@ object Analytics {
         // every reference re-executes the whole distinct-pair join —
         // the plan balloons to 47 exchanges without these two cuts
         val e = coSupplierEdges(s, d, "g13").localCheckpoint()
-        val deg = e.select(col("x").as("node")).unionAll(e.select(col("y")))
-          .groupBy("node").agg(count(lit(1)).as("dg"))
-        val withDeg = e
-          .join(deg.toDF("nx", "dx"), col("x") === col("nx"))
-          .join(deg.toDF("ny", "dy"), col("y") === col("ny"))
-        val xFirst = struct(col("dx"), col("x")) < struct(col("dy"), col("y"))
-        val de = withDeg.select(
-          when(xFirst, col("x")).otherwise(col("y")).as("src"),
-          when(xFirst, col("y")).otherwise(col("x")).as("dst")).localCheckpoint()
+        val deg = edgeDegrees(e)
+        val de = degreeOriented(e, deg)
         val wedge = de.toDF("s1", "v")
           .join(de.toDF("s2", "w"), col("s1") === col("s2") && col("v") < col("w"))
           .select("v", "w")
@@ -2153,11 +2151,7 @@ object Analytics {
     // single fixed-order ops on exact inputs (decimal-sum x, integer
     // day gaps).
     Query("w33_theil_sen",
-      """WITH d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS x
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyTypeSumCte(xs => s"CAST($xs AS DOUBLE) AS x")},
         |p AS (
         |  SELECT a.event_type, (b.x - a.x) / (b.day - a.day) AS sl
         |  FROM d a JOIN d b
@@ -2172,10 +2166,7 @@ object Analytics {
         |FROM r WHERE rn = (m + 1) // 2 OR rn = (m + 2) // 2
         |GROUP BY 1""".stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(sum(col("value").cast("decimal(18,4)")).cast("double").as("x"))
+        val daily = Temporal.dailyTypeSums(s, d)(_.cast("double").as("x"))
           .localCheckpoint() // both self-join legs read this one agg
         val pairs = daily.toDF("et", "di", "xi")
           .join(daily.toDF("et2", "dj", "xj"),
@@ -2442,11 +2433,7 @@ object Analytics {
     // inputs. Two window passes + two tiny joins (per-key scalars
     // broadcast back).
     Query("w35_mad_outliers",
-      """WITH d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS x
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyTypeSumCte(xs => s"CAST($xs AS DOUBLE) AS x")},
         |r AS (SELECT event_type, day, x,
         |             row_number() OVER (PARTITION BY event_type ORDER BY x, day) AS rn,
         |             count(*) OVER (PARTITION BY event_type) AS m
@@ -2465,10 +2452,7 @@ object Analytics {
         |       dev.ad > 3 * 1.4826 * mad.mad AS outlier
         |FROM dev JOIN mad ON dev.event_type = mad.event_type""".stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(sum(col("value").cast("decimal(18,4)")).cast("double").as("x"))
+        val daily = Temporal.dailyTypeSums(s, d)(_.cast("double").as("x"))
           .localCheckpoint() // ranks, deviations, and output share one agg
         def medianOf(df: org.apache.spark.sql.DataFrame, valCol: String,
                      tie: String, out: String) = {
@@ -2553,11 +2537,7 @@ object Analytics {
     // quantizer (products are doubles — an unordered double sum would
     // be partition-dependent; micro-units sum exactly as BIGINT).
     Query("a43_acf",
-      """WITH d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS x
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyTypeSumCte(xs => s"CAST($xs AS DOUBLE) AS x")},
         |m AS (SELECT event_type,
         |             CAST(sum(CAST(x AS DECIMAL(18,4))) AS DOUBLE) / count(*) AS mu
         |      FROM d GROUP BY 1),
@@ -2582,10 +2562,7 @@ object Analytics {
         |SELECT event_type, 3, CAST(sum(n3) AS DOUBLE) / CAST(sum(den) AS DOUBLE)
         |FROM q GROUP BY 1""".stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(sum(col("value").cast("decimal(18,4)")).cast("double").as("x"))
+        val daily = Temporal.dailyTypeSums(s, d)(_.cast("double").as("x"))
           .localCheckpoint() // mean + lead window both read the one scan
         val mu = daily.groupBy("event_type")
           .agg((sum(col("x").cast("decimal(18,4)")).cast("double")
@@ -2657,19 +2634,12 @@ object Analytics {
     // arithmetic in pinned order, data volume only touches the one
     // moments aggregate.
     Query("a41_cohens_d",
-      """WITH x AS (
-        |  SELECT c_mktsegment AS seg,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS xc
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |g AS (
-        |  SELECT seg, count(*) AS n,
-        |         CAST(sum(xc) AS DECIMAL(38,0)) AS s1,
-        |         sum(CAST(xc * xc AS DECIMAL(38,0))) AS s2
-        |  FROM x GROUP BY 1),
+      s"""WITH $SegCentsCte,
+        |${segMomentCte("x", "xc")},
         |v AS (
-        |  SELECT seg, n, CAST(s1 AS DOUBLE) / n AS m,
+        |  SELECT seg, ng AS n, CAST(s1 AS DOUBLE) / ng AS m,
         |         (CAST(s2 AS DOUBLE)
-        |          - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n) / (n - 1) AS var
+        |          - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / ng) / (ng - 1) AS var
         |  FROM g)
         |SELECT a.seg AS seg_a, b.seg AS seg_b,
         |       CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
@@ -2678,14 +2648,7 @@ object Analytics {
         |                / (a.n + b.n - 2)) AS cohens_d
         |FROM v a JOIN v b ON a.seg < b.seg""".stripMargin) {
       (s, d) => {
-        val x = Tables.orders(s, d)
-          .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment").as("seg"),
-            round(col("o_totalprice") * 100).cast("long").as("xc"))
-        val g = x.groupBy("seg")
-          .agg(count(lit(1)).as("n"),
-            sum("xc").cast("decimal(38,0)").as("s1"),
-            sum((col("xc") * col("xc")).cast("decimal(38,0)")).as("s2"))
+        val g = segMoments(segCents(s, d), "xc", n = "n")
         val v = g.select(col("seg"), col("n"),
           (col("s1").cast("double") / col("n")).as("m"),
           ((col("s2").cast("double")
@@ -2714,58 +2677,14 @@ object Analytics {
     // dependent). Group moments are the only thing the data volume
     // touches; everything after is 5-row arithmetic.
     Query("a40_anova",
-      s"""WITH x AS (
-        |  SELECT c_mktsegment AS seg,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS xc
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |g AS (
-        |  SELECT seg, count(*) AS ng,
-        |         CAST(sum(xc) AS DECIMAL(38,0)) AS s1,
-        |         sum(CAST(xc * xc AS DECIMAL(38,0))) AS s2
-        |  FROM x GROUP BY 1),
-        |t AS (SELECT count(*) AS k, CAST(sum(ng) AS BIGINT) AS n, sum(s1) AS gs1
-        |      FROM g),
-        |terms AS (
-        |  SELECT seg,
-        |         CAST(ng AS DOUBLE)
-        |           * (CAST(s1 AS DOUBLE) / ng - CAST(gs1 AS DOUBLE) / n)
-        |           * (CAST(s1 AS DOUBLE) / ng - CAST(gs1 AS DOUBLE) / n) AS ssb_t,
-        |         CAST(s2 AS DOUBLE)
-        |           - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / ng AS ssw_t
-        |  FROM g, t),
-        |a AS (SELECT
-        |        ${OracleSnippets.sumFold("list(ssb_t ORDER BY seg)")} AS ssb,
-        |        ${OracleSnippets.sumFold("list(ssw_t ORDER BY seg)")} AS ssw
-        |      FROM terms)
+      s"""WITH $SegCentsCte,
+        |${segMomentCte("x", "xc")},
+        |$AnovaSumCtes
         |SELECT CAST(k AS BIGINT) AS k, n, ssb, ssw,
         |       (ssb / (k - 1)) / (ssw / (n - k)) AS f_stat
         |FROM a, t""".stripMargin) {
       (s, d) => {
-        val x = Tables.orders(s, d)
-          .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment").as("seg"),
-            round(col("o_totalprice") * 100).cast("long").as("xc"))
-        val g = x.groupBy("seg")
-          .agg(count(lit(1)).as("ng"),
-            sum("xc").cast("decimal(38,0)").as("s1"),
-            sum((col("xc") * col("xc")).cast("decimal(38,0)")).as("s2"))
-        val t = g.agg(count(lit(1)).as("k"), sum("ng").cast("long").as("n"),
-          sum("s1").as("gs1"))
-        val diff = col("s1").cast("double") / col("ng") -
-          col("gs1").cast("double") / col("n")
-        val terms = g.crossJoin(broadcast(t)).select(col("seg"),
-          (col("ng").cast("double") * diff * diff).as("ssb_t"),
-          (col("s2").cast("double")
-            - col("s1").cast("double") * col("s1").cast("double") / col("ng"))
-            .as("ssw_t"))
-        // the 5 per-group terms fold in seg order (exact-order float fold:
-        // an unordered SUM over doubles would be partition-order-dependent)
-        def orderedFold(term: String) = aggregate(
-          transform(sort_array(collect_list(struct(col("seg"), col(term)))),
-            e => e.getField(term)),
-          lit(0.0), (acc, v) => acc + v)
-        val a = terms.agg(orderedFold("ssb_t").as("ssb"),
-          orderedFold("ssw_t").as("ssw"))
+        val (a, t) = anovaSums(segMoments(segCents(s, d), "xc", n = "ng"))
         a.crossJoin(broadcast(t)).select(
           col("k").cast("long").as("k"), col("n"), col("ssb"), col("ssw"),
           ((col("ssb") / (col("k") - 1)) / (col("ssw") / (col("n") - col("k"))))
@@ -2836,14 +2755,7 @@ object Analytics {
     // join + coalesce); deg < 2 nodes have no defined coefficient.
     Query("g24_clustering_coeff",
       s"""WITH ${OracleSnippets.coSupplierEdgeCtes("g24")},
-        |deg AS (
-        |  SELECT node, count(*) AS dg FROM (
-        |    SELECT x AS node FROM e UNION ALL SELECT y FROM e)
-        |  GROUP BY 1),
-        |de AS (
-        |  SELECT CASE WHEN (dx.dg, e.x) < (dy.dg, e.y) THEN e.x ELSE e.y END AS src,
-        |         CASE WHEN (dx.dg, e.x) < (dy.dg, e.y) THEN e.y ELSE e.x END AS dst
-        |  FROM e JOIN deg dx ON e.x = dx.node JOIN deg dy ON e.y = dy.node),
+        |${OracleSnippets.OrientedEdgeCtes},
         |wedge AS (
         |  SELECT a.src AS u, a.dst AS v, b.dst AS w
         |  FROM de a JOIN de b ON a.src = b.src AND a.dst < b.dst),
@@ -2865,16 +2777,9 @@ object Analytics {
         |WHERE dg >= 2""".stripMargin) {
       (s, d) => {
         val e = coSupplierEdges(s, d, "g24").localCheckpoint() // 3 references (edges + both degree legs)
-        val deg = e.select(col("x").as("node")).unionAll(e.select(col("y")))
-          .groupBy("node").agg(count(lit(1)).as("dg"))
+        val deg = edgeDegrees(e)
           .localCheckpoint() // orientation + final report both read it
-        val withDeg = e
-          .join(deg.toDF("nx", "dx"), col("x") === col("nx"))
-          .join(deg.toDF("ny", "dy"), col("y") === col("ny"))
-        val xFirst = struct(col("dx"), col("x")) < struct(col("dy"), col("y"))
-        val de = withDeg.select(
-          when(xFirst, col("x")).otherwise(col("y")).as("src"),
-          when(xFirst, col("y")).otherwise(col("x")).as("dst")).localCheckpoint()
+        val de = degreeOriented(e, deg)
         val wedge = de.toDF("u", "v")
           .join(de.toDF("s2", "w"), col("u") === col("s2") && col("v") < col("w"))
           .select("u", "v", "w")
@@ -2928,8 +2833,7 @@ object Analytics {
         |WHERE m * sj2 - sj * sj <> 0""".stripMargin) {
       (s, d) => {
         val e = coSupplierEdges(s, d, "g25").localCheckpoint()
-        val deg = e.select(col("x").as("node")).unionAll(e.select(col("y")))
-          .groupBy("node").agg(count(lit(1)).as("dg"))
+        val deg = edgeDegrees(e)
         val withDeg = e
           .join(deg.toDF("nx", "dx"), col("x") === col("nx"))
           .join(deg.toDF("ny", "dy"), col("y") === col("ny"))
@@ -3094,10 +2998,7 @@ object Analytics {
     // the same exact decimal sums as a40 and the per-group terms fold in
     // seg order. One rank window + one broadcast join + one moment agg.
     Query("a46_brown_forsythe",
-      s"""WITH x AS (
-        |  SELECT c_mktsegment AS seg, o_orderkey AS okey,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS xc
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
+      s"""WITH $SegCentsCte,
         |r AS (SELECT seg, xc,
         |             row_number() OVER (PARTITION BY seg ORDER BY xc, okey) AS rn,
         |             count(*) OVER (PARTITION BY seg) AS m
@@ -3107,32 +3008,13 @@ object Analytics {
         |        GROUP BY 1),
         |z AS (SELECT x.seg, abs(2 * xc - med2) AS z2
         |      FROM x JOIN med ON x.seg = med.seg),
-        |g AS (SELECT seg, count(*) AS ng,
-        |             CAST(sum(z2) AS DECIMAL(38,0)) AS s1,
-        |             sum(CAST(z2 * z2 AS DECIMAL(38,0))) AS s2
-        |      FROM z GROUP BY 1),
-        |t AS (SELECT count(*) AS k, CAST(sum(ng) AS BIGINT) AS n, sum(s1) AS gs1
-        |      FROM g),
-        |terms AS (
-        |  SELECT seg,
-        |         CAST(ng AS DOUBLE)
-        |           * (CAST(s1 AS DOUBLE) / ng - CAST(gs1 AS DOUBLE) / n)
-        |           * (CAST(s1 AS DOUBLE) / ng - CAST(gs1 AS DOUBLE) / n) AS ssb_t,
-        |         CAST(s2 AS DOUBLE)
-        |           - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / ng AS ssw_t
-        |  FROM g, t),
-        |a AS (SELECT
-        |        ${OracleSnippets.sumFold("list(ssb_t ORDER BY seg)")} AS ssb,
-        |        ${OracleSnippets.sumFold("list(ssw_t ORDER BY seg)")} AS ssw
-        |      FROM terms)
+        |${segMomentCte("z", "z2")},
+        |$AnovaSumCtes
         |SELECT CAST(k AS BIGINT) AS k, n,
         |       (ssb / (k - 1)) / (ssw / (n - k)) AS f_bf
         |FROM a, t""".stripMargin) {
       (s, d) => {
-        val x = Tables.orders(s, d)
-          .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment").as("seg"), col("o_orderkey").as("okey"),
-            round(col("o_totalprice") * 100).cast("long").as("xc"))
+        val x = segCents(s, d, col("o_orderkey").as("okey"))
           .localCheckpoint() // rank pass + deviation join share one scan
         val wr = Window.partitionBy("seg").orderBy("xc", "okey")
         val r = x.withColumn("rn", row_number().over(wr))
@@ -3142,25 +3024,7 @@ object Analytics {
           .groupBy("seg").agg(expr("(sum(xc) * 2) div count(*)").as("med2"))
         val z = x.join(broadcast(med), "seg")
           .select(col("seg"), abs(lit(2) * col("xc") - col("med2")).as("z2"))
-        val g = z.groupBy("seg")
-          .agg(count(lit(1)).as("ng"),
-            sum("z2").cast("decimal(38,0)").as("s1"),
-            sum((col("z2") * col("z2")).cast("decimal(38,0)")).as("s2"))
-        val t = g.agg(count(lit(1)).as("k"), sum("ng").cast("long").as("n"),
-          sum("s1").as("gs1"))
-        val diff = col("s1").cast("double") / col("ng") -
-          col("gs1").cast("double") / col("n")
-        val terms = g.crossJoin(broadcast(t)).select(col("seg"),
-          (col("ng").cast("double") * diff * diff).as("ssb_t"),
-          (col("s2").cast("double")
-            - col("s1").cast("double") * col("s1").cast("double") / col("ng"))
-            .as("ssw_t"))
-        def orderedFold(term: String) = aggregate(
-          transform(sort_array(collect_list(struct(col("seg"), col(term)))),
-            e => e.getField(term)),
-          lit(0.0), (acc, v) => acc + v)
-        val a = terms.agg(orderedFold("ssb_t").as("ssb"),
-          orderedFold("ssw_t").as("ssw"))
+        val (a, t) = anovaSums(segMoments(z, "z2", n = "ng"))
         a.crossJoin(broadcast(t)).select(
           col("k").cast("long").as("k"), col("n"),
           ((col("ssb") / (col("k") - 1)) / (col("ssw") / (col("n") - col("k"))))
@@ -3335,12 +3199,7 @@ object Analytics {
     // tiebroken by day. One window pass over day-cardinality rows; the
     // data-sized work is the daily aggregate.
     Query("w45_changepoint",
-      """WITH d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         CAST(floor(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
-        |                    * 1000000.0 + 0.5) AS BIGINT) AS q
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $DailyTypeMicros,
         |c AS (
         |  SELECT event_type, day,
         |         sum(q) OVER w AS sl,
@@ -3360,11 +3219,7 @@ object Analytics {
         |                                   ORDER BY gain DESC, day) AS rn
         |      FROM g) t WHERE rn = 1""".stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(floor(sum(col("value").cast("decimal(18,4)")).cast("double")
-            * lit(1000000.0) + lit(0.5)).cast("long").as("q"))
+        val daily = Temporal.dailyTypeSums(s, d)(micros(_).as("q"))
         val w = Window.partitionBy("event_type").orderBy("day")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wp = Window.partitionBy("event_type")
@@ -3488,12 +3343,7 @@ object Analytics {
     },
 
     Query("a50_runs_test",
-      """WITH d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         CAST(floor(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
-        |                    * 1000000.0 + 0.5) AS BIGINT) AS q
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $DailyTypeMicros,
         |r AS (SELECT event_type, day, q,
         |             row_number() OVER (PARTITION BY event_type ORDER BY q, day) AS rn,
         |             count(*) OVER (PARTITION BY event_type) AS m
@@ -3521,11 +3371,7 @@ object Analytics {
         |       (r - mu) / sqrt((mu - 1.0) * (mu - 2.0) / (n1 + n2 - 1.0)) AS z
         |FROM z""".stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(floor(sum(col("value").cast("decimal(18,4)")).cast("double")
-            * lit(1000000.0) + lit(0.5)).cast("long").as("q"))
+        val daily = Temporal.dailyTypeSums(s, d)(micros(_).as("q"))
           .localCheckpoint() // median ranks + the sign pass share it
         val wr = Window.partitionBy("event_type").orderBy("q", "day")
         val r = daily.withColumn("rn", row_number().over(wr))
@@ -3561,12 +3407,7 @@ object Analytics {
     // boundary anywhere. One window pass yields neighbors, the trailing
     // sum, and its count (full-window rows only).
     Query("w43_peak_detection",
-      """WITH d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         CAST(floor(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
-        |                    * 1000000.0 + 0.5) AS BIGINT) AS q
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $DailyTypeMicros,
         |l AS (SELECT event_type, day, q,
         |             lag(q, 1) OVER w AS prev, lead(q, 1) OVER w AS nxt,
         |             sum(q) OVER (PARTITION BY event_type ORDER BY day
@@ -3580,11 +3421,7 @@ object Analytics {
         |WHERE prev IS NOT NULL AND nxt IS NOT NULL AND c7 = 7
         |  AND q > prev AND q > nxt AND 35 * q > 6 * s7""".stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(floor(sum(col("value").cast("decimal(18,4)")).cast("double")
-            * lit(1000000.0) + lit(0.5)).cast("long").as("q"))
+        val daily = Temporal.dailyTypeSums(s, d)(micros(_).as("q"))
         val w = Window.partitionBy("event_type").orderBy("day")
         val wt = Window.partitionBy("event_type").orderBy("day")
           .rowsBetween(-7, -1)
@@ -3634,11 +3471,7 @@ object Analytics {
         |       macd - sig AS divergence
         |FROM scan""".stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(floor(sum(col("value").cast("decimal(18,4)")).cast("double")
-            * lit(1000000.0) + lit(0.5)).cast("long").cast("double").as("x"))
+        val daily = Temporal.dailyTypeSums(s, d)(micros(_).cast("double").as("x"))
         graft.operators.Sessionize.macd(daily, "event_type", "day", "x",
             aFast = 0.5, aSlow = 0.125, aSig = 0.25)
           .select(col("event_type"), col("day").cast("long").as("day"),
@@ -3771,12 +3604,7 @@ object Analytics {
     // columns come out of ONE window pass; edges (any missing neighbor)
     // emit nothing rather than a biased partial kernel.
     Query("w41_savitzky_golay",
-      """WITH d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         CAST(floor(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
-        |                    * 1000000.0 + 0.5) AS BIGINT) AS q
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $DailyTypeMicros,
         |l AS (SELECT event_type, day, q,
         |             lag(q, 3) OVER w AS l3, lag(q, 2) OVER w AS l2,
         |             lag(q, 1) OVER w AS l1, lead(q, 1) OVER w AS r1,
@@ -3789,11 +3617,7 @@ object Analytics {
         |FROM l
         |WHERE l3 IS NOT NULL AND r3 IS NOT NULL""".stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(floor(sum(col("value").cast("decimal(18,4)")).cast("double")
-            * lit(1000000.0) + lit(0.5)).cast("long").as("q"))
+        val daily = Temporal.dailyTypeSums(s, d)(micros(_).as("q"))
         val w = Window.partitionBy("event_type").orderBy("day")
         val l = daily.select(col("event_type"), col("day"), col("q"),
           lag("q", 3).over(w).as("l3"), lag("q", 2).over(w).as("l2"),

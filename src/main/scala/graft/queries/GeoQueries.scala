@@ -1,9 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Query, Tables}
 import graft.functions.Geo
+import OracleSnippets.{diamondEdgeDist, diamondInside, diamondPoints, gridKmCtes}
 
 /** Geospatial operators (SURVEY.md §2.8) over synthetic point/polygon
   * geometry derived from the testdata.
@@ -31,6 +33,40 @@ object GeoQueries {
         Array(cx, cx + 1, cx, cx - 1), Array(cy - 1, cy, cy + 1, cy))
     })
 
+  /** Customer c as the point ((c % 100)/10, ((c/100) % 100)/10) beside
+    * `key` (j09, w04, g04; oracle twin `OracleSnippets.diamondPoints`). */
+  private[queries] def custPoints(s: SparkSession, d: String, key: Column): DataFrame =
+    Tables.customer(s, d)
+      .select(key,
+        ((col("c_custkey") % 100) / 10.0).as("x"),
+        (((col("c_custkey") / 100) % 100) / 10.0).as("y"))
+
+  /** j24's grid join, shared by j25: customers as integer micro-unit
+    * points in 3000 u cells, joined on (cx, cy) to every point's 3x3
+    * cell replicas (`rid`, `rux`, `ruy`), kept where `pair` holds and
+    * the haversine `km` is at most 3. The oracle twin is
+    * `OracleSnippets.gridKmCtes`. */
+  private[queries] def gridPairs(s: SparkSession, d: String, pair: Column): DataFrame = {
+    val base = Tables.customer(s, d).select(col("c_custkey").as("id"),
+      (lit(3400000L) + (col("c_custkey") % 40) * 2000L).as("ux"),
+      (lit(-400000L) + ((col("c_custkey").cast("long") / 40).cast("long") % 40)
+        * 2000L).as("uy"))
+      .select(col("id"), col("ux"), col("uy"),
+        floor(col("ux") / 3000.0).cast("long").as("cx"),
+        floor(col("uy") / 3000.0).cast("long").as("cy"))
+    val r = base.select(col("id").as("rid"), col("ux").as("rux"),
+        col("uy").as("ruy"),
+        explode(array(col("cx") - 1, col("cx"), col("cx") + 1)).as("cx"),
+        col("cy"))
+      .select(col("rid"), col("rux"), col("ruy"), col("cx"),
+        explode(array(col("cy") - 1, col("cy"), col("cy") + 1)).as("cy"))
+    val km = Geo.haversineKm(
+      col("ux") / 100000.0, col("uy") / 100000.0,
+      col("rux") / 100000.0, col("ruy") / 100000.0)
+    base.join(r, Seq("cx", "cy")).filter(pair)
+      .withColumn("km", km).filter(col("km") <= 3.0)
+  }
+
   val queries: Seq[Query] = Seq(
 
     // ---- J9: point-in-polygon cluster assignment ---------------------------
@@ -41,41 +77,9 @@ object GeoQueries {
     // fallback (min distance, larger id wins exact ties = the loop's
     // d <= best update rule) — all IEEE ops, bit-identical cross-engine.
     Query("j09_point_in_polygon",
-      """WITH pts AS (
-        |  SELECT c_custkey,
-        |         CAST(c_custkey % 100 AS DOUBLE)/10.0 AS x,
-        |         fmod(CAST(c_custkey AS DOUBLE)/100.0, 100.0)/10.0 AS y
-        |  FROM customer),
-        |dia AS (
-        |  SELECT CAST(a.range*5 + b.range AS INT) AS id,
-        |         CAST(a.range*2 + 1 AS DOUBLE) AS cx, CAST(b.range*2 + 1 AS DOUBLE) AS cy
-        |  FROM range(5) a, range(5) b),
-        |edges AS (
-        |  SELECT * FROM (VALUES
-        |    (0.0,-1.0,-1.0,0.0),
-        |    (1.0,0.0,0.0,-1.0),
-        |    (0.0,1.0,1.0,0.0),
-        |    (-1.0,0.0,0.0,1.0)) e(ix, iy, jx, jy)),
-        |inside AS (
-        |  SELECT c_custkey, min(id) AS mid FROM (
-        |    SELECT p.c_custkey, d.id
-        |    FROM pts p, dia d, edges e
-        |    WHERE ((d.cy + e.iy > p.y) != (d.cy + e.jy > p.y))
-        |      AND p.x < (e.jx - e.ix) * (p.y - (d.cy + e.iy)) / (e.jy - e.iy) + (d.cx + e.ix)
-        |    GROUP BY 1, 2
-        |    HAVING count(*) % 2 = 1)
-        |  GROUP BY 1),
-        |dist AS (
-        |  SELECT c_custkey, id, min(sqrt((x-px)*(x-px) + (y-py)*(y-py))) AS ed FROM (
-        |    SELECT p.c_custkey, d.id, p.x, p.y,
-        |           d.cx + s.x1 + t*(s.x2 - s.x1) AS px,
-        |           d.cy + s.y1 + t*(s.y2 - s.y1) AS py
-        |    FROM pts p, dia d,
-        |         (VALUES (-1.0,0.0,0.0,-1.0),(0.0,-1.0,1.0,0.0),
-        |                 (1.0,0.0,0.0,1.0),(0.0,1.0,-1.0,0.0)) s(x1,y1,x2,y2),
-        |         LATERAL (SELECT greatest(0.0, least(1.0,
-        |             ((p.x-(d.cx+s.x1))*(s.x2-s.x1) + (p.y-(d.cy+s.y1))*(s.y2-s.y1))/2.0)) AS t) tt)
-        |  GROUP BY 1, 2),
+      s"""WITH ${diamondPoints("pts", "c_custkey")},
+        |${diamondInside("pts", "c_custkey", "mid")},
+        |${diamondEdgeDist("pts", "c_custkey")},
         |fb AS (
         |  SELECT c_custkey, id FROM (
         |    SELECT c_custkey, id, row_number() OVER (PARTITION BY c_custkey ORDER BY ed ASC, id DESC) AS rn
@@ -86,10 +90,7 @@ object GeoQueries {
         |  FROM pts p LEFT JOIN inside i USING (c_custkey) LEFT JOIN fb f USING (c_custkey))
         |SELECT geo_cluster, count(*) AS n FROM assign GROUP BY 1""".stripMargin) { (s, d) =>
       val assign = Geo.clusterAssigner(s, diamonds, bufferDeg = 0.05)
-      Tables.customer(s, d)
-        .select(col("c_custkey"),
-          ((col("c_custkey") % 100) / 10.0).as("x"),
-          (((col("c_custkey") / 100) % 100) / 10.0).as("y"))
+      custPoints(s, d, col("c_custkey"))
         .withColumn("geo_cluster", assign(col("x"), col("y")))
         .groupBy("geo_cluster").agg(count(lit(1)).as("n"))
     },
@@ -102,38 +103,9 @@ object GeoQueries {
     // crossing test, clamped point-to-segment distance), ranked on the
     // 9-dp-rounded distance with the custkey tiebreak.
     Query("w04_spatial_priority",
-      """WITH pts AS (
-        |  SELECT c_custkey,
-        |         CAST(c_custkey % 100 AS DOUBLE)/10.0 AS x,
-        |         fmod(CAST(c_custkey AS DOUBLE)/100.0, 100.0)/10.0 AS y
-        |  FROM customer),
-        |dia AS (
-        |  SELECT CAST(a.range*5 + b.range AS INT) AS id,
-        |         CAST(a.range*2 + 1 AS DOUBLE) AS cx, CAST(b.range*2 + 1 AS DOUBLE) AS cy
-        |  FROM range(5) a, range(5) b),
-        |edges AS (
-        |  SELECT * FROM (VALUES
-        |    (0.0,-1.0,-1.0,0.0),(1.0,0.0,0.0,-1.0),(0.0,1.0,1.0,0.0),(-1.0,0.0,0.0,1.0)) e(ix, iy, jx, jy)),
-        |inside AS (
-        |  SELECT c_custkey, min(id) AS mid FROM (
-        |    SELECT p.c_custkey, d.id
-        |    FROM pts p, dia d, edges e
-        |    WHERE ((d.cy + e.iy > p.y) != (d.cy + e.jy > p.y))
-        |      AND p.x < (e.jx - e.ix) * (p.y - (d.cy + e.iy)) / (e.jy - e.iy) + (d.cx + e.ix)
-        |    GROUP BY 1, 2
-        |    HAVING count(*) % 2 = 1)
-        |  GROUP BY 1),
-        |dist AS (
-        |  SELECT c_custkey, id, min(sqrt((x-px)*(x-px) + (y-py)*(y-py))) AS ed FROM (
-        |    SELECT p.c_custkey, d.id, p.x, p.y,
-        |           d.cx + s.x1 + t*(s.x2 - s.x1) AS px,
-        |           d.cy + s.y1 + t*(s.y2 - s.y1) AS py
-        |    FROM pts p, dia d,
-        |         (VALUES (-1.0,0.0,0.0,-1.0),(0.0,-1.0,1.0,0.0),
-        |                 (1.0,0.0,0.0,1.0),(0.0,1.0,-1.0,0.0)) s(x1,y1,x2,y2),
-        |         LATERAL (SELECT greatest(0.0, least(1.0,
-        |             ((p.x-(d.cx+s.x1))*(s.x2-s.x1) + (p.y-(d.cy+s.y1))*(s.y2-s.y1))/2.0)) AS t) tt)
-        |  GROUP BY 1, 2)
+      s"""WITH ${diamondPoints("pts", "c_custkey")},
+        |${diamondInside("pts", "c_custkey", "mid")},
+        |${diamondEdgeDist("pts", "c_custkey")}
         |SELECT geo_cluster, priority, c_custkey, edge_dist FROM (
         |  SELECT i.mid AS geo_cluster, p.c_custkey,
         |         round(dd.ed, 9) AS edge_dist,
@@ -145,10 +117,7 @@ object GeoQueries {
       val edge = Geo.edgeDistanceUdf(s, diamonds)
       val w = Window.partitionBy("geo_cluster")
         .orderBy(col("edge_dist").desc, col("c_custkey"))
-      Tables.customer(s, d)
-        .select(col("c_custkey"),
-          ((col("c_custkey") % 100) / 10.0).as("x"),
-          (((col("c_custkey") / 100) % 100) / 10.0).as("y"))
+      custPoints(s, d, col("c_custkey"))
         .withColumn("geo_cluster", assign(col("x"), col("y")))
         .filter(col("geo_cluster").isNotNull)
         .withColumn("edge_dist", round(edge(col("geo_cluster"), col("x"), col("y")), 9))
@@ -277,54 +246,15 @@ object GeoQueries {
     // (every point is a query), so no id< dedup; ordering is raw-double
     // km (identical IEEE haversine both engines) with rid tiebreak.
     Query("j25_knn_join",
-      """WITH p AS (
-        |  SELECT c_custkey AS id,
-        |         3400000 + (c_custkey % 40) * 2000 AS ux,
-        |         -400000 + ((c_custkey // 40) % 40) * 2000 AS uy
-        |  FROM customer),
-        |c AS (
-        |  SELECT id, ux, uy,
-        |         CAST(floor(ux / 3000.0) AS BIGINT) AS cx,
-        |         CAST(floor(uy / 3000.0) AS BIGINT) AS cy
-        |  FROM p),
-        |r AS (
-        |  SELECT id, ux, uy, cx + dx.d AS cx, cy + dy.d AS cy
-        |  FROM c, (SELECT unnest([-1, 0, 1]) AS d) dx,
-        |          (SELECT unnest([-1, 0, 1]) AS d) dy),
-        |j AS (
-        |  SELECT l.id, r.id AS rid,
-        |         pow(sin(radians(r.uy / 100000.0 - l.uy / 100000.0) / 2), 2)
-        |           + cos(radians(l.uy / 100000.0)) * cos(radians(r.uy / 100000.0))
-        |             * pow(sin(radians(r.ux / 100000.0 - l.ux / 100000.0) / 2), 2) AS a
-        |  FROM c l JOIN r ON l.cx = r.cx AND l.cy = r.cy AND l.id <> r.id),
-        |k AS (
-        |  SELECT id, rid, 2 * 6371.0088 * atan2(sqrt(a), sqrt(1 - a)) AS km
-        |  FROM j)
+      s"""WITH ${gridKmCtes("id", "rid", "<>")}
         |SELECT id, CAST(rank AS INT) AS rank, rid, round(km, 6) AS km FROM (
         |  SELECT id, rid, km,
         |         row_number() OVER (PARTITION BY id ORDER BY km, rid) AS rank
         |  FROM k WHERE km <= 3.0) t
         |WHERE rank <= 3""".stripMargin) {
       (s, d) => {
-        val base = Tables.customer(s, d).select(col("c_custkey").as("id"),
-          (lit(3400000L) + (col("c_custkey") % 40) * 2000L).as("ux"),
-          (lit(-400000L) + ((col("c_custkey").cast("long") / 40).cast("long") % 40)
-            * 2000L).as("uy"))
-          .select(col("id"), col("ux"), col("uy"),
-            floor(col("ux") / 3000.0).cast("long").as("cx"),
-            floor(col("uy") / 3000.0).cast("long").as("cy"))
-        val r = base.select(col("id").as("rid"), col("ux").as("rux"),
-            col("uy").as("ruy"),
-            explode(array(col("cx") - 1, col("cx"), col("cx") + 1)).as("cx"),
-            col("cy"))
-          .select(col("rid"), col("rux"), col("ruy"), col("cx"),
-            explode(array(col("cy") - 1, col("cy"), col("cy") + 1)).as("cy"))
-        val km = Geo.haversineKm(
-          col("ux") / 100000.0, col("uy") / 100000.0,
-          col("rux") / 100000.0, col("ruy") / 100000.0)
         val w = Window.partitionBy("id").orderBy(col("km"), col("rid"))
-        base.join(r, Seq("cx", "cy")).filter(col("id") =!= col("rid"))
-          .withColumn("km", km).filter(col("km") <= 3.0)
+        gridPairs(s, d, col("id") =!= col("rid"))
           .withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
           .select(col("id"), col("rank"), col("rid"),
             round(col("km"), 6).as("km"))
@@ -332,50 +262,10 @@ object GeoQueries {
     },
 
     Query("j24_grid_proximity",
-      """WITH p AS (
-        |  SELECT c_custkey AS id,
-        |         3400000 + (c_custkey % 40) * 2000 AS ux,
-        |         -400000 + ((c_custkey // 40) % 40) * 2000 AS uy
-        |  FROM customer),
-        |c AS (
-        |  SELECT id, ux, uy,
-        |         CAST(floor(ux / 3000.0) AS BIGINT) AS cx,
-        |         CAST(floor(uy / 3000.0) AS BIGINT) AS cy
-        |  FROM p),
-        |r AS (
-        |  SELECT id, ux, uy, cx + dx.d AS cx, cy + dy.d AS cy
-        |  FROM c, (SELECT unnest([-1, 0, 1]) AS d) dx,
-        |          (SELECT unnest([-1, 0, 1]) AS d) dy),
-        |j AS (
-        |  SELECT l.id AS ca, r.id AS cb,
-        |         pow(sin(radians(r.uy / 100000.0 - l.uy / 100000.0) / 2), 2)
-        |           + cos(radians(l.uy / 100000.0)) * cos(radians(r.uy / 100000.0))
-        |             * pow(sin(radians(r.ux / 100000.0 - l.ux / 100000.0) / 2), 2) AS a
-        |  FROM c l JOIN r ON l.cx = r.cx AND l.cy = r.cy AND l.id < r.id),
-        |k AS (
-        |  SELECT ca, cb, 2 * 6371.0088 * atan2(sqrt(a), sqrt(1 - a)) AS km
-        |  FROM j)
+      s"""WITH ${gridKmCtes("ca", "cb", "<")}
         |SELECT ca, cb, round(km, 6) AS km FROM k WHERE km <= 3.0""".stripMargin) {
       (s, d) => {
-        val base = Tables.customer(s, d).select(col("c_custkey").as("id"),
-          (lit(3400000L) + (col("c_custkey") % 40) * 2000L).as("ux"),
-          (lit(-400000L) + ((col("c_custkey").cast("long") / 40).cast("long") % 40)
-            * 2000L).as("uy"))
-          .select(col("id"), col("ux"), col("uy"),
-            floor(col("ux") / 3000.0).cast("long").as("cx"),
-            floor(col("uy") / 3000.0).cast("long").as("cy"))
-        val l = base
-        val r = base.select(col("id").as("rid"), col("ux").as("rux"),
-            col("uy").as("ruy"),
-            explode(array(col("cx") - 1, col("cx"), col("cx") + 1)).as("cx"),
-            col("cy"))
-          .select(col("rid"), col("rux"), col("ruy"), col("cx"),
-            explode(array(col("cy") - 1, col("cy"), col("cy") + 1)).as("cy"))
-        val km = Geo.haversineKm(
-          col("ux") / 100000.0, col("uy") / 100000.0,
-          col("rux") / 100000.0, col("ruy") / 100000.0)
-        l.join(r, Seq("cx", "cy")).filter(col("id") < col("rid"))
-          .withColumn("km", km).filter(col("km") <= 3.0)
+        gridPairs(s, d, col("id") < col("rid"))
           .select(col("id").as("ca"), col("rid").as("cb"),
             round(col("km"), 6).as("km"))
       }

@@ -74,10 +74,7 @@ object Goals {
     val assign = Geo.clusterAssigner(s, GeoQueries.diamonds, bufferDeg = 0.0)
     val edge = Geo.edgeDistanceUdf(s, GeoQueries.diamonds)
     // stage 1: points → in-cluster households/children (J9)
-    val pts = Tables.customer(s, d)
-      .select(col("c_custkey").as("extid"),
-        ((col("c_custkey") % 100) / 10.0).as("x"),
-        (((col("c_custkey") / 100) % 100) / 10.0).as("y"))
+    val pts = GeoQueries.custPoints(s, d, col("c_custkey").as("extid"))
       .withColumn("cluster", assign(col("x"), col("y")))
       .filter(col("cluster").isNotNull)
       .withColumn("hhid", floor(col("extid") / 4).cast("bigint"))
@@ -113,6 +110,27 @@ object Goals {
       .select(col("cluster"), col("stratum"), col("assignment"), col("extid"),
         col("hhid"), col("hh_rand"), col("priority_number"), col("edge_dist"),
         col("age"))
+  }
+
+  /** g10's customer–supplier graph (shared by g22): both directions of
+    * every distinct customer/supplier+1e6 pair as `edges(src, dst)`,
+    * keyed by src, and the out-degrees `deg(src, outdeg)` (oracle twin
+    * `OracleSnippets.RankGraphCtes`). */
+  private[queries] def rankGraph(s: org.apache.spark.sql.SparkSession, d: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val base = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+      .join(graft.core.Par.fanOut( // §2.5: parallel probe of the fact scan
+          Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
+          col("l_orderkey")),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("c"),
+        (col("l_suppkey") + 1000000L).as("s2"))
+      .distinct()
+    val edges = base.select(col("c").as("src"), col("s2").as("dst"))
+      .unionAll(base.select(col("s2").as("src"), col("c").as("dst")))
+      .repartition(col("src"))
+      .localCheckpoint()
+    (edges, edges.groupBy("src").agg(count(lit(1)).as("outdeg")))
   }
 
   val queries: Seq[Query] = Seq(
@@ -224,27 +242,8 @@ object Goals {
     // cluster key for their window ranks (35-row cap bounds nothing
     // upstream — the windows rank, they don't materialize pairs).
     Query("g04_randomization",
-      """WITH pts0 AS (
-        |  SELECT c_custkey AS extid,
-        |         CAST(c_custkey % 100 AS DOUBLE)/10.0 AS x,
-        |         fmod(CAST(c_custkey AS DOUBLE)/100.0, 100.0)/10.0 AS y
-        |  FROM customer),
-        |dia AS (
-        |  SELECT CAST(a.range*5 + b.range AS INT) AS id,
-        |         CAST(a.range*2 + 1 AS DOUBLE) AS cx, CAST(b.range*2 + 1 AS DOUBLE) AS cy
-        |  FROM range(5) a, range(5) b),
-        |eg AS (
-        |  SELECT * FROM (VALUES
-        |    (0.0,-1.0,-1.0,0.0),(1.0,0.0,0.0,-1.0),(0.0,1.0,1.0,0.0),(-1.0,0.0,0.0,1.0)) e(ix, iy, jx, jy)),
-        |inside AS (
-        |  SELECT extid, min(id) AS cluster FROM (
-        |    SELECT p.extid, d.id
-        |    FROM pts0 p, dia d, eg e
-        |    WHERE ((d.cy + e.iy > p.y) != (d.cy + e.jy > p.y))
-        |      AND p.x < (e.jx - e.ix) * (p.y - (d.cy + e.iy)) / (e.jy - e.iy) + (d.cx + e.ix)
-        |    GROUP BY 1, 2
-        |    HAVING count(*) % 2 = 1)
-        |  GROUP BY 1),
+      s"""WITH ${OracleSnippets.diamondPoints("pts0", "extid")},
+        |${OracleSnippets.diamondInside("pts0", "extid", "cluster")},
         |pts AS (
         |  SELECT p.extid, p.x, p.y, i.cluster, p.extid // 4 AS hhid
         |  FROM pts0 p JOIN inside i USING (extid)),
@@ -270,18 +269,7 @@ object Goals {
         |         CAST(row_number() OVER (PARTITION BY hh_cluster
         |           ORDER BY md5(CAST(hhid AS VARCHAR) || '17'), hhid) AS INT) AS hh_rand
         |  FROM hhc),
-        |dist AS (
-        |  SELECT extid, id, min(sqrt((x-px)*(x-px) + (y-py)*(y-py))) AS ed FROM (
-        |    SELECT p.extid, d.id, p.x, p.y,
-        |           d.cx + s.x1 + t*(s.x2 - s.x1) AS px,
-        |           d.cy + s.y1 + t*(s.y2 - s.y1) AS py
-        |    FROM pts p, dia d,
-        |         (VALUES (-1.0,0.0,0.0,-1.0),(0.0,-1.0,1.0,0.0),
-        |                 (1.0,0.0,0.0,1.0),(0.0,1.0,-1.0,0.0)) s(x1,y1,x2,y2),
-        |         LATERAL (SELECT greatest(0.0, least(1.0,
-        |             ((p.x-(d.cx+s.x1))*(s.x2-s.x1) + (p.y-(d.cy+s.y1))*(s.y2-s.y1))/2.0)) AS t) tt
-        |    WHERE d.id = p.cluster)
-        |  GROUP BY 1, 2),
+        |${OracleSnippets.diamondEdgeDist("pts", "extid", "\n    WHERE d.id = p.cluster")},
         |elig AS (
         |  SELECT p.extid, p.hhid, p.cluster,
         |         (p.extid * 13 % 7305) / 365.25 AS age,
@@ -443,41 +431,13 @@ object Goals {
     // Graph: bipartite customer <-> supplier trade edges (supplier ids
     // offset by 1e6 to disambiguate); bidirectional, so no dangling mass.
     Query("g10_pagerank",
-      """WITH base AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000 AS s2
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT c AS src, s2 AS dst FROM base
-        |      UNION ALL SELECT s2, c FROM base),
-        |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
+      s"""WITH ${OracleSnippets.RankGraphCtes},
         |r0 AS (SELECT src AS node, CAST(1000000 AS BIGINT) AS rank FROM deg),
-        |i1 AS (SELECT e.dst AS node,
-        |              150000 + (17 * sum(r.rank // d.outdeg)) // 20 AS rank
-        |       FROM e JOIN r0 r ON e.src = r.node JOIN deg d ON e.src = d.src
-        |       GROUP BY e.dst),
-        |i2 AS (SELECT e.dst AS node,
-        |              150000 + (17 * sum(r.rank // d.outdeg)) // 20 AS rank
-        |       FROM e JOIN i1 r ON e.src = r.node JOIN deg d ON e.src = d.src
-        |       GROUP BY e.dst),
-        |i3 AS (SELECT e.dst AS node,
-        |              150000 + (17 * sum(r.rank // d.outdeg)) // 20 AS rank
-        |       FROM e JOIN i2 r ON e.src = r.node JOIN deg d ON e.src = d.src
-        |       GROUP BY e.dst)
+        |${OracleSnippets.rankRounds(3, "150000")}
         |SELECT CAST(node AS BIGINT) AS node, CAST(rank AS BIGINT) AS rank
         |FROM i3""".stripMargin) {
       (s, d) => {
-        val base = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-          .join(graft.core.Par.fanOut( // §2.5: parallel probe of the fact scan
-              Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-              col("l_orderkey")),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(col("o_custkey").as("c"),
-            (col("l_suppkey") + 1000000L).as("s2"))
-          .distinct()
-        val edges = base.select(col("c").as("src"), col("s2").as("dst"))
-          .unionAll(base.select(col("s2").as("src"), col("c").as("dst")))
-          .repartition(col("src"))
-          .localCheckpoint()
-        val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
+        val (edges, deg) = rankGraph(s, d)
         var ranks = deg.select(col("src").as("node"), lit(1000000L).as("rank"))
         for (_ <- 1 to 3) {
           val contrib = ranks.join(deg, col("node") === col("src"))
@@ -500,50 +460,17 @@ object Goals {
     // unrolled rounds. Seeds start at 1e6, everything else at 0: mass
     // flows OUT of the seed neighbourhood and decays with distance.
     Query("g22_ppr",
-      """WITH base AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000 AS s2
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT c AS src, s2 AS dst FROM base
-        |      UNION ALL SELECT s2, c FROM base),
-        |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
+      s"""WITH ${OracleSnippets.RankGraphCtes},
         |r0 AS (SELECT src AS node,
         |              CAST(CASE WHEN src % 10 = 0 THEN 1000000 ELSE 0 END AS BIGINT)
         |                AS rank
         |       FROM deg),
-        |i1 AS (SELECT node,
-        |              (CASE WHEN node % 10 = 0 THEN 150000 ELSE 0 END) + flow AS rank
-        |       FROM (SELECT e.dst AS node,
-        |                    (17 * sum(r.rank // d.outdeg)) // 20 AS flow
-        |             FROM e JOIN r0 r ON e.src = r.node JOIN deg d ON e.src = d.src
-        |             GROUP BY e.dst) t),
-        |i2 AS (SELECT node,
-        |              (CASE WHEN node % 10 = 0 THEN 150000 ELSE 0 END) + flow AS rank
-        |       FROM (SELECT e.dst AS node,
-        |                    (17 * sum(r.rank // d.outdeg)) // 20 AS flow
-        |             FROM e JOIN i1 r ON e.src = r.node JOIN deg d ON e.src = d.src
-        |             GROUP BY e.dst) t),
-        |i3 AS (SELECT node,
-        |              (CASE WHEN node % 10 = 0 THEN 150000 ELSE 0 END) + flow AS rank
-        |       FROM (SELECT e.dst AS node,
-        |                    (17 * sum(r.rank // d.outdeg)) // 20 AS flow
-        |             FROM e JOIN i2 r ON e.src = r.node JOIN deg d ON e.src = d.src
-        |             GROUP BY e.dst) t)
+        |${OracleSnippets.rankRounds(3,
+              "(CASE WHEN node % 10 = 0 THEN 150000 ELSE 0 END)")}
         |SELECT CAST(node AS BIGINT) AS node, CAST(rank AS BIGINT) AS rank
         |FROM i3""".stripMargin) {
       (s, d) => {
-        val base = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-          .join(graft.core.Par.fanOut( // §2.5: parallel probe of the fact scan
-              Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-              col("l_orderkey")),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(col("o_custkey").as("c"),
-            (col("l_suppkey") + 1000000L).as("s2"))
-          .distinct()
-        val edges = base.select(col("c").as("src"), col("s2").as("dst"))
-          .unionAll(base.select(col("s2").as("src"), col("c").as("dst")))
-          .repartition(col("src"))
-          .localCheckpoint()
-        val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
+        val (edges, deg) = rankGraph(s, d)
         var ranks = deg.select(col("src").as("node"),
           when(col("src") % 10 === 0, 1000000L).otherwise(0L).as("rank"))
         for (_ <- 1 to 3) {

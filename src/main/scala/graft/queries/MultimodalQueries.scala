@@ -127,14 +127,7 @@ object MultimodalQueries {
   // codec-free (shared by the shared-table default AND its
   // direct-decode twin, so the two engine paths answer to one contract).
   private val channelCorrOracle =
-    """WITH px AS (
-      |  SELECT doc_id,
-      |         (doc_id*7 + 3*x.x + 5*y.y) % 256 AS r,
-      |         (doc_id*11 + x.x + 2*y.y) % 256 AS g,
-      |         (doc_id*13 + 4*x.x + y.y) % 256 AS b
-      |  FROM documents,
-      |       LATERAL (SELECT unnest(range(32)) AS x) x,
-      |       LATERAL (SELECT unnest(range(32)) AS y) y),
+    s"""WITH ${OracleSnippets.PixelCte},
       |s AS (
       |  SELECT doc_id, count(*) AS n,
       |         CAST(sum(r) AS BIGINT) AS sr, CAST(sum(g) AS BIGINT) AS sg,
@@ -166,11 +159,7 @@ object MultimodalQueries {
       |FROM s""".stripMargin
 
   private val pixelHistogramOracle =
-    """WITH px AS (
-      |  SELECT doc_id, (doc_id*7 + 3*x.x + 5*y.y) % 256 AS r
-      |  FROM documents,
-      |       LATERAL (SELECT unnest(range(32)) AS x) x,
-      |       LATERAL (SELECT unnest(range(32)) AS y) y),
+    s"""WITH ${OracleSnippets.PixelCte},
       |hist AS (SELECT doc_id, r, count(*) AS c FROM px GROUP BY 1, 2),
       |tot AS (SELECT doc_id, sum(c) AS n FROM hist GROUP BY 1),
       |ent AS (SELECT hist.doc_id,
@@ -190,12 +179,7 @@ object MultimodalQueries {
       |         JOIN md ON tot.doc_id = md.doc_id""".stripMargin
 
   private val edgeDensityOracle =
-    """WITH px AS (
-      |  SELECT doc_id, x.x AS x, y.y AS y,
-      |         (doc_id*7 + 3*x.x + 5*y.y) % 256 AS r
-      |  FROM documents,
-      |       LATERAL (SELECT unnest(range(32)) AS x) x,
-      |       LATERAL (SELECT unnest(range(32)) AS y) y),
+    s"""WITH ${OracleSnippets.PixelCte},
       |gx AS (
       |  SELECT doc_id,
       |         abs(r - lag(r) OVER (PARTITION BY doc_id, y ORDER BY x)) AS g
@@ -240,14 +224,7 @@ object MultimodalQueries {
     // with integer arithmetic — so a codec bug, a channel swap, or a
     // row-order mistake on the engine side hash-mismatches.
     Query("m02_feature_extract",
-      """WITH px AS (
-        |  SELECT doc_id,
-        |         (doc_id*7 + 3*x.x + 5*y.y) % 256 AS r,
-        |         (doc_id*11 + x.x + 2*y.y) % 256 AS g,
-        |         (doc_id*13 + 4*x.x + y.y) % 256 AS b
-        |  FROM documents,
-        |       LATERAL (SELECT unnest(range(32)) AS x) x,
-        |       LATERAL (SELECT unnest(range(32)) AS y) y)
+      s"""WITH ${OracleSnippets.PixelCte}
         |SELECT doc_id, CAST(32 AS INT) AS width, CAST(32 AS INT) AS height,
         |       CAST(sum(r) AS BIGINT) AS r_sum, CAST(sum(g) AS BIGINT) AS g_sum,
         |       CAST(sum(b) AS BIGINT) AS b_sum,
@@ -274,14 +251,7 @@ object MultimodalQueries {
     // trip. Oracle: block floor-means from the pixel formula, printf'd
     // to the same rrggbb hex, string_agg'd in (j, i) order.
     Query("m04_resize",
-      """WITH px AS (
-        |  SELECT doc_id, x.x AS x, y.y AS y,
-        |         (doc_id*7 + 3*x.x + 5*y.y) % 256 AS r,
-        |         (doc_id*11 + x.x + 2*y.y) % 256 AS g,
-        |         (doc_id*13 + 4*x.x + y.y) % 256 AS b
-        |  FROM documents,
-        |       LATERAL (SELECT unnest(range(32)) AS x) x,
-        |       LATERAL (SELECT unnest(range(32)) AS y) y),
+      s"""WITH ${OracleSnippets.PixelCte},
         |blk AS (
         |  SELECT doc_id, y//4 AS j, x//4 AS i,
         |         CAST(sum(r)//16 AS INT) AS r8, CAST(sum(g)//16 AS INT) AS g8,
@@ -562,13 +532,7 @@ object MultimodalQueries {
     // codec — while every stored image skips its decode; at 100 TB the
     // decode pass amortizes to the churn rate, not the corpus size.
     Query("m12_decoded_stats",
-      """WITH s AS (
-        |  SELECT doc_id,
-        |         CAST(sum((doc_id*7 + 3*x.x + 5*y.y) % 256) AS BIGINT) AS sr
-        |  FROM documents,
-        |       LATERAL (SELECT unnest(range(32)) AS x) x,
-        |       LATERAL (SELECT unnest(range(32)) AS y) y
-        |  GROUP BY 1)
+      s"""WITH ${OracleSnippets.RedSumCtes}
         |SELECT 1 AS run,
         |       CAST(count(*) FILTER (WHERE doc_id % 3 < 2) AS BIGINT) AS n_decoded,
         |       CAST(count(*) FILTER (WHERE doc_id % 3 < 2) AS BIGINT) AS n_total,

@@ -1407,9 +1407,7 @@ object Reporting {
     // snapshot count exactly (the g18 shape — the only form that
     // survives weekly snapshots over years of history at 100 TB).
     Query("g39_site_issue_dashboard",
-      """WITH wk AS (SELECT unnest(generate_series(0, 5)) AS k),
-        |ev AS (SELECT event_id, CAST(ts AS DATE) AS d, user_id, event_type
-        |       FROM events),
+      s"""WITH ${OracleSnippets.IssueEventCtes},
         |op0 AS (
         |  SELECT event_id AS inst, d AS opened,
         |         'site' || CAST(user_id % 8 AS VARCHAR) || '-' ||
@@ -1417,37 +1415,15 @@ object Reporting {
         |  FROM ev WHERE event_type = 'error'),
         |op AS (SELECT inst, opened, split_part(report_id, '-', 1) AS site
         |       FROM op0),
-        |res AS (
-        |  SELECT r.issue_id, min(r.rd) AS resolved
-        |  FROM (SELECT event_id - 5 AS issue_id, d AS rd FROM ev
-        |        WHERE event_type = 'purchase') r
-        |  JOIN op ON r.issue_id = op.inst GROUP BY 1),
+        |${OracleSnippets.issueResolvedCte("")},
         |iss AS (
         |  SELECT op.inst, op.site, op.opened, res.resolved
         |  FROM op LEFT JOIN res ON op.inst = res.issue_id),
-        |grid AS (
-        |  SELECT i.*, CAST(DATE '2024-01-01' + CAST(k*7 AS INT) AS DATE)
-        |           AS run_date
-        |  FROM iss i, wk),
-        |st AS (
-        |  SELECT run_date, site,
-        |         CASE WHEN resolved IS NOT NULL AND resolved <= run_date
-        |                THEN 'closed'
-        |              WHEN opened <= run_date
-        |                   AND datediff('day', opened, run_date) > 14
-        |                THEN '15d+'
-        |              WHEN opened <= run_date
-        |                   AND datediff('day', opened, run_date) > 7
-        |                THEN '8-14d'
-        |              WHEN opened <= run_date THEN '0-7d'
-        |              ELSE NULL END AS bucket
-        |  FROM grid)
+        |${OracleSnippets.issueStateCtes("site")}
         |SELECT run_date, site, bucket, CAST(count(*) AS BIGINT) AS n
         |FROM st WHERE bucket IS NOT NULL
         |GROUP BY 1, 2, 3""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("event_id"), col("ts").cast("date").as("d"),
-          col("user_id"), col("event_type"))
+      val ev = issueEvents(s, d)
       val op = ev.filter(col("event_type") === "error")
         .select(col("event_id").as("inst"), col("d").as("opened"),
           concat(lit("site"), (col("user_id") % 8).cast("string"),
@@ -1574,48 +1550,22 @@ object Reporting {
     // The form/floor CASEs are shared ANSI fragments (engine expr()
     // and oracle parse the same strings).
     Query("g43_site_ui_variants",
-      s"""WITH wk AS (SELECT unnest(generate_series(0, 5)) AS k),
-        |ev AS (SELECT event_id, CAST(ts AS DATE) AS d, user_id, event_type
-        |       FROM events),
+      s"""WITH ${OracleSnippets.IssueEventCtes},
         |op0 AS (
         |  SELECT event_id AS inst, d AS opened, $SiteUiFormFrag AS form,
         |         'site' || CAST(user_id % 8 AS VARCHAR) AS site
         |  FROM ev WHERE event_type = 'error'),
         |op AS (SELECT * FROM op0 WHERE opened >= $SiteUiFloorFrag),
-        |res AS (
-        |  SELECT r.issue_id, min(r.rd) AS resolved
-        |  FROM (SELECT event_id - 5 AS issue_id, d AS rd FROM ev
-        |        WHERE event_type = 'purchase') r
-        |  JOIN op ON r.issue_id = op.inst
-        |  WHERE r.rd >= ${SiteUiFloorFrag.replace("CASE form",
-              "CASE op.form")}
-        |  GROUP BY 1),
+        |${OracleSnippets.issueResolvedCte("\n  WHERE r.rd >= " +
+              SiteUiFloorFrag.replace("CASE form", "CASE op.form"))},
         |iss AS (
         |  SELECT op.inst, op.form, op.site, op.opened, res.resolved
         |  FROM op LEFT JOIN res ON op.inst = res.issue_id),
-        |grid AS (
-        |  SELECT i.*, CAST(DATE '2024-01-01' + CAST(k*7 AS INT) AS DATE)
-        |           AS run_date
-        |  FROM iss i, wk),
-        |st AS (
-        |  SELECT run_date, form, site,
-        |         CASE WHEN resolved IS NOT NULL AND resolved <= run_date
-        |                THEN 'closed'
-        |              WHEN opened <= run_date
-        |                   AND datediff('day', opened, run_date) > 14
-        |                THEN '15d+'
-        |              WHEN opened <= run_date
-        |                   AND datediff('day', opened, run_date) > 7
-        |                THEN '8-14d'
-        |              WHEN opened <= run_date THEN '0-7d'
-        |              ELSE NULL END AS bucket
-        |  FROM grid)
+        |${OracleSnippets.issueStateCtes("form, site")}
         |SELECT run_date, form, site, bucket, CAST(count(*) AS BIGINT) AS n
         |FROM st WHERE bucket IS NOT NULL
         |GROUP BY 1, 2, 3, 4""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("event_id"), col("ts").cast("date").as("d"),
-          col("user_id"), col("event_type"))
+      val ev = issueEvents(s, d)
       val op = ev.filter(col("event_type") === "error")
         .select(col("event_id").as("inst"), col("d").as("opened"),
           expr(SiteUiFormFrag).as("form"),
@@ -1679,6 +1629,14 @@ object Reporting {
         Tables.lineitem(s, d).select("l_orderkey", "l_returnflag", "l_shipdate"))
     }
   )
+
+  /** The events as (event_id, d, user_id, event_type), the site-issue
+    * rows' input (g39, g43; oracle twin `OracleSnippets.IssueEventCtes`). */
+  private[queries] def issueEvents(s: org.apache.spark.sql.SparkSession,
+                                   d: String): org.apache.spark.sql.DataFrame =
+    Tables.events(s, d)
+      .select(col("event_id"), col("ts").cast("date").as("d"),
+        col("user_id"), col("event_type"))
 
   /** g39's engine, parameterized over the site-UI family
     * (pipeline-reporting/R/monitoring-issues-ui/ — cra_site_ui.Rmd is

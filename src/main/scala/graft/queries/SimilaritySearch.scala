@@ -1,11 +1,13 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Query, Tables}
 import graft.functions.{Similarity, TextFunctions}
 import OracleSnippets.{cosineFold, dist2Fold, dotFold, foldLeft, ivfCentsDist,
-  matrixValues, ownLen, planeDots, sumFold, sumOver, width}
+  cappedBuckets, lshPairVerify, matrixValues, ownLen, planeBuckets, sumFold, sumOver,
+  width}
 
 /** Deduplication and similarity-search operators over documents and
   * embeddings: brute-force cosine top-k (exact baseline, SQL oracle),
@@ -53,29 +55,84 @@ object SimilaritySearch {
   /** s22's oracle, shared verbatim by st08 (the streaming run of the
     * same incremental shape must hash-match the batch SQL). */
   private[queries] val IncrementalNearDupOracleSql: String =
-    """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t)),
-        |                                             i -> t[i] || ' ' || t[i+1]))) AS s
-        |       FROM toks WHERE len(t) >= 2),
-        |mh AS (SELECT doc_id, f,
-        |         min(substring(md5(s || ':' || CAST(f AS VARCHAR)), 1, 16)) AS m
-        |       FROM sh CROSS JOIN generate_series(0, 15) g(f) GROUP BY 1, 2),
-        |bnd AS (SELECT doc_id, f // 4 AS band, string_agg(m, '|' ORDER BY f) AS bkey
-        |        FROM mh GROUP BY 1, 2),
+    s"""WITH ${OracleSnippets.MinhashBandCtes},
         |cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS old_id
         |         FROM bnd a JOIN bnd b ON a.band = b.band AND a.bkey = b.bkey
         |         WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (SELECT c.new_id, c.old_id, count(*) AS i
-        |          FROM cand c JOIN sh a ON a.doc_id = c.new_id
-        |                      JOIN sh b ON b.doc_id = c.old_id AND b.s = a.s
-        |          GROUP BY 1, 2)
-        |SELECT new_id, old_id, i * 1.0 / (sa.n + sb.n - i) AS jaccard
-        |FROM inter JOIN sizes sa ON new_id = sa.doc_id
-        |           JOIN sizes sb ON old_id = sb.doc_id
-        |WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.3""".stripMargin
+        |${OracleSnippets.minhashVerify("new_id", "old_id")}""".stripMargin
 
+  /** Each doc's distinct word bigrams `(doc_id, s)`, fanned before the
+    * explode (s13, s22; oracle twin `OracleSnippets.MinhashBandCtes`'
+    * `sh`). */
+  private[queries] def docBigrams(docs: DataFrame): DataFrame =
+    graft.core.Par.fanOut(docs.select("doc_id", "text"), col("doc_id"))
+      .select(col("doc_id"),
+        explode(TextFunctions.shingles(col("text"), 2)).as("s"))
+
+  /** The bigrams of the docs on either side of a `cand(a, b)` pair only,
+    * so the verify self-join never sees the whole corpus (s13, s22). */
+  private[queries] def candBigrams(sh: DataFrame, cand: DataFrame,
+                                   a: String, b: String): DataFrame = {
+    val candIds = cand
+      .select(explode(array(col(a), col(b))).as("doc_id"))
+      .distinct()
+    sh.join(candIds, Seq("doc_id"), "left_semi")
+  }
+
+  /** The (a, b) pairs of `inter(a, b, i)` whose Jaccard over the bigram
+    * set `sizes(doc_id, n)` is at least 0.3 (s13, s22; oracle twin
+    * `OracleSnippets.minhashVerify`). */
+  private[queries] def jaccardAtLeast(inter: DataFrame, sizes: DataFrame,
+                                      a: String, b: String): DataFrame = {
+    val jac = col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))
+    inter
+      .join(sizes.toDF(a, "na"), a)
+      .join(sizes.toDF(b, "nb"), b)
+      .select(col(a), col(b), jac.as("jaccard"))
+      .filter(col("jaccard") >= 0.3)
+  }
+
+  /** Per IVF cell of a store rewrite (s55, io25): the member count
+    * `n_before` of `v1` and, of `v2`, `n_after` plus the md5 of the
+    * sorted member ids `ids_md5`. */
+  private[queries] def cellMembership(v1: DataFrame, v2: DataFrame): (DataFrame, DataFrame) =
+    (v1.groupBy("cell_id").agg(count(lit(1)).as("n_before")),
+     v2.groupBy("cell_id")
+       .agg(count(lit(1)).as("n_after"),
+         md5(concat_ws(",",
+           transform(sort_array(collect_list(col("vec_id"))),
+             v => v.cast("string")))).as("ids_md5")))
+
+  /** s26's Okapi BM25 (k1 = 1.2, b = 0.75) of every document for the
+    * literal query 'spark vector window customer', 6 dp-rounded, as
+    * (doc_id, score); s29's lexical leg. No explode: per-doc term counts
+    * are a narrow projection and the corpus statistics one tiny
+    * aggregate broadcast back. The oracle twin is
+    * `OracleSnippets.bm25Ctes`. */
+  private[queries] def bm25Scores(s: org.apache.spark.sql.SparkSession,
+                                  d: String): DataFrame = {
+    val terms = Seq("spark", "vector", "window", "customer")
+    val toks = TextFunctions.tokens(col("text"))
+    val perDoc = Tables.documents(s, d).select(
+      col("doc_id") +: size(toks).cast("double").as("dl") +:
+        terms.zipWithIndex.map { case (t, i) =>
+          size(filter(toks, x => x === lit(t))).cast("double").as(s"tf${i + 1}")
+        }: _*)
+    val aggCols = count(lit(1)).cast("double").as("n") +:
+      avg(col("dl")).as("avgdl") +:
+      terms.indices.map(i =>
+        count(when(col(s"tf${i + 1}") > 0, 1)).cast("double").as(s"df${i + 1}"))
+    val stats = perDoc.agg(aggCols.head, aggCols.tail: _*)
+    def contrib(i: Int): org.apache.spark.sql.Column = {
+      val tf = col(s"tf${i + 1}"); val df = col(s"df${i + 1}")
+      log((col("n") - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0)) *
+        (tf * lit(2.2)) /
+        (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
+    }
+    perDoc.crossJoin(broadcast(stats))
+      .select(col("doc_id"),
+        round(contrib(0) + contrib(1) + contrib(2) + contrib(3), 6).as("score"))
+  }
 
   val queries: Seq[Query] = Seq(
 
@@ -188,19 +245,12 @@ object SimilaritySearch {
     {
       val (tables, bits, dims) = (6, 10, 64)
       val planes = Similarity.hyperplanes(tables, bits, dims)
-      val bitCase = OracleSnippets.bitCase(bits)
       val maskValues = (0 +: ((0 until bits).map(1 << _) ++
         (for { i <- 0 until bits; j <- (i + 1) until bits }
           yield (1 << i) | (1 << j))))
         .map(m => s"($m)").mkString(", ")
       Query("s05_ann_lsh",
-        s"""WITH ${planeDots(planes, bits)},
-          |buck AS (
-          |  SELECT vec_id, t,
-          |         CAST(sum(CASE WHEN d > 0
-          |                       THEN CASE j $bitCase ELSE 0 END
-          |                       ELSE 0 END) AS BIGINT) AS b
-          |  FROM dots GROUP BY 1, 2),
+        s"""WITH ${planeBuckets(planes, bits)},
           |masks(m) AS (VALUES $maskValues),
           |qprobe AS (
           |  SELECT vec_id AS query_id, t, xor(b, CAST(m AS BIGINT)) AS b
@@ -277,27 +327,10 @@ object SimilaritySearch {
     {
       val (tables, bits, dims) = (12, 10, 64)
       val planes = Similarity.hyperplanes(tables, bits, dims)
-      val bitCase = OracleSnippets.bitCase(bits)
       Query("s07_embedding_neardup_lsh",
-        s"""WITH ${planeDots(planes, bits)},
-          |buck AS (
-          |  SELECT vec_id, t,
-          |         CAST(sum(CASE WHEN d > 0
-          |                       THEN CASE j $bitCase ELSE 0 END
-          |                       ELSE 0 END) AS BIGINT) AS b
-          |  FROM dots GROUP BY 1, 2),
-          |big AS (SELECT t, b FROM buck GROUP BY t, b HAVING count(*) > 500),
-          |capped AS (SELECT buck.* FROM buck ANTI JOIN big USING (t, b)),
-          |cand AS (
-          |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-          |  FROM capped x JOIN capped y
-          |    ON x.t = y.t AND x.b = y.b AND x.vec_id < y.vec_id),
-          |cosd AS (
-          |  SELECT vec_a, vec_b,
-          |         ${cosineFold("a.embedding", "b.embedding", width(dims))} AS cos
-          |  FROM cand JOIN embeddings a ON a.vec_id = vec_a
-          |            JOIN embeddings b ON b.vec_id = vec_b)
-          |SELECT vec_a, vec_b, cos FROM cosd WHERE cos >= 0.35""".stripMargin) {
+        s"""WITH ${planeBuckets(planes, bits)},
+          |${cappedBuckets(500)},
+          |${lshPairVerify(dims)}""".stripMargin) {
         (s, d) =>
           graft.operators.Dedup.embeddingNearDupLsh(Tables.embeddings(s, d),
             "vec_id", "embedding", tables = tables, bits = bits, dims = dims,
@@ -395,35 +428,15 @@ object SimilaritySearch {
     // no SQL oracle); this twin pins the pipeline's SEMANTICS in the
     // gate while the kernel is pinned by MinHashSignatureSpec.
     Query("s13_minhash_lsh_oracle",
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t)),
-        |                                             i -> t[i] || ' ' || t[i+1]))) AS s
-        |       FROM toks WHERE len(t) >= 2),
-        |mh AS (SELECT doc_id, f,
-        |         min(substring(md5(s || ':' || CAST(f AS VARCHAR)), 1, 16)) AS m
-        |       FROM sh CROSS JOIN generate_series(0, 15) g(f) GROUP BY 1, 2),
-        |bnd AS (SELECT doc_id, f // 4 AS band, string_agg(m, '|' ORDER BY f) AS bkey
-        |        FROM mh GROUP BY 1, 2),
+      s"""WITH ${OracleSnippets.MinhashBandCtes},
         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         |         FROM bnd a JOIN bnd b
         |           ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (SELECT c.doc_a, c.doc_b, count(*) AS i
-        |          FROM cand c JOIN sh a ON a.doc_id = c.doc_a
-        |                      JOIN sh b ON b.doc_id = c.doc_b AND b.s = a.s
-        |          GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, i * 1.0 / (sa.n + sb.n - i) AS jaccard
-        |FROM inter JOIN sizes sa ON doc_a = sa.doc_id
-        |           JOIN sizes sb ON doc_b = sb.doc_id
-        |WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.3""".stripMargin) {
+        |${OracleSnippets.minhashVerify("doc_a", "doc_b")}""".stripMargin) {
       (s, d) => {
         // fanned before the shingle explode + 16-way md5 signature
         // aggregate — the oracle family's heavy map side (§2.5)
-        val sh = graft.core.Par.fanOut(
-            Tables.documents(s, d).select("doc_id", "text"), col("doc_id"))
-          .select(col("doc_id"),
-            explode(TextFunctions.shingles(col("text"), 2)).as("s"))
+        val sh = docBigrams(Tables.documents(s, d))
         // distinct-shingle count fused into the signature pass (same
         // one-scan trick MinHashSketch does natively for s03)
         val sigAggs = count(lit(1)).as("n") +: (0 until 16).map(i =>
@@ -439,23 +452,14 @@ object SimilaritySearch {
           .select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b")
         // exact-Jaccard verify over candidate docs only (semi-join first
         // so the shingle self-join never sees the full corpus)
-        val candIds = cand
-          .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-          .distinct()
-        val shc = sh.join(candIds, Seq("doc_id"), "left_semi")
+        val shc = candBigrams(sh, cand, "doc_a", "doc_b")
         val sizes = sig.select(col("doc_id"), col("n"))
         val inter = shc.toDF("doc_a", "s")
           .join(shc.toDF("doc_b", "s2"),
             col("s") === col("s2") && col("doc_a") < col("doc_b"))
           .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
           .join(cand, Seq("doc_a", "doc_b"))
-        val jac = col("i") * lit(1.0) /
-          (col("na") + col("nb") - col("i"))
-        inter
-          .join(sizes.toDF("doc_a", "na"), "doc_a")
-          .join(sizes.toDF("doc_b", "nb"), "doc_b")
-          .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
-          .filter(col("jaccard") >= 0.3)
+        jaccardAtLeast(inter, sizes, "doc_a", "doc_b")
       }
     },
 
@@ -556,13 +560,7 @@ object SimilaritySearch {
       val (tables, bits, dims) = (2, 6, 64)
       val planes = Similarity.hyperplanes(tables, bits, dims)
       Query("s16_ann_lsh_oracle",
-        s"""WITH ${planeDots(planes, bits)},
-          |buck AS (
-          |  SELECT vec_id, t,
-          |         sum(CASE WHEN d > 0 THEN CASE j WHEN 0 THEN 1 WHEN 1 THEN 2
-          |              WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32 END
-          |             ELSE 0 END) AS b
-          |  FROM dots GROUP BY 1, 2),
+        s"""WITH ${planeBuckets(planes, bits)},
           |cand AS (
           |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
           |  FROM buck q JOIN buck c ON q.t = c.t AND q.b = c.b
@@ -951,12 +949,7 @@ object SimilaritySearch {
             .cast("long").as("qc"))
         .write.parquet(s"$root/cents_v2")
       // AUDIT — from the written stores, never the source
-      val before = v1.groupBy("cell_id").agg(count(lit(1)).as("n_before"))
-      val after = v2.groupBy("cell_id")
-        .agg(count(lit(1)).as("n_after"),
-          md5(concat_ws(",",
-            transform(sort_array(collect_list(col("vec_id"))),
-              v => v.cast("string")))).as("ids_md5"))
+      val (before, after) = cellMembership(v1, v2)
       val cent2 = s.read.parquet(s"$root/cents_v2")
         .groupBy("cell_id")
         .agg(md5(concat_ws(",",
@@ -1181,26 +1174,9 @@ object SimilaritySearch {
       val cap = 40
       val planes = Similarity.hyperplanes(tables, bits, dims)
       Query("s20_embedding_neardup_oracle",
-        s"""WITH ${planeDots(planes, bits)},
-          |buck AS (
-          |  SELECT vec_id, t,
-          |         sum(CASE WHEN d > 0 THEN CASE j WHEN 0 THEN 1 WHEN 1 THEN 2
-          |              WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32 END
-          |             ELSE 0 END) AS b
-          |  FROM dots GROUP BY 1, 2),
-          |big AS (SELECT t, b FROM buck GROUP BY t, b HAVING count(*) > $cap),
-          |capped AS (SELECT * FROM buck bu WHERE NOT EXISTS (
-          |  SELECT 1 FROM big WHERE big.t = bu.t AND big.b = bu.b)),
-          |cand AS (
-          |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-          |  FROM capped x JOIN capped y
-          |    ON x.t = y.t AND x.b = y.b AND x.vec_id < y.vec_id),
-          |cosd AS (
-          |  SELECT vec_a, vec_b,
-          |         ${cosineFold("va.embedding", "vb.embedding", width(dims))} AS cos
-          |  FROM cand JOIN embeddings va ON va.vec_id = vec_a
-          |            JOIN embeddings vb ON vb.vec_id = vec_b)
-          |SELECT vec_a, vec_b, cos FROM cosd WHERE cos >= 0.35""".stripMargin) {
+        s"""WITH ${planeBuckets(planes, bits)},
+          |${cappedBuckets(cap)},
+          |${lshPairVerify(dims)}""".stripMargin) {
         (s, d) =>
           graft.operators.Dedup.embeddingNearDupLsh(Tables.embeddings(s, d),
             "vec_id", "embedding", tables = tables, bits = bits, dims = dims,
@@ -1343,10 +1319,7 @@ object SimilaritySearch {
       (s, d) => {
         val docs = Tables.documents(s, d)
         // fanned shingle explode (§2.5; same device as md5Signatures)
-        val sh = graft.core.Par.fanOut(
-            docs.select("doc_id", "text"), col("doc_id"))
-          .select(col("doc_id"),
-            explode(TextFunctions.shingles(col("text"), 2)).as("s"))
+        val sh = docBigrams(docs)
         val sig = graft.operators.Dedup.md5Signatures(docs, "doc_id", "text",
           n = 2, k = 16)
         val bandRows = graft.operators.Dedup.md5BandRows(sig, "doc_id",
@@ -1357,21 +1330,13 @@ object SimilaritySearch {
           .join(bandRows.filter(col("doc_id") % 5 =!= 0)
             .toDF("old_id", "band", "bkey"), Seq("band", "bkey"))
           .select("new_id", "old_id").dropDuplicates("new_id", "old_id")
-        val candIds = cand
-          .select(explode(array(col("new_id"), col("old_id"))).as("doc_id"))
-          .distinct()
-        val shc = sh.join(candIds, Seq("doc_id"), "left_semi")
+        val shc = candBigrams(sh, cand, "new_id", "old_id")
         val inter = shc.toDF("new_id", "s")
           .join(shc.toDF("old_id", "s2"), col("s") === col("s2"))
           .join(cand, Seq("new_id", "old_id"))
           .groupBy("new_id", "old_id").agg(count(lit(1)).as("i"))
         val sizes = sig.select(col("doc_id"), col("n"))
-        val jac = col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))
-        inter
-          .join(sizes.toDF("new_id", "na"), "new_id")
-          .join(sizes.toDF("old_id", "nb"), "old_id")
-          .select(col("new_id"), col("old_id"), jac.as("jaccard"))
-          .filter(col("jaccard") >= 0.3)
+        jaccardAtLeast(inter, sizes, "new_id", "old_id")
       }
     },
 
@@ -1599,27 +1564,7 @@ object SimilaritySearch {
         |  FROM fused) WHERE rn <= 10""".stripMargin) {
       (s, d) => {
         // lexical leg: s26's no-explode BM25, 6dp-rounded, top-20
-        val terms = Seq("spark", "vector", "window", "customer")
-        val toks = TextFunctions.tokens(col("text"))
-        val perDoc = Tables.documents(s, d).select(
-          col("doc_id") +: size(toks).cast("double").as("dl") +:
-            terms.zipWithIndex.map { case (t, i) =>
-              size(filter(toks, x => x === lit(t))).cast("double").as(s"tf${i + 1}")
-            }: _*)
-        val aggCols = count(lit(1)).cast("double").as("n") +:
-          avg(col("dl")).as("avgdl") +:
-          terms.indices.map(i =>
-            count(when(col(s"tf${i + 1}") > 0, 1)).cast("double").as(s"df${i + 1}"))
-        val stats = perDoc.agg(aggCols.head, aggCols.tail: _*)
-        def contrib(i: Int): org.apache.spark.sql.Column = {
-          val tf = col(s"tf${i + 1}"); val df = col(s"df${i + 1}")
-          log((col("n") - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0)) *
-            (tf * lit(2.2)) /
-            (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-        }
-        val bmTop = perDoc.crossJoin(broadcast(stats))
-          .select(col("doc_id"),
-            round(contrib(0) + contrib(1) + contrib(2) + contrib(3), 6).as("score"))
+        val bmTop = bm25Scores(s, d)
           .orderBy(col("score").desc, col("doc_id")).limit(20)
           .select(col("doc_id"),
             row_number().over(org.apache.spark.sql.expressions.Window
@@ -1666,28 +1611,7 @@ object SimilaritySearch {
         |         row_number() OVER (ORDER BY score DESC, doc_id) AS rn
         |  FROM sc) WHERE rn <= 10""".stripMargin) {
       (s, d) => {
-        val terms = Seq("spark", "vector", "window", "customer")
-        val toks = TextFunctions.tokens(col("text"))
-        val perDoc = Tables.documents(s, d).select(
-          col("doc_id") +: size(toks).cast("double").as("dl") +:
-            terms.zipWithIndex.map { case (t, i) =>
-              size(filter(toks, x => x === lit(t))).cast("double").as(s"tf${i + 1}")
-            }: _*)
-        val aggCols = count(lit(1)).cast("double").as("n") +:
-          avg(col("dl")).as("avgdl") +:
-          terms.indices.map(i =>
-            count(when(col(s"tf${i + 1}") > 0, 1)).cast("double").as(s"df${i + 1}"))
-        val stats = perDoc.agg(aggCols.head, aggCols.tail: _*)
-        val scored = perDoc.crossJoin(broadcast(stats))
-        def contrib(i: Int): org.apache.spark.sql.Column = {
-          val tf = col(s"tf${i + 1}"); val df = col(s"df${i + 1}")
-          log((col("n") - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0)) *
-            (tf * lit(2.2)) /
-            (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-        }
-        scored
-          .select(col("doc_id"),
-            round(contrib(0) + contrib(1) + contrib(2) + contrib(3), 6).as("score"))
+        bm25Scores(s, d)
           .orderBy(col("score").desc, col("doc_id"))
           .limit(10)
       }
@@ -2128,16 +2052,8 @@ object SimilaritySearch {
       val cap = 40
       val planes = Similarity.hyperplanes(tables, bits, dims)
       Query("s44_radius_search",
-        s"""WITH ${planeDots(planes, bits)},
-          |buck AS (
-          |  SELECT vec_id, t,
-          |         sum(CASE WHEN d > 0 THEN CASE j WHEN 0 THEN 1 WHEN 1 THEN 2
-          |              WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32 END
-          |             ELSE 0 END) AS b
-          |  FROM dots GROUP BY 1, 2),
-          |big AS (SELECT t, b FROM buck GROUP BY t, b HAVING count(*) > $cap),
-          |capped AS (SELECT * FROM buck bu WHERE NOT EXISTS (
-          |  SELECT 1 FROM big WHERE big.t = bu.t AND big.b = bu.b)),
+        s"""WITH ${planeBuckets(planes, bits)},
+          |${cappedBuckets(cap)},
           |cand AS (
           |  SELECT DISTINCT q.vec_id AS query_id, x.vec_id AS match_id
           |  FROM buck q JOIN capped x

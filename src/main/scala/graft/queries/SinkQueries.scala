@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Query, Tables}
 import graft.operators.Anomalies
@@ -33,6 +34,40 @@ object SinkQueries {
       |SELECT s.user_id, CAST(s.rn AS BIGINT) AS n_events, s.h AS chain_md5
       |FROM scan s JOIN (SELECT user_id, max(rn) AS mr FROM scan GROUP BY 1) t
       |  ON s.user_id = t.user_id AND s.rn = t.mr""".stripMargin
+
+  /** io14's change feed (shared by st16): orders as upserts/deletes of
+    * customer balances, a 1-in-17 slice on synthetic new keys, ordered
+    * by `ordk` = epoch-day * 1e8 + orderkey; `extra` columns ride along.
+    * The oracle twin is `OracleSnippets.CdcMergeCtes`' `ch`. */
+  private[queries] def cdcChanges(s: SparkSession, d: String, extra: Column*): DataFrame = {
+    val day = datediff(to_date(col("o_orderdate")), lit("1970-01-01")).cast("long")
+    Tables.orders(s, d).select(Seq(
+      when(col("o_orderkey") % 17 === 3, col("o_custkey") + 1000000L)
+        .otherwise(col("o_custkey")).as("c_custkey"),
+      when(substring(md5(concat(col("o_orderkey").cast("string"), lit("cdc"))),
+        1, 1) === "0", "D").otherwise("U").as("op"),
+      col("o_totalprice").as("bal"),
+      (day * 100000000L + col("o_orderkey")).as("ordk")) ++ extra: _*)
+  }
+
+  /** io03's SCD2 merge (shared by io04) of the batch into the open
+    * customer-segment dimension, versions split on 2026-02-01. The
+    * oracle twin of its inputs is `OracleSnippets.Scd2InputCtes`. */
+  private[queries] def scd2Merged(s: SparkSession, d: String): DataFrame = {
+    val cust = Tables.customer(s, d)
+    val cur = cust.filter(col("c_custkey") % 11 =!= 3)
+      .select(col("c_custkey"), col("c_mktsegment").as("seg"),
+        to_date(lit("2025-06-01")).as("valid_from"),
+        lit(null).cast("date").as("valid_to"))
+    val inc = cust
+      .filter(col("c_custkey") % 7 === 0 || col("c_custkey") % 11 === 3 ||
+        col("c_custkey") % 13 === 5)
+      .select(col("c_custkey"),
+        when(col("c_custkey") % 7 === 0, concat(col("c_mktsegment"), lit("_X")))
+          .otherwise(col("c_mktsegment")).as("seg"))
+    graft.operators.Scd2.merge(cur, inc, Seq("c_custkey"), Seq("seg"),
+      lit("2026-02-01"))
+  }
 
   val queries: Seq[Query] = Seq(
 
@@ -219,14 +254,7 @@ object SinkQueries {
     // manifest-sized — at 100 TB this plans the publish without reading
     // anything twice.
     Query("io21_manifest_diff",
-      """WITH v1 AS (
-        |  SELECT o_orderkey, o_orderpriority AS pri, o_orderkey % 16 AS bkt,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders WHERE o_totalprice > 50000),
-        |v2 AS (
-        |  SELECT o_orderkey, pri, bkt,
-        |         CASE WHEN o_orderkey % 89 = 1 THEN cents + 1 ELSE cents END AS cents
-        |  FROM v1 WHERE o_orderkey % 97 <> 0),
+      s"""WITH ${OracleSnippets.publishedVersionCtes(16)},
         |m1 AS (SELECT pri, bkt, count(*) AS n1,
         |              md5(string_agg(CAST(o_orderkey AS VARCHAR) || ':'
         |                             || CAST(cents AS VARCHAR), '|'
@@ -409,14 +437,7 @@ object SinkQueries {
     // without touching data files — the storage-GC member of the
     // io19/io21/io22/io23 stats-and-manifests family.
     Query("io24_vacuum_planner",
-      """WITH v1 AS (
-        |  SELECT o_orderkey, o_orderpriority AS pri, o_orderkey % 8 AS bkt,
-        |         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders WHERE o_totalprice > 50000),
-        |v2 AS (
-        |  SELECT o_orderkey, pri, bkt,
-        |         CASE WHEN o_orderkey % 89 = 1 THEN cents + 1 ELSE cents END AS cents
-        |  FROM v1 WHERE o_orderkey % 97 <> 0),
+      s"""WITH ${OracleSnippets.publishedVersionCtes(8)},
         |v3 AS (
         |  SELECT o_orderkey, pri, bkt,
         |         CASE WHEN o_orderkey % 83 = 2 THEN cents + 5 ELSE cents END AS cents
@@ -529,12 +550,7 @@ object SinkQueries {
           .write.partitionBy("cell_id").parquet(s"$root/v2")
         val v2 = s.read.parquet(s"$root/v2")
           .withColumn("cell_id", col("cell_id").cast("long"))
-        val before = v1.groupBy("cell_id").agg(count(lit(1)).as("n_before"))
-        val after = v2.groupBy("cell_id")
-          .agg(count(lit(1)).as("n_after"),
-            md5(concat_ws(",",
-              transform(sort_array(collect_list(col("vec_id"))),
-                v => v.cast("string")))).as("ids_md5"))
+        val (before, after) = SimilaritySearch.cellMembership(v1, v2)
         // LEFT join: a cell whose members were ALL tombstoned has no v2
         // rows — it must still report (n_before, n_before, 0, NULL) like
         // the oracle's GROUP BY over `assigned` does, not vanish
@@ -583,16 +599,7 @@ object SinkQueries {
     // set; the batch changes segments for %7=0, re-sends %13=5
     // unchanged (must be a no-op), and introduces the %11=3 keys.
     Query("io03_scd2_merge",
-      """WITH cur AS (
-        |  SELECT c_custkey AS k, c_mktsegment AS seg,
-        |         DATE '2025-06-01' AS vf, CAST(NULL AS DATE) AS vt
-        |  FROM customer WHERE c_custkey % 11 <> 3),
-        |inc AS (
-        |  SELECT c_custkey AS k,
-        |         CASE WHEN c_custkey % 7 = 0 THEN c_mktsegment || '_X'
-        |              ELSE c_mktsegment END AS seg
-        |  FROM customer
-        |  WHERE c_custkey % 7 = 0 OR c_custkey % 11 = 3 OR c_custkey % 13 = 5),
+      s"""WITH ${OracleSnippets.Scd2InputCtes},
         |j AS (SELECT coalesce(c.k, i.k) AS k, c.seg AS cseg, i.seg AS iseg,
         |             c.vf, c.vt, c.k IS NOT NULL AS has_c, i.k IS NOT NULL AS has_i
         |      FROM cur c FULL JOIN inc i ON c.k = i.k)
@@ -606,19 +613,7 @@ object SinkQueries {
         |  UNION ALL
         |  SELECT k, iseg, DATE '2026-02-01', NULL FROM j
         |  WHERE NOT has_c OR (has_i AND cseg <> iseg))""".stripMargin) { (s, d) =>
-      val cust = Tables.customer(s, d)
-      val cur = cust.filter(col("c_custkey") % 11 =!= 3)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"),
-          to_date(lit("2025-06-01")).as("valid_from"),
-          lit(null).cast("date").as("valid_to"))
-      val inc = cust
-        .filter(col("c_custkey") % 7 === 0 || col("c_custkey") % 11 === 3 ||
-          col("c_custkey") % 13 === 5)
-        .select(col("c_custkey"),
-          when(col("c_custkey") % 7 === 0, concat(col("c_mktsegment"), lit("_X")))
-            .otherwise(col("c_mktsegment")).as("seg"))
-      graft.operators.Scd2.merge(cur, inc, Seq("c_custkey"), Seq("seg"),
-          lit("2026-02-01"))
+      scd2Merged(s, d)
         .select(col("c_custkey"), col("seg"),
           col("valid_from").cast("string").as("valid_from"),
           col("valid_to").cast("string").as("valid_to"))
@@ -632,34 +627,14 @@ object SinkQueries {
     // files are ever opened. The oracle recomputes that slice (new keys
     // + reopened versions) straight from the source table.
     Query("io04_scd2_partitioned",
-      """WITH cur AS (
-        |  SELECT c_custkey AS k, c_mktsegment AS seg
-        |  FROM customer WHERE c_custkey % 11 <> 3),
-        |inc AS (
-        |  SELECT c_custkey AS k,
-        |         CASE WHEN c_custkey % 7 = 0 THEN c_mktsegment || '_X'
-        |              ELSE c_mktsegment END AS seg
-        |  FROM customer
-        |  WHERE c_custkey % 7 = 0 OR c_custkey % 11 = 3 OR c_custkey % 13 = 5),
+      s"""WITH ${OracleSnippets.Scd2InputCtes},
         |j AS (SELECT c.seg AS cseg, i.seg AS iseg,
         |             c.k IS NOT NULL AS has_c, i.k IS NOT NULL AS has_i
         |      FROM cur c FULL JOIN inc i ON c.k = i.k)
         |SELECT iseg AS seg, count(*) AS n FROM j
         |WHERE NOT has_c OR (has_i AND cseg <> iseg)
         |GROUP BY 1""".stripMargin) { (s, d) =>
-      val cust = Tables.customer(s, d)
-      val cur = cust.filter(col("c_custkey") % 11 =!= 3)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"),
-          to_date(lit("2025-06-01")).as("valid_from"),
-          lit(null).cast("date").as("valid_to"))
-      val inc = cust
-        .filter(col("c_custkey") % 7 === 0 || col("c_custkey") % 11 === 3 ||
-          col("c_custkey") % 13 === 5)
-        .select(col("c_custkey"),
-          when(col("c_custkey") % 7 === 0, concat(col("c_mktsegment"), lit("_X")))
-            .otherwise(col("c_mktsegment")).as("seg"))
-      val merged = graft.operators.Scd2.merge(cur, inc, Seq("c_custkey"),
-        Seq("seg"), lit("2026-02-01"))
+      val merged = scd2Merged(s, d)
       val root = graft.core.TempDirs.scratch("graft_scd2_").toString
       merged.write.mode("overwrite").partitionBy("valid_from").parquet(root)
       s.read.parquet(root)
@@ -912,37 +887,14 @@ object SinkQueries {
     // latest 'U' replaces/inserts the balance, untouched rows pass
     // through. The oracle replays compaction with arg_max.
     Query("io14_cdc_apply",
-      """WITH ch AS (
-        |  SELECT CASE WHEN o_orderkey % 17 = 3 THEN o_custkey + 1000000
-        |              ELSE o_custkey END AS c_custkey,
-        |         CASE WHEN substring(md5(CAST(o_orderkey AS VARCHAR) || 'cdc'),
-        |                             1, 1) = '0' THEN 'D' ELSE 'U' END AS op,
-        |         o_totalprice AS bal,
-        |         datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |           * 100000000 + o_orderkey AS ordk
-        |  FROM orders),
-        |latest AS (
-        |  SELECT c_custkey, arg_max(op, ordk) AS op, arg_max(bal, ordk) AS nb
-        |  FROM ch GROUP BY 1),
-        |j AS (
-        |  SELECT coalesce(b.c_custkey, l.c_custkey) AS k,
-        |         b.c_acctbal AS bb, l.op, l.nb
-        |  FROM customer b FULL JOIN latest l ON b.c_custkey = l.c_custkey)
+      s"""WITH ${OracleSnippets.CdcMergeCtes}
         |SELECT k AS c_custkey,
         |       CASE WHEN op = 'U' THEN nb ELSE bb END AS bal,
         |       CASE WHEN op IS NULL THEN 'base' ELSE 'upsert' END AS cdc_src
         |FROM j WHERE op IS NULL OR op <> 'D'""".stripMargin) { (s, d) =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_acctbal").as("bal"))
-      val day = datediff(to_date(col("o_orderdate")), lit("1970-01-01")).cast("long")
-      val changes = Tables.orders(s, d).select(
-        when(col("o_orderkey") % 17 === 3, col("o_custkey") + 1000000L)
-          .otherwise(col("o_custkey")).as("c_custkey"),
-        when(substring(md5(concat(col("o_orderkey").cast("string"), lit("cdc"))),
-          1, 1) === "0", "D").otherwise("U").as("op"),
-        col("o_totalprice").as("bal"),
-        (day * 100000000L + col("o_orderkey")).as("ordk"))
-      graft.operators.Cdc.applyChanges(base, changes,
+      graft.operators.Cdc.applyChanges(base, cdcChanges(s, d),
         Seq("c_custkey"), opCol = "op", ordCol = "ordk")
     },
 

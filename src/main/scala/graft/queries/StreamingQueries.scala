@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Query, Tables}
 import graft.streaming.Streams
@@ -18,6 +19,21 @@ import graft.streaming.Streams
   * batch oracle cannot.
   */
 object StreamingQueries {
+
+  /** The click and purchase event streams of st04/st09's interval join:
+    * `(user_id, imp_id, imp_ts)` and `(user_id, conv_id, conv_ts)`, each
+    * its own source over the landed events (oracle twin
+    * `OracleSnippets.ClickConversionSql`). */
+  private[queries] def clickStreams(ss: SparkSession, d: String): (DataFrame, DataFrame) = {
+    def src() = {
+      val raw = Streams.symlinkSource(ss, d, "events")
+      raw.withColumn("ts", Tables.canonTs(raw.schema))
+    }
+    (src().filter(col("event_type") === "click")
+       .select(col("user_id"), col("event_id").as("imp_id"), col("ts").as("imp_ts")),
+     src().filter(col("event_type") === "purchase")
+       .select(col("user_id"), col("event_id").as("conv_id"), col("ts").as("conv_ts")))
+  }
 
   val queries: Seq[Query] = Seq(
 
@@ -109,23 +125,9 @@ object StreamingQueries {
     // click by the same user, both sides incremental. Inner interval
     // joins emit on match and keep watermark-bounded state; run to
     // completion the pair set must equal the batch interval join.
-    Query("st04_stream_interval_join",
-      """SELECT a.event_id AS imp_id, b.event_id AS conv_id
-        |FROM events a JOIN events b ON a.user_id = b.user_id
-        |  AND a.event_type = 'click' AND b.event_type = 'purchase'
-        |  AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 30 MINUTE""".stripMargin) {
+    Query("st04_stream_interval_join", OracleSnippets.ClickConversionSql) {
       (s, d) => {
-        val ss = Streams.rowSession(s)
-        def src() = {
-          val raw = Streams.symlinkSource(ss, d, "events")
-          raw.withColumn("ts", Tables.canonTs(raw.schema))
-        }
-        val imps = src().filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("imp_id"),
-            col("ts").as("imp_ts"))
-        val convs = src().filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("conv_id"),
-            col("ts").as("conv_ts"))
+        val (imps, convs) = clickStreams(Streams.rowSession(s), d)
         val joined = Streams.intervalJoin(imps, convs, "user_id",
           "imp_ts", "conv_ts", maxDelay = "30 minutes", watermark = "10 days")
         Streams.memorySink(joined, "append").select("imp_id", "conv_id")
@@ -450,14 +452,11 @@ object StreamingQueries {
     // The oracle restates exactly that — a streaming semantics pin no
     // batch join can express.
     Query("st09_stream_outer_join",
-      """WITH wm AS (SELECT date_trunc('millisecond', least(
+      s"""WITH wm AS (SELECT date_trunc('millisecond', least(
         |    (SELECT max(ts) FROM events WHERE event_type = 'click'),
         |    (SELECT max(ts) FROM events WHERE event_type = 'purchase')))
         |    - INTERVAL 1 HOUR AS w),
-        |m AS (SELECT a.event_id AS imp_id, b.event_id AS conv_id
-        |      FROM events a JOIN events b ON a.user_id = b.user_id
-        |        AND a.event_type = 'click' AND b.event_type = 'purchase'
-        |        AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 30 MINUTE)
+        |m AS (${OracleSnippets.ClickConversionSql})
         |SELECT imp_id, conv_id FROM m
         |UNION ALL
         |SELECT a.event_id, CAST(NULL AS BIGINT) FROM events a, wm
@@ -465,17 +464,7 @@ object StreamingQueries {
         |  AND a.ts + INTERVAL 30 MINUTE < wm.w
         |  AND NOT EXISTS (SELECT 1 FROM m WHERE m.imp_id = a.event_id)""".stripMargin) {
       (s, d) => {
-        val ss = Streams.rowSession(s)
-        def src() = {
-          val raw = Streams.symlinkSource(ss, d, "events")
-          raw.withColumn("ts", Tables.canonTs(raw.schema))
-        }
-        val imps = src().filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("imp_id"),
-            col("ts").as("imp_ts"))
-        val convs = src().filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("conv_id"),
-            col("ts").as("conv_ts"))
+        val (imps, convs) = clickStreams(Streams.rowSession(s), d)
         val joined = Streams.intervalJoin(imps, convs, "user_id",
           "imp_ts", "conv_ts", maxDelay = "30 minutes",
           watermark = "1 hour", joinType = "leftOuter")
@@ -538,40 +527,11 @@ object StreamingQueries {
     // this watches the LEVEL (small persistent shifts), both with
     // fixed-size state.
     Query("st14_stream_cusum",
-      """WITH RECURSIVE ev AS (
+      s"""WITH RECURSIVE ev AS (
         |  SELECT user_id, event_id, CAST(value AS DOUBLE) AS x,
         |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
         |  FROM events),
-        |scan AS (
-        |  SELECT user_id, rn, event_id, x AS ref,
-        |         CAST(0 AS DOUBLE) AS sp, CAST(0 AS DOUBLE) AS sn, FALSE AS alarm,
-        |         CAST(0 AS DOUBLE) AS spc, CAST(0 AS DOUBLE) AS snc
-        |  FROM ev WHERE rn = 1
-        |  UNION ALL
-        |  SELECT e.user_id, e.rn, e.event_id, s.ref,
-        |         greatest(CAST(0 AS DOUBLE),
-        |                  s.spc + (e.x - s.ref - 0.25 * abs(s.ref))),
-        |         greatest(CAST(0 AS DOUBLE),
-        |                  s.snc + (s.ref - e.x - 0.25 * abs(s.ref))),
-        |         greatest(CAST(0 AS DOUBLE),
-        |                  s.spc + (e.x - s.ref - 0.25 * abs(s.ref))) > abs(s.ref)
-        |           OR greatest(CAST(0 AS DOUBLE),
-        |                  s.snc + (s.ref - e.x - 0.25 * abs(s.ref))) > abs(s.ref),
-        |         CASE WHEN greatest(CAST(0 AS DOUBLE),
-        |                  s.spc + (e.x - s.ref - 0.25 * abs(s.ref))) > abs(s.ref)
-        |                OR greatest(CAST(0 AS DOUBLE),
-        |                  s.snc + (s.ref - e.x - 0.25 * abs(s.ref))) > abs(s.ref)
-        |              THEN CAST(0 AS DOUBLE)
-        |              ELSE greatest(CAST(0 AS DOUBLE),
-        |                  s.spc + (e.x - s.ref - 0.25 * abs(s.ref))) END,
-        |         CASE WHEN greatest(CAST(0 AS DOUBLE),
-        |                  s.spc + (e.x - s.ref - 0.25 * abs(s.ref))) > abs(s.ref)
-        |                OR greatest(CAST(0 AS DOUBLE),
-        |                  s.snc + (s.ref - e.x - 0.25 * abs(s.ref))) > abs(s.ref)
-        |              THEN CAST(0 AS DOUBLE)
-        |              ELSE greatest(CAST(0 AS DOUBLE),
-        |                  s.snc + (s.ref - e.x - 0.25 * abs(s.ref))) END
-        |  FROM ev e JOIN scan s ON e.user_id = s.user_id AND e.rn = s.rn + 1)
+        |${OracleSnippets.cusumScan("user_id", "event_id")}
         |SELECT user_id, event_id, sp AS s_pos, sn AS s_neg, alarm
         |FROM scan""".stripMargin) {
       (s, d) => {
@@ -657,36 +617,13 @@ col("userId").as("user_id"), col("eventId").as("event_id"),
     // column (which sequential folding deliberately does not preserve —
     // a row upserted in batch 1 is 'base' to batch 2).
     Query("st16_stream_cdc_apply",
-      """WITH ch AS (
-        |  SELECT CASE WHEN o_orderkey % 17 = 3 THEN o_custkey + 1000000
-        |              ELSE o_custkey END AS c_custkey,
-        |         CASE WHEN substring(md5(CAST(o_orderkey AS VARCHAR) || 'cdc'),
-        |                             1, 1) = '0' THEN 'D' ELSE 'U' END AS op,
-        |         o_totalprice AS bal,
-        |         datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |           * 100000000 + o_orderkey AS ordk
-        |  FROM orders),
-        |latest AS (
-        |  SELECT c_custkey, arg_max(op, ordk) AS op, arg_max(bal, ordk) AS nb
-        |  FROM ch GROUP BY 1),
-        |j AS (
-        |  SELECT coalesce(b.c_custkey, l.c_custkey) AS k,
-        |         b.c_acctbal AS bb, l.op, l.nb
-        |  FROM customer b FULL JOIN latest l ON b.c_custkey = l.c_custkey)
+      s"""WITH ${OracleSnippets.CdcMergeCtes}
         |SELECT k AS c_custkey,
         |       CASE WHEN op = 'U' THEN nb ELSE bb END AS bal
         |FROM j WHERE op IS NULL OR op <> 'D'""".stripMargin) {
       (s, d) => {
         val ss = Streams.rowSession(s)
-        val day = datediff(to_date(col("o_orderdate")), lit("1970-01-01")).cast("long")
-        val changes = Tables.orders(ss, d).select(
-          when(col("o_orderkey") % 17 === 3, col("o_custkey") + 1000000L)
-            .otherwise(col("o_custkey")).as("c_custkey"),
-          when(substring(md5(concat(col("o_orderkey").cast("string"), lit("cdc"))),
-            1, 1) === "0", "D").otherwise("U").as("op"),
-          col("o_totalprice").as("bal"),
-          (day * 100000000L + col("o_orderkey")).as("ordk"),
-          to_date(col("o_orderdate")).as("od"))
+        val changes = SinkQueries.cdcChanges(ss, d, to_date(col("o_orderdate")).as("od"))
         val landing = graft.core.TempDirs.scratch("st16_landing_")
         val feed = changes.drop("od")
         Streams.land(landing, changes.filter(col("od") < "1998-01-01").drop("od"),
@@ -955,13 +892,7 @@ col("userId").as("user_id"), col("eventId").as("event_id"),
     // formula; batch/stream parity with m12's one-shot table is pinned
     // by construction (same operator, same store layout).
     Query("st24_stream_decoded_stats",
-      """WITH s AS (
-        |  SELECT doc_id,
-        |         CAST(sum((doc_id*7 + 3*x.x + 5*y.y) % 256) AS BIGINT) AS sr
-        |  FROM documents,
-        |       LATERAL (SELECT unnest(range(32)) AS x) x,
-        |       LATERAL (SELECT unnest(range(32)) AS y) y
-        |  GROUP BY 1)
+      s"""WITH ${OracleSnippets.RedSumCtes}
         |SELECT CAST(count(*) AS BIGINT) AS n_images,
         |       CAST(count(*) * 1024 AS BIGINT) AS n_px,
         |       CAST(sum(sr) AS BIGINT) AS sum_r

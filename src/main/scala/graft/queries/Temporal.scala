@@ -1,8 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Query, Tables}
+import OracleSnippets.{SeasonalCtes, cusumScan, dailyTypeSumCte}
 import graft.operators.{Sessionize, Windows}
 
 /** Advanced window / temporal operators (SURVEY.md §2.5) over the events
@@ -34,10 +36,7 @@ object Temporal {
   /** w29's oracle, shared verbatim by st13 (the streaming run of the
     * same two-state recurrence must hash-match the batch SQL). */
   private[queries] val HoltOracleSql: String =
-    """WITH RECURSIVE ev AS (
-      |  SELECT user_id, event_id, value,
-      |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-      |  FROM events),
+    s"""WITH RECURSIVE ${OracleSnippets.UserStepsCte},
       |scan AS (
       |  SELECT user_id, rn, event_id,
       |         CAST(value AS DOUBLE) AS l, CAST(0.0 AS DOUBLE) AS b
@@ -55,10 +54,7 @@ object Temporal {
   /** w36's oracle, shared verbatim by st17 (the streaming run of the
     * same adaptive-gain recurrence must hash-match the batch SQL). */
   private[queries] val KalmanOracleSql: String =
-    """WITH RECURSIVE ev AS (
-      |  SELECT user_id, event_id, value,
-      |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-      |  FROM events),
+    s"""WITH RECURSIVE ${OracleSnippets.UserStepsCte},
       |scan AS (
       |  SELECT user_id, rn, event_id,
       |         CAST(value AS DOUBLE) AS x, CAST(1.0 AS DOUBLE) AS p
@@ -71,6 +67,53 @@ object Temporal {
       |  FROM ev e JOIN scan s ON e.user_id = s.user_id AND e.rn = s.rn + 1)
       |SELECT user_id, event_id, x AS kalman_level, p AS kalman_var
       |FROM scan""".stripMargin
+
+  /** The per-type daily series the day-axis rows start from: one row
+    * per event type and epoch `day` whose one aggregate is `item` of the
+    * exact DECIMAL(18,4) value sum. The oracle twin is
+    * `OracleSnippets.dailyTypeSumCte`. */
+  private[queries] def dailyTypeSums(s: SparkSession, d: String)(
+      item: Column => Column): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type"),
+        datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
+      .agg(item(sum(col("value").cast("decimal(18,4)"))))
+
+  /** j17's strict as-of lookup (shared by j20): each order with its
+    * customer's max price on the latest earlier order date, rejected
+    * past `toleranceSecs` (oracle twin `OracleSnippets.asOfPriceSql`). */
+  private[queries] def priorPrice(s: SparkSession, d: String,
+                                  toleranceSecs: Option[Long]): DataFrame = {
+    val o = Tables.orders(s, d)
+    val snap = o.select(col("o_custkey"), col("o_orderdate").as("snap_d"),
+        col("o_totalprice"))
+      .groupBy("o_custkey", "snap_d")
+      .agg(max("o_totalprice").as("prev_price"))
+    graft.operators.AsOfJoin.asOf(
+        o.select("o_orderkey", "o_custkey", "o_orderdate"), snap,
+        key = "o_custkey", leftTs = "o_orderdate", rightTs = "snap_d",
+        strict = true, toleranceSecs = toleranceSecs)
+      .select("o_orderkey", "o_custkey", "prev_price")
+  }
+
+  /** w34's decomposition inputs, shared by a59: the daily series with
+    * its centred ±3-day trend, detrended `det` and `dow` slot (`t2`), and
+    * the per-dow seasonal mean (`seas`). The oracle twin is
+    * `OracleSnippets.SeasonalCtes`. */
+  private[queries] def seasonalParts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val w = Window.partitionBy("event_type").orderBy("day").rangeBetween(-3, 3)
+    val t2 = dailyTypeSums(s, d)(_.as("xd"))
+      .withColumn("x", col("xd").cast("double"))
+      .withColumn("trend",
+        sum("xd").over(w).cast("double") / count(lit(1)).over(w))
+      .withColumn("det", col("x") - col("trend"))
+      .withColumn("dow", col("day") % 7)
+      .localCheckpoint() // seasonal agg + join-back share one window pass
+    val seas = t2.groupBy("event_type", "dow")
+      .agg((sum(round(col("det"), 6).cast("decimal(18,6)")).cast("double")
+        / count(lit(1))).as("seasonal"))
+    (t2, seas)
+  }
 
   val queries: Seq[Query] = Seq(
 
@@ -158,25 +201,8 @@ object Temporal {
     // The engine never joins: both sides union, sort per key, and the
     // payload forward-fills (AsOfJoin.asOf, strict). The oracle is
     // DuckDB's native ASOF LEFT JOIN with the same strict bound.
-    Query("j17_asof_join",
-      """WITH snap AS (
-        |  SELECT o_custkey AS k, o_orderdate AS d, max(o_totalprice) AS prev_price
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT o.o_orderkey, o.o_custkey, s.prev_price
-        |FROM orders o ASOF LEFT JOIN snap s
-        |  ON o.o_custkey = s.k AND o.o_orderdate > s.d""".stripMargin) {
-      (s, d) => {
-        val o = Tables.orders(s, d)
-        val snap = o.select(col("o_custkey"), col("o_orderdate").as("snap_d"),
-            col("o_totalprice"))
-          .groupBy("o_custkey", "snap_d")
-          .agg(max("o_totalprice").as("prev_price"))
-        graft.operators.AsOfJoin.asOf(
-            o.select("o_orderkey", "o_custkey", "o_orderdate"), snap,
-            key = "o_custkey", leftTs = "o_orderdate", rightTs = "snap_d",
-            strict = true)
-          .select("o_orderkey", "o_custkey", "prev_price")
-      }
+    Query("j17_asof_join", OracleSnippets.asOfPriceSql("s.prev_price")) {
+      (s, d) => priorPrice(s, d, toleranceSecs = None)
     },
 
     // ---- J20: as-of join with staleness tolerance ---------------------------
@@ -186,27 +212,10 @@ object Temporal {
     // enriching today's rows with fossil state. Same one-exchange plan;
     // the matched timestamp rides inside the payload struct and the
     // gate is a post-fill projection.
-    Query("j20_asof_tolerance",
-      """WITH snap AS (
-        |  SELECT o_custkey AS k, o_orderdate AS d, max(o_totalprice) AS prev_price
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT o.o_orderkey, o.o_custkey,
-        |       CASE WHEN o.o_orderdate - s.d <= INTERVAL 7 DAY
-        |            THEN s.prev_price END AS prev_price
-        |FROM orders o ASOF LEFT JOIN snap s
-        |  ON o.o_custkey = s.k AND o.o_orderdate > s.d""".stripMargin) {
-      (s, d) => {
-        val o = Tables.orders(s, d)
-        val snap = o.select(col("o_custkey"), col("o_orderdate").as("snap_d"),
-            col("o_totalprice"))
-          .groupBy("o_custkey", "snap_d")
-          .agg(max("o_totalprice").as("prev_price"))
-        graft.operators.AsOfJoin.asOf(
-            o.select("o_orderkey", "o_custkey", "o_orderdate"), snap,
-            key = "o_custkey", leftTs = "o_orderdate", rightTs = "snap_d",
-            strict = true, toleranceSecs = Some(7L * 86400))
-          .select("o_orderkey", "o_custkey", "prev_price")
-      }
+    Query("j20_asof_tolerance", OracleSnippets.asOfPriceSql(
+      """CASE WHEN o.o_orderdate - s.d <= INTERVAL 7 DAY
+        |            THEN s.prev_price END AS prev_price""".stripMargin)) {
+      (s, d) => priorPrice(s, d, toleranceSecs = Some(7L * 86400))
     },
 
     // ---- W11b: native session_window (idiomatic counterpart of w11) ---------
@@ -307,10 +316,7 @@ object Temporal {
     // oracle replays the fold with the identical operation order, so
     // the IEEE doubles hash-match exactly.
     Query("w18_ewma",
-      """WITH RECURSIVE ev AS (
-        |  SELECT user_id, event_id, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events),
+      s"""WITH RECURSIVE ${OracleSnippets.UserStepsCte},
         |scan AS (
         |  SELECT user_id, rn, event_id, CAST(value AS DOUBLE) AS y
         |  FROM ev WHERE rn = 1
@@ -344,11 +350,7 @@ object Temporal {
     // be order-stable cross-engine). Output is |types| x |days| rows
     // regardless of event volume.
     Query("w30_holt_winters",
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS x
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE ${dailyTypeSumCte(xs => s"CAST($xs AS DOUBLE) AS x")},
         |ev AS (SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
         |       FROM d),
         |scan AS (
@@ -371,10 +373,7 @@ object Temporal {
         |       sv[CAST(day % 7 + 1 AS INT)] AS seasonal
         |FROM scan""".stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(sum(col("value").cast("decimal(18,4)")).cast("double").as("x"))
+        val daily = dailyTypeSums(s, d)(_.cast("double").as("x"))
         graft.operators.Sessionize.holtWinters(daily, "event_type", "day", "x",
             period = 7, alpha = 0.5, beta = 0.25, gamma = 0.25)
           .select("event_type", "day", "level", "trend", "seasonal")
@@ -391,50 +390,14 @@ object Temporal {
     // the identical operation order through a recursive CTE (w29/w30
     // precedent), dyadic 0.25 and abs keep the doubles bit-identical.
     Query("w32_cusum",
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS x
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE ${dailyTypeSumCte(xs => s"CAST($xs AS DOUBLE) AS x")},
         |ev AS (SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
         |       FROM d),
-        |scan AS (
-        |  SELECT event_type, rn, day, x AS ref,
-        |         CAST(0 AS DOUBLE) AS sp, CAST(0 AS DOUBLE) AS sn, FALSE AS alarm,
-        |         CAST(0 AS DOUBLE) AS spc, CAST(0 AS DOUBLE) AS snc
-        |  FROM ev WHERE rn = 1
-        |  UNION ALL
-        |  SELECT e.event_type, e.rn, e.day, s.ref,
-        |         greatest(CAST(0 AS DOUBLE),
-        |                  s.spc + (e.x - s.ref - 0.25 * abs(s.ref))),
-        |         greatest(CAST(0 AS DOUBLE),
-        |                  s.snc + (s.ref - e.x - 0.25 * abs(s.ref))),
-        |         greatest(CAST(0 AS DOUBLE),
-        |                  s.spc + (e.x - s.ref - 0.25 * abs(s.ref))) > abs(s.ref)
-        |           OR greatest(CAST(0 AS DOUBLE),
-        |                  s.snc + (s.ref - e.x - 0.25 * abs(s.ref))) > abs(s.ref),
-        |         CASE WHEN greatest(CAST(0 AS DOUBLE),
-        |                  s.spc + (e.x - s.ref - 0.25 * abs(s.ref))) > abs(s.ref)
-        |                OR greatest(CAST(0 AS DOUBLE),
-        |                  s.snc + (s.ref - e.x - 0.25 * abs(s.ref))) > abs(s.ref)
-        |              THEN CAST(0 AS DOUBLE)
-        |              ELSE greatest(CAST(0 AS DOUBLE),
-        |                  s.spc + (e.x - s.ref - 0.25 * abs(s.ref))) END,
-        |         CASE WHEN greatest(CAST(0 AS DOUBLE),
-        |                  s.spc + (e.x - s.ref - 0.25 * abs(s.ref))) > abs(s.ref)
-        |                OR greatest(CAST(0 AS DOUBLE),
-        |                  s.snc + (s.ref - e.x - 0.25 * abs(s.ref))) > abs(s.ref)
-        |              THEN CAST(0 AS DOUBLE)
-        |              ELSE greatest(CAST(0 AS DOUBLE),
-        |                  s.snc + (s.ref - e.x - 0.25 * abs(s.ref))) END
-        |  FROM ev e JOIN scan s ON e.event_type = s.event_type AND e.rn = s.rn + 1)
+        |${cusumScan("event_type", "day")}
         |SELECT event_type, day, sp AS s_pos, sn AS s_neg, alarm
         |FROM scan""".stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(sum(col("value").cast("decimal(18,4)")).cast("double").as("x"))
+        val daily = dailyTypeSums(s, d)(_.cast("double").as("x"))
         graft.operators.Sessionize.cusum(daily, "event_type", "day", "x",
             slackFrac = 0.25, threshFrac = 1.0)
           .select("event_type", "day", "s_pos", "s_neg", "alarm")
@@ -453,44 +416,13 @@ object Temporal {
     // single fixed-order scalar. Seasonal join-back broadcasts
     // (|types| x 7 rows).
     Query("w34_seasonal_decompose",
-      """WITH d AS (
-        |  SELECT event_type,
-        |         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-        |         sum(CAST(value AS DECIMAL(18,4))) AS xd
-        |  FROM events GROUP BY 1, 2),
-        |t AS (
-        |  SELECT event_type, day, CAST(xd AS DOUBLE) AS x,
-        |         CAST(sum(xd) OVER w AS DOUBLE) / (count(*) OVER w) AS trend,
-        |         day % 7 AS dow
-        |  FROM d
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |               RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |t2 AS (SELECT *, x - trend AS det FROM t),
-        |s AS (
-        |  SELECT event_type, dow,
-        |         CAST(sum(CAST(round(det, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |           / count(*) AS seasonal
-        |  FROM t2 GROUP BY 1, 2)
+      s"""WITH $SeasonalCtes
         |SELECT t2.event_type, t2.day, t2.x, t2.trend, s.seasonal,
         |       t2.det - s.seasonal AS resid
         |FROM t2 JOIN s ON t2.event_type = s.event_type AND t2.dow = s.dow"""
         .stripMargin) {
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"))
-          .agg(sum(col("value").cast("decimal(18,4)")).as("xd"))
-        val w = Window.partitionBy("event_type").orderBy("day").rangeBetween(-3, 3)
-        val t2 = daily
-          .withColumn("x", col("xd").cast("double"))
-          .withColumn("trend",
-            sum("xd").over(w).cast("double") / count(lit(1)).over(w))
-          .withColumn("det", col("x") - col("trend"))
-          .withColumn("dow", col("day") % 7)
-          .localCheckpoint() // seasonal agg + join-back share one window pass
-        val seas = t2.groupBy("event_type", "dow")
-          .agg((sum(round(col("det"), 6).cast("decimal(18,6)")).cast("double")
-            / count(lit(1))).as("seasonal"))
+        val (t2, seas) = seasonalParts(s, d)
         t2.join(broadcast(seas), Seq("event_type", "dow"))
           .select(col("event_type"), col("day"), col("x"), col("trend"),
             col("seasonal"), (col("det") - col("seasonal")).as("resid"))

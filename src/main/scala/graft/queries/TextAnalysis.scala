@@ -1,9 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Query, Tables}
 import graft.functions.TextFunctions._
+import OracleSnippets.{KnProb, KnStatCtes, addOneLmCtes, wordBigramCtes}
 
 /** Text-analysis operators over the documents table: token counting,
   * quality scoring, language ID, fingerprinting, exact dedup, and exact
@@ -67,6 +69,68 @@ object TextAnalysis {
     "engine" -> "column", "engine" -> "query",
     "perf" -> "slow", "perf" -> "fast", "perf" -> "small",
     "perf" -> "batch", "perf" -> "filter")
+
+  /** Every adjacent word pair of each document as `(<keep>, w1, w2)`
+    * (t49, t52, t55; oracle twin `OracleSnippets.wordBigramCtes`). */
+  private[queries] def wordBigrams(s: SparkSession, d: String, keep: String*): DataFrame = {
+    val t = tokens(col("text"))
+    Tables.documents(s, d)
+      .select(keep.map(col) :+ explode(bind1(t) { tt =>
+        when(size(tt) >= 2, transform(sequence(lit(0), size(tt) - 2),
+          (i: Column) => struct(
+            element_at(tt, i + 1).as("w1"), element_at(tt, i + 2).as("w2"))))
+          .otherwise(array())
+      }).as("bg"): _*)
+      .select(keep.map(col) :+ col("bg.w1").as("w1") :+ col("bg.w2").as("w2"): _*)
+  }
+
+  /** t49's Kneser-Ney inputs (shared by t55): the bigram counts `c` of
+    * `big(w1, w2)` with c >= 5, joined to their continuation counts and
+    * the bigram-type total that [[knProb]] reads (oracle twin
+    * `OracleSnippets.KnStatCtes`). */
+  private[queries] def knScored(big: DataFrame): DataFrame = {
+    val bc = big.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
+      .localCheckpoint() // 4 downstream aggs share the one bigram count
+    val w1s = bc.groupBy("w1").agg(sum("c").as("cw1"), count(lit(1)).as("n1fwd"))
+    val w2s = bc.groupBy("w2").agg(count(lit(1)).as("n1back"))
+    val tot = bc.agg(count(lit(1)).as("nbt"))
+    bc.filter(col("c") >= 5)
+      .join(w1s, "w1").join(w2s, "w2").crossJoin(broadcast(tot))
+  }
+
+  /** The discount-0.75 Kneser-Ney bigram probability over [[knScored]]
+    * (oracle twin `OracleSnippets.KnProb`). */
+  private[queries] def knProb: Column =
+    greatest(col("c").cast("double") - lit(0.75), lit(0.0)) / col("cw1").cast("double") +
+      lit(0.75) * col("n1fwd").cast("double") / col("cw1").cast("double") *
+        (col("n1back").cast("double") / col("nbt").cast("double"))
+
+  /** t34's add-one bigram LM (shared by t59), trained on the
+    * doc_id % 10 != 0 slice, applied to every bigram of `scored` as
+    * `(bg, prev, <keep>, …, nll)` with `nll` the 6 dp-rounded DECIMAL
+    * log-probability (oracle twin `OracleSnippets.addOneLmCtes`). */
+  private[queries] def addOneNll(s: SparkSession, d: String, scored: DataFrame,
+                                 keep: Column*): DataFrame = {
+    val train = Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0)
+    def bigramsOf(df: DataFrame, cols: Column*) =
+      df.select(cols :+ explode(adjacentPairs(col("text"))).as("bg"): _*)
+    val c2 = bigramsOf(train, col("doc_id")).groupBy("bg")
+      .agg(count(lit(1)).as("c2"))
+    val c1 = c2
+      .select(split(col("bg"), " ").getItem(0).as("prev"), col("c2"))
+      .groupBy("prev").agg(sum(col("c2")).as("c1"))
+    val vDf = train.select(explode(tokens(col("text"))).as("tk"))
+      .agg(count_distinct(col("tk")).as("v"))
+    bigramsOf(scored, keep: _*)
+      .withColumn("prev", split(col("bg"), " ").getItem(0))
+      .join(c2, Seq("bg"), "left")
+      .join(c1, Seq("prev"), "left")
+      .crossJoin(broadcast(vDf))
+      .withColumn("nll",
+        round(log((coalesce(col("c2"), lit(0)) + lit(1.0))
+          / (coalesce(col("c1"), lit(0)) + col("v"))), 6)
+          .cast("decimal(18,6)"))
+  }
 
   val queries: Seq[Query] = Seq(
 
@@ -147,12 +211,7 @@ object TextAnalysis {
     // doc-cardinality x doc-cardinality on doc_id. Every stage partial-
     // aggregates; nothing data-sized shuffles on the skewed key.
     Query("t57_doc_novelty",
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t) - 1),
-        |           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        |  WHERE len(t) >= 3),
+      s"""WITH ${OracleSnippets.DocTrigramCte},
         |w AS (SELECT doc_id, s, min(doc_id) OVER (PARTITION BY s) AS first_doc
         |      FROM sh)
         |SELECT doc_id, count(*) AS n_shingles,
@@ -362,13 +421,8 @@ object TextAnalysis {
     // Corpus docs sharing >= 2 distinct word trigrams with the benchmark
     // slice (doc_id % 40 = 0) get flagged for removal before training.
     Query("t14_decontaminate",
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t) - 1),
-        |           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        |  WHERE len(t) >= 3
-        |), b AS (SELECT DISTINCT s FROM sh WHERE doc_id % 40 = 0),
+      s"""WITH ${OracleSnippets.DocTrigramCte},
+        |b AS (SELECT DISTINCT s FROM sh WHERE doc_id % 40 = 0),
         |c AS (SELECT doc_id, s FROM sh WHERE doc_id % 40 <> 0)
         |SELECT doc_id, count(*) AS n_overlap
         |FROM c JOIN b USING (s)
@@ -508,12 +562,7 @@ object TextAnalysis {
     // precedent); the oracle recomputes with string grams, so agreement
     // also certifies the hashed path collision-free on this corpus.
     Query("t19_ngram_novelty",
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t) - 1),
-        |           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        |  WHERE len(t) >= 3),
+      s"""WITH ${OracleSnippets.DocTrigramCte},
         |first AS (SELECT s, min(doc_id) AS first_doc FROM sh GROUP BY 1)
         |SELECT doc_id, count(*) AS n_grams,
         |       count(*) FILTER (first_doc < doc_id) AS n_seen,
@@ -716,76 +765,8 @@ object TextAnalysis {
     // selection, tie-breaks, and merge semantics stay hash-pinned
     // cross-engine either way.
     Query("t26_bpe_merges",
-      """WITH d0 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |p1 AS (SELECT p[1] AS l, p[2] AS r FROM (
-        |   SELECT unnest(list_transform(range(1, len(t)), i -> [t[i], t[i+1]])) AS p
-        |   FROM d0)
-        |   GROUP BY 1, 2 ORDER BY count(*) DESC, l, r LIMIT 1),
-        |e1 AS (SELECT doc_id, i, t[i] AS x,
-        |        coalesce(t[i] = p1.l AND t[i+1] = p1.r, false) AS c,
-        |        p1.l AS l, p1.r AS r
-        |  FROM (SELECT doc_id, unnest(range(1, len(t)+1)) AS i, t FROM d0), p1),
-        |w1 AS (SELECT *, CASE WHEN c THEN i - row_number()
-        |            OVER (PARTITION BY doc_id, c ORDER BY i) END AS isl
-        |  FROM e1),
-        |k1 AS (SELECT *, CASE WHEN c THEN row_number()
-        |            OVER (PARTITION BY doc_id, isl ORDER BY i) % 2 = 1
-        |           ELSE false END AS taken
-        |  FROM w1),
-        |o1 AS (SELECT doc_id, i,
-        |        CASE WHEN taken THEN l || '+' || r
-        |             WHEN lag(taken, 1, false) OVER (PARTITION BY doc_id ORDER BY i)
-        |               THEN NULL
-        |             ELSE x END AS tok
-        |  FROM k1),
-        |d1 AS (SELECT doc_id, list(tok ORDER BY i) AS t
-        |  FROM o1 WHERE tok IS NOT NULL GROUP BY doc_id),
-        |p2 AS (SELECT p[1] AS l, p[2] AS r FROM (
-        |   SELECT unnest(list_transform(range(1, len(t)), i -> [t[i], t[i+1]])) AS p
-        |   FROM d1)
-        |   GROUP BY 1, 2 ORDER BY count(*) DESC, l, r LIMIT 1),
-        |e2 AS (SELECT doc_id, i, t[i] AS x,
-        |        coalesce(t[i] = p2.l AND t[i+1] = p2.r, false) AS c,
-        |        p2.l AS l, p2.r AS r
-        |  FROM (SELECT doc_id, unnest(range(1, len(t)+1)) AS i, t FROM d1), p2),
-        |w2 AS (SELECT *, CASE WHEN c THEN i - row_number()
-        |            OVER (PARTITION BY doc_id, c ORDER BY i) END AS isl
-        |  FROM e2),
-        |k2 AS (SELECT *, CASE WHEN c THEN row_number()
-        |            OVER (PARTITION BY doc_id, isl ORDER BY i) % 2 = 1
-        |           ELSE false END AS taken
-        |  FROM w2),
-        |o2 AS (SELECT doc_id, i,
-        |        CASE WHEN taken THEN l || '+' || r
-        |             WHEN lag(taken, 1, false) OVER (PARTITION BY doc_id ORDER BY i)
-        |               THEN NULL
-        |             ELSE x END AS tok
-        |  FROM k2),
-        |d2 AS (SELECT doc_id, list(tok ORDER BY i) AS t
-        |  FROM o2 WHERE tok IS NOT NULL GROUP BY doc_id),
-        |p3 AS (SELECT p[1] AS l, p[2] AS r FROM (
-        |   SELECT unnest(list_transform(range(1, len(t)), i -> [t[i], t[i+1]])) AS p
-        |   FROM d2)
-        |   GROUP BY 1, 2 ORDER BY count(*) DESC, l, r LIMIT 1),
-        |e3 AS (SELECT doc_id, i, t[i] AS x,
-        |        coalesce(t[i] = p3.l AND t[i+1] = p3.r, false) AS c,
-        |        p3.l AS l, p3.r AS r
-        |  FROM (SELECT doc_id, unnest(range(1, len(t)+1)) AS i, t FROM d2), p3),
-        |w3 AS (SELECT *, CASE WHEN c THEN i - row_number()
-        |            OVER (PARTITION BY doc_id, c ORDER BY i) END AS isl
-        |  FROM e3),
-        |k3 AS (SELECT *, CASE WHEN c THEN row_number()
-        |            OVER (PARTITION BY doc_id, isl ORDER BY i) % 2 = 1
-        |           ELSE false END AS taken
-        |  FROM w3),
-        |o3 AS (SELECT doc_id, i,
-        |        CASE WHEN taken THEN l || '+' || r
-        |             WHEN lag(taken, 1, false) OVER (PARTITION BY doc_id ORDER BY i)
-        |               THEN NULL
-        |             ELSE x END AS tok
-        |  FROM k3),
-        |d3 AS (SELECT doc_id, list(tok ORDER BY i) AS t
-        |  FROM o3 WHERE tok IS NOT NULL GROUP BY doc_id)
+      s"""WITH d0 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |${(1 to 3).map(OracleSnippets.bpeMergeRound).mkString(",\n")}
         |SELECT doc_id, array_to_string(t, ' ') AS merged_text,
         |       CAST(len(t) AS BIGINT) AS n_tokens FROM d3""".stripMargin) {
       (s, d) => {
@@ -804,11 +785,7 @@ object TextAnalysis {
     // shingles in the oracle vs fused hashed shingles here — agreement
     // doubles as a collision-freeness check, like t14/t19.
     Query("t27_contamination_score",
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t) - 1),
-        |           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-        |       FROM t WHERE len(t) >= 3),
+      s"""WITH ${OracleSnippets.DocTrigramCte},
         |b AS (SELECT DISTINCT s FROM sh WHERE doc_id % 40 = 0),
         |c AS (SELECT doc_id, s FROM sh WHERE doc_id % 40 <> 0),
         |n AS (SELECT doc_id, count(*) AS n_shingles FROM c GROUP BY 1),
@@ -876,24 +853,7 @@ object TextAnalysis {
     // nothing grows with the corpus except the scan.
     Query("t28_url_canonicalize",
       s"""WITH u AS (SELECT doc_id, $UrlFixtureSql AS url FROM documents),
-        |x AS (SELECT doc_id,
-        |        lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS sch,
-        |        lower(regexp_extract(url, '^[^:]+://([^/?#]+)', 1)) AS rawhost,
-        |        regexp_extract(url, '^[^:]+://[^/?#]*([^?#]*)', 1) AS rawpath,
-        |        regexp_extract(url, '\\?([^#]*)', 1) AS rawq
-        |      FROM u),
-        |y AS (SELECT doc_id, sch,
-        |        regexp_replace(CASE WHEN sch = 'https' THEN regexp_replace(rawhost, ':443$$', '')
-        |                            WHEN sch = 'http'  THEN regexp_replace(rawhost, ':80$$', '')
-        |                            ELSE rawhost END, '^www\\.', '') AS dom,
-        |        regexp_replace(regexp_replace(rawpath, '/{2,}', '/', 'g'), '/$$', '') AS pth,
-        |        array_to_string(list_sort(list_filter(string_split(rawq, '&'),
-        |          p -> p <> '' AND NOT regexp_matches(p, '^(utm_[^=]*|fbclid|gclid|msclkid|ref)='))), '&') AS q
-        |      FROM x),
-        |c AS (SELECT doc_id, dom,
-        |        sch || '://' || dom || (CASE WHEN pth = '' THEN '/' ELSE pth END) ||
-        |        (CASE WHEN q = '' THEN '' ELSE '?' || q END) AS url_canon
-        |      FROM y)
+        |${OracleSnippets.UrlCanonCtes}
         |SELECT doc_id, url_canon, dom AS domain,
         |       doc_id = min(doc_id) OVER (PARTITION BY url_canon) AS kept
         |FROM c""".stripMargin) {
@@ -977,11 +937,7 @@ object TextAnalysis {
     // The frequent-gram list is the df tail — broadcast-small at any
     // cutoff that means "frequent"; AQE picks the broadcast.
     Query("t31_dup_ngram_coverage",
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(t) - 1),
-        |           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-        |       FROM t WHERE len(t) >= 3),
+      s"""WITH ${OracleSnippets.DocTrigramCte},
         |df AS (SELECT s, count(*) AS df FROM sh GROUP BY 1),
         |f AS (SELECT s FROM df WHERE df > 5)
         |SELECT doc_id, count(*) AS n_grams, count(f.s) AS n_freq,
@@ -1032,24 +988,7 @@ object TextAnalysis {
     // alone; the chain adds no new exchange class.
     Query("g09_corpus_manifest",
       s"""WITH u AS (SELECT doc_id, text, $G09UrlSql AS url FROM documents),
-        |x AS (SELECT doc_id,
-        |        lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS sch,
-        |        lower(regexp_extract(url, '^[^:]+://([^/?#]+)', 1)) AS rawhost,
-        |        regexp_extract(url, '^[^:]+://[^/?#]*([^?#]*)', 1) AS rawpath,
-        |        regexp_extract(url, '\\?([^#]*)', 1) AS rawq
-        |      FROM u),
-        |y AS (SELECT doc_id, sch,
-        |        regexp_replace(CASE WHEN sch = 'https' THEN regexp_replace(rawhost, ':443$$', '')
-        |                            WHEN sch = 'http'  THEN regexp_replace(rawhost, ':80$$', '')
-        |                            ELSE rawhost END, '^www\\.', '') AS dom,
-        |        regexp_replace(regexp_replace(rawpath, '/{2,}', '/', 'g'), '/$$', '') AS pth,
-        |        array_to_string(list_sort(list_filter(string_split(rawq, '&'),
-        |          p -> p <> '' AND NOT regexp_matches(p, '^(utm_[^=]*|fbclid|gclid|msclkid|ref)='))), '&') AS q
-        |      FROM x),
-        |c AS (SELECT doc_id, dom,
-        |        sch || '://' || dom || (CASE WHEN pth = '' THEN '/' ELSE pth END) ||
-        |        (CASE WHEN q = '' THEN '' ELSE '?' || q END) AS url_canon
-        |      FROM y),
+        |${OracleSnippets.UrlCanonCtes},
         |s1 AS (SELECT * FROM (
         |         SELECT u.doc_id, u.text, c.dom AS domain, c.url_canon,
         |                min(u.doc_id) OVER (PARTITION BY c.url_canon) AS w1
@@ -1302,51 +1241,12 @@ object TextAnalysis {
     // train corpus); scoring is an equi-join on the bigram key (shuffle
     // or broadcast by model size, AQE's call) + one per-doc aggregate.
     Query("t34_lm_perplexity",
-      """WITH train AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
-        |test AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-        |bgt AS (SELECT doc_id,
-        |          unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bg
-        |        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM train)
-        |        WHERE len(t) >= 2),
-        |bgs AS (SELECT doc_id,
-        |          unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bg
-        |        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM test)
-        |        WHERE len(t) >= 2),
-        |c2 AS (SELECT bg, count(*) AS c2 FROM bgt GROUP BY 1),
-        |c1 AS (SELECT string_split(bg, ' ')[1] AS prev, sum(c2) AS c1
-        |       FROM c2 GROUP BY 1),
-        |v AS (SELECT count(DISTINCT tk) AS v FROM
-        |        (SELECT unnest(string_split(text, ' ')) AS tk FROM train)),
-        |sc AS (SELECT s.doc_id,
-        |         CAST(round(ln((coalesce(c2.c2, 0) + 1.0)
-        |                       / (coalesce(c1.c1, 0) + v.v)), 6)
-        |              AS DECIMAL(18,6)) AS nll
-        |       FROM bgs s LEFT JOIN c2 ON s.bg = c2.bg
-        |         LEFT JOIN c1 ON string_split(s.bg, ' ')[1] = c1.prev
-        |         CROSS JOIN v)
+      s"""WITH ${addOneLmCtes("documents WHERE doc_id % 10 = 0", "doc_id")}
         |SELECT doc_id, count(*) AS n_bigrams,
         |       round(CAST(sum(nll) AS DOUBLE) / count(*), 6) AS avg_logprob
         |FROM sc GROUP BY doc_id""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val train = docs.filter(col("doc_id") % 10 =!= 0)
-      val test = docs.filter(col("doc_id") % 10 === 0)
-      def bigramsOf(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("doc_id"), explode(adjacentPairs(col("text"))).as("bg"))
-      val c2 = bigramsOf(train).groupBy("bg").agg(count(lit(1)).as("c2"))
-      val c1 = c2
-        .select(split(col("bg"), " ").getItem(0).as("prev"), col("c2"))
-        .groupBy("prev").agg(sum(col("c2")).as("c1"))
-      val vDf = train.select(explode(tokens(col("text"))).as("tk"))
-        .agg(count_distinct(col("tk")).as("v"))
-      bigramsOf(test)
-        .withColumn("prev", split(col("bg"), " ").getItem(0))
-        .join(c2, Seq("bg"), "left")
-        .join(c1, Seq("prev"), "left")
-        .crossJoin(broadcast(vDf))
-        .withColumn("nll",
-          round(log((coalesce(col("c2"), lit(0)) + lit(1.0))
-            / (coalesce(col("c1"), lit(0)) + col("v"))), 6)
-            .cast("decimal(18,6)"))
+      addOneNll(s, d, Tables.documents(s, d).filter(col("doc_id") % 10 === 0),
+          col("doc_id"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"), sum(col("nll")).as("snll"))
         .select(col("doc_id"), col("n_bigrams"),
@@ -1366,27 +1266,7 @@ object TextAnalysis {
     // model-sized (AQE broadcasts it), the ntile window partitions by
     // language — per-language ordered state, the CCNet sharding unit.
     Query("t59_ccnet_buckets",
-      """WITH train AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
-        |bgt AS (SELECT doc_id,
-        |          unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bg
-        |        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM train)
-        |        WHERE len(t) >= 2),
-        |bgs AS (SELECT doc_id, lang,
-        |          unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bg
-        |        FROM (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents)
-        |        WHERE len(t) >= 2),
-        |c2 AS (SELECT bg, count(*) AS c2 FROM bgt GROUP BY 1),
-        |c1 AS (SELECT string_split(bg, ' ')[1] AS prev, sum(c2) AS c1
-        |       FROM c2 GROUP BY 1),
-        |v AS (SELECT count(DISTINCT tk) AS v FROM
-        |        (SELECT unnest(string_split(text, ' ')) AS tk FROM train)),
-        |sc AS (SELECT s.doc_id, s.lang,
-        |         CAST(round(ln((coalesce(c2.c2, 0) + 1.0)
-        |                       / (coalesce(c1.c1, 0) + v.v)), 6)
-        |              AS DECIMAL(18,6)) AS nll
-        |       FROM bgs s LEFT JOIN c2 ON s.bg = c2.bg
-        |         LEFT JOIN c1 ON string_split(s.bg, ' ')[1] = c1.prev
-        |         CROSS JOIN v),
+      s"""WITH ${addOneLmCtes("documents", "doc_id", "lang")},
         |docsc AS (SELECT doc_id, lang,
         |            round(CAST(sum(nll) AS DOUBLE) / count(*), 6) AS alp
         |          FROM sc GROUP BY 1, 2),
@@ -1398,27 +1278,7 @@ object TextAnalysis {
         |       CAST(count(*) AS BIGINT) AS n_docs,
         |       CAST(sum(CAST(alp AS DECIMAL(18,6))) AS DOUBLE) AS sum_logprob
         |FROM bkt GROUP BY 1, 2""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val train = docs.filter(col("doc_id") % 10 =!= 0)
-      def bigramsOf(df: org.apache.spark.sql.DataFrame,
-                    cols: org.apache.spark.sql.Column*) =
-        df.select(cols :+ explode(adjacentPairs(col("text"))).as("bg"): _*)
-      val c2 = bigramsOf(train, col("doc_id")).groupBy("bg")
-        .agg(count(lit(1)).as("c2"))
-      val c1 = c2
-        .select(split(col("bg"), " ").getItem(0).as("prev"), col("c2"))
-        .groupBy("prev").agg(sum(col("c2")).as("c1"))
-      val vDf = train.select(explode(tokens(col("text"))).as("tk"))
-        .agg(count_distinct(col("tk")).as("v"))
-      val docsc = bigramsOf(docs, col("doc_id"), col("lang"))
-        .withColumn("prev", split(col("bg"), " ").getItem(0))
-        .join(c2, Seq("bg"), "left")
-        .join(c1, Seq("prev"), "left")
-        .crossJoin(broadcast(vDf))
-        .withColumn("nll",
-          round(log((coalesce(col("c2"), lit(0)) + lit(1.0))
-            / (coalesce(col("c1"), lit(0)) + col("v"))), 6)
-            .cast("decimal(18,6)"))
+      val docsc = addOneNll(s, d, Tables.documents(s, d), col("doc_id"), col("lang"))
         .groupBy("doc_id", "lang")
         .agg(round(sum(col("nll")).cast("double") / count(lit(1)), 6).as("alp"))
       val w = Window.partitionBy("lang").orderBy(col("alp").desc, col("doc_id"))
@@ -2009,46 +1869,16 @@ object TextAnalysis {
     // token ever leaves its doc partition before the count. All-ratio
     // double math in pinned operation order, 6dp rounding.
     Query("t49_kneser_ney",
-      """WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
-        |big AS MATERIALIZED (
-        |  SELECT unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS s
-        |  FROM toks WHERE len(t) >= 2),
-        |bc AS MATERIALIZED (
-        |  SELECT split_part(s, ' ', 1) AS w1, split_part(s, ' ', 2) AS w2,
-        |         count(*) AS c
-        |  FROM big GROUP BY 1, 2),
-        |w1s AS (SELECT w1, sum(c) AS cw1, count(*) AS n1fwd FROM bc GROUP BY 1),
-        |w2s AS (SELECT w2, count(*) AS n1back FROM bc GROUP BY 1),
-        |tot AS (SELECT count(*) AS nbt FROM bc)
+      s"""WITH ${wordBigramCtes()},
+        |$KnStatCtes
         |SELECT bc.w1, bc.w2, CAST(c AS BIGINT) AS c,
-        |       round(greatest(CAST(c AS DOUBLE) - 0.75, 0.0) / CAST(cw1 AS DOUBLE)
-        |             + 0.75 * CAST(n1fwd AS DOUBLE) / CAST(cw1 AS DOUBLE)
-        |               * (CAST(n1back AS DOUBLE) / CAST(nbt AS DOUBLE)), 6) AS p_kn
+        |       round($KnProb, 6) AS p_kn
         |FROM bc JOIN w1s USING (w1) JOIN w2s USING (w2), tot
         |WHERE c >= 5""".stripMargin) {
       (s, d) => {
-        val t = tokens(col("text"))
-        val big = Tables.documents(s, d)
-          .select(explode(bind1(t) { tt =>
-            when(size(tt) >= 2, transform(sequence(lit(0), size(tt) - 2),
-              (i: org.apache.spark.sql.Column) => struct(
-                element_at(tt, i + 1).as("w1"), element_at(tt, i + 2).as("w2"))))
-              .otherwise(array())
-          }).as("bg"))
-          .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-        val bc = big.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-          .localCheckpoint() // 4 downstream aggs share the one bigram count
-        val w1s = bc.groupBy("w1").agg(sum("c").as("cw1"), count(lit(1)).as("n1fwd"))
-        val w2s = bc.groupBy("w2").agg(count(lit(1)).as("n1back"))
-        val tot = bc.agg(count(lit(1)).as("nbt"))
-        bc.filter(col("c") >= 5)
-          .join(w1s, "w1").join(w2s, "w2").crossJoin(broadcast(tot))
+        knScored(wordBigrams(s, d))
           .select(col("w1"), col("w2"), col("c").cast("long").as("c"),
-            round(greatest(col("c").cast("double") - lit(0.75), lit(0.0))
-                / col("cw1").cast("double")
-              + lit(0.75) * col("n1fwd").cast("double") / col("cw1").cast("double")
-                * (col("n1back").cast("double") / col("nbt").cast("double")), 6)
-              .as("p_kn"))
+            round(knProb, 6).as("p_kn"))
       }
     },
 
@@ -2061,24 +1891,11 @@ object TextAnalysis {
     // discipline). OOV bigrams are skipped; docs with no scored bigram
     // emit nothing (their fluency is undefined under this LM).
     Query("t55_kn_doc_xent",
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |big AS MATERIALIZED (
-        |  SELECT doc_id,
-        |         unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS s
-        |  FROM toks WHERE len(t) >= 2),
-        |bc AS MATERIALIZED (
-        |  SELECT split_part(s, ' ', 1) AS w1, split_part(s, ' ', 2) AS w2,
-        |         count(*) AS c
-        |  FROM big GROUP BY 1, 2),
-        |w1s AS (SELECT w1, sum(c) AS cw1, count(*) AS n1fwd FROM bc GROUP BY 1),
-        |w2s AS (SELECT w2, count(*) AS n1back FROM bc GROUP BY 1),
-        |tot AS (SELECT count(*) AS nbt FROM bc),
+      s"""WITH ${wordBigramCtes("doc_id")},
+        |$KnStatCtes,
         |lm AS (
         |  SELECT w1, w2,
-        |         CAST(round(-ln(round(
-        |           greatest(CAST(c AS DOUBLE) - 0.75, 0.0) / CAST(cw1 AS DOUBLE)
-        |           + 0.75 * CAST(n1fwd AS DOUBLE) / CAST(cw1 AS DOUBLE)
-        |             * (CAST(n1back AS DOUBLE) / CAST(nbt AS DOUBLE)), 6)), 6)
+        |         CAST(round(-ln(round($KnProb, 6)), 6)
         |              AS DECIMAL(18,6)) AS nll
         |  FROM bc JOIN w1s USING (w1) JOIN w2s USING (w2), tot
         |  WHERE c >= 5)
@@ -2088,30 +1905,11 @@ object TextAnalysis {
         |                AND split_part(big.s, ' ', 2) = lm.w2
         |GROUP BY 1""".stripMargin) {
       (s, d) => {
-        val t = tokens(col("text"))
-        val big = Tables.documents(s, d)
-          .select(col("doc_id"), explode(bind1(t) { tt =>
-            when(size(tt) >= 2, transform(sequence(lit(0), size(tt) - 2),
-              (i: org.apache.spark.sql.Column) => struct(
-                element_at(tt, i + 1).as("w1"), element_at(tt, i + 2).as("w2"))))
-              .otherwise(array())
-          }).as("bg"))
-          .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+        val big = wordBigrams(s, d, "doc_id")
           .localCheckpoint() // the LM aggregates + the scoring join share it
-        val bc = big.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-          .localCheckpoint()
-        val w1s = bc.groupBy("w1").agg(sum("c").as("cw1"), count(lit(1)).as("n1fwd"))
-        val w2s = bc.groupBy("w2").agg(count(lit(1)).as("n1back"))
-        val tot = bc.agg(count(lit(1)).as("nbt"))
-        val lm = bc.filter(col("c") >= 5)
-          .join(w1s, "w1").join(w2s, "w2").crossJoin(broadcast(tot))
+        val lm = knScored(big)
           .select(col("w1"), col("w2"),
-            round(-log(round(
-              greatest(col("c").cast("double") - lit(0.75), lit(0.0))
-                / col("cw1").cast("double")
-              + lit(0.75) * col("n1fwd").cast("double") / col("cw1").cast("double")
-                * (col("n1back").cast("double") / col("nbt").cast("double")), 6)), 6)
-              .cast("decimal(18,6)").as("nll"))
+            round(-log(round(knProb, 6)), 6).cast("decimal(18,6)").as("nll"))
         big.join(broadcast(lm), Seq("w1", "w2"))
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_scored"), sum("nll").as("snll"))
@@ -2334,13 +2132,7 @@ object TextAnalysis {
     // ranked set by the (small) vocabulary squared, so the global top-20
     // window is O(vocab^2) — never corpus-sized.
     Query("t52_pmi_collocations",
-      """WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
-        |big AS MATERIALIZED (
-        |  SELECT unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS s
-        |  FROM toks WHERE len(t) >= 2),
-        |bc AS (SELECT split_part(s, ' ', 1) AS w1, split_part(s, ' ', 2) AS w2,
-        |              count(*) AS c
-        |       FROM big GROUP BY 1, 2),
+      s"""WITH ${wordBigramCtes()},
         |uni AS (SELECT w, count(*) AS cu
         |        FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1),
         |nb AS (SELECT sum(c) AS nbt FROM bc),
@@ -2357,15 +2149,7 @@ object TextAnalysis {
         |SELECT CAST(rk AS BIGINT) AS rk, w1, w2, CAST(c AS BIGINT) AS c, pmi
         |FROM r WHERE rk <= 20""".stripMargin) {
       (s, d) => {
-        val t = tokens(col("text"))
-        val big = Tables.documents(s, d)
-          .select(explode(bind1(t) { tt =>
-            when(size(tt) >= 2, transform(sequence(lit(0), size(tt) - 2),
-              (i: org.apache.spark.sql.Column) => struct(
-                element_at(tt, i + 1).as("w1"), element_at(tt, i + 2).as("w2"))))
-              .otherwise(array())
-          }).as("bg"))
-          .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+        val big = wordBigrams(s, d)
         val bc = big.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
           .localCheckpoint() // total + the PMI join share the one bigram agg
         val uni = Tables.documents(s, d)
