@@ -3,16 +3,17 @@ package graft
 import graft.core.Query
 
 /** Regenerates the per-query exchange-count golden that RegistrySweepSpec
-  * asserts against (src/test/resources/plan_exchanges.golden). Run after
-  * deliberately changing a query's plan shape:
+  * asserts against. Run after deliberately changing a query's plan shape;
+  * it writes the file itself (stdout would also capture sbt's banner):
   *
-  *   sbt "runMain graft.PlanGolden" > src/test/resources/plan_exchanges.golden
+  *   sbt "runMain graft.PlanGolden [out]"   # default: the golden below
   *
   * Streaming rows (StreamingQueries) are excluded: their fn launches a
   * stream rather than returning a lazy plan.
   */
 object PlanGolden {
   val sfDir = "/root/testdata/sf0.001"
+  val goldenPath = "src/test/resources/plan_exchanges.golden"
 
   def exchangeCount(plan: String): Int =
     "Exchange".r.findAllIn(plan).size
@@ -41,9 +42,11 @@ object PlanGolden {
     // RegistrySweepSpec observes live (the round-15 tests_ok failure).
     // Regenerate only under local[4].
     val spark = graft.core.Sessions.local("4", "graft-plangolden")
-    SparkEntry.packs.filter(isBatch)
+    val lines = SparkEntry.packs.filter(isBatch)
       .map(q => q.name -> exchangeCount(plan(spark, q)))
-      .sortBy(_._1).foreach { case (n, c) => println(s"$n $c") }
+      .sortBy(_._1).map { case (n, c) => s"$n $c\n" }
     spark.stop()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(
+      args.headOption.getOrElse(goldenPath)), lines.mkString)
   }
 }

@@ -11,7 +11,9 @@ import scala.collection.mutable.ArrayBuffer
   * (a noop write of the same Dataset) — and prints:
   *  - `[split]` build / plan / exec seconds;
   *  - `[count]` Exchange, Expand, SortAggregate and scan nodes of the
-  *    pre-execution plan (the form `plan_exchanges.golden` counts);
+  *    pre-execution plan (the form `plan_exchanges.golden` counts), plus
+  *    its held inputs: `pinned` (Materialize.pin's checkpoint scans) and
+  *    `local` (Materialize.small's LocalTableScans);
   *  - the slowest stages: wall time, tasks, input, shuffle read/write
   *    bytes and records, spill;
   *  - on the first rep, the final adaptive plan of the exec step (its
@@ -94,7 +96,8 @@ object RowProfile {
       println(f"%n== $n rep$r")
       println(f"[split] build=${(t1 - t0) / 1e9}%.2f plan=${(t2 - t1) / 1e9}%.2f exec=${(t3 - t2) / 1e9}%.2f")
       println(s"[count] exchange=${count(plan, "Exchange")} expand=${count(plan, "Expand")} " +
-        s"sortAgg=${count(plan, "SortAggregate")} scans=${count(plan, "FileScan|BatchScan|Scan parquet")}")
+        s"sortAgg=${count(plan, "SortAggregate")} scans=${count(plan, "FileScan|BatchScan|Scan parquet")} " +
+        s"pinned=${count(plan, "Scan ExistingRDD")} local=${count(plan, "LocalTableScan")}")
       val (top, sumMs, nStages) = stages.synchronized(
         (stages.sortBy(-_.ms).take(18).toList, stages.map(_.ms).sum, stages.size))
       println(s"[stages] n=$nStages stage-ms sum=$sumMs (build's eager jobs included)")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** Byte-pair-encoding merge loop over a tokenized corpus: each round
   * finds the globally most frequent adjacent pair and rewrites every
@@ -84,8 +85,8 @@ object Bpe {
     * the rewritten corpus. Deterministic: ties break on (count desc, l,
     * r), and the rewrite is order-free per the non-overlap argument.
     *
-    * Each round's rewrite is eagerly localCheckpoint-ed and the
-    * superseded round's blocks freed at once (the CC-loop pattern):
+    * Each round's rewrite is a Materialize.pin and the superseded
+    * round's pin is released at once (the CC-loop pattern):
     * without it, round N's pair count re-runs rounds 1..N-1's rewrites
     * over the corpus, which turned 2 rounds at the 10x smoke volume
     * into a 28 s chain re-execution.
@@ -106,11 +107,8 @@ object Bpe {
       require(top.nonEmpty, "corpus has no adjacent pair left")
       val (l, r) = (top(0).getString(0), top(0).getString(1))
       merges += ((l, r))
-      cur = cur.withColumn(toksCol, mergeAnyExpr(col(toksCol), l, r))
-        .localCheckpoint(true)
-      // localCheckpoint blocks are NOT CacheManager entries, so
-      // catalog.clearCache() never releases them
-      prevCheckpoint.foreach(Dedup.freeCheckpoint)
+      cur = Materialize.pin(cur.withColumn(toksCol, mergeAnyExpr(col(toksCol), l, r)))
+      prevCheckpoint.foreach(Materialize.release)
       prevCheckpoint = Some(cur)
     }
     (merges.toSeq, cur)

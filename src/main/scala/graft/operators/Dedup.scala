@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{Similarity, TextFunctions}
+import graft.core.Materialize
 
 /** Document deduplication operators: exact content dedup, exact n-gram
   * Jaccard pairs (quadratic-in-matches baseline), and MinHash+LSH
@@ -61,8 +62,7 @@ object Dedup {
     */
   def exactJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int, threshold: Double): DataFrame = {
-    val sh = shingleTable(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Materialize.shared(shingleTable(df, idCol, textCol, n))
     val cand = sh.toDF("doc_a", "s")
       .join(sh.toDF("doc_b", "s2"), col("s") === col("s2") && col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
@@ -85,8 +85,7 @@ object Dedup {
   def exactJaccardPairsFrom(df: DataFrame, idCol: String, textCol: String,
                             n: Int, threshold: Double,
                             queryPred: Column => Column): DataFrame = {
-    val sh = shingleTable(df, idCol, textCol, n, fanned = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Materialize.shared(shingleTable(df, idCol, textCol, n, fanned = true))
     val sizes = sh.groupBy("__id").agg(count(lit(1)).as("n"))
     val inter = sh.filter(queryPred(col("__id"))).toDF("doc_a", "s")
       .join(sh.toDF("doc_b", "s2"),
@@ -118,8 +117,7 @@ object Dedup {
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                          n: Int, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = shingleTable(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Materialize.shared(shingleTable(df, idCol, textCol, n))
     val sizes = sh.groupBy("__id").agg(count(lit(1)).as("n"))
     // prefix length n − ⌈t·n⌉ + 1 (tight form of ⌊(1−t)n⌋+1); the 1e-6
     // guard keeps IEEE noise in t·n from flipping the ceil at integer
@@ -150,8 +148,7 @@ object Dedup {
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int, threshold: Double): DataFrame = {
-    val sh = shingleTable(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Materialize.shared(shingleTable(df, idCol, textCol, n))
     val sizes = sh.groupBy("__id").agg(count(lit(1)).as("n"))
     sh.toDF("doc_a", "s")
       .join(sh.toDF("doc_b", "s2"),
@@ -241,9 +238,8 @@ object Dedup {
   def embeddingNearDupLsh(df: DataFrame, idCol: String, vecCol: String,
                           tables: Int, bits: Int, dims: Int,
                           threshold: Double, maxBucketSize: Int = 0): DataFrame = {
-    val e = df.select(col(idCol).as("__id"), col(vecCol).as("__v"),
-        Similarity.l2norm(col(vecCol)).as("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = Materialize.shared(df.select(col(idCol).as("__id"), col(vecCol).as("__v"),
+        Similarity.l2norm(col(vecCol)).as("__n")))
     val buckets = e.select(col("__id"),
         posexplode(Similarity.hyperplaneBuckets(col("__v"), tables, bits, dims))
           .as(Seq("t", "b")))
@@ -376,27 +372,23 @@ object Dedup {
     // edges ⋈ labels join then reuses this layout every iteration
     // instead of re-shuffling the (biggest) edge table each round;
     // ids travel as longs on both paths so the output schema does not
-    // depend on which path ran. Eagerly checkpointed rather than
-    // persisted: the flat LogicalRDD leaf (partitioning preserved)
-    // keeps every round's plan free of the caller's input lineage —
-    // a swapped-column self-union over an already-union-built input
-    // otherwise trips Catalyst union constraint rewriting downstream,
-    // and re-analyzing the deep tree each round is pure optimizer tax.
-    val edges = pairs
+    // depend on which path ran. Materialize.pin rather than shared:
+    // the flat leaf (partitioning preserved) keeps every round's plan
+    // free of the caller's input lineage — a swapped-column self-union
+    // over an already-union-built input otherwise trips Catalyst union
+    // constraint rewriting downstream, and re-analyzing the deep tree
+    // each round is pure optimizer tax.
+    val edges = Materialize.pin(pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
       .distinct()
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    // EVERY iteration state is eagerly localCheckpoint-ed: persist alone
-    // keeps the full nested LOGICAL plan, so Catalyst/AQE re-analyze a
-    // tree that grows per round and round cost climbs even though the
-    // data is cached — checkpointing flattens lineage to the
-    // materialized blocks. (On a cluster with executor loss concerns,
-    // swap for reliable checkpoint(); same shape.)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
+      .repartition(col("src")))
+    // EVERY iteration state is a Materialize.pin: a persist keeps the
+    // full nested LOGICAL plan, so Catalyst/AQE re-analyze a tree that
+    // grows per round and round cost climbs even though the data is
+    // cached.
+    var labels = Materialize.pin(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
@@ -414,17 +406,15 @@ object Dedup {
       // back to the label table — the join cost two exchanges per round.
       // Checkpointed before the self-join below reads it TWICE (the
       // rename makes the exchange keys differ, so reuse cannot fire).
-      val propagated = labels.withColumn("__old", col("label"))
+      val propagated = Materialize.pin(labels.withColumn("__old", col("label"))
         .union(offers)
-        .groupBy("id").agg(min("label").as("label"), max("__old").as("__old"))
-        .localCheckpoint(true)
+        .groupBy("id").agg(min("label").as("label"), max("__old").as("__old")))
       // pointer jump: follow the label one hop (labels always name a
       // node of the graph, so the join always finds its row)
-      val next = propagated
+      val next = Materialize.pin(propagated
         .join(propagated.select(col("id").as("label"), col("label").as("__hop"))
           .hint("SHUFFLE_HASH"), Seq("label"))
-        .select(col("id"), col("__hop").as("label"), col("__old"))
-        .localCheckpoint(true)
+        .select(col("id"), col("__hop").as("label"), col("__old")))
       // ONE aggregate job feeds both the convergence test and the skew
       // trip-wire: group by new label, emit per-label row counts and
       // per-label changed counts (new < carried old), then reduce to
@@ -451,49 +441,31 @@ object Dedup {
       // a converged labeling is final — return it even if a component
       // is giant, there is no further compression join to protect.
       if (changed > 0 && maxFreq > starFallbackLabelFreq) {
-        // seeded is eagerly checkpointed BEFORE the round state is freed:
-        // it reads `next`'s checkpoint blocks (not recomputable once
-        // unpersisted), and the flat LogicalRDD also sidesteps Catalyst
+        // seeded is pinned BEFORE the round state is released: it reads
+        // `next`'s pinned blocks, and the flat leaf also sidesteps Catalyst
         // constraint rewriting over a union of filtered lineages
-        val seeded = edges.select(col("src").as("a"), col("dst").as("b"))
+        val seeded = Materialize.pin(edges.select(col("src").as("a"), col("dst").as("b"))
           .union(next.filter(col("id") =!= col("label"))
-            .select(col("id").as("a"), col("label").as("b")))
-          .localCheckpoint(true)
-        freeCheckpoint(next)
-        freeCheckpoint(labels)
-        freeCheckpoint(edges)
+            .select(col("id").as("a"), col("label").as("b"))))
+        Materialize.release(next)
+        Materialize.release(labels)
+        Materialize.release(edges)
         val out = connectedComponentsStars(seeded, "a", "b", maxIter,
           smallGraphEdges)
-        freeCheckpoint(seeded)
+        Materialize.release(seeded)
         return out
       }
-      // free the superseded round state NOW: checkpoint blocks are not
-      // CacheManager entries, so clearCache() never reclaims them and the
-      // async ContextCleaner only does after a GC notices the dropped
-      // reference — on a memory-tight executor that lag is pure pressure
-      // on whatever runs next (observed as a bench-wide slowdown decaying
-      // over the queries that followed this loop)
-      freeCheckpoint(propagated)
-      freeCheckpoint(labels)
+      // release the superseded round state NOW: left to ContextCleaner,
+      // the blocks linger as pressure on whatever runs next (observed as
+      // a bench-wide slowdown decaying over the queries after this loop)
+      Materialize.release(propagated)
+      Materialize.release(labels)
       labels = next
       iter += 1
     }
-    freeCheckpoint(edges)
+    Materialize.release(edges)
     labels.select(col("id"), col("label").as("component"))
   }
-
-  /** Unpersist the RDD blocks behind a localCheckpoint-ed Dataset.
-    * A checkpointed plan is a LogicalRDD leaf over eagerly-persisted
-    * blocks; dropping the Dataset reference alone leaves those blocks
-    * resident until ContextCleaner + GC catch up. (The final `labels`
-    * result stays persisted for the caller to consume.) Bpe.applyMerges
-    * frees its per-merge checkpoints the same way. */
-  private[operators] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Driver-side union-find with path compression over a bounded edge
     * iterator: id → min id of its component, one entry per node seen. */
@@ -557,16 +529,15 @@ object Dedup {
     // nodes kept aside so the star loop can drop self-loops freely:
     // a node whose component collapses to itself leaves the edge set,
     // and the final left-join restores it as its own component root
-    val nodes = pairs
+    val nodes = Materialize.pin(pairs
       .select(col(aCol).cast("long").as("id"))
       .union(pairs.select(col(bCol).cast("long").as("id")))
-      .distinct()
-      .localCheckpoint(true)
-    var edges = pairs
+      .distinct())
+    // eager: input blocks are safe to free after this
+    var edges = Materialize.pin(pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true) // eager: input blocks are safe to free after this
+      .distinct())
     var iter = 0
     var prevCount = edges.count()
     var done = prevCount == 0L
@@ -576,8 +547,8 @@ object Dedup {
       // join), but both reads shuffle the identical large-star subtree
       // on the same key, so ReuseExchange serves the second read from
       // the first's shuffle files — cheaper than a second checkpoint.
-      val ss = smallStar(largeStar(edges)).localCheckpoint(true)
-      freeCheckpoint(edges)
+      val ss = Materialize.pin(smallStar(largeStar(edges)))
+      Materialize.release(edges)
       edges = ss
       // the edge count is non-increasing (every round ends distinct),
       // and a fixpoint necessarily repeats the previous round's count —
@@ -596,9 +567,9 @@ object Dedup {
           .iterator.map(r => (r.getLong(0), r.getLong(1))))
         val sess = pairs.sparkSession
         import sess.implicits._
-        freeCheckpoint(edges)
-        edges = uf.iterator.filter { case (v, r) => v != r }.toSeq
-          .toDF("a", "b").localCheckpoint(true)
+        Materialize.release(edges)
+        edges = Materialize.pin(uf.iterator.filter { case (v, r) => v != r }.toSeq
+          .toDF("a", "b"))
         done = true
       } else {
         done = cnt == prevCount && isStarForest(edges)
@@ -696,18 +667,16 @@ object Dedup {
     // Docs with no shingles get n = 0 and are dropped, matching the
     // aggregate path where they had no rows to group. Persisted: band
     // explode runs once per self-join side plus the sizes read.
-    val sigs = minhashSignatures(df, idCol, textCol, n, k)
-      .withColumnRenamed(idCol, "__id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = Materialize.shared(minhashSignatures(df, idCol, textCol, n, k)
+      .withColumnRenamed(idCol, "__id"))
     val buckets = minhashBandBuckets(sigs, "__id", k, bands)
     val capped = cappedBuckets(buckets, maxBucketSize)
-    val cand = capped.alias("x")
+    val cand = Materialize.shared(capped.alias("x")
       .join(capped.alias("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.__id") < col("y.__id"))
       .select(col("x.__id").as("doc_a"), col("y.__id").as("doc_b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // shingles explode for CANDIDATE docs only (semi-join on the doc
     // table BEFORE the explode — LSH leaves most of the corpus out of
     // any candidate pair, so the dominant explode cost shrinks to the
@@ -719,12 +688,11 @@ object Dedup {
     // path lives in exactJaccardPairs.
     val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("__id"))
       .distinct()
-    val sh = graft.core.Par.fanOut(
+    val sh = Materialize.shared(graft.core.Par.fanOut(
         df.select(col(idCol).as("__id"), col(textCol)), col("__id"))
       .select(col("__id"), graft.plans.ShingleHashes(col(textCol), n).as("__shs"))
       .join(candIds, Seq("__id"), "left_semi")
-      .select(col("__id"), explode(col("__shs")).as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("__id"), explode(col("__shs")).as("s")))
     verified(sh, cand, sigs.select(col("__id"), col("n")), threshold)
   }
 
@@ -789,26 +757,23 @@ object Dedup {
       idCol: String, textCol: String,
       n: Int, k: Int, bands: Int, threshold: Double,
       maxBucketSize: Int = 0): DataFrame = {
-    val newSigs = minhashSignatures(newDocs, idCol, textCol, n, k)
-      .withColumnRenamed(idCol, "__id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val newSigs = Materialize.shared(minhashSignatures(newDocs, idCol, textCol, n, k)
+      .withColumnRenamed(idCol, "__id"))
     val newBk = cappedBuckets(
       minhashBandBuckets(newSigs, "__id", k, bands), maxBucketSize)
     val oldBk = cappedBuckets(
       minhashBandBuckets(oldSigs.withColumnRenamed(idCol, "__id"), "__id", k, bands),
       maxBucketSize)
-    val cand = newBk.toDF("__new", "band", "bucket")
+    val cand = Materialize.shared(newBk.toDF("__new", "band", "bucket")
       .join(oldBk.toDF("__old", "band", "bucket"), Seq("band", "bucket"))
       .select(col("__new").as("doc_a"), col("__old").as("doc_b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     def candShingles(docs: DataFrame, side: String) =
       docs.select(col(idCol).as("__id"),
           graft.plans.ShingleHashes(col(textCol), n).as("__shs"))
         .join(cand.select(col(side).as("__id")).distinct(), Seq("__id"), "left_semi")
         .select(col("__id"), explode(col("__shs")).as("s"))
-    val sh = candShingles(newDocs, "doc_a").union(candShingles(oldDocs, "doc_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Materialize.shared(candShingles(newDocs, "doc_a").union(candShingles(oldDocs, "doc_b")))
     val sizes = newSigs.select(col("__id"), col("n"))
       .union(oldSigs.select(col(idCol).as("__id"), col("n")))
     verified(sh, cand, sizes, threshold)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** Iterative graph decomposition operators (the g10/g13 family:
   * fixed-round Pregel-style join+agg loops over an edge table).
@@ -9,8 +10,8 @@ import org.apache.spark.sql.functions._
   * Scale posture shared with pagerank/triangles: every round is one
   * degree aggregate plus one semi-join back onto the edges, both keyed
   * on node id (shuffle-partitionable, no driver state); each round's
-  * edge set is localCheckpoint-ed so round r+1 replays a materialized
-  * RDD instead of the whole lineage (the "vals name plans, not results"
+  * edge set is a Materialize.pin, so round r+1 reads held blocks
+  * instead of the whole lineage (the "vals name plans, not results"
   * rule — without the cut the plan doubles per round).
   */
 object Graphs {
@@ -34,7 +35,7 @@ object Graphs {
   def kCorePeel(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = edges.select("x", "y").localCheckpoint()
+    var e = Materialize.pin(edges.select("x", "y"))
     var n = e.count()
     var converged = false
     var r = 0
@@ -43,10 +44,10 @@ object Graphs {
         .unionAll(e.select(col("y").as("node")))
         .groupBy("node").agg(count(lit(1)).as("dg"))
       val keep = deg.filter(col("dg") >= k).select("node")
-      val e2 = e
+      val e2 = Materialize.pin(e
         .join(keep.withColumnRenamed("node", "kx"), col("x") === col("kx"))
         .join(keep.withColumnRenamed("node", "ky"), col("y") === col("ky"))
-        .select("x", "y").localCheckpoint()
+        .select("x", "y"))
       val n2 = e2.count()
       converged = n2 == n // e2 is a subset of e: equal count == equal set
       e = e2
@@ -63,7 +64,7 @@ object Graphs {
     * contract that lets a SQL oracle unroll the iterations, as in
     * kCorePeel/pagerank). Each round is one join (frontier onto the
     * bidirectional edge list) plus one min-aggregate, both keyed on
-    * node id; the running distance table is localCheckpoint-ed per
+    * node id; the running distance table is a Materialize.pin per
     * round to cut replayed lineage.
     *
     * `edges` is an undirected edge list (x, y); `sources` a single
@@ -72,16 +73,14 @@ object Graphs {
   def bfsDistances(edges: DataFrame, sources: DataFrame,
                    rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val bi = edges.select(col("x").as("s"), col("y").as("t"))
-      .unionAll(edges.select(col("y").as("s"), col("x").as("t")))
-      .localCheckpoint()
-    var dist = sources.select(col("node"), lit(0L).as("dist")).localCheckpoint()
+    val bi = Materialize.pin(edges.select(col("x").as("s"), col("y").as("t"))
+      .unionAll(edges.select(col("y").as("s"), col("x").as("t"))))
+    var dist = Materialize.pin(sources.select(col("node"), lit(0L).as("dist")))
     for (_ <- 1 to rounds) {
       val next = bi.join(dist, col("s") === col("node"))
         .select(col("t").as("node"), (col("dist") + 1L).as("dist"))
-      dist = dist.unionAll(next)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
+      dist = Materialize.pin(dist.unionAll(next)
+        .groupBy("node").agg(min("dist").as("dist")))
     }
     dist.select(col("node"), col("dist").cast("long").as("dist"))
   }
@@ -96,23 +95,21 @@ object Graphs {
     *
     * Each round: one count-aggregate of neighbour labels keyed on
     * (node, label) plus a per-node argmax — both shuffle on node id, no
-    * driver state, label table localCheckpoint-ed per round.
+    * driver state, label table a Materialize.pin per round.
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val bi = edges.select(col("x").as("s"), col("y").as("t"))
-      .unionAll(edges.select(col("y").as("s"), col("x").as("t")))
-      .localCheckpoint()
-    var lab = bi.select(col("s").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint()
+    val bi = Materialize.pin(edges.select(col("x").as("s"), col("y").as("t"))
+      .unionAll(edges.select(col("y").as("s"), col("x").as("t"))))
+    var lab = Materialize.pin(bi.select(col("s").as("node")).distinct()
+      .withColumn("label", col("node")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("s").orderBy(col("c").desc, col("label"))
     for (_ <- 1 to rounds) {
-      lab = bi.join(lab, col("t") === col("node"))
+      lab = Materialize.pin(bi.join(lab, col("t") === col("node"))
         .groupBy(col("s"), col("label")).agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("s").as("node"), col("label"))
-        .localCheckpoint()
+        .select(col("s").as("node"), col("label")))
     }
     lab.select(col("node"), col("label").cast("long").as("label"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Similarity
+import graft.core.Materialize
 
 /** IVF (inverted-file) approximate nearest neighbour: partition vectors
   * into cells around seeded sample centroids, probe only the nProbe
@@ -87,14 +88,13 @@ object Ivf {
     */
   def trainCentroids(vectors: DataFrame, idCol: String, vecCol: String,
                      nCells: Int, iters: Int, seed: Long = 42L): DataFrame = {
-    val vecs = vectors.select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vecs = Materialize.shared(vectors.select(col(idCol), col(vecCol)))
     try {
       val init = centroids(vecs, idCol, vecCol, nCells, seed).collect()
         .map(r => (r.getAs[Number]("cell_id").longValue,
           r.getSeq[Number](1).map(_.doubleValue).toSeq)).toSeq
       lloyd(vecs, init, idCol, vecCol, iters)
-    } finally vecs.unpersist(blocking = false)
+    } finally Materialize.release(vecs)
   }
 
   /** Lloyd refinement from a GIVEN centroid table (cell_id, c_vec) —
@@ -113,10 +113,9 @@ object Ivf {
     // every round scans (id, vec): cache the projection for the loop —
     // the iterative-algorithm standard (at cluster scale this is the
     // difference between 1 and `iters` reads of the corpus)
-    val vecs = vectors.select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vecs = Materialize.shared(vectors.select(col(idCol), col(vecCol)))
     try lloyd(vecs, init, idCol, vecCol, iters)
-    finally vecs.unpersist(blocking = false)
+    finally Materialize.release(vecs)
   }
 
   private def lloyd(vecs: DataFrame, initial: Seq[(Long, Seq[Double])],

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Materialize
 
 /** Multimodal column plumbing for a training-data pipeline: media as
   * opaque BINARY columns with a typed metadata struct, batched
@@ -671,7 +672,7 @@ object Multimodal {
         val manifest0 = fetch(idsN)
           .select(col("id"), md5(coalesce(col("payload"),
             lit(Array.emptyByteArray))).as("content_hash"))
-        val manifest = if (dropMissing) manifest0.localCheckpoint()
+        val manifest = if (dropMissing) Materialize.pin(manifest0)
                        else manifest0
         // churn = presented content that differs from stored; the decode
         // attempt additionally skips pairs already known to fail (their
@@ -680,7 +681,7 @@ object Multimodal {
         val changed0 = manifest
           .join(stored.select("id", "content_hash"),
             Seq("id", "content_hash"), "left_anti")
-        val changed = if (dropMissing) changed0 else changed0.localCheckpoint()
+        val changed = if (dropMissing) changed0 else Materialize.pin(changed0)
         val toDecodeIds = changed.join(prevFailed,
           Seq("id", "content_hash"), "left_anti")
         // pass 2: payloads fetched for the CHURN ids only

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Similarity
+import graft.core.Materialize
 
 /** Product-quantization ANN (IVF-PQ's compression half): split each
   * vector into `m` contiguous subspaces, Lloyd-train a small codebook
@@ -60,8 +61,7 @@ object Pq {
     val dims = vectors.select(size(col(vecCol))).head().getInt(0)
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     val subDim = dims / m
-    val vecs = vectors.select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vecs = Materialize.shared(vectors.select(col(idCol), col(vecCol)))
     try {
       // seeded sample init — the same k rows every per-subspace Lloyd
       // would draw (the hash orders by id only), kept in hash order
@@ -100,7 +100,7 @@ object Pq {
       // bit-identical to the per-subspace reference formulation
       val perm = sample.map(_._1).zipWithIndex.sortBy(_._1).map(_._2)
       books.map(b => perm.toSeq.map(c => b(c).map(_.toFloat.toDouble)))
-    } finally vecs.unpersist(blocking = false)
+    } finally Materialize.release(vecs)
   }
 
   /** Reference formulation — one [[Ivf.trainCentroids]] per subspace.

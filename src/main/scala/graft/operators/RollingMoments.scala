@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** Two-level bucketed evaluation of a trailing RANGE window's moments
   * (count, sum, sum-of-squares) — the scale escape for Spark's sliding
@@ -61,10 +62,10 @@ object RollingMoments {
     require(df.columns.intersect(reserved).isEmpty,
       s"input may not use reserved columns ${reserved.mkString(", ")}")
     val vd = col(valCol).cast("decimal(18,4)")
-    val base = df
+    // rowid must be stable across the 3 legs below
+    val base = Materialize.pin(df
       .withColumn("__b", floor(col(usCol) / bucketUs).cast("long"))
-      .withColumn("__rowid", monotonically_increasing_id())
-      .localCheckpoint(true) // rowid must be stable across the 3 legs below
+      .withColumn("__rowid", monotonically_increasing_id()))
 
     // -- own-bucket peer-inclusive prefix + bucket totals, one sort -------
     // RANGE UNBOUNDED..CURRENT includes peers at equal us, exactly the

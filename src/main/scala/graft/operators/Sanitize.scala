@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** PII sanitation operators from SURVEY.md §2.2 (P2-P5, P12).
   *
@@ -214,9 +215,9 @@ object Sanitize {
                       l: Long): DataFrame = {
     require(qiCols.nonEmpty && (qiCols :+ sensCol).forall(df.columns.contains),
       s"columns ${(qiCols :+ sensCol).mkString(",")} must exist")
-    val vc = df.groupBy((qiCols :+ sensCol).map(col): _*)
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // cohort totals + entropy terms share the one agg
+    // cohort totals + entropy terms share the one agg
+    val vc = Materialize.pin(df.groupBy((qiCols :+ sensCol).map(col): _*)
+      .agg(count(lit(1)).as("c")))
     val coh = vc.groupBy(qiCols.map(col): _*)
       .agg(sum("c").as("n"), count(lit(1)).as("l_distinct"))
     val p = col("c").cast("double") / col("n")

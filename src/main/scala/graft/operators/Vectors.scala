@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Similarity
+import graft.core.Materialize
 
 /** Dense-vector corpus operators that are neither top-k search (Ivf/Pq/
   * SimilaritySearch) nor pair dedup (Dedup.embeddingNearDupLsh):
@@ -35,10 +36,9 @@ object Vectors {
                       vecCol: String, tables: Int, bits: Int, dims: Int,
                       threshold: Double, maxBucketSize: Int = 0,
                       excludeSelf: Boolean = true): DataFrame = {
-    def prep(df: DataFrame, suffix: String) =
+    def prep(df: DataFrame, suffix: String) = Materialize.shared(
       df.select(col(idCol).as(s"__id$suffix"), col(vecCol).as(s"__v$suffix"),
-        Similarity.l2norm(col(vecCol)).as(s"__n$suffix"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Similarity.l2norm(col(vecCol)).as(s"__n$suffix")))
     def buckets(e: DataFrame, suffix: String) =
       e.select(col(s"__id$suffix"),
         posexplode(Similarity.hyperplaneBuckets(col(s"__v$suffix"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD
   * 2003): hash every k-gram, slide a w-hash window, keep each window's
@@ -66,10 +67,9 @@ object Winnowing {
     // the cap window and the self-join both read the survivor set:
     // checkpoint it once (vals name plans, not results — the g09 rule)
     val fp = if (hashed) fingerprintsHashed(docs, k, w) else fingerprints(docs, k, w)
-    val kept = fp
+    val kept = Materialize.pin(fp
       .withColumn("nd", count(lit(1)).over(Window.partitionBy("h")))
-      .filter(col("nd") <= maxDocs).drop("nd")
-      .localCheckpoint()
+      .filter(col("nd") <= maxDocs).drop("nd"))
     val b = kept.select(col("doc_id").as("doc_b"), col("h"))
     kept.select(col("doc_id").as("doc_a"), col("h"))
       .join(b, Seq("h"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import OracleSnippets.{AnovaSumCtes, DailyTypeMicros, SegCentsCte, dailyTypeSumCte, segMomentCte}
 
 /** Trend / drift / ordered-run analytics — the monitoring layer that sits
@@ -171,9 +171,9 @@ object Analytics {
       .join(deg.toDF("nx", "dx"), col("x") === col("nx"))
       .join(deg.toDF("ny", "dy"), col("y") === col("ny"))
     val xFirst = struct(col("dx"), col("x")) < struct(col("dy"), col("y"))
-    withDeg.select(
+    Materialize.pin(withDeg.select(
       when(xFirst, col("x")).otherwise(col("y")).as("src"),
-      when(xFirst, col("y")).otherwise(col("x")).as("dst")).localCheckpoint()
+      when(xFirst, col("y")).otherwise(col("x")).as("dst")))
   }
 
   val queries: Seq[Query] = Seq(
@@ -249,12 +249,12 @@ object Analytics {
         |        JOIN s1 sb ON s2.brand_b = sb.brand
         |        CROSS JOIN n
         |WHERE s2.supp_ab >= 20""".stripMargin) { (s, d) =>
-      val b = Tables.lineitem(s, d)
+      // basket table feeds n, s1, and both s2 legs
+      val b = Materialize.pin(Tables.lineitem(s, d)
         .join(broadcast(Tables.part(s, d)),
           col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey").as("ok"), col("p_brand").as("brand"))
-        .distinct()
-        .localCheckpoint() // basket table feeds n, s1, and both s2 legs
+        .distinct())
       val n = b.agg(count_distinct(col("ok")).as("n_baskets"))
       val s1 = b.groupBy("brand").agg(count(lit(1)).as("supp"))
       val s2 = b.select(col("ok"), col("brand").as("brand_a"))
@@ -315,10 +315,10 @@ object Analytics {
         |                  / (n.n * least(n.ka - 1, n.kb - 1))), 6) AS cramers_v
         |FROM s CROSS JOIN n""".stripMargin) {
       (s, d) =>
-      val t = Tables.orders(s, d)
+      // marginals + totals + cells share one scan; priority x status cells
+      val t = Materialize.small(Tables.orders(s, d)
         .groupBy(col("o_orderpriority").as("a"), col("o_orderstatus").as("b"))
-        .agg(count(lit(1)).as("o"))
-        .localCheckpoint() // marginals + totals + cells share one scan
+        .agg(count(lit(1)).as("o")))
       val r = t.groupBy("a").agg(sum("o").as("ra"))
       val c = t.groupBy("b").agg(sum("o").as("cb"))
       val n = t.agg(sum("o").as("n"), count_distinct(col("a")).as("ka"),
@@ -397,11 +397,11 @@ object Analytics {
         |FROM ha CROSS JOIN hb CROSS JOIN hab CROSS JOIN hba""".stripMargin) {
       (s, d) =>
       val ev = Tables.events(s, d)
-      val t = ev
+      // marginals + two conditional entropies share it; type x weekday
+      val t = Materialize.small(ev
         .groupBy(col("event_type").as("a"),
           (datediff(to_date(col("ts")), lit("1970-01-01")) % 7).as("b"))
-        .agg(count(lit(1)).as("o"))
-        .localCheckpoint() // marginals + two conditional entropies share it
+        .agg(count(lit(1)).as("o")))
       val r = t.groupBy("a").agg(sum("o").as("ra"))
       val c = t.groupBy("b").agg(sum("o").as("cb"))
       val n = t.agg(sum("o").as("n"))
@@ -509,13 +509,13 @@ object Analytics {
       val pur = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("pid"),
           unix_micros(col("ts")).as("pt"))
-      val touch = pur.join(
+      // k, first/last windows share the touch join
+      val touch = Materialize.pin(pur.join(
           ev.filter(col("event_type").isin("view", "click", "signup"))
             .select(col("user_id"), col("event_type"),
               unix_micros(col("ts")).as("tt"), col("event_id")),
           Seq("user_id"))
-        .filter(col("tt") < col("pt") && col("tt") >= col("pt") - 604800000000L)
-        .localCheckpoint() // k, first/last windows share the touch join
+        .filter(col("tt") < col("pt") && col("tt") >= col("pt") - 604800000000L))
       val k = touch.groupBy("pid").agg(count(lit(1)).as("k"))
       val wf = Window.partitionBy("pid").orderBy(col("tt"), col("event_id"))
       val wl = Window.partitionBy("pid")
@@ -619,8 +619,8 @@ object Analytics {
         |                    / 18.0), 6) AS z
         |FROM s JOIN n USING (event_type)
         |       LEFT JOIN ties USING (event_type)""".stripMargin) { (s, d) =>
-      val daily = Temporal.dailyTypeSums(s, d)(_.as("x"))
-        .localCheckpoint() // pair join (both legs), n, and ties share it
+      // pair join (both legs), n, and ties share it; event type x day
+      val daily = Materialize.small(Temporal.dailyTypeSums(s, d)(_.as("x")))
       val pairs = daily.select(col("event_type"), col("day").as("d1"),
           col("x").as("x1"))
         .join(daily.select(col("event_type"), col("day").as("d2"),
@@ -814,10 +814,10 @@ object Analytics {
           when((col("o_orderkey") * 13 + col("o_custkey") * 7)
             % (col("o_orderkey") % 8 + col("o_custkey") % 8 + 2)
             < col("o_orderkey") % 8 + 1, 1L).otherwise(0L).as("aw"))
-      val dir = raw.select(col("a").as("i"), col("b").as("j"), col("aw").as("w"))
+      // 56 rows (8 x 7 ordered pairs) drive 3 fixpoint rounds — one scan
+      val dir = Materialize.small(raw.select(col("a").as("i"), col("b").as("j"), col("aw").as("w"))
         .unionAll(raw.select(col("b"), col("a"), lit(1L) - col("aw")))
-        .groupBy("i", "j").agg(sum("w").as("w"), count(lit(1)).as("n"))
-        .localCheckpoint() // 56 rows drive 3 fixpoint rounds — one scan
+        .groupBy("i", "j").agg(sum("w").as("w"), count(lit(1)).as("n")))
       val wt = dir.groupBy("i").agg(sum("w").as("wi"), sum("n").as("ni"))
       var pi = wt.select(col("i"), lit(1.0).as("pi"))
       for (_ <- 1 to 3) {
@@ -877,8 +877,8 @@ object Analytics {
         ((col("o_orderkey") * 7) % 4).as("a"),
         when(col("o_orderkey") % 3 === 0, (col("o_custkey") * 5) % 4)
           .otherwise((col("o_orderkey") * 7) % 4).as("b"))
-      val t = r.groupBy("a", "b").agg(count(lit(1)).as("o"))
-        .localCheckpoint() // marginals + totals share one scan
+      // marginals + totals share one scan; 4 x 4 rating cells
+      val t = Materialize.small(r.groupBy("a", "b").agg(count(lit(1)).as("o")))
       val ra = t.groupBy("a").agg(sum("o").as("na"))
       val cb = t.groupBy("b").agg(sum("o").as("nb"))
       val n = t.agg(sum("o").as("n"),
@@ -1367,11 +1367,10 @@ object Analytics {
         |FROM m c LEFT JOIN m p
         |  ON c.prio = p.prio AND p.month = c.month - INTERVAL 1 MONTH""".stripMargin) {
       (s, d) => {
-        val m = Tables.orders(s, d)
+        val m = Materialize.pin(Tables.orders(s, d)
           .groupBy(col("o_orderpriority").as("prio"),
             date_trunc("month", col("o_orderdate")).as("month"))
-          .agg(sum(col("o_totalprice").cast("decimal(18,4)")).as("rev"))
-          .localCheckpoint()
+          .agg(sum(col("o_totalprice").cast("decimal(18,4)")).as("rev")))
         val p = m.select(col("prio").as("p_prio"), col("month").as("p_month"),
           col("rev").as("p_rev"))
         m.join(broadcast(p),
@@ -1922,10 +1921,10 @@ object Analytics {
         |       (SELECT CAST(nn AS BIGINT) FROM tot) AS n
         |FROM terms""".stripMargin) {
       (s, d) => {
-        val obs = Tables.orders(s, d)
+        // margins + grid all derive from this one agg; priority x status
+        val obs = Materialize.small(Tables.orders(s, d)
           .groupBy(col("o_orderpriority").as("p"), col("o_orderstatus").as("st"))
-          .agg(count(lit(1)).as("n"))
-          .localCheckpoint() // margins + grid all derive from this one agg
+          .agg(count(lit(1)).as("n")))
         val rt = obs.groupBy("p").agg(sum("n").as("rn"))
         val ct = obs.groupBy("st").agg(sum("n").as("cn"))
         val tot = obs.agg(sum("n").as("nn"))
@@ -2024,8 +2023,8 @@ object Analytics {
         |               * (CAST(d_sum AS DOUBLE) / (2.0 * m)), 9) AS term
         |FROM deg LEFT JOIN ein ON deg.c = ein.c CROSS JOIN m""".stripMargin) {
       (s, d) => {
-        val e = coSupplierEdges(s, d, "g13")
-          .localCheckpoint() // m + within-edges + both degree legs share it
+        // m + within-edges + both degree legs share it
+        val e = Materialize.pin(coSupplierEdges(s, d, "g13"))
         val m = e.agg(count(lit(1)).as("m"))
         val ein = e.filter(col("x") % 8 === col("y") % 8)
           .groupBy((col("x") % 8).as("c")).agg(count(lit(1)).as("e_in"))
@@ -2055,7 +2054,7 @@ object Analytics {
         // legs + closing): localCheckpoint both (the g10 pattern) or
         // every reference re-executes the whole distinct-pair join —
         // the plan balloons to 47 exchanges without these two cuts
-        val e = coSupplierEdges(s, d, "g13").localCheckpoint()
+        val e = Materialize.pin(coSupplierEdges(s, d, "g13"))
         val deg = edgeDegrees(e)
         val de = degreeOriented(e, deg)
         val wedge = de.toDF("s1", "v")
@@ -2114,11 +2113,11 @@ object Analytics {
         val benfordP = Seq(0.301030, 0.176091, 0.124939, 0.096910, 0.079181,
           0.066947, 0.057992, 0.051153, 0.045757)
         val u = round(col("o_totalprice") * 100).cast("long")
-        val obs = Tables.orders(s, d)
+        // tot + grid both derive from this one agg; priority x first digit
+        val obs = Materialize.small(Tables.orders(s, d)
           .select(col("o_orderpriority").as("p"),
             substring(u.cast("string"), 1, 1).cast("long").as("dg"))
-          .groupBy("p", "dg").agg(count(lit(1)).as("n"))
-          .localCheckpoint() // tot + grid both derive from this one agg
+          .groupBy("p", "dg").agg(count(lit(1)).as("n")))
         val tot = obs.groupBy("p").agg(sum("n").as("tn"))
         val ben = obs.sparkSession.range(1).select(explode(array(
           benfordP.zipWithIndex.map { case (pb, i) =>
@@ -2166,8 +2165,8 @@ object Analytics {
         |FROM r WHERE rn = (m + 1) // 2 OR rn = (m + 2) // 2
         |GROUP BY 1""".stripMargin) {
       (s, d) => {
-        val daily = Temporal.dailyTypeSums(s, d)(_.cast("double").as("x"))
-          .localCheckpoint() // both self-join legs read this one agg
+        // both self-join legs read this one agg; event type x day
+        val daily = Materialize.small(Temporal.dailyTypeSums(s, d)(_.cast("double").as("x")))
         val pairs = daily.toDF("et", "di", "xi")
           .join(daily.toDF("et2", "dj", "xj"),
             col("et") === col("et2") && col("di") < col("dj"))
@@ -2311,11 +2310,10 @@ object Analytics {
         |         / (da.dg + db.dg - ne.common) AS jaccard
         |FROM ne JOIN deg da ON ne.x = da.s JOIN deg db ON ne.y = db.s""".stripMargin) {
       (s, d) => {
-        val e0 = coSupplierEdges(s, d, "g23")
-          .localCheckpoint() // bi legs + the non-edge anti-join share it
-        val bi = e0.select(col("x").as("s"), col("y").as("t"))
-          .unionAll(e0.select(col("y").as("s"), col("x").as("t")))
-          .localCheckpoint()
+        // bi legs + the non-edge anti-join share it
+        val e0 = Materialize.pin(coSupplierEdges(s, d, "g23"))
+        val bi = Materialize.pin(e0.select(col("x").as("s"), col("y").as("t"))
+          .unionAll(e0.select(col("y").as("s"), col("x").as("t"))))
         val deg = bi.groupBy("s").agg(count(lit(1)).as("dg"))
         val mid = deg.filter(col("dg") <= 50).select("s")
         val cn = bi.join(mid, "s")
@@ -2373,8 +2371,8 @@ object Analytics {
         |  GROUP BY 1)
         |SELECT node, CAST(dist AS BIGINT) AS dist FROM d4""".stripMargin) {
       (s, d) => {
-        val e = coSupplierEdges(s, d, "g20")
-          .localCheckpoint() // nodes + bidirectional legs share the pair join
+        // nodes + bidirectional legs share the pair join
+        val e = Materialize.pin(coSupplierEdges(s, d, "g20"))
         val sources = e.select(col("x").as("node"))
           .unionAll(e.select(col("y").as("node")))
           .distinct().filter(col("node") % 10 === 0)
@@ -2452,8 +2450,8 @@ object Analytics {
         |       dev.ad > 3 * 1.4826 * mad.mad AS outlier
         |FROM dev JOIN mad ON dev.event_type = mad.event_type""".stripMargin) {
       (s, d) => {
-        val daily = Temporal.dailyTypeSums(s, d)(_.cast("double").as("x"))
-          .localCheckpoint() // ranks, deviations, and output share one agg
+        // ranks, deviations, and output share one agg; event type x day
+        val daily = Materialize.small(Temporal.dailyTypeSums(s, d)(_.cast("double").as("x")))
         def medianOf(df: org.apache.spark.sql.DataFrame, valCol: String,
                      tie: String, out: String) = {
           val w = Window.partitionBy("event_type").orderBy(valCol, tie)
@@ -2562,15 +2560,16 @@ object Analytics {
         |SELECT event_type, 3, CAST(sum(n3) AS DOUBLE) / CAST(sum(den) AS DOUBLE)
         |FROM q GROUP BY 1""".stripMargin) {
       (s, d) => {
-        val daily = Temporal.dailyTypeSums(s, d)(_.cast("double").as("x"))
-          .localCheckpoint() // mean + lead window both read the one scan
+        // mean + lead window both read the one scan; event type x day
+        val daily = Materialize.small(Temporal.dailyTypeSums(s, d)(_.cast("double").as("x")))
         val mu = daily.groupBy("event_type")
           .agg((sum(col("x").cast("decimal(18,4)")).cast("double")
             / count(lit(1))).as("mu"))
         val w = Window.partitionBy("event_type").orderBy("day")
         def q6(c: org.apache.spark.sql.Column) =
           floor(c * lit(1000000.0) + lit(0.5)).cast("long")
-        val l = daily.join(broadcast(mu), "event_type")
+        // three ACF legs share the one window pass; event type x day
+        val l = Materialize.small(daily.join(broadcast(mu), "event_type")
           .withColumn("x1", lead(col("x"), 1).over(w))
           .withColumn("x2", lead(col("x"), 2).over(w))
           .withColumn("x3", lead(col("x"), 3).over(w))
@@ -2578,8 +2577,7 @@ object Analytics {
             q6((col("x") - col("mu")) * (col("x") - col("mu"))).as("den"),
             q6((col("x") - col("mu")) * (col("x1") - col("mu"))).as("n1"),
             q6((col("x") - col("mu")) * (col("x2") - col("mu"))).as("n2"),
-            q6((col("x") - col("mu")) * (col("x3") - col("mu"))).as("n3"))
-          .localCheckpoint() // three ACF legs share the one window pass
+            q6((col("x") - col("mu")) * (col("x3") - col("mu"))).as("n3")))
         def leg(k: Int) = l.groupBy("event_type")
           .agg((sum(col(s"n$k")).cast("double")
             / sum(col("den")).cast("double")).as("acf"))
@@ -2726,12 +2724,12 @@ object Analytics {
         val counts = Tables.events(s, d)
           .groupBy(col("user_id").cast("string").as("item"))
           .agg(count(lit(1)).as("n_true"))
-        val cells = counts.select(col("item"), col("n_true"),
+        // sketch build + estimate join share one pass
+        val cells = Materialize.pin(counts.select(col("item"), col("n_true"),
             explode(array((0 to 3).map(lit(_)): _*)).as("j"))
           .withColumn("bucket",
             conv(substring(md5(concat(col("item"), lit("#"),
-              col("j").cast("string"))), 1, 4), 16, 10).cast("int") % 64)
-          .localCheckpoint() // sketch build + estimate join share one pass
+              col("j").cast("string"))), 1, 4), 16, 10).cast("int") % 64))
         val sketch = cells.groupBy("j", "bucket").agg(sum("n_true").as("cell"))
         cells.join(broadcast(sketch), Seq("j", "bucket"))
           .groupBy("item", "n_true").agg(min("cell").as("n_cms"))
@@ -2776,9 +2774,9 @@ object Analytics {
         |FROM deg LEFT JOIN pt ON deg.node = pt.node
         |WHERE dg >= 2""".stripMargin) {
       (s, d) => {
-        val e = coSupplierEdges(s, d, "g24").localCheckpoint() // 3 references (edges + both degree legs)
-        val deg = edgeDegrees(e)
-          .localCheckpoint() // orientation + final report both read it
+        val e = Materialize.pin(coSupplierEdges(s, d, "g24")) // 3 references (edges + both degree legs)
+        // orientation + final report both read it
+        val deg = Materialize.pin(edgeDegrees(e))
         val de = degreeOriented(e, deg)
         val wedge = de.toDF("u", "v")
           .join(de.toDF("s2", "w"), col("u") === col("s2") && col("v") < col("w"))
@@ -2832,13 +2830,13 @@ object Analytics {
         |FROM sums
         |WHERE m * sj2 - sj * sj <> 0""".stripMargin) {
       (s, d) => {
-        val e = coSupplierEdges(s, d, "g25").localCheckpoint()
+        val e = Materialize.pin(coSupplierEdges(s, d, "g25"))
         val deg = edgeDegrees(e)
-        val withDeg = e
+        // both slot directions read the one joined pass
+        val withDeg = Materialize.pin(e
           .join(deg.toDF("nx", "dx"), col("x") === col("nx"))
           .join(deg.toDF("ny", "dy"), col("y") === col("ny"))
-          .select(col("dx").cast("long").as("dx"), col("dy").cast("long").as("dy"))
-          .localCheckpoint() // both slot directions read the one joined pass
+          .select(col("dx").cast("long").as("dx"), col("dy").cast("long").as("dy")))
         val slots = withDeg.select(col("dx").as("j"), col("dy").as("k"))
           .unionAll(withDeg.select(col("dy").as("j"), col("dx").as("k")))
         slots.agg(count(lit(1)).as("m"), sum("j").as("sj"),
@@ -2882,15 +2880,15 @@ object Analytics {
         |UNION ALL
         |SELECT 'hub', CAST(c AS BIGINT), CAST(hub AS BIGINT) FROM h2""".stripMargin) {
       (s, d) => {
-        val e = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+        // 4 round joins read the one edge table
+        val e = Materialize.pin(Tables.orders(s, d).select("o_orderkey", "o_custkey")
           .join(graft.core.Par.fanOut( // §2.5: parallel probe of the fact scan
               Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
               col("l_orderkey")),
             col("o_orderkey") === col("l_orderkey"))
           .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
           .distinct()
-          .repartition(col("s"))
-          .localCheckpoint() // 4 round joins read the one edge table
+          .repartition(col("s")))
         // hub0 = 1000 for every customer, so auth1 folds into a count
         val a1 = e.groupBy("s").agg((lit(1000L) * count(lit(1))).as("auth"))
         val h1 = e.join(a1.toDF("as1", "auth"), col("s") === col("as1"))
@@ -2952,9 +2950,9 @@ object Analytics {
           .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
           .select(col("c_mktsegment").as("seg"),
             round(col("o_totalprice") * 100).cast("long").as("xc"))
-        val vals = u.groupBy("xc").agg(count(lit(1)).as("cnt"))
-          .withColumn("bkt", expr("xc div 100000"))
-          .localCheckpoint() // bucket prefix + within-bucket rank + ties share it
+        // bucket prefix + within-bucket rank + ties share it
+        val vals = Materialize.pin(u.groupBy("xc").agg(count(lit(1)).as("cnt"))
+          .withColumn("bkt", expr("xc div 100000")))
         // two-level global rank: O(buckets) prefix window + partitioned within
         val bcnt = vals.groupBy("bkt").agg(sum("cnt").as("bn"))
         val wb = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
@@ -3014,8 +3012,8 @@ object Analytics {
         |       (ssb / (k - 1)) / (ssw / (n - k)) AS f_bf
         |FROM a, t""".stripMargin) {
       (s, d) => {
-        val x = segCents(s, d, col("o_orderkey").as("okey"))
-          .localCheckpoint() // rank pass + deviation join share one scan
+        // rank pass + deviation join share one scan
+        val x = Materialize.pin(segCents(s, d, col("o_orderkey").as("okey")))
         val wr = Window.partitionBy("seg").orderBy("xc", "okey")
         val r = x.withColumn("rn", row_number().over(wr))
           .withColumn("m", count(lit(1)).over(Window.partitionBy("seg")))
@@ -3371,8 +3369,8 @@ object Analytics {
         |       (r - mu) / sqrt((mu - 1.0) * (mu - 2.0) / (n1 + n2 - 1.0)) AS z
         |FROM z""".stripMargin) {
       (s, d) => {
-        val daily = Temporal.dailyTypeSums(s, d)(micros(_).as("q"))
-          .localCheckpoint() // median ranks + the sign pass share it
+        // median ranks + the sign pass share it; event type x day
+        val daily = Materialize.small(Temporal.dailyTypeSums(s, d)(micros(_).as("q")))
         val wr = Window.partitionBy("event_type").orderBy("q", "day")
         val r = daily.withColumn("rn", row_number().over(wr))
           .withColumn("m", count(lit(1)).over(Window.partitionBy("event_type")))
@@ -3506,10 +3504,10 @@ object Analytics {
         |FROM deg LEFT JOIN (SELECT u, count(*) AS n2 FROM pure GROUP BY 1) p
         |  ON deg.u = p.u""".stripMargin) {
       (s, d) => {
-        val e = coSupplierEdges(s, d, "g28").localCheckpoint() // adjacency x2 + the anti join share it
-        val adj = e.select(col("x").as("u"), col("y").as("v"))
-          .unionAll(e.select(col("y").as("u"), col("x").as("v")))
-          .localCheckpoint() // degree, middle filter, and second hop share it
+        val e = Materialize.pin(coSupplierEdges(s, d, "g28")) // adjacency x2 + the anti join share it
+        // degree, middle filter, and second hop share it
+        val adj = Materialize.pin(e.select(col("x").as("u"), col("y").as("v"))
+          .unionAll(e.select(col("y").as("u"), col("x").as("v"))))
         val deg = adj.groupBy("u").agg(count(lit(1)).as("dg"))
         val mid = adj.join(deg.toDF("vd", "dg2"), col("v") === col("vd"))
           .filter(col("dg2") <= 50).select("u", "v")
@@ -3570,11 +3568,11 @@ object Analytics {
           .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
           .select(col("c_mktsegment").as("seg"), col("o_orderkey").as("okey"),
             round(col("o_totalprice") * 100).cast("long").as("xc"))
-        val r = x.withColumn("rn",
+        // bounds + the clamped agg share the rank pass
+        val r = Materialize.pin(x.withColumn("rn",
             row_number().over(Window.partitionBy("seg").orderBy("xc", "okey")))
           .withColumn("n", count(lit(1)).over(Window.partitionBy("seg")))
-          .withColumn("k", floor(lit(0.05) * col("n")).cast("long"))
-          .localCheckpoint() // bounds + the clamped agg share the rank pass
+          .withColumn("k", floor(lit(0.05) * col("n")).cast("long")))
         val bounds = r.groupBy("seg").agg(
           min(when(col("rn") === col("k") + 1, col("xc"))).as("lo"),
           min(when(col("rn") === col("n") - col("k"), col("xc"))).as("hi"))
@@ -3678,10 +3676,10 @@ object Analytics {
           .join(lc, col("l_orderkey") === col("o_orderkey"))
           .select(col("c_mktsegment").as("seg"), col("o_orderkey").as("k"),
             round(col("o_totalprice") * 100).cast("long").as("x"), col("y"))
-        val samp = pairs0.withColumn("rn",
+        // both self-join legs share the sample: top 200 per segment
+        val samp = Materialize.small(pairs0.withColumn("rn",
             row_number().over(Window.partitionBy("seg").orderBy("k")))
-          .filter(col("rn") <= 200).select("seg", "k", "x", "y")
-          .localCheckpoint() // both self-join legs share the sample
+          .filter(col("rn") <= 200).select("seg", "k", "x", "y"))
         val pp = samp.toDF("seg", "ka", "xa", "ya")
           .join(samp.toDF("seg2", "kb", "xb", "yb"),
             col("seg") === col("seg2") && col("ka") < col("kb"))
@@ -3750,11 +3748,11 @@ object Analytics {
           .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
           .select(col("c_mktsegment").as("seg"), col("o_orderkey").as("okey"),
             round(col("o_totalprice") * 100).cast("long").as("xc"))
-        val r = x.withColumn("i",
+        // draw explode + the index join-back share it
+        val r = Materialize.pin(x.withColumn("i",
             row_number().over(Window.partitionBy("seg").orderBy("okey")))
           .withColumn("n", count(lit(1)).over(Window.partitionBy("seg")))
-          .select("seg", "xc", "i", "n")
-          .localCheckpoint() // draw explode + the index join-back share it
+          .select("seg", "xc", "i", "n"))
         // the rank window leaves r hash-partitioned by seg — 5 live
         // partitions — and the 40x explode + 6M md5 draws would inherit
         // that parallelism; round-robin the narrow index rows first

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import graft.operators.{Reshape, Resolution, Sanitize, Standardize}
 
 /** Cleaning / sanitation / resolution / reshape operators (SURVEY.md
@@ -765,15 +765,15 @@ object Cleaning {
         |       5 * num <= 3 * nq * np AS tclose_ok
         |FROM e, np""".stripMargin) {
       (s, d) => {
-        val j = Tables.customer(s, d)
+        // global + cohort aggregates share one scan
+        val j = Materialize.pin(Tables.customer(s, d)
           .join(broadcast(Tables.nation(s, d)),
             col("c_nationkey") === col("n_nationkey"))
           .select(col("n_name").as("nation"), col("c_mktsegment").as("seg"),
             when(col("c_acctbal") < 0, 0)
               .when(col("c_acctbal") < 3000, 1)
               .when(col("c_acctbal") < 7000, 2)
-              .otherwise(3).as("band"))
-          .localCheckpoint() // global + cohort aggregates share one scan
+              .otherwise(3).as("band")))
         val g = j.groupBy("band").agg(count(lit(1)).as("pc"))
         val np = g.agg(sum("pc").as("np"))
         val coh = j.groupBy("nation", "seg").agg(count(lit(1)).as("nq"))

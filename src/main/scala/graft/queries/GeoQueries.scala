@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import graft.functions.Geo
 import OracleSnippets.{diamondEdgeDist, diamondInside, diamondPoints, gridKmCtes}
 
@@ -400,11 +400,11 @@ object GeoQueries {
         |       CAST(diff_cents AS BIGINT) AS diff_cents
         |FROM cand WHERE 100 * diff_cents <= ca""".stripMargin) {
       (s, d) => {
-        val p = Tables.events(s, d).filter(col("event_type") === "purchase")
+        // both self-join legs share the scan
+        val p = Materialize.pin(Tables.events(s, d).filter(col("event_type") === "purchase")
           .select(col("event_id"), col("user_id"),
             expr("unix_micros(ts)").as("us"),
-            round(col("value") * 100).cast("long").as("c"))
-          .localCheckpoint() // both self-join legs share the scan
+            round(col("value") * 100).cast("long").as("c")))
         val a = p.toDF("id_a", "user_id", "us_a", "ca")
           .withColumn("bkt", explode(array(expr("us_a div 600000000") - 1,
             expr("us_a div 600000000"), expr("us_a div 600000000") + 1)))

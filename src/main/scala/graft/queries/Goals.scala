@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import graft.operators.Windows
 
 /** The goals/targets cascade (SURVEY.md §3.2, 00.store_se_goals.R) — the
@@ -126,10 +126,9 @@ object Goals {
       .select(col("o_custkey").as("c"),
         (col("l_suppkey") + 1000000L).as("s2"))
       .distinct()
-    val edges = base.select(col("c").as("src"), col("s2").as("dst"))
+    val edges = Materialize.pin(base.select(col("c").as("src"), col("s2").as("dst"))
       .unionAll(base.select(col("s2").as("src"), col("c").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint()
+      .repartition(col("src")))
     (edges, edges.groupBy("src").agg(count(lit(1)).as("outdeg")))
   }
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import graft.operators.OdkKeys
 
 /** Instance-key parsing and semi-structured extraction queries. */
@@ -26,10 +26,10 @@ object Keys {
   private[queries] def sketchIntersectionVerdict(
       ev: org.apache.spark.sql.DataFrame,
       ests: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val exA = ev.filter(col("event_type") === "view")
-      .select("user_id").distinct().localCheckpoint()
-    val exB = ev.filter(col("event_type") === "purchase")
-      .select("user_id").distinct().localCheckpoint()
+    val exA = Materialize.pin(ev.filter(col("event_type") === "view")
+      .select("user_id").distinct())
+    val exB = Materialize.pin(ev.filter(col("event_type") === "purchase")
+      .select("user_id").distinct())
     val exact = exA.agg(count(lit(1)).as("exact_a")).crossJoin(
       exB.agg(count(lit(1)).as("exact_b"))).crossJoin(
       exA.join(exB, Seq("user_id")).agg(count(lit(1)).as("exact_both")))
@@ -269,9 +269,9 @@ object Keys {
         |FROM p""".stripMargin) {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val g = Tables.events(s, d).groupBy("user_id")
-          .agg(count(lit(1)).as("m"))
-          .localCheckpoint() // ranking + totals share the one agg
+        // ranking + totals share the one agg
+        val g = Materialize.pin(Tables.events(s, d).groupBy("user_id")
+          .agg(count(lit(1)).as("m")))
         val tot = g.agg(count(lit(1)).as("n"), sum("m").as("nr"),
           max("m").as("mx"))
         val ranked = g.withColumn("rn",

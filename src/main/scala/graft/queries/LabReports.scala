@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 
 /** The reference's lab sample-logging report family
   * (pipeline-reporting/R/lab/lab_reports.Rmd:140-357) — the last
@@ -165,14 +165,13 @@ object LabReports {
     * checkpoint's LogicalRDD it analyzes clean. */
   private[graft] def labSummary(inc: DataFrame, field: DataFrame): DataFrame = {
     val logged = inc.filter(col("sample_status").isNotNull)
-    val base = logged.select("study", "sample_status", "sample")
-      .distinct().localCheckpoint()
+    val base = Materialize.pin(logged.select("study", "sample_status", "sample")
+      .distinct())
     // agg feeds two branches (smplAll + byStatus); unpinned, the
     // rollup's Expand pass over base runs once per consumer. It is
-    // ≤ (studies+1) x (statuses+1) rows — pin it.
-    val agg = base.rollup("study", "sample_status")
-      .agg(countDistinct("sample").as("val"), grouping_id().as("g"))
-      .localCheckpoint()
+    // ≤ (studies+1) x (statuses+1) rows.
+    val agg = Materialize.small(base.rollup("study", "sample_status")
+      .agg(countDistinct("sample").as("val"), grouping_id().as("g")))
     // fieldCnt replays for its two consumers — the field scan is a
     // key-pruned dim read, cheaper than an eager checkpoint job
     val fieldCnt = field.groupBy("study")
@@ -190,9 +189,8 @@ object LabReports {
     // rollup's Expand pass over base runs 4x and the field scan 2x
     // (StageProfile r16: four ~4 s t=10 expand/partial stages + six
     // single-task finals, ~24 s of the row's 25 s profile wall). The
-    // table is ≤ metrics x studies rows, so the checkpoint is free.
-    val longm = fieldCnt.unionByName(smplAll).unionByName(byStatus)
-      .localCheckpoint()
+    // table is ≤ metrics x studies rows.
+    val longm = Materialize.small(fieldCnt.unionByName(smplAll).unionByName(byStatus))
     // the reference inner-joins its EFFICACY-ONLY field row, so pk
     // never gets a to-be-logged difference (Rmd:228-233) — preserved.
     // Derived as a conditional-sum fold over the long table, not a

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import graft.operators.Multimodal
 
 /** Multimodal binary-column queries. m01/m03 run over text-as-bytes
@@ -406,8 +406,8 @@ object MultimodalQueries {
         |FROM ham WHERE hamming <= 3""".stripMargin) { (s, d) =>
       val withP = Multimodal.withImagePayload(
         Tables.documents(s, d).select("doc_id"), "doc_id")
-      val h = Multimodal.dHash(withP, "payload").select("doc_id", "dhash")
-        .localCheckpoint() // decode once: three consumers below
+      // decode once: three consumers below
+      val h = Materialize.pin(Multimodal.dHash(withP, "payload").select("doc_id", "dhash"))
       def bandVal(c: org.apache.spark.sql.Column, i: Int) =
         conv(substring(c, i * 4 + 1, 4), 16, 10).cast("long")
       // exact-dup collapse FIRST: banding runs over DISTINCT hashes only
@@ -415,7 +415,7 @@ object MultimodalQueries {
       // at sf0.1 this is 5000 docs but only ~256 distinct images, and
       // banding the raw docs cost 10x the whole decode), then candidate
       // hash pairs expand back to doc pairs by joining the doc lists
-      val distinctH = h.select("dhash").distinct().localCheckpoint()
+      val distinctH = Materialize.pin(h.select("dhash").distinct())
       val banded = distinctH.select(col("dhash"),
         explode(array((0 until 4).map(i =>
           struct(lit(i).as("band"), bandVal(col("dhash"), i).as("bv"))): _*))
@@ -615,10 +615,10 @@ object MultimodalQueries {
       (s, d) => {
         val withP = Multimodal.withImagePayload(
           Tables.documents(s, d).select("doc_id"), "doc_id")
-        val hist = Multimodal.decodePixels(withP, "doc_id", "payload")
+        // totals, entropy, and mode share the decode
+        val hist = Materialize.pin(Multimodal.decodePixels(withP, "doc_id", "payload")
           .groupBy(col("id").as("doc_id"), col("r"))
-          .agg(count(lit(1)).as("c"))
-          .localCheckpoint() // totals, entropy, and mode share the decode
+          .agg(count(lit(1)).as("c")))
         val tot = hist.groupBy("doc_id").agg(sum("c").as("n"))
         val p = col("c").cast("double") / col("n")
         // entropy + mode in ONE aggregate over the joined hist: the mode

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 
 /** Report-table computations (SURVEY.md §2.7 conditional surface): the
   * reference's status/reason decision tables (60-branch case_when
@@ -551,14 +551,13 @@ object Reporting {
               .when(col("sel") === 10, "Other"))
           .withColumn("rn", row_number().over(Window.partitionBy("extid")
             .orderBy(col("event_id") % 7 + 1, col("event_id"))))
-        // cached (the g29 convention): agg is |visits x reasons| rows
+        // held (the g29 convention): agg is |visits x reasons| rows
         // (~84) and BOTH the detail leg and the total rows read it —
-        // without the pin the events scan + window + first agg run twice
-        val agg = f.select(col("visit"), expr(SrPfuReason).as("pfu_reason"),
+        // without it the events scan + window + first agg run twice
+        val agg = Materialize.small(f.select(col("visit"), expr(SrPfuReason).as("pfu_reason"),
             when(col("rn") === 1, 1).otherwise(0).as("is_enr"))
           .groupBy("visit", "pfu_reason")
-          .agg(count(lit(1)).as("n"), sum("is_enr").cast("long").as("n_enrolment"))
-          .cache()
+          .agg(count(lit(1)).as("n"), sum("is_enr").cast("long").as("n_enrolment")))
         val tot = agg.groupBy("visit")
           .agg(sum("n").cast("long").as("t"),
             sum("n_enrolment").cast("long").as("te"))
@@ -732,16 +731,15 @@ object Reporting {
           (conds.tail.map { case (n, c) => count(when(c, 1)).as(s"ind_$n") } ++
             conds.map { case (n, c) =>
               max(when(c, 1L).otherwise(0L)).as(s"any_$n") }): _*)
-        // cached like the reference's base table: m is |visits x arms|
+        // held like the reference's base table: m is |visits x arms|
         // rows (28), and BOTH its consumers (the visit list and the
-        // metric join) read the cache — orders is scanned exactly once.
+        // metric join) read it — orders is scanned exactly once.
         // (Plain exchange reuse does not fire here: the visit branch
         // prunes to fewer columns, so the subtrees differ.)
-        val m = perHh.groupBy("visit", "assignment").agg(
+        val m = Materialize.small(perHh.groupBy("visit", "assignment").agg(
           sum(s"ind_${conds.head._1}").as(s"ind_${conds.head._1}"),
           (conds.tail.map { case (n, _) => sum(s"ind_$n").as(s"ind_$n") } ++
-            conds.map { case (n, _) => sum(s"any_$n").as(s"hh_$n") }): _*)
-          .cache()
+            conds.map { case (n, _) => sum(s"any_$n").as(s"hh_$n") }): _*))
         val t = Tables.customer(s, d).groupBy(
             (col("c_custkey") % 4).as("assignment"))
           .agg(countDistinct(col("c_custkey")).as("hh_target"),
@@ -1087,10 +1085,9 @@ object Reporting {
         |SELECT 'total_value',
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) FROM base""".stripMargin) {
       (s, d) => {
-        val base = Tables.orders(s, d)
+        val base = Materialize.shared(Tables.orders(s, d)
           .filter(col("o_totalprice") > 1000)
-          .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-          .cache()
+          .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"))
         def metric(name: String, v: org.apache.spark.sql.Column) =
           base.agg(v.as("value")).select(lit(name).as("metric"), col("value"))
         metric("n_orders", count(lit(1)).cast("double"))
@@ -1679,17 +1676,16 @@ object Reporting {
       .select(gcols ++ Seq(col("iv.b").as("bucket"),
         col("iv.ks").as("ks"), col("iv.ke").as("ke")): _*)
       .filter(col("ks") < col("ke"))
-    val deltas = legs.select(gcols ++ Seq(col("bucket"), explode(concat(
+    // pinned for the same two-consumer reason as icfAging's deltas:
+    // week x groups x bucket cardinality, never week x issue
+    val deltas = Materialize.pin(legs.select(gcols ++ Seq(col("bucket"), explode(concat(
         array(struct(col("ks").as("k"), lit(1L).as("dd"))),
         when(col("ke") <= nWeeks,
           array(struct(col("ke").as("k"), lit(-1L).as("dd"))))
           .otherwise(array()))).as("dl")): _*)
       .select(gcols ++ Seq(col("bucket"),
         col("dl.k").as("k"), col("dl.dd").as("dd")): _*)
-      .groupBy((col("k") +: gcols :+ col("bucket")): _*).agg(sum("dd").as("dd"))
-      // pinned for the same two-consumer reason as icfAging's deltas:
-      // week x groups x bucket cardinality, never week x issue
-      .localCheckpoint()
+      .groupBy((col("k") +: gcols :+ col("bucket")): _*).agg(sum("dd").as("dd")))
     val groups = deltas.select(gcols :+ col("bucket"): _*).distinct()
     val grid = s.range(0, nWeeks + 1).select(col("id").cast("int").as("k"))
       .crossJoin(broadcast(groups))
@@ -1791,16 +1787,15 @@ object Reporting {
       .withColumn("isl", sum("isNew").over(byKey.rowsBetween(Window.unboundedPreceding, 0)))
       .groupBy("extid", "study", "m", "isl")
       .agg(min("ks").as("ks"), max("ke").as("ke"))
-    val deltas = islands.select(col("study"), col("m"), explode(concat(
+    // two consumers (groups + the grid join) re-ran the whole
+    // legs->islands->deltas pipeline; the table is week x study x metric
+    // rows (182 at sf0.01 and sf0.1) — hold it (the g41 lesson)
+    val deltas = Materialize.small(islands.select(col("study"), col("m"), explode(concat(
         array(struct(col("ks").as("k"), lit(1L).as("d"))),
         when(col("ke") < nWeeks, array(struct(col("ke").as("k"), lit(-1L).as("d"))))
           .otherwise(array()))).as("dl"))
       .select(col("study"), col("m"), col("dl.k").as("k"), col("dl.d").as("d"))
-      .groupBy("k", "study", "m").agg(sum("d").as("d"))
-      // two consumers (groups + the grid join) re-ran the whole
-      // legs->islands->deltas pipeline; the table is k x study x metric
-      // rows (~182 at sf0.1) — pin it (the g41 lesson)
-      .localCheckpoint()
+      .groupBy("k", "study", "m").agg(sum("d").as("d")))
     val groups = deltas.select("study", "m").distinct()
     val grid = s.range(0, nWeeks).select(col("id").cast("int").as("k"))
       .crossJoin(broadcast(groups))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import graft.functions.{Similarity, TextFunctions}
 import OracleSnippets.{cosineFold, dist2Fold, dotFold, foldLeft, ivfCentsDist,
   cappedBuckets, lshPairVerify, matrixValues, ownLen, planeBuckets, sumFold, sumOver,
@@ -914,13 +914,12 @@ object SimilaritySearch {
         .write.partitionBy("cell_id").parquet(s"$root/v1")
       e.filter(col("vec_id") % 7 === 3).select("vec_id")
         .write.parquet(s"$root/tombstones")
-      // DECIDE: the s54 row IS the decision table — 8 rows, pinned with
-      // localCheckpoint because it feeds three downstream jobs (the v2
-      // rewrite, the retrain slice, the returned audit): unpinned, each
-      // would replay s54's full corpus pass for an 8-row table
-      val dec = graft.SparkEntry.queries("s54_ann_retrain_decision")(s, d)
-        .select(col("cell_id"), col("decision"))
-        .localCheckpoint()
+      // DECIDE: the s54 row IS the decision table — one row per cell (8),
+      // held because it feeds three downstream jobs (the v2 rewrite, the
+      // retrain slice, the returned audit): unheld, each would replay
+      // s54's full corpus pass for an 8-row table
+      val dec = Materialize.small(graft.SparkEntry.queries("s54_ann_retrain_decision")(s, d)
+        .select(col("cell_id"), col("decision")))
       val v1 = s.read.parquet(s"$root/v1")
         .withColumn("cell_id", col("cell_id").cast("long"))
       val tomb = s.read.parquet(s"$root/tombstones")
@@ -1932,11 +1931,11 @@ object SimilaritySearch {
         |                               ORDER BY score DESC, neighbor_id) AS rn
         |  FROM dotp) t WHERE rn <= 5""".stripMargin) {
       (s, d) => {
-        val e = Tables.embeddings(s, d)
+        // query + candidate sides share one quantize pass
+        val e = Materialize.pin(Tables.embeddings(s, d)
           .withColumn("sc", Similarity.sq8Scale(col("embedding")))
           .select(col("vec_id"), col("sc"),
-            Similarity.sq8Quantize(col("embedding"), col("sc")).as("qv"))
-          .localCheckpoint() // query + candidate sides share one quantize pass
+            Similarity.sq8Quantize(col("embedding"), col("sc")).as("qv")))
         val q = e.filter(col("vec_id") < 10).select(col("vec_id").as("query_id"),
           col("sc").as("q_sc"), col("qv").as("q_qv"))
         val score = (col("q_sc") * col("sc")) *
@@ -2021,10 +2020,10 @@ object SimilaritySearch {
     // tiebreak) — all MATERIALIZED, the unrolled-iteration rule.
     Query("s42_mmr_rerank", MmrOracleSql) {
       (s, d) => {
-        val e = Tables.embeddings(s, d).filter(col("vec_id") < 105)
+        // query + candidate sides share one scan of the 105-id slice
+        val e = Materialize.small(Tables.embeddings(s, d).filter(col("vec_id") < 105)
           .select(col("vec_id"), col("embedding"),
-            Similarity.l2norm(col("embedding")).as("nrm"))
-          .localCheckpoint() // query + candidate sides share one scan
+            Similarity.l2norm(col("embedding")).as("nrm")))
         val q = e.filter(col("vec_id") < 5).select(col("vec_id").as("qid"),
           col("embedding").as("q_emb"), col("nrm").as("q_norm"))
         val c = e.filter(col("vec_id") >= 5).select(col("vec_id").as("cid"),

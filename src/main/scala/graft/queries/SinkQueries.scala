@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import graft.operators.Anomalies
 
 /** Sink-path queries: the partitioned-history write → partition-discovery
@@ -282,11 +282,11 @@ object SinkQueries {
               md5(concat_ws("|",
                 transform(sort_array(collect_list(col("r"))),
                   e => e.getField("s")))).as(h))
-        val v1 = Tables.orders(s, d).filter(col("o_totalprice") > 50000)
+        // both snapshot legs derive from one scan
+        val v1 = Materialize.pin(Tables.orders(s, d).filter(col("o_totalprice") > 50000)
           .select(col("o_orderkey"), col("o_orderpriority").as("pri"),
             (col("o_orderkey") % 16).as("bkt"),
-            round(col("o_totalprice") * 100).cast("long").as("cents"))
-          .localCheckpoint() // both snapshot legs derive from one scan
+            round(col("o_totalprice") * 100).cast("long").as("cents")))
         val v2 = v1.filter(col("o_orderkey") % 97 =!= 0)
           .withColumn("cents", when(col("o_orderkey") % 89 === 1,
             col("cents") + 1).otherwise(col("cents")))
@@ -480,11 +480,11 @@ object SinkQueries {
               transform(sort_array(collect_list(col("r"))),
                 e => e.getField("s")))).as("h"))
           .withColumn("v", lit(v))
-      val v1 = Tables.orders(s, d).filter(col("o_totalprice") > 50000)
+      // all three snapshot legs derive from one scan
+      val v1 = Materialize.pin(Tables.orders(s, d).filter(col("o_totalprice") > 50000)
         .select(col("o_orderkey"), col("o_orderpriority").as("pri"),
           (col("o_orderkey") % 8).as("bkt"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .localCheckpoint() // all three snapshot legs derive from one scan
+          round(col("o_totalprice") * 100).cast("long").as("cents")))
       val v2 = v1.filter(col("o_orderkey") % 97 =!= 0)
         .withColumn("cents", when(col("o_orderkey") % 89 === 1,
           col("cents") + 1).otherwise(col("cents")))
@@ -1008,9 +1008,9 @@ object SinkQueries {
           lit(newFiles.size).as("files_processed"), col("n"), col("total"))
       }
       landSlice(0); landSlice(1)
-      val r1 = runOnce(1).localCheckpoint() // materialize BEFORE f2 lands
+      val r1 = Materialize.small(runOnce(1)) // one row, held BEFORE f2 lands
       landSlice(2)
-      val r2 = runOnce(2).localCheckpoint()
+      val r2 = Materialize.small(runOnce(2))
       r1.unionAll(r2)
     },
 

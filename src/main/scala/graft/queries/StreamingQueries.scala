@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import graft.streaming.Streams
 
 /** Structured Streaming surface exercised under the batch oracle gate:
@@ -218,12 +218,12 @@ object StreamingQueries {
         Streams.runAvailableNow(src.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
             val state = ss.read.parquet(dim)
-            val merged = graft.operators.Scd2.merge(
+            // break the read-own-input cycle
+            val merged = Materialize.pin(graft.operators.Scd2.merge(
               state.filter(col("valid_to").isNull), batch.select("c_custkey", "seg"),
               Seq("c_custkey"), Seq("seg"),
               date_add(lit("2026-02-01").cast("date"), id.toInt))
-              .unionByName(state.filter(col("valid_to").isNotNull))
-              .localCheckpoint(true) // break the read-own-input cycle
+              .unionByName(state.filter(col("valid_to").isNotNull)))
             merged.write.mode("overwrite").parquet(dim)
             ()
           })
@@ -306,18 +306,15 @@ object StreamingQueries {
         val docs = Tables.documents(ss, d)
         val corpus = docs.filter(col("doc_id") % 5 =!= 0)
         // stored-corpus artifacts: computed once, reused by every batch
-        val corpusSh = graft.core.Par.fanOut(
+        val corpusSh = Materialize.shared(graft.core.Par.fanOut(
             corpus.select("doc_id", "text"), col("doc_id"))
           .select(col("doc_id").as("old_id"),
-            explode(TextFunctions.shingles(col("text"), 2)).as("s"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val corpusSig = Dedup.md5Signatures(corpus, "doc_id", "text",
-            n = 2, k = 16)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val corpusBands = Dedup.md5BandRows(corpusSig, "doc_id",
+            explode(TextFunctions.shingles(col("text"), 2)).as("s")))
+        val corpusSig = Materialize.shared(Dedup.md5Signatures(corpus, "doc_id", "text",
+            n = 2, k = 16))
+        val corpusBands = Materialize.shared(Dedup.md5BandRows(corpusSig, "doc_id",
             k = 16, bands = 4)
-          .toDF("old_id", "band", "bkey")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .toDF("old_id", "band", "bkey"))
         // two landed new-crawl batches, arrival order pinned via mtime
         val newDocs = docs.filter(col("doc_id") % 5 === 0)
         val landing = graft.core.TempDirs.scratch("st08_landing_")
@@ -330,8 +327,8 @@ object StreamingQueries {
           maxFilesPerTrigger = Some(1))
         Streams.runAvailableNow(src.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val bSig = Dedup.md5Signatures(batch, "doc_id", "text",
-              n = 2, k = 16).localCheckpoint(true)
+            val bSig = Materialize.pin(Dedup.md5Signatures(batch, "doc_id", "text",
+              n = 2, k = 16))
             val cand = Dedup.md5BandRows(bSig, "doc_id", k = 16, bands = 4)
               .toDF("new_id", "band", "bkey")
               .join(corpusBands, Seq("band", "bkey"))
@@ -353,7 +350,7 @@ object StreamingQueries {
               .write.mode("append").parquet(out)
             ()
           })
-        Seq(corpusSh, corpusSig, corpusBands).foreach(_.unpersist(false))
+        Seq(corpusSh, corpusSig, corpusBands).foreach(Materialize.release)
         ss.read.parquet(out)
       }
     },
@@ -495,7 +492,7 @@ object StreamingQueries {
         // to a LogicalRDD first — it's the finished counter table,
         // |types| x 2 x 10 rows
         graft.queries.Analytics.psiOfSlices(
-          Streams.memorySink(counts, "complete").localCheckpoint(), preCounted = true)
+          Materialize.pin(Streams.memorySink(counts, "complete")), preCounted = true)
       }
     },
 
@@ -852,10 +849,10 @@ col("userId").as("user_id"), col("eventId").as("event_id"),
         import org.apache.spark.sql.expressions.Window
         val cumW = Window.partitionBy("event_type").orderBy("bucket")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        // localCheckpoint: the p50/p90 legs self-join this table, and
-        // Spark cannot deduplicate conflicting references through a
-        // MemorySink plan (INTERNAL_ERROR) — an RDD-backed child can be
-        val cum = hist.localCheckpoint()
+        // held: the p50/p90 legs self-join this table, and Spark cannot
+        // deduplicate conflicting references through a MemorySink plan
+        // (INTERNAL_ERROR) — a LocalRelation can be; |types| x buckets
+        val cum = Materialize.small(hist)
           .withColumn("cum", sum("c").over(cumW))
           .withColumn("n", sum("c").over(Window.partitionBy("event_type")))
           .withColumn("before", col("cum") - col("c"))

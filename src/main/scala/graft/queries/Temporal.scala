@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import OracleSnippets.{SeasonalCtes, cusumScan, dailyTypeSumCte}
 import graft.operators.{Sessionize, Windows}
 
@@ -102,13 +102,13 @@ object Temporal {
     * `OracleSnippets.SeasonalCtes`. */
   private[queries] def seasonalParts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val w = Window.partitionBy("event_type").orderBy("day").rangeBetween(-3, 3)
-    val t2 = dailyTypeSums(s, d)(_.as("xd"))
+    // seasonal agg + join-back share one window pass; event type x day
+    val t2 = Materialize.small(dailyTypeSums(s, d)(_.as("xd"))
       .withColumn("x", col("xd").cast("double"))
       .withColumn("trend",
         sum("xd").over(w).cast("double") / count(lit(1)).over(w))
       .withColumn("det", col("x") - col("trend"))
-      .withColumn("dow", col("day") % 7)
-      .localCheckpoint() // seasonal agg + join-back share one window pass
+      .withColumn("dow", col("day") % 7))
     val seas = t2.groupBy("event_type", "dow")
       .agg((sum(round(col("det"), 6).cast("decimal(18,6)")).cast("double")
         / count(lit(1))).as("seasonal"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Query, Tables}
+import graft.core.{Materialize, Query, Tables}
 import graft.functions.TextFunctions._
 import OracleSnippets.{KnProb, KnStatCtes, addOneLmCtes, wordBigramCtes}
 
@@ -89,8 +89,8 @@ object TextAnalysis {
     * the bigram-type total that [[knProb]] reads (oracle twin
     * `OracleSnippets.KnStatCtes`). */
   private[queries] def knScored(big: DataFrame): DataFrame = {
-    val bc = big.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // 4 downstream aggs share the one bigram count
+    // 4 downstream aggs share the one bigram count; it grows with the corpus
+    val bc = Materialize.pin(big.groupBy("w1", "w2").agg(count(lit(1)).as("c")))
     val w1s = bc.groupBy("w1").agg(sum("c").as("cw1"), count(lit(1)).as("n1fwd"))
     val w2s = bc.groupBy("w2").agg(count(lit(1)).as("n1back"))
     val tot = bc.agg(count(lit(1)).as("nbt"))
@@ -1047,16 +1047,15 @@ object TextAnalysis {
         // lesson), which re-ran the two window-dedup stages twice and blew
         // the plan to 18 exchanges. Cut both diamonds with an eager
         // localCheckpoint so each upstream executes exactly once.
-        val corpus = s2.filter(col("doc_id") % 40 =!= 0).localCheckpoint(true)
+        val corpus = Materialize.pin(s2.filter(col("doc_id") % 40 =!= 0))
         val dirty = graft.operators.Decontaminate.benchmarkOverlap(
           corpus, docs.filter(col("doc_id") % 40 === 0),
           "doc_id", "text", n = 3, minOverlap = 1)
         val s3 = corpus.join(dirty.select("doc_id"), Seq("doc_id"), "left_anti")
-        val sc = s3.select(col("doc_id"), col("domain"), col("url_canon"),
+        val sc = Materialize.pin(s3.select(col("doc_id"), col("domain"), col("url_canon"),
           col("text"),
           graft.operators.Curriculum.integerQualityScore(col("text"), stop)
-            .as("score"))
-          .localCheckpoint(true)
+            .as("score")))
         val thr = sc.groupBy("domain")
           .agg(expr("percentile(score, 0.75)").as("p_thr"))
         sc.join(broadcast(thr), Seq("domain"))
@@ -1314,9 +1313,9 @@ object TextAnalysis {
         |         AS types_covered,
         |       CAST(count(DISTINCT word) AS BIGINT) AS types_total
         |FROM sc GROUP BY 1""".stripMargin) { (s, d) =>
-      val w = Tables.documents(s, d)
-        .select(col("lang"), explode(tokens(col("text"))).as("word"))
-        .localCheckpoint() // vocab head + scoring share one tokenize
+      // vocab head + scoring share one tokenize
+      val w = Materialize.pin(Tables.documents(s, d)
+        .select(col("lang"), explode(tokens(col("text"))).as("word")))
       val vocab = w.groupBy("word").agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(
           Window.orderBy(col("c").desc, col("word"))))
@@ -1470,8 +1469,8 @@ object TextAnalysis {
         // aggregated table, and db feeds both legs (model stats + doc
         // scores) — localCheckpoint it or the explode+md5 pass runs
         // once per reference
-        val db = tb.groupBy("doc_id", "lang", "bucket")
-          .agg(count(lit(1)).as("cnt")).localCheckpoint()
+        val db = Materialize.pin(tb.groupBy("doc_id", "lang", "bucket")
+          .agg(count(lit(1)).as("cnt")))
         val bs = db.groupBy("bucket").agg(
           sum(when(col("lang") === "en", col("cnt")).otherwise(0L)).as("ct"),
           sum(col("cnt")).as("cr"))
@@ -1652,14 +1651,14 @@ object TextAnalysis {
                 slice(w, (ci * 12 + 1).cast("int"), lit(12)), " "))))
             .otherwise(array().cast("array<string>"))
         }
-        val hs = Tables.documents(s, d)
+        // referenced by both legs of the pair join
+        val hs = Materialize.pin(Tables.documents(s, d)
           .select(col("doc_id"), col("text"),
             Web.urlHost(expr(UrlFixtureSql)).as("domain"))
           .withColumn("split",
             when(nib < 12, "train").when(nib < 14, "val").otherwise("test"))
           .select(col("doc_id"), col("split"), explode(chunks).as("h"))
-          .groupBy("h", "split").agg(countDistinct(col("doc_id")).as("n"))
-          .localCheckpoint() // referenced by both legs of the pair join
+          .groupBy("h", "split").agg(countDistinct(col("doc_id")).as("n")))
         val b = hs.select(col("h").as("bh"), col("split").as("split_b"),
           col("n").as("bn"))
         hs.join(b, col("h") === col("bh") && col("split") < col("split_b"))
@@ -1832,8 +1831,8 @@ object TextAnalysis {
       (s, d) => {
         val tok = Tables.documents(s, d)
           .select(col("lang"), explode(tokens(col("text"))).as("t"))
-        val vocab = tok.groupBy("lang", "t").agg(count(lit(1)).as("c"))
-          .localCheckpoint() // ranks + type counts share this one agg
+        // ranks + type counts share this one agg
+        val vocab = Materialize.pin(tok.groupBy("lang", "t").agg(count(lit(1)).as("c")))
         val nTypes = vocab.groupBy("lang").agg(count(lit(1)).as("n_types"))
         val ranked = vocab.withColumn("rank", row_number().over(
           Window.partitionBy("lang").orderBy(col("c").desc, col("t"))))
@@ -1905,8 +1904,8 @@ object TextAnalysis {
         |                AND split_part(big.s, ' ', 2) = lm.w2
         |GROUP BY 1""".stripMargin) {
       (s, d) => {
-        val big = wordBigrams(s, d, "doc_id")
-          .localCheckpoint() // the LM aggregates + the scoring join share it
+        // the LM aggregates + the scoring join share it
+        val big = Materialize.pin(wordBigrams(s, d, "doc_id"))
         val lm = knScored(big)
           .select(col("w1"), col("w2"),
             round(-log(round(knProb, 6)), 6).cast("decimal(18,6)").as("nll"))
@@ -1946,8 +1945,8 @@ object TextAnalysis {
       (s, d) => {
         val pred = Tables.documents(s, d).select(col("lang"),
           langId(col("text"), markerLists).as("pred_lang"))
-        val m = pred.groupBy("lang", "pred_lang").agg(count(lit(1)).as("n"))
-          .localCheckpoint() // totals + the output join share the one scan
+        // totals + the output join share the one scan; lang x lang
+        val m = Materialize.small(pred.groupBy("lang", "pred_lang").agg(count(lit(1)).as("n")))
         val t = m.groupBy("lang").agg(sum("n").as("tot"))
         m.join(broadcast(t), "lang")
           .select(col("lang"), col("pred_lang"), col("n").cast("long").as("n"),
@@ -2017,8 +2016,8 @@ object TextAnalysis {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("t"))
-        val tf = tok.groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-          .localCheckpoint() // df and the score join share the one count
+        // df and the score join share the one count
+        val tf = Materialize.pin(tok.groupBy("doc_id", "t").agg(count(lit(1)).as("tf")))
         val nd = docs.agg(count(lit(1)).as("nd"))
         val idf = tf.groupBy("t").agg(count(lit(1)).as("df"))
           .crossJoin(broadcast(nd))
@@ -2082,10 +2081,10 @@ object TextAnalysis {
         val firstq = tok.groupBy("t").agg(min("doc_id").as("fd"))
         val newv = firstq.groupBy(col("fd").as("d")).agg(count(lit(1)).as("nv"))
         val ntok = tok.groupBy(col("doc_id").as("d")).agg(count(lit(1)).as("nt"))
-        val ser = ntok.join(newv.toDF("d2", "nv"), col("d") === col("d2"), "left")
+        // bucket prefix + within-bucket pass share it
+        val ser = Materialize.pin(ntok.join(newv.toDF("d2", "nv"), col("d") === col("d2"), "left")
           .select(col("d"), col("nt"), coalesce(col("nv"), lit(0L)).as("nv"))
-          .withColumn("bkt", expr("d div 256"))
-          .localCheckpoint() // bucket prefix + within-bucket pass share it
+          .withColumn("bkt", expr("d div 256")))
         // two-level cumulative sums (a45 pattern): O(buckets) prefix window,
         // partitioned within-bucket windows — no global one-partition sort
         val bs = ser.groupBy("bkt").agg(sum("nt").as("bnt"), sum("nv").as("bnv"))
@@ -2150,12 +2149,12 @@ object TextAnalysis {
         |FROM r WHERE rk <= 20""".stripMargin) {
       (s, d) => {
         val big = wordBigrams(s, d)
-        val bc = big.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-          .localCheckpoint() // total + the PMI join share the one bigram agg
-        val uni = Tables.documents(s, d)
+        // total + the PMI join share the one bigram agg
+        val bc = Materialize.pin(big.groupBy("w1", "w2").agg(count(lit(1)).as("c")))
+        // total + two join legs share the one unigram agg
+        val uni = Materialize.pin(Tables.documents(s, d)
           .select(explode(tokens(col("text"))).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("cu"))
-          .localCheckpoint() // total + two join legs share the one unigram agg
+          .groupBy("w").agg(count(lit(1)).as("cu")))
         val nb = bc.agg(sum("c").as("nbt"))
         val nt = uni.agg(sum("cu").as("ntt"))
         bc.filter(col("c") >= 5)

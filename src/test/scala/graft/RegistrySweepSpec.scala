@@ -9,7 +9,9 @@ import scala.util.{Failure, Success, Try}
   *     physical plan feeds the plan lint (every row) and the shuffle
   *     budget (batch rows);
   *  2. a collect at 2 shuffle partitions, then one at 13, for the
-  *     determinism check.
+  *     determinism check. Before the 13-partition collect, a batch row
+  *     not on `readsPin` loses every persisted block, as it would to a
+  *     lost executor.
   * Each check is its own test case over the recorded results, so a
   * failure names the check it broke:
   *  - plan lint: no CartesianProduct (a non-broadcast cross join: an
@@ -28,7 +30,11 @@ import scala.util.{Failure, Success, Try}
   *    call spins up a fresh child session and landing dir, so two runs
   *    also exercise checkpoint and sink isolation;
   *  - checkpoint hygiene: no streaming checkpoint dir made during the
-  *    sweep outlives it (Streams.runAvailableNow deletes its own).
+  *    sweep outlives it (Streams.runAvailableNow deletes its own);
+  *  - block loss: a batch row survives its blocks being dropped between
+  *    build and collect (Materialize.small and .shared frames do; a
+  *    Materialize.pin in the result plan cannot), unless `readsPin`
+  *    lists why it holds a pin — and a listed row must still read one.
   */
 class RegistrySweepSpec extends SparkSpec {
 
@@ -49,11 +55,32 @@ class RegistrySweepSpec extends SparkSpec {
     Set("a13_group_all_match", "w26_rolling_zscore", "w31_rolling_zscore_range",
       "g19_kcore", "g23_link_predict", "g25_assortativity", "j28_fuzzy_dupes")
 
+  // batch rows whose result plan reads a Materialize.pin, so a lost
+  // block fails them, and why the pin stays: "loop" (iteration state),
+  // "snapshot" (must not be recomputed: RollingMoments' row ids) or
+  // "data-sized" (its row count moves with the data, several consumers)
+  private val readsPin: Map[String, String] =
+    Seq("t26_bpe_merges", "g10_pagerank", "g22_ppr", "g19_kcore", "g20_bfs_distance",
+      "g21_label_prop", "g26_hits").map(_ -> "loop").toMap ++
+    Map("w26_rolling_zscore" -> "snapshot") ++
+    Seq("p19_l_diversity", "p21_t_closeness", "g09_corpus_manifest", "t61_oov_coverage",
+      "t38_dsir_weights", "t40_split_contamination", "t43_winnowing_overlap",
+      "t44_winnowing_oracle", "t48_zipf_fit", "t49_kneser_ney", "t52_pmi_collocations",
+      "w25_period_over_period", "g39_site_issue_dashboard", "g43_site_ui_variants",
+      "t55_kn_doc_xent", "t50_tfidf_keywords", "t51_heaps_law",
+      "s43_sq8_search", "j28_fuzzy_dupes", "m06_image_neardup",
+      "m14_pixel_histogram_direct", "g34_basket_lift", "g35_attribution",
+      "g30_modularity", "g13_triangle_count", "g23_link_predict",
+      "g24_clustering_coeff", "g25_assortativity", "g28_two_hop_reach", "a39_countmin",
+      "a45_kruskal_wallis", "a46_brown_forsythe", "a47_bootstrap_ci", "a49_trimmed_mean",
+      "a53_sketch_intersection", "k02_skew_profile", "io21_manifest_diff",
+      "io24_vacuum_planner").map(_ -> "data-sized").toMap
+
   /** What the sweep recorded for one row: the default-partition plan
     * (or its build failure) and the determinism finding, if any.
     */
-  private final case class Swept(name: String, batch: Boolean,
-                                 plan: Try[String], determinism: Option[String])
+  private final case class Swept(name: String, batch: Boolean, plan: Try[String],
+                                 determinism: Option[String], blockLoss: Option[String])
 
   private def golden: Map[String, Int] = {
     val src = scala.io.Source.fromInputStream(
@@ -78,22 +105,45 @@ class RegistrySweepSpec extends SparkSpec {
     val d = PlanGolden.sfDir
     val partitions = "spark.sql.shuffle.partitions"
     val original = spark.conf.get(partitions)
-    def collectAt(q: graft.core.Query, n: String): Set[Seq[Any]] = {
+    // the rows, and whether the result plan reads a local checkpoint
+    def collectAt(q: graft.core.Query, n: String, dropBlocks: Boolean)
+        : (Set[Seq[Any]], Boolean) = {
       graft.core.Sessions.clearCaches(spark)
       spark.conf.set(partitions, n)
-      rows(q.fn(spark, d))
+      val df = q.fn(spark, d)
+      if (dropBlocks)
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      (rows(df), df.queryExecution.optimizedPlan.exists {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.isCheckpointed
+        case _ => false
+      })
     }
     try SparkEntry.packs.map { q =>
+      val batch = PlanGolden.isBatch(q)
+      val drop = batch && !readsPin.contains(q.name)
       spark.conf.set(partitions, original)
       val plan = Try(PlanGolden.plan(spark, q))
-      val determinism = Try((collectAt(q, "2"), collectAt(q, "13"))) match {
-        case Failure(e) => Some(s"${q.name} failed: ${firstLine(e)}")
-        case Success((a, _)) if a.isEmpty && !emptyOkAtSmoke(q.name) =>
+      val at2 = Try(collectAt(q, "2", dropBlocks = false))
+      val at13 = Try(collectAt(q, "13", drop))
+      val determinism = (at2, at13) match {
+        case (Failure(e), _) => Some(s"${q.name} failed: ${firstLine(e)}")
+        case (_, Failure(e)) if !drop => Some(s"${q.name} failed: ${firstLine(e)}")
+        case (Success((a, _)), _) if a.isEmpty && !emptyOkAtSmoke(q.name) =>
           Some(s"${q.name} returned no rows at sf0.001")
-        case Success((a, b)) if a != b => Some(s"${q.name} differs across shuffle settings")
+        case (Success((a, _)), Success((b, _))) if a != b =>
+          Some(s"${q.name} differs across shuffle settings")
         case _ => None
       }
-      Swept(q.name, PlanGolden.isBatch(q), plan, determinism)
+      val blockLoss = (readsPin.get(q.name), at13) match {
+        case (_, _) if !batch => None
+        case (None, Failure(e)) => Some(s"${q.name} fails after losing its blocks: ${firstLine(e)}")
+        case (None, Success((b, _))) if at2.toOption.exists(_._1 != b) =>
+          Some(s"${q.name} differs after losing its blocks")
+        case (Some(why), Success((_, false))) =>
+          Some(s"${q.name} is listed as $why but its result plan reads no pin")
+        case _ => None
+      }
+      Swept(q.name, batch, plan, determinism, blockLoss)
     } finally {
       spark.conf.set(partitions, original)
       graft.core.Sessions.clearCaches(spark)
@@ -104,12 +154,12 @@ class RegistrySweepSpec extends SparkSpec {
     Option(e.getMessage).getOrElse(e.toString).linesIterator.nextOption().getOrElse("")
 
   private def failedBuilds(rows: Seq[Swept]): Seq[String] = rows.collect {
-    case Swept(n, _, Failure(e), _) => s"$n: build failed: ${firstLine(e)}"
+    case Swept(n, _, Failure(e), _, _) => s"$n: build failed: ${firstLine(e)}"
   }
 
   test("no registry query plans a CartesianProduct or falls back from codegen") {
     val offenders = failedBuilds(swept) ++ swept.flatMap {
-      case Swept(n, _, Success(plan), _) =>
+      case Swept(n, _, Success(plan), _, _) =>
         Seq("CartesianProduct", "CodegenFallback").collect {
           case marker if plan.contains(marker) => s"$n: $marker"
         }
@@ -122,10 +172,10 @@ class RegistrySweepSpec extends SparkSpec {
     val g = golden
     val batch = swept.filter(_.batch)
     val offenders = failedBuilds(batch) ++ batch.flatMap {
-      case Swept(n, _, Success(plan), _) =>
+      case Swept(n, _, Success(plan), _, _) =>
         val count = PlanGolden.exchangeCount(plan)
         g.get(n) match {
-          case None => Some(s"$n: not in golden — regenerate with runMain graft.PlanGolden")
+          case None => Some(s"$n: not in golden — regenerate with sbt \"runMain graft.PlanGolden\"")
           case Some(budget) if count > budget => Some(s"$n: $count exchanges > golden $budget")
           case _ => None
         }
@@ -136,6 +186,11 @@ class RegistrySweepSpec extends SparkSpec {
 
   test("registry queries are invariant to shuffle partitioning") {
     val problems = swept.flatMap(_.determinism)
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("batch rows survive lost blocks") {
+    val problems = swept.flatMap(_.blockLoss)
     assert(problems.isEmpty, problems.mkString("\n"))
   }
 
