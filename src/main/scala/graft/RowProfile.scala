@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -9,7 +10,9 @@ import scala.collection.mutable.ArrayBuffer
   * steps — build (`Query.fn`, including any eager jobs it runs), plan
   * (`executedPlan`: analysis, optimization, physical planning) and exec
   * (a noop write of the same Dataset) — and prints:
-  *  - `[split]` build / plan / exec seconds;
+  *  - `[split]` build / plan / exec seconds, and `codegen`: the classes
+  *    Janino compiled during the rep (CodegenMetrics), so a row that
+  *    still recompiles on warm reps shows up;
   *  - `[count]` Exchange, Expand, SortAggregate and scan nodes of the
   *    pre-execution plan (the form `plan_exchanges.golden` counts), plus
   *    its held inputs: `pinned` (Materialize.pin's checkpoint scans) and
@@ -83,6 +86,7 @@ object RowProfile {
     for (n <- names; r <- 0 until reps) {
       stages.synchronized(stages.clear())
       lastWrite = null
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val df = byName(n).fn(spark, sfDir)
       val t1 = System.nanoTime()
@@ -91,10 +95,11 @@ object RowProfile {
       df.write.format("noop").mode("overwrite").save()
       val t3 = System.nanoTime()
       drain()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       graft.core.Sessions.clearCaches(spark)
 
       println(f"%n== $n rep$r")
-      println(f"[split] build=${(t1 - t0) / 1e9}%.2f plan=${(t2 - t1) / 1e9}%.2f exec=${(t3 - t2) / 1e9}%.2f")
+      println(f"[split] build=${(t1 - t0) / 1e9}%.2f plan=${(t2 - t1) / 1e9}%.2f exec=${(t3 - t2) / 1e9}%.2f codegen=$compiles")
       println(s"[count] exchange=${count(plan, "Exchange")} expand=${count(plan, "Expand")} " +
         s"sortAgg=${count(plan, "SortAggregate")} scans=${count(plan, "FileScan|BatchScan|Scan parquet")} " +
         s"pinned=${count(plan, "Scan ExistingRDD")} local=${count(plan, "LocalTableScan")}")

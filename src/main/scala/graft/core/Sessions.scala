@@ -21,6 +21,23 @@ object Sessions {
   // (TempDirs' shm scratch is different: sink outputs are small and
   // deleted eagerly.)
 
+  /** Capacity of Spark's generated-code cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100), sized from
+    * measurement at sf0.01 on 4 cores:
+    *  - the 8 rows of perfbench's `report_refresh` compile about 160
+    *    classes per pass, so at 100 every class was evicted before its
+    *    next use: each warm pass ran 155 Janino compiles, after which the
+    *    JIT warmed every new class from scratch (0 to 6 with this cap);
+    *  - one cold pass over all 411 registry rows compiles 5,501 classes,
+    *    which this cap holds whole: a second pass in the same JVM
+    *    compiled 685 classes instead of 7,895, and took 148 s, not 213 s.
+    * It is a static SQL conf, read once when the session is built, so it
+    * is set here for every entry point. It stays finite: Spark keys the
+    * cache by (thread context classloader, code), and the streaming rows
+    * add entries on every run that are never reused.
+    */
+  val CodegenCacheEntries = 8192
+
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
             appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -36,6 +53,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

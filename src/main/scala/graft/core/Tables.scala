@@ -57,12 +57,15 @@ object Tables {
     val listed = try {
       val p = new Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = fs.listFiles(p, true)
       val stamps = Seq.newBuilder[Stamp]
-      while (files.hasNext) {
-        val f = files.next()
-        stamps += Stamp(f.getPath.toString, f.getLen, f.getModificationTime)
+      // a listStatus walk, not listFiles: each LocatedFileStatus reads
+      // the file's permissions, which without Hadoop native IO starts an
+      // `ls -ld` process per file
+      def walk(dir: Path): Unit = fs.listStatus(dir).foreach { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else stamps += Stamp(f.getPath.toString, f.getLen, f.getModificationTime)
       }
+      walk(p)
       Some(fs.makeQualified(p).toString -> stamps.result().sortBy(_.name))
     } catch { case _: java.io.IOException => None }
     listed match {

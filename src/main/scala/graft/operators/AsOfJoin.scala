@@ -81,7 +81,7 @@ object AsOfJoin {
             col("__pay")))
       case None => filled
     }
-    gated.select(left.columns.map(col) ++
+    gated.select(left.columns.toSeq.map(col) ++
       payload.map(c => col(s"__pay.$c").as(c)): _*)
   }
 }

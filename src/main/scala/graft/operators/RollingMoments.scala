@@ -74,7 +74,7 @@ object RollingMoments {
     val wPre = Window.partitionBy(keyCol, "__b").orderBy(col(usCol))
       .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     val pre = base.select(
-      base.columns.map(col) :+
+      base.columns.toSeq.map(col) :+
         count(lit(1)).over(wPre).as("__pn") :+
         sum(vd).over(wPre).as("__ps1") :+
         sum(vd * vd).over(wPre).as("__ps2"): _*)
@@ -124,7 +124,7 @@ object RollingMoments {
       .join(mid, Seq(keyCol, "__b"), "left")
       .join(oldTot, Seq(keyCol, "__b"), "left")
       .join(asof, Seq("__rowid"), "left")
-      .select(df.columns.map(col) :+
+      .select(df.columns.toSeq.map(col) :+
         (col("__pn") + z(col("__mn")) + (z(col("__on")) - z(col("__an"))))
           .cast("long").as("n") :+
         (z(col("__ps1")) + z(col("__ms1")) + (z(col("__os1")) - z(col("__as1"))))

@@ -21,8 +21,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       s"$fn: $arg must be an integer literal, got $e")
   }
 
+  // arguments, examples, note, group, since, deprecated and source stay
+  // empty, as the deprecated five-argument constructor left them
   private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
+      "", "", "", "", "", "", "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // portable HOF dot-product folds → native DotProduct kernel

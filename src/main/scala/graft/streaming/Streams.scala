@@ -84,17 +84,26 @@ object Streams {
   }
 
   /** Stream sf table `table` through a scratch landing dir. The file
-    * source takes a DIRECTORY (it lists for new files) and the sf tables
-    * are single files, so the table is symlinked in, once per entry of
-    * `names` (default: `<table>.parquet`) — no data copy. The schema is
-    * Tables.load's, so its schema cache serves it.
+    * source takes a DIRECTORY (it lists for new files), so the table is
+    * symlinked in, once per entry of `names` (default:
+    * `<table>.parquet`) — no data copy. A table stored as a Spark output
+    * directory of part files (a ScaleReplica replica) gets one link per
+    * part file, named `<name stem>_<part file>`: the file source does not
+    * descend into a linked directory. The schema is Tables.load's, so
+    * its schema cache serves it.
     */
   def symlinkSource(ss: SparkSession, d: String, table: String,
                     names: String*): DataFrame = {
     val dir = TempDirs.scratch(s"${table}_landing_")
     val target = Paths.get(s"$d/$table.parquet").toAbsolutePath
-    for (n <- if (names.isEmpty) Seq(s"$table.parquet") else names)
-      Files.createSymbolicLink(dir.resolve(n), target)
+    val parts =
+      if (!Files.isDirectory(target)) Nil
+      else Fs.listDir(target).filter(_.getFileName.toString.endsWith(".parquet"))
+    for (n <- if (names.isEmpty) Seq(s"$table.parquet") else names) {
+      if (parts.isEmpty) Files.createSymbolicLink(dir.resolve(n), target)
+      else parts.foreach(p => Files.createSymbolicLink(
+        dir.resolve(s"${n.stripSuffix(".parquet")}_${p.getFileName}"), p))
+    }
     fileSource(ss, dir.toString, Tables.load(ss, d, table).schema)
   }
 

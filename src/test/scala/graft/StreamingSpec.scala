@@ -22,7 +22,7 @@ class StreamingSpec extends SparkSpec {
     val sp = spark; import sp.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String)]
-    val out = Streams.windowedCounts(in.toDF.toDF("ts", "k"), "ts", "k")
+    val out = Streams.windowedCounts(in.toDF().toDF("ts", "k"), "ts", "k")
     val q = out.writeStream.format("memory").queryName("wc")
       .outputMode("complete").start()
     try {
@@ -215,7 +215,7 @@ class StreamingSpec extends SparkSpec {
     val sp = spark; import sp.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp)]
-    val out = Streams.streamingDedup(in.toDF.toDF("id", "ts"), "id", "ts")
+    val out = Streams.streamingDedup(in.toDF().toDF("id", "ts"), "id", "ts")
     val q = out.writeStream.format("memory").queryName("sdedup")
       .outputMode("append").start()
     try {
@@ -234,7 +234,7 @@ class StreamingSpec extends SparkSpec {
     val imps = MemoryStream[(Long, Timestamp)]
     val convs = MemoryStream[(Long, Timestamp)]
     val out = Streams.intervalJoin(
-      imps.toDF.toDF("uid", "imp_ts"), convs.toDF.toDF("uid", "conv_ts"),
+      imps.toDF().toDF("uid", "imp_ts"), convs.toDF().toDF("uid", "conv_ts"),
       "uid", "imp_ts", "conv_ts", maxDelay = "30 minutes")
     val q = out.writeStream.format("memory").queryName("attr")
       .outputMode("append").start()
@@ -344,5 +344,20 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == oneShot,
       s"streamed ${streamed.size} rows vs one-shot ${oneShot.size}")
     assert(streamed.nonEmpty)
+  }
+
+  test("st01 streams a table stored as a directory of part files") {
+    // a ScaleReplica replica writes each table as a Spark output directory
+    val sf = java.nio.file.Paths.get(PlanGolden.sfDir).resolveSibling("sf0.01").toString
+    val d = Files.createTempDirectory("graft_dirtable_")
+    try {
+      graft.core.Tables.load(spark, sf, "events").repartition(3)
+        .write.parquet(d.resolve("events.parquet").toString)
+      val st01 = graft.queries.StreamingQueries.queries
+        .find(_.name == "st01_stream_windowed_counts").get.fn
+      val fromDir = rows(st01(spark, d.toString))
+      assert(fromDir.nonEmpty, "st01 read no rows from the directory table")
+      assert(fromDir == rows(st01(spark, sf)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
   }
 }
