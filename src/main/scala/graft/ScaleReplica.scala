@@ -82,6 +82,30 @@ object ScaleReplica {
     out
   }
 
+  /** Builds `fn` on `replica` and writes its rows to the noop sink; false
+    * when the row fails. A row fails when it throws, and when it writes
+    * no row on the replica but does on `base`, the dataset the replica
+    * copies: an empty run is no scale reading (a source that misses the
+    * replica's layout reads as fast). The row count is an observed metric
+    * of the write; `base` runs only after an empty write.
+    */
+  def runRow(spark: org.apache.spark.sql.SparkSession, name: String,
+             fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
+             replica: String, base: String): Boolean = {
+    def written(dir: String): Long = {
+      val obs = org.apache.spark.sql.Observation(s"scale_$name")
+      fn(spark, dir).observe(obs, count(lit(1)).as("n"))
+        .write.format("noop").mode("overwrite").save()
+      obs.get("n").asInstanceOf[Long]
+    }
+    try {
+      val atBase = if (written(replica) == 0) written(base) else 0L
+      if (atBase > 0) System.err.println(s"[scale] $name FAILED: 0 rows on the replica, $atBase on $base")
+      atBase == 0
+    } catch { case e: Throwable =>
+      System.err.println(s"[scale] $name FAILED: ${e.getMessage}"); false }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -137,15 +161,11 @@ object ScaleReplica {
     spark.read.parquet(s"$out/lineitem.parquet")
       .write.format("noop").mode("overwrite").save()
     val results = names.map { n =>
-      val t0 = System.nanoTime()
       // a failed row must never read as a fast one: posture numbers feed
       // NOTES.md tables directly, so emit null instead of the elapsed
-      // time of a crash
-      val ok =
-        try { extra.getOrElse(n, SparkEntry.queries(n))(spark, out)
-                .write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[scale] $n FAILED: ${e.getMessage}"); false }
+      // time of a crash or of an empty run
+      val t0 = System.nanoTime()
+      val ok = runRow(spark, n, extra.getOrElse(n, SparkEntry.queries(n)), out, sfDir)
       graft.core.Sessions.clearCaches(spark)
       // shuffle files release via ContextCleaner only when their
       // ShuffleDependency is GC'd — with a 100g posture heap that can

@@ -32,11 +32,32 @@ object Sessions {
     *    which this cap holds whole: a second pass in the same JVM
     *    compiled 685 classes instead of 7,895, and took 148 s, not 213 s.
     * It is a static SQL conf, read once when the session is built, so it
-    * is set here for every entry point. It stays finite: Spark keys the
-    * cache by (thread context classloader, code), and the streaming rows
-    * add entries on every run that are never reused.
+    * is set here for every entry point. It stays finite because nothing
+    * else bounds it: the cache is keyed by (thread context classloader,
+    * code), so a source compiles once per classloader that runs it, and
+    * adaptive execution can renumber a whole-stage class's stage id, which
+    * is part of its source; a long-lived JVM keeps adding such entries.
     */
   val CodegenCacheEntries = 8192
+
+  /** Value of `spark.sql.artifact.isolation.enabled`: off. Spark 4 turns
+    * it on by default, which tags every job with its session's UUID
+    * (`JobArtifactState`); the executor then builds a fresh
+    * `MutableURLClassLoader` per new UUID (`isolatedSessionCache`) and
+    * runs the session's tasks with it as their context classloader. The
+    * generated-code cache is keyed by that classloader, so every child
+    * session from `newSession()` — each streaming row's
+    * `Streams.rowSession`, io05's bucketing session — compiled all of
+    * its task-side classes again on every run. The engine adds no jar or
+    * artifact to any session, so the isolation buys it nothing. Measured
+    * at sf0.01 on 4 cores, one JVM, warm runs: st01, st12 and io05
+    * compiled 13, 25 and 20 classes per run, now 0; one warm pass over
+    * the 49 sink and streaming rows compiled about 485 classes, now 0 to
+    * 6. A session reads it once, when it is created; child sessions take
+    * it from the SparkContext conf, where the builder puts it, so it is
+    * set here.
+    */
+  val ArtifactIsolation = false
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
             appName: String = "graft"): SparkSession = {
@@ -54,6 +75,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", ArtifactIsolation.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -122,8 +122,10 @@ object Resolution {
     val spark = resolution.sparkSession
     val mapSchema = StructType(Seq(
       StructField("__src", StringType), StructField("__dst", StringType)))
+    // a LocalRelation, as Materialize.small builds: no RDD, so no
+    // `Scan ExistingRDD` for a plan reader to take for a pin
     val mapDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(mapping.map(m => Row(m._1, m._2)), 1), mapSchema)
+      java.util.Arrays.asList(mapping.map(m => Row(m._1, m._2)): _*), mapSchema)
     val rewriteCol = rewrite.foldLeft(col("setTo")) {
       case (acc, ((dst, from), to)) =>
         when(col("__dst") === dst && col("setTo") === from, lit(to)).otherwise(acc)

@@ -76,6 +76,9 @@ object Streams {
     * The state-store count follows shuffle partitions, and 32
     * HDFS-backed stores for a few-hundred-key aggregation is pure
     * per-partition overhead — isolate the knob from the shared session.
+    * The child shares the executor's task classloader with its parent
+    * (artifact isolation is off in `Sessions.local`), so a rerun of the
+    * row finds its generated classes in Spark's codegen cache.
     */
   def rowSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()

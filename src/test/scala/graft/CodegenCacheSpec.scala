@@ -15,12 +15,19 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import graft.core.{Query, Sessions}
 import graft.queries._
 
-/** Pins the size of Spark's generated-code cache (`Sessions.local`): a
-  * refresh that re-runs the same batch rows finds every class it compiled
-  * before still in the cache. The rows are perfbench's `report_refresh`
-  * pass at sf0.01, every 20th row of each reporting pack; their ~160
-  * distinct classes overflow Spark's default cap of 100, so a second pass
-  * recompiled 147 of them.
+/** Pins the two `Sessions.local` settings that let a refresh re-run
+  * rows without compiling their classes again.
+  *  - The size of Spark's generated-code cache: a refresh that re-runs
+  *    the same batch rows finds every class it compiled before still in
+  *    the cache. The rows are perfbench's `report_refresh` pass at
+  *    sf0.01, every 20th row of each reporting pack; their ~160 distinct
+  *    classes overflow Spark's default cap of 100, so a second pass
+  *    recompiled 147 of them.
+  *  - Artifact isolation off: rows that run in a child session
+  *    (`newSession()`) share the executor's classloader, so their task
+  *    classes hit the cache on the next run. With isolation on, each new
+  *    session got its own task classloader, and a second run of st01,
+  *    st12 and io05 recompiled 13, 25 and 20 classes.
   *
   * A second pass may still compile a few classes that are new: adaptive
   * execution numbers whole-stage codegen stages in the order their query
@@ -31,16 +38,21 @@ import graft.queries._
   * source the first pass compiled. Within one pass a source may compile
   * twice: the cache is keyed by the thread's context classloader too, and
   * a whole-stage class compiles once on the driver and once on a task.
-  * Streaming rows are left out: a stream compiles its classes again on
-  * every run whatever the cap.
   */
 class CodegenCacheSpec extends SparkSpec {
   private val sf = Paths.get(PlanGolden.sfDir).resolveSibling("sf0.01").toString
 
-  private val rows: Seq[Query] =
+  private val refreshRows: Seq[Query] =
     Seq(Cleaning.queries, Reporting.queries, Goals.queries, LabReports.queries,
       Keys.queries, Composite.queries, Ento.queries)
       .flatMap(_.zipWithIndex.collect { case (q, i) if i % 20 == 0 => q })
+
+  /** Rows that run in a child session: two streams through
+    * `Streams.rowSession`, and io05's bucketing session. */
+  private val childSessionRows: Seq[Query] = {
+    val names = Set("st01_stream_windowed_counts", "st12_stream_drift", "io05_bucketed_join")
+    (SinkQueries.queries ++ StreamingQueries.queries).filter(q => names(q.name))
+  }
 
   /** The formatted source of every class compiled while `body` runs. */
   private def compiledDuring(body: => Unit): Seq[String] = {
@@ -74,7 +86,7 @@ class CodegenCacheSpec extends SparkSpec {
 
   /** One pass over `rows`: the sources compiled, checked against the
     * compile count. */
-  private def pass(): Seq[String] = {
+  private def pass(rows: Seq[Query]): Seq[String] = {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val sources = compiledDuring(rows.foreach { q =>
       assert(q.fn(spark, sf).collect().nonEmpty, q.name)
@@ -85,14 +97,25 @@ class CodegenCacheSpec extends SparkSpec {
     sources
   }
 
-  test("a second pass over the report_refresh rows recompiles no class") {
-    assert(rows.size == 8)
+  /** Fails when a second pass over `rows` compiles a source the first
+    * pass compiled. */
+  private def assertNoRecompile(rows: Seq[Query]): Unit = {
     // earlier suites in this JVM may have compiled some of these classes
     // already, so the first pass can compile fewer than all of them
-    val first = pass().toSet
-    val second = pass()
+    val first = pass(rows).toSet
+    val second = pass(rows)
     val again = second.count(first.contains)
     assert(again == 0, s"$again of the second pass's ${second.size} compiles repeat " +
       s"one of the first pass's ${first.size} sources")
+  }
+
+  test("a second pass over the report_refresh rows recompiles no class") {
+    assert(refreshRows.size == 8)
+    assertNoRecompile(refreshRows)
+  }
+
+  test("a second run of child-session rows (st01, st12, io05) recompiles no class") {
+    assert(childSessionRows.size == 3)
+    assertNoRecompile(childSessionRows)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.operators.Resolution
 
@@ -82,5 +83,8 @@ class ResolutionSpec extends SparkSpec {
       rewrite = Map(("status_reason", "refused") -> "manual_refusal"))
     assert(rows(out.select("column", "setTo")) ==
       Set(Seq("status", "refused"), Seq("status_reason", "manual_refusal")))
+    // the mapping table is a local relation, not an RDD scan that reads
+    // like a Materialize.pin in a plan
+    assert(out.queryExecution.analyzed.collect { case l: LogicalRDD => l }.isEmpty)
   }
 }
