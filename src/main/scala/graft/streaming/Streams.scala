@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution,
+  StreamingQueryListenerBus, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery, Trigger}
@@ -53,6 +55,8 @@ object Streams {
     * state stores to the JVM-exit hook would pin RAM for the rest of a
     * long Verify/Bench run; and a row never touches another row's
     * streams or checkpoints, which Verify's concurrent rows rely on.
+    * Last, each stopped query's session clone is let go
+    * (`detachCloneBus`).
     */
   def runAvailableNow(writers: DataStreamWriter[_]*): Unit = {
     val ckpts = writers.map(_ => TempDirs.scratch("st_ckpt_"))
@@ -68,22 +72,67 @@ object Streams {
       while (running.nonEmpty) running = running.filterNot(_.awaitTermination(100))
     } finally {
       try started.filter(_.isActive).foreach(_.stop())
-      finally ckpts.foreach(TempDirs.deleteRecursively)
+      finally {
+        ckpts.foreach(TempDirs.deleteRecursively)
+        started.foreach(detachCloneBus)
+      }
     }
   }
 
-  /** A child session for one streaming row, at 4 shuffle partitions.
-    * The state-store count follows shuffle partitions, and 32
+  private def privateField(cls: Class[_], name: String, o: AnyRef): AnyRef = {
+    val f = cls.getDeclaredField(name)
+    f.setAccessible(true)
+    f.get(o)
+  }
+
+  /** Spark runs a query's batches in a clone of the session that started
+    * it (`StreamExecution.sparkSessionForStream`). A stateful operator asks
+    * the clone for its `StreamingQueryManager`, and a new manager attaches
+    * a `StreamingQueryListenerBus` to the SparkContext's listener bus for
+    * the rest of the JVM. The clone's bus delivers nothing: a bus passes
+    * on only the queries started through it, and queries start through
+    * the session that made them. So once `q` has stopped, its clone's bus
+    * is detached, which also frees the clone. Spark keeps these handles
+    * private, hence the reflection; a clone that never made its manager
+    * (a stateless query) is left as it is.
+    */
+  private def detachCloneBus(q: StreamingQuery): Unit = {
+    val clone = classOf[StreamExecution].getMethod("sparkSessionForStream")
+      .invoke(q.asInstanceOf[StreamingQueryWrapper].streamingQuery)
+      .asInstanceOf[classic.SparkSession]
+    val state: AnyRef = clone.sessionState // its class is private[sql]
+    val manager = privateField(state.getClass, "streamingQueryManager", state)
+    if (manager != null)
+      clone.sparkContext.removeSparkListener(privateField(classOf[classic.StreamingQueryManager],
+        "listenerBus", manager).asInstanceOf[StreamingQueryListenerBus])
+  }
+
+  private val rowSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** The child session the streaming rows run in, at 4 shuffle
+    * partitions. The state-store count follows shuffle partitions, and 32
     * HDFS-backed stores for a few-hundred-key aggregation is pure
     * per-partition overhead — isolate the knob from the shared session.
     * The child shares the executor's task classloader with its parent
     * (artifact isolation is off in `Sessions.local`), so a rerun of the
     * row finds its generated classes in Spark's codegen cache.
+    *
+    * There is one child per parent, made on first use. A session's
+    * `StreamingQueryManager` attaches a `StreamingQueryListenerBus` to the
+    * SparkContext's listener bus and never detaches it, and every later
+    * Spark event fans out to each such bus. A child per run left one
+    * behind, and its query's clone a second (see [[runAvailableNow]]):
+    * three runs of st01 took the bus from 6 listeners to 12. Rows share
+    * the child safely: none sets a conf on it or names a view in it, and
+    * [[memorySinks]] drops each uniquely named sink view once its table
+    * is resolved.
     */
-  def rowSession(s: SparkSession): SparkSession = {
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss
+  def rowSession(s: SparkSession): SparkSession = rowSessions.synchronized {
+    rowSessions.computeIfAbsent(s, { p =>
+      val ss = p.newSession()
+      ss.conf.set("spark.sql.shuffle.partitions", "4")
+      ss
+    })
   }
 
   /** Stream sf table `table` through a scratch landing dir. The file
@@ -128,13 +177,18 @@ object Streams {
 
   /** Run each (stream, output mode) into its own memory sink, all under
     * one [[runAvailableNow]], and return the finished tables in order.
+    * Each sink's temp view is dropped once its table is resolved (the
+    * resolved plan holds the sink), on failure too, so the shared
+    * [[rowSession]] does not keep every finished sink reachable.
     */
   def memorySinks(sinks: (Dataset[_], String)*): Seq[DataFrame] = {
     val named = sinks.map { case (ds, mode) =>
       (ds, mode, s"graft_sink_${sinkIds.incrementAndGet()}") }
-    runAvailableNow(named.map { case (ds, mode, n) =>
-      ds.writeStream.format("memory").queryName(n).outputMode(mode) }: _*)
-    named.map { case (ds, _, n) => ds.sparkSession.table(n) }
+    try {
+      runAvailableNow(named.map { case (ds, mode, n) =>
+        ds.writeStream.format("memory").queryName(n).outputMode(mode) }: _*)
+      named.map { case (ds, _, n) => ds.sparkSession.table(n) }
+    } finally named.foreach { case (ds, _, n) => ds.sparkSession.catalog.dropTempView(n) }
   }
 
   /** [[memorySinks]] for a row with one stream. */

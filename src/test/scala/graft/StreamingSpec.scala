@@ -7,7 +7,8 @@ import java.util.concurrent.atomic.AtomicReference
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream,
+  StreamingQueryListenerBus}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -359,5 +360,29 @@ class StreamingSpec extends SparkSpec {
       assert(fromDir.nonEmpty, "st01 read no rows from the directory table")
       assert(fromDir == rows(st01(spark, sf)))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+  }
+
+  test("three runs of st01 attach no streaming listener bus to the SparkContext's bus") {
+    // LiveListenerBus.listeners is private[spark]; Scala leaves it public
+    // in bytecode. Only StreamingQueryListenerBus instances are counted:
+    // Spark's ContextCleaner detaches other per-session listeners once
+    // their session is collected, so the total can fall at any GC.
+    def busListeners(): Int = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("listeners").invoke(bus).asInstanceOf[java.util.List[_]]
+        .toArray.count(_.isInstanceOf[StreamingQueryListenerBus])
+    }
+    val sf = java.nio.file.Paths.get(PlanGolden.sfDir).resolveSibling("sf0.01").toString
+    val st01 = graft.queries.StreamingQueries.queries
+      .find(_.name == "st01_stream_windowed_counts").get.fn
+    // the first run may make the row session, once per JVM
+    val expected = rows(st01(spark, sf))
+    val before = busListeners()
+    for (_ <- 1 to 3) assert(rows(st01(spark, sf)) == expected)
+    assert(busListeners() == before)
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_sink_")))
+    assert(!Streams.rowSession(spark).catalog.listTables().collect()
+      .exists(_.name.startsWith("graft_sink_")), "a memory sink's view outlived its row")
   }
 }
